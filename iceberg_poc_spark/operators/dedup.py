@@ -363,10 +363,16 @@ def _propagate_labels(spark: SparkSession, pairs: DataFrame) -> DataFrame:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         labels = _propagate_rounds(edges, labels, n_parts)
+    except BaseException:
+        # the round-0 checkpoint is registered as persistent at creation
+        # even though it never ran; DataFrame.unpersist only reaches the
+        # CacheManager, so release its LogicalRDD directly
+        labels._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        raise
     finally:
         if aqe_off:
             spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-    edges.unpersist()
+        edges.unpersist()
     return labels.select("doc_id", F.col("label").alias("cluster_root"))
 
 
@@ -374,7 +380,8 @@ def _propagate_rounds(
     edges: DataFrame, labels: DataFrame, n_parts: int
 ) -> DataFrame:
     """The fixpoint loop of :func:`_propagate_labels` (split out so the
-    AQE toggle around it restores on any exit path)."""
+    AQE toggle and the edge cache around it are released on any exit
+    path)."""
     prev_sum = None
     for _ in range(20):  # bound >> diameter of any near-dup component
         # One aggregation per round instead of join+agg+join: new label =

@@ -3701,7 +3701,7 @@ def q_rewrite_manifests(spark: SparkSession, sf_dir: str) -> DataFrame:
     mgr = _setup_cust_micro(spark, sf_dir)
     mgr.rewrite_segments("cust_micro")
     raw = mgr._manifest_raw("cust_micro", mgr._current_version("cust_micro"))
-    n_segs = len(raw.get("segments") or [])
+    n_segs = len(raw["segments"])
     return (
         mgr.read("cust_micro")
         .groupBy("c_mktsegment")

@@ -429,14 +429,12 @@ def _read_file_as_batches(
             # initial-default columns (Iceberg v3): a file whose RECORDED
             # writer schema lacks the column (under every historical
             # name) reads the default, exactly the manager read path's
-            # rule — legacy entries without a recorded writer schema stay
-            # NULL-preserving. Without this the connector face diverges
-            # from manager.read on default-bearing tables.
+            # rule. Without this the connector face diverges from
+            # manager.read on default-bearing tables.
             fmeta = f.metadata or {}
             if "initial_default" in fmeta:
-                ecols = entry.get("cols")
                 hist = {name, *fmeta.get("former_names", [])}
-                if ecols is not None and not (hist & set(ecols)):
+                if not (hist & set(entry["cols"])):
                     # the loop tail casts to afield.type; defaults are
                     # type-validated at DDL time (_validate_initial_default)
                     source = pa.array([fmeta["initial_default"]] * n)
@@ -472,60 +470,16 @@ class SnapMetaReader(DataSourceReader):
             as_of=options.get("as_of"),
         )
         raw = mgr._manifest_raw(table, v)
-        segs = raw.get("segments")
-        self._seg_paths: list[str] | None = None
-        self._rows: list[tuple] | None = None
-        if segs is not None:
-            paths = [mgr._seg_path(table, sid) for sid in segs]
-            if all(os.path.exists(p) for p in paths):
-                self._seg_paths = paths
-        if self._seg_paths is None:
-            import json as _json
-
-            m = mgr._load_manifest(table, v)
-            self._rows = [
-                (
-                    e["path"],
-                    _json.dumps(e["partition"], sort_keys=True),
-                    int(e["records"]),
-                    int(e["bytes"]),
-                )
-                for e in m["files"]
-            ]
-
-    # legacy-JSON fallback: rows per InputPartition. Chunking keeps a
-    # pre-columnar table's metadata scan executor-parallel AND bounds
-    # what any single task carries through the serializer — one pickled
-    # partition holding a whole 1M-file inventory would put the entire
-    # driver materialization on one task's wire.
-    LEGACY_ROWS_PER_PARTITION = 10_000
+        self._seg_paths = [mgr._seg_path(table, sid) for sid in raw["segments"]]
 
     def partitions(self):
-        if self._seg_paths is not None:
-            return [InputPartition(("seg", p)) for p in self._seg_paths]
-        rows = self._rows or []
-        step = self.LEGACY_ROWS_PER_PARTITION
-        chunks = [rows[i : i + step] for i in range(0, len(rows), step)]
-        return [InputPartition(("rows", c)) for c in (chunks or [[]])]
+        return [InputPartition(p) for p in self._seg_paths]
 
     def read(self, partition):
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        kind, payload = partition.value
         cols = ["path", "partition", "records", "bytes"]
-        if kind == "seg":
-            yield from pq.read_table(payload, columns=cols).to_batches()
-            return
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([r[0] for r in payload], pa.string()),
-                pa.array([r[1] for r in payload], pa.string()),
-                pa.array([r[2] for r in payload], pa.int64()),
-                pa.array([r[3] for r in payload], pa.int64()),
-            ],
-            names=cols,
-        )
+        yield from pq.read_table(partition.value, columns=cols).to_batches()
 
 
 class SnapPartitionsReader(DataSourceReader):
@@ -535,12 +489,9 @@ class SnapPartitionsReader(DataSourceReader):
     [n_files, n_records, n_bytes] rollups written at commit time, so
     the driver folds O(segments x partitions-per-segment) summary maps
     — zero entry decodes, zero data reads — and ships O(partitions)
-    rows. Legacy non-segmented tables fall back to a driver fold of the
-    materialized inventory (same values, one-time O(files))."""
+    rows."""
 
     def __init__(self, options):
-        import json as _json
-
         mgr, table = _mgr(options)
         snap = options.get("snapshot")
         v = mgr._resolve(
@@ -550,14 +501,6 @@ class SnapPartitionsReader(DataSourceReader):
             as_of=options.get("as_of"),
         )
         folded = mgr._fold_partition_stats(table, v)
-        if folded is None:  # legacy manifest: recompute once
-            folded = {}
-            for e in mgr._load_manifest(table, v)["files"]:
-                k = _json.dumps(e["partition"], sort_keys=True)
-                slot = folded.setdefault(k, [0, 0, 0])
-                slot[0] += 1
-                slot[1] += int(e["records"])
-                slot[2] += int(e["bytes"])
         self._rows = sorted(
             (k, nf, nr, nb) for k, (nf, nr, nb) in folded.items()
         )

@@ -68,6 +68,10 @@ def _scan_key(spark: SparkSession, path: str) -> tuple | None:
             # root dir's, so a root-only key would serve a stale plan with
             # an outdated file index (ADVICE r12). One listdir is the same
             # metadata cost the cache saves many times over per hit.
+            # Invalidation looks ONLY one level deep: a write two
+            # partition levels down (a new file in an existing
+            # root/a=1/b=2/) changes neither the root's nor a=1/'s stat,
+            # so it is not seen and the memoized plan goes stale.
             names = sorted(os.listdir(path))
             if len(names) > _SCAN_KEY_MAX_CHILDREN:
                 return None
@@ -104,8 +108,11 @@ def scan_parquet(spark: SparkSession, path: str) -> DataFrame:
     (hive-partitioned scratch dirs, converted side tables) that are
     re-read every run but rewritten rarely. The key carries the root
     stat AND one level of child stats, so both a root rewrite and a
-    write inside a partition subdirectory are misses; directories with
-    more than ``_SCAN_KEY_MAX_CHILDREN`` children are never memoized."""
+    write inside a first-level partition subdirectory are misses;
+    directories with more than ``_SCAN_KEY_MAX_CHILDREN`` children are
+    never memoized. Invalidation looks only one directory level deep: a
+    write two partition levels down (into an existing ``a=1/b=2/``) is
+    NOT seen, and the stale plan is served."""
     key = _scan_key(spark, path)
     if key is not None:
         hit = _SCAN_PLANS.get(key)

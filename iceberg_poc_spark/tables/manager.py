@@ -417,12 +417,9 @@ SEGMENT_MERGE_RUN_PROP = "meta.segment-merge-run"
 # columnar segment codec: each manifest segment persists as ONE parquet
 # file with typed columns for the universally-present entry fields plus
 # a JSON spill column for the irregular rest (delete attachments, bloom
-# filters, writer schemas, ...). Planning reads ONLY the columns it
-# needs — `path` for a broad scan, (path, partition, records, bytes)
-# for the files/partitions metadata tables — at Arrow speed, and whole
-# segments can be handed to executors for distributed entry pruning
-# (≙ Iceberg planning big scans against Avro manifests it reads
-# distributed, instead of driver-side JSON).
+# filters, writer schemas, ...). Decode is Arrow-speed, and the
+# files/partitions metadata tables read the segment files directly
+# through Spark (≙ Iceberg's Avro manifests being Spark-readable).
 _SEG_BASE_KEYS = ("path", "partition", "records", "bytes")
 
 
@@ -476,16 +473,22 @@ def _batch_json(cells) -> list:
     return out
 
 
-def _seg_rows_to_entries(
-    paths, parts, recs, byts, rests
-) -> list[dict]:
-    """Column vectors -> exact entry dicts (shared by the driver decode
-    and the executor-parallel pruning kernel). A key absent at encode
+def _seg_decode_parquet(path: str) -> list[dict]:
+    """Exact entry dicts of one segment file: a key absent at encode
     time is absent after decode — entries round-trip exactly."""
-    part_objs = _batch_json(parts)
-    rest_objs = _batch_json(rests)
+    import pyarrow.parquet as papq
+
+    tab = papq.read_table(path)
+    part_objs = _batch_json(tab.column("partition").to_pylist())
+    rest_objs = _batch_json(tab.column("rest").to_pylist())
     out: list[dict] = []
-    for p, part, r, b, rest in zip(paths, part_objs, recs, byts, rest_objs):
+    for p, part, r, b, rest in zip(
+        tab.column("path").to_pylist(),
+        part_objs,
+        tab.column("records").to_pylist(),
+        tab.column("bytes").to_pylist(),
+        rest_objs,
+    ):
         e: dict = {}
         if p is not None:
             e["path"] = p
@@ -499,19 +502,6 @@ def _seg_rows_to_entries(
             e.update(rest)
         out.append(e)
     return out
-
-
-def _seg_decode_parquet(path: str) -> list[dict]:
-    import pyarrow.parquet as papq
-
-    tab = papq.read_table(path)
-    return _seg_rows_to_entries(
-        tab.column("path").to_pylist(),
-        tab.column("partition").to_pylist(),
-        tab.column("records").to_pylist(),
-        tab.column("bytes").to_pylist(),
-        tab.column("rest").to_pylist(),
-    )
 
 
 BLOOM_COLS_PROP = "index.bloom.columns"  # comma-separated column names
@@ -900,18 +890,16 @@ class ParquetTableManager:
     # Manifest-list indirection (≙ Iceberg's manifest-list -> manifest-file
     # two-level metadata, the design that makes commit metadata O(delta)):
     # a snapshot's file inventory is stored as IMMUTABLE segment files
-    # (_meta/segs/<id>.json, each a list of entries) plus a per-snapshot
-    # ordered segment-id list in the manifest JSON. An append reuses every
-    # base segment by reference and writes ONE new segment with its own
-    # files; a delete-attach rewrites ONLY the segment(s) holding the
-    # touched entries. Without this, every micro-append to a 1M-file table
-    # re-serializes (and every read re-parses) the full inventory —
-    # the stand-in's one true 100 TB metadata ceiling (r8 verdict lead
-    # item; reference dependency surface pom.xml:37-64).
+    # (_meta/segs/<id>.parquet, see _seg_encode_parquet) plus a
+    # per-snapshot ordered segment-id list and per-segment summaries
+    # ("segments" / "seg_stats") in the manifest JSON. An append reuses
+    # every base segment by reference and writes ONE new segment with its
+    # own files; a delete-attach rewrites ONLY the segment(s) holding the
+    # touched entries.
     #
-    # Facade contract: _load_manifest still returns a plain dict whose
-    # "files" key is the FULL materialized entry list, so the 3,000-line
-    # consumer surface is unchanged. The entries are SHARED with the
+    # Facade contract: _load_manifest returns a plain dict whose "files"
+    # key is the FULL materialized entry list, so the write-side consumer
+    # surface never sees segments. The entries are SHARED with the
     # process-wide segment cache (a load is O(entry refs), never a
     # per-entry copy — metadata ops stay sub-linear in inventory size).
     # INVARIANT: consumers MUST NOT mutate an entry in place — copy it
@@ -920,50 +908,48 @@ class ParquetTableManager:
     # runs, so an in-place mutation would be lost to segment reuse even
     # before cache aliasing is considered (test_segments.py pins both).
     #
-    # Read side: per-SEGMENT partition summaries ("seg_stats": [min,max]
-    # per identity-partition value, computed once at segment write) let
-    # scan() skip whole segments before touching their entries —
-    # Iceberg's manifest-file partition-summary trick — so a partition-
-    # scoped scan's pruning loop is O(segments + matching entries), not
-    # O(table), and BENCH_META.json shows point-scan planning flat
-    # across a 100x file-count spread. The one remaining O(table) term
-    # is the ref-extend materialization per _load_manifest (cheap Python
-    # refs, no JSON); a fully lazy facade isn't worth the consumer-
-    # contract risk at current scales.
+    # Read side: scan() and read() share ONE planner (_plan_read) over
+    # the raw manifest — segment summaries ("seg_stats": [min, max] per
+    # identity-partition value, computed once at segment write) drop
+    # whole segments before their entries are touched (Iceberg's
+    # manifest-file partition-summary trick), then per-entry stats and
+    # bucket pruning pick the files, so a partition-scoped scan is
+    # O(segments + matching entries), not O(table).
 
     def _segs_dir(self, name: str) -> str:
         return os.path.join(self._meta_dir(name), "segs")
 
     def _seg_path(self, name: str, segid: str) -> str:
-        """Canonical (COLUMNAR parquet) segment file path. Segments are
-        stored columnar — ≙ Iceberg's Avro manifests, readable by Spark
-        itself — so planning can read just the columns it needs (`path`
-        for broad scans, prunable fields for metadata tables) at Arrow
-        speed, or hand whole segments to executors, instead of JSON-
-        parsing every entry in driver Python."""
         return os.path.join(self._segs_dir(name), f"{segid}.parquet")
-
-    def _seg_path_legacy(self, name: str, segid: str) -> str:
-        """Pre-columnar JSON segment path (read-compat only: tables
-        written before the parquet format keep working; new segments are
-        always parquet)."""
-        return os.path.join(self._segs_dir(name), f"{segid}.json")
 
     def _seg_entries(self, name: str, segid: str) -> list[dict]:
         """Parsed entries of one immutable segment (process-cached)."""
         key = (name, segid)
         hit = self._seg_cache.get(key)
-        if hit is not None:
-            self._seg_cache.move_to_end(key)  # LRU: hits refresh recency
         if hit is None:
-            p = self._seg_path(name, segid)
-            if os.path.exists(p):
-                hit = _seg_decode_parquet(p)
-            else:
-                with open(self._seg_path_legacy(name, segid)) as f:
-                    hit = json.load(f)
+            hit = _seg_decode_parquet(self._seg_path(name, segid))
             self._seg_cache_put(key, hit)
+        else:
+            self._seg_cache.move_to_end(key)  # LRU: hits refresh recency
         return hit
+
+    def _prefetch_segments(self, name: str, seg_ids: list[str]) -> None:
+        """Cold-load prefetch: columnar segment decode releases the GIL
+        in Arrow, so uncached segments load threaded — the one-time
+        materialization cost of a large inventory drops ~4x on a hot box
+        (subsequent loads are pure cache refs)."""
+        cold = [sid for sid in seg_ids if (name, sid) not in self._seg_cache]
+        if len(cold) <= 4:
+            return
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            decoded = pool.map(
+                lambda sid: _seg_decode_parquet(self._seg_path(name, sid)),
+                cold,
+            )
+            for sid, entries in zip(cold, decoded):
+                self._seg_cache_put((name, sid), entries)
 
     def _manifest_raw(self, name: str, version: int) -> dict:
         """The manifest JSON as stored — 'segments' ids, no
@@ -974,57 +960,31 @@ class ParquetTableManager:
 
     def _load_manifest(self, name: str, version: int | None = None) -> dict:
         v = self._current_version(name) if version is None else version
-        with open(self._manifest_path(name, v)) as f:
-            m = json.load(f)
-        if "segments" in m:
-            seg_ids = m.pop("segments")
-            # per-segment partition summaries ride along for scan-time
-            # segment pruning; stashed under a helper key so consumer
-            # dict(m) copies can never persist a stale copy
-            m["_seg_stats"] = m.pop("seg_stats", {})
-            # cold-load prefetch: columnar segment decode releases the
-            # GIL in Arrow, so uncached segments load threaded — the
-            # one-time materialization cost of a large inventory drops
-            # ~4x on a hot box (subsequent loads are pure cache refs)
-            cold = [
-                sid
-                for sid in seg_ids
-                if (name, sid) not in self._seg_cache
-                and os.path.exists(self._seg_path(name, sid))
-            ]
-            if len(cold) > 4:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=8) as pool:
-                    for sid, entries in zip(
-                        cold,
-                        pool.map(
-                            lambda s: _seg_decode_parquet(
-                                self._seg_path(name, s)
-                            ),
-                            cold,
-                        ),
-                    ):
-                        self._seg_cache_put((name, sid), entries)
-            files: list[dict] = []
-            layout: list[tuple[str, int]] = []
-            for sid in seg_ids:
-                entries = self._seg_entries(name, sid)
-                # entries are SHARED with the immutable segment cache —
-                # O(refs) per load, no per-entry copy; safe because every
-                # mutation site copies the entry before changing it (the
-                # same invariant commit-time identity reuse already
-                # requires — an in-place mutator would lose its write to
-                # segment reuse even with defensive copies here)
-                files.extend(entries)
-                layout.append((sid, len(entries)))
-            m["files"] = files
-            # commit-time segment-reuse bookkeeping: the handed-out entry
-            # objects in base order + the segment spans they came from.
-            # Kept as live references (never persisted — _alloc_version
-            # strips them) so id() stays unambiguous for the run matcher.
-            m["_seg_layout"] = layout
-            m["_base_entries"] = list(files)
+        m = self._manifest_raw(name, v)
+        seg_ids = m.pop("segments")
+        # per-segment summaries ride along under a helper key so consumer
+        # dict(m) copies can never persist a stale copy
+        m["_seg_stats"] = m.pop("seg_stats")
+        self._prefetch_segments(name, seg_ids)
+        files: list[dict] = []
+        layout: list[tuple[str, int]] = []
+        for sid in seg_ids:
+            entries = self._seg_entries(name, sid)
+            # entries are SHARED with the immutable segment cache —
+            # O(refs) per load, no per-entry copy; safe because every
+            # mutation site copies the entry before changing it (the
+            # same invariant commit-time identity reuse already
+            # requires — an in-place mutator would lose its write to
+            # segment reuse even with defensive copies here)
+            files.extend(entries)
+            layout.append((sid, len(entries)))
+        m["files"] = files
+        # commit-time segment-reuse bookkeeping: the handed-out entry
+        # objects in base order + the segment spans they came from.
+        # Kept as live references (never persisted — _alloc_version
+        # strips them) so id() stays unambiguous for the run matcher.
+        m["_seg_layout"] = layout
+        m["_base_entries"] = list(files)
         return m
 
     def _plan_segments(
@@ -1076,64 +1036,47 @@ class ParquetTableManager:
 
     @staticmethod
     def _seg_summary(entries: list[dict]) -> dict:
-        """Per-segment partition summary for scan-time segment pruning:
-        entry count + [min, max] of each partition value whose type is
-        homogeneous and orderable. Computed ONCE when a segment is
-        written (O(delta)); carried by reference afterwards.
+        """Per-segment summary, computed ONCE when a segment is written
+        (O(delta)) and carried by reference afterwards:
 
-        Besides the partition [min, max] bounds the summary carries the
-        fields that let planning stay O(segments) driver-side:
-        ``clean`` (no entry needs delete filters / external-read
-        handling — a broad scan over all-clean segments can plan from
-        the segments' ``path`` columns alone, never materializing entry
-        dicts), ``lay`` (distinct partition-key layouts, for the
-        single-group fast read), and ``rec``/``byt`` rollups (snapshot
-        inspection without touching entries)."""
-        summary: dict = {"n": len(entries)}
-        recs = [e.get("records") for e in entries]
-        byts = [e.get("bytes") for e in entries]
-        if all(isinstance(r, int) for r in recs):
-            summary["rec"] = sum(recs)
-        if all(isinstance(b, int) for b in byts):
-            summary["byt"] = sum(byts)
-        # per-partition rollup (≙ Iceberg partition statistics files):
-        # [n_files, n_records, n_bytes] keyed by the canonical partition
-        # JSON. Computed once per written segment (O(delta)); the table-
-        # level partitions view then folds these maps across segments —
-        # O(segments x partitions-per-segment), entries never decoded.
-        try:
-            pr: dict[str, list[int]] = {}
-            for e in entries:
-                k = json.dumps(e["partition"], sort_keys=True)
-                slot = pr.setdefault(k, [0, 0, 0])
-                slot[0] += 1
-                slot[1] += int(e["records"])
-                slot[2] += int(e["bytes"])
-            summary["pr"] = pr
-        except (KeyError, TypeError, ValueError):
-            pass  # fabricated/partial entries: fold falls back to decode
-        summary["clean"] = not any(
-            e.get("deletes")
-            or e.get("eq_deletes")
-            or e.get("pos_deletes")
-            or e.get("external")
-            for e in entries
-        )
-        # any externally-registered (add_files) entry in this segment?
+        - ``n``: entry count (scan()'s files_total, snapshots());
+        - ``rec``/``byt``: record and byte rollups (snapshots());
+        - ``pr``: per-partition [n_files, n_records, n_bytes] rollup
+          (partition_stats());
+        - ``ext``: whether any entry is externally registered
+          (_require_unique_basenames);
+        - ``p``: [min, max] of each identity-partition value whose type
+          is homogeneous and orderable — the planner's segment pruning
+          (_seg_may_match).
+
+        Every writer (``_write_files``, ``add_files``, the snaptable
+        connector) records partition, records and bytes on each entry,
+        so every field but ``p`` is always present."""
+        summary: dict = {
+            "n": len(entries),
+            "rec": sum(e["records"] for e in entries),
+            "byt": sum(e["bytes"] for e in entries),
+        }
+        # per-partition rollup (≙ Iceberg partition statistics files),
+        # keyed by the canonical partition JSON; the table-level
+        # partitions view folds these maps across segments —
+        # O(segments x partitions-per-segment), entries never decoded
+        pr: dict[str, list[int]] = {}
+        for e in entries:
+            k = json.dumps(e["partition"], sort_keys=True)
+            slot = pr.setdefault(k, [0, 0, 0])
+            slot[0] += 1
+            slot[1] += e["records"]
+            slot[2] += e["bytes"]
+        summary["pr"] = pr
         # Managed writes are uuid-named — unique by construction — so a
         # manifest whose every segment says ext=False passes the MoR
         # basename-uniqueness guard O(segments), no entry walk
         summary["ext"] = any(bool(e.get("external")) for e in entries)
-        try:
-            summary["lay"] = sorted(
-                {tuple(sorted(e["partition"])) for e in entries}
-            )
-        except KeyError:
-            pass  # a partition-less fabricated entry: no layout summary
         parts: dict[str, list] = {}
         cols: set[str] | None = None
         for e in entries:
-            p = e.get("partition") or {}
+            p = e["partition"]
             cols = set(p) if cols is None else cols & set(p)
         for c in cols or set():
             vals = [e["partition"][c] for e in entries]
@@ -1196,7 +1139,7 @@ class ParquetTableManager:
         # amortized extra write per commit stays O(delta)
         small = target - 1
         plan = self._plan_segments(name, manifest)
-        prior_stats = manifest.get("_seg_stats") or {}
+        prior_stats = manifest.get("_seg_stats", {})
         out_ids: list[str] = []
         out_stats: dict[str, dict] = {}
 
@@ -1212,11 +1155,9 @@ class ParquetTableManager:
                 out_ids.append(sid)
                 out_stats[sid] = self._seg_summary(chunk)
 
-        def reuse(sid: str, es: list[dict]) -> None:
+        def reuse(sid: str) -> None:
             out_ids.append(sid)
-            # carry the summary by reference; compute once for segments
-            # predating the stats format (migration, never repeated)
-            out_stats[sid] = prior_stats.get(sid) or self._seg_summary(es)
+            out_stats[sid] = prior_stats[sid]  # carried by reference
 
         run: list[tuple[str | None, list[dict]]] = []
 
@@ -1228,7 +1169,7 @@ class ParquetTableManager:
             else:
                 for sid, es in run:
                     if sid is not None:
-                        reuse(sid, es)
+                        reuse(sid)
                     else:
                         emit_new(es)
             run.clear()
@@ -1239,7 +1180,7 @@ class ParquetTableManager:
             else:
                 flush()
                 if sid is not None:
-                    reuse(sid, es)
+                    reuse(sid)
                 else:
                     emit_new(es)
         flush()
@@ -2945,8 +2886,8 @@ class ParquetTableManager:
     @staticmethod
     def _manifest_spans(m: dict) -> list[tuple[str | None, list[dict]]]:
         """m["files"] sliced back into its segment spans (sid, entries),
-        aligned with _seg_layout; one (None, files) span when the
-        manifest predates segments or the list was already rewritten.
+        aligned with _seg_layout; one (None, files) span when the list
+        no longer aligns with it (already rewritten in memory).
         Slices are ref-copies in original order, so extending an output
         list with a whole span preserves the contiguous identity runs
         commit-time segment reuse matches on."""
@@ -3299,18 +3240,14 @@ class ParquetTableManager:
         construction), so when EVERY segment summary records ext=False
         (no add_files entries anywhere) the walk is skipped entirely —
         at 1M files the guard costs a dict scan over segment summaries,
-        not an inventory pass. Summaries predating the flag (or spans
-        out of alignment after an in-memory rewrite) fall back to the
-        full walk."""
-        stats = m.get("_seg_stats") or {}
+        not an inventory pass. Spans out of alignment after an
+        in-memory rewrite fall back to the full walk."""
+        stats = m.get("_seg_stats", {})
         layout = m.get("_seg_layout")
         if (
             layout
             and sum(c for _, c in layout) == len(m.get("files") or [])
-            and all(
-                (stats.get(sid) or {}).get("ext") is False
-                for sid, _cnt in layout
-            )
+            and not any(stats[sid]["ext"] for sid, _cnt in layout)
         ):
             return
         seen: set[str] = set()
@@ -4317,8 +4254,7 @@ class ParquetTableManager:
         # initial-default columns (Iceberg v3 semantics): a file whose
         # recorded writer schema lacks the column reads the default for
         # every row; files that HAVE it keep their values, genuine NULLs
-        # included. Legacy entries without a recorded writer schema are
-        # treated as holding every column (NULL-preserving).
+        # included.
         dflt = {
             f.name: (f.metadata["initial_default"], f.dataType)
             for f in schema.fields
@@ -4336,13 +4272,9 @@ class ParquetTableManager:
             dkey = json.dumps(e.get("deletes", []), sort_keys=True)
             ekey = json.dumps(e.get("eq_deletes", []), sort_keys=True)
             pkey = json.dumps(e.get("pos_deletes", []), sort_keys=True)
-            ecols = e.get("cols")
+            ecols = set(e["cols"])
             absent = tuple(
-                sorted(
-                    c
-                    for c in dflt
-                    if ecols is not None and not (dflt_names[c] & set(ecols))
-                )
+                sorted(c for c in dflt if not (dflt_names[c] & ecols))
             )
             ext = bool(e.get("external"))
             # external groups additionally split by partition VALUES and
@@ -4354,7 +4286,7 @@ class ParquetTableManager:
                 (
                     ext,
                     tuple(sorted(e["partition"].items())),
-                    tuple(e.get("cols") or ()),
+                    tuple(e["cols"]),
                 )
                 if ext
                 else (ext, (), ())
@@ -4612,10 +4544,9 @@ class ParquetTableManager:
         (≙ ``VERSION AS OF 'ref'``), or the newest snapshot committed at
         or before an instant (``as_of`` ≙ ``TIMESTAMP AS OF``).
 
-        All-clean snapshots plan from the columnar segments' path
-        columns (O(segments) driver work); anything carrying deletes,
-        externals, or schema-evolution state takes the materialized
-        path.
+        Planned by the same :meth:`_plan_read` as :meth:`scan`, with no
+        predicate: every live file, read by :meth:`_read_files` with the
+        snapshot's deletes applied.
 
         Snapshot read plans are CACHED per (session, manifest identity):
         a snapshot's file set and delete state are immutable while the
@@ -4652,18 +4583,8 @@ class ParquetTableManager:
             if hit is not None:
                 self._READ_PLANS.move_to_end(key)
                 return hit
-        try:
-            raw = self._manifest_raw(name, v)
-        except FileNotFoundError:
-            raw = None
-        if raw is not None and "segments" in raw:
-            plan = self._broad_plan(name, raw)
-            if plan is not None:
-                df = self._read_clean_paths(name, raw, plan)
-                self._read_plan_store(key, df)
-                return df
-        m = self._load_manifest(name, v)
-        df = self._read_files(name, m, m["files"])
+        raw, files, _total = self._plan_read(name, v, [])
+        df = self._read_files(name, raw, files)
         self._read_plan_store(key, df)
         return df
 
@@ -5160,273 +5081,51 @@ class ParquetTableManager:
         ``where`` is a list of (column, op, literal) with op in
         {==, >=, <=, >, <, in, isnull, notnull} (for ``in`` the literal
         is a list of members; for isnull/notnull it is ignored — pass
-        None). Null-predicate pruning runs on the manifest's per-file
-        null counts: IS NULL skips zero-null files, IS NOT NULL skips
+        None). Planning (:meth:`_plan_read`, shared with :meth:`read`)
+        prunes segments by their partition summaries, then files by
+        their manifest partition values, column min/max stats, null
+        counts (IS NULL skips zero-null files, IS NOT NULL skips
         all-null files, and an all-null column fails every comparison
-        even without min/max stats. Predicates on partition-transform source
-        columns prune files by their manifest partition values, and ALL
-        predicates are still applied row-level as residuals. Equality and
-        membership predicates additionally prune through BUCKET
-        transforms (Iceberg bucket-pruning for point lookups): the
-        literal's bucket is computed with the same xxhash64 the writer
-        used — one driver-side single-row job per scan, never a data
-        pass — and only files of matching buckets are planned.
-        Returns (df, files_planned, files_total).
-
-        Planning is O(segments) driver-side against the COLUMNAR
-        segment manifests: a selective scan materializes only the
-        segments its summary pruning keeps (executor-parallel above
-        ``SCAN_DIST_SEGMENTS`` surviving segments — the Iceberg
-        distributed-planning shape); a broad scan over an all-clean
-        snapshot plans from the segments' ``path`` columns alone at
-        Arrow speed, never building per-entry dicts. Snapshots whose
-        state needs the full entry semantics (delete attachments,
-        external files, schema defaults/renames, legacy JSON segments)
-        fall back to materialized planning — identical results, just
-        driver-side."""
-        fast = self._plan_scan_fast(name, where)
-        if fast is not None:
-            raw, files, paths_layout, total = fast
-            if paths_layout is not None:
-                df = self._read_clean_paths(name, raw, paths_layout)
-                planned = total
-            else:
-                spec = self._spec(raw)
-                files = self._prune_buckets(raw, spec, files, where or [])
-                planned = len(files)
-                df = self._read_files(name, raw, files)
-            pred = _predicate(where or [])
-            if pred is not None:
-                df = df.filter(pred)
-            return df, planned, total
-        m = self._load_manifest(name)
-        spec = self._spec(m)
-        files = m["files"]
-        total = len(files)
-        # SEGMENT-level pre-prune (Iceberg's manifest-file partition-
-        # summary trick): identity-partition predicates are checked once
-        # against each segment's [min, max] partition summary, so a
-        # partition-scoped scan of a million-file table evaluates
-        # per-entry predicates only over the matching segments' entries
-        # — O(segments + survivors), not O(table). Purely an upper-bound
-        # filter: every surviving entry still passes _may_match below.
-        layout = m.get("_seg_layout")
-        seg_stats = m.get("_seg_stats")
-        if layout and seg_stats and where:
-            cand: list[dict] = []
-            off = 0
-            for sid, cnt in layout:
-                if _seg_may_match(spec, seg_stats.get(sid), where):
-                    cand.extend(files[off : off + cnt])
-                off += cnt
-        else:
-            cand = files
-        files = [e for e in cand if _may_match(spec, e, where or [])]
-        files = self._prune_buckets(m, spec, files, where or [])
-        df = self._read_files(name, m, files)
-        pred = _predicate(where or [])
+        even without min/max stats), Bloom indexes, and BUCKET
+        membership for ``==``/``in`` (the literal's bucket is computed
+        with the same xxhash64 the writer used — one driver-side
+        single-row job per scan, never a data pass). ALL predicates are
+        still applied row-level as residuals.
+        Returns (df, files_planned, files_total)."""
+        w = where or []
+        raw, files, total = self._plan_read(name, self._current_version(name), w)
+        df = self._read_files(name, raw, files)
+        pred = _predicate(w)
         if pred is not None:
             df = df.filter(pred)
         return df, len(files), total
 
-    # surviving-segment count at or above which entry pruning runs
-    # executor-parallel over the columnar segment files instead of in
-    # driver Python (class attr so tests can force either path)
-    SCAN_DIST_SEGMENTS = 64
-
-    def _plan_scan_fast(self, name, where):
-        """O(segments) scan planning against the raw (unmaterialized)
-        manifest. Returns ``(raw, files, paths_layout, total)`` — with
-        either ``files`` (pruned entry dicts, selective scan) or
-        ``paths_layout`` (``(paths, layout)``, broad all-clean scan) set
-        — or None when this snapshot's state needs the materialized
-        path."""
-        try:
-            v = self._current_version(name)
-            raw = self._manifest_raw(name, v)
-        except FileNotFoundError:
-            return None
-        segs = raw.get("segments")
-        if segs is None:
-            return None
-        stats = raw.get("seg_stats") or {}
-        if any("n" not in (stats.get(sid) or {}) for sid in segs):
-            return None
+    def _plan_read(
+        self, name: str, version: int, where: list
+    ) -> tuple[dict, list[dict], int]:
+        """The one read planner behind :meth:`scan` and :meth:`read`:
+        ``(raw manifest, files to read, live file count)``. Segments
+        whose summary cannot match ``where`` are skipped before their
+        entries are touched; surviving segments' entries (process-
+        cached) are kept if they may match, then bucket-pruned."""
+        raw = self._manifest_raw(name, version)
         spec = self._spec(raw)
-        total = sum(stats[sid]["n"] for sid in segs)
-        w = where or []
-        if w:
-            surv = [
-                sid
-                for sid in segs
-                if _seg_may_match(spec, stats.get(sid), w)
-            ]
-            files = self._pruned_entries(name, surv, spec, w)
-            if files is None:
-                return None
-            return raw, files, None, total
-        plan = self._broad_plan(name, raw)
-        if plan is None:
-            return None
-        return raw, None, plan, total
-
-    def _broad_plan(self, name: str, raw: dict):
-        """(paths, layout) for a broad read of an all-clean snapshot —
-        plannable from the columnar segments' ``path`` columns alone —
-        or None when entry-level semantics are required."""
-        segs = raw.get("segments")
-        stats = raw.get("seg_stats") or {}
-        if segs is None:
-            return None
-        if raw.get("global_eq_deletes") or raw.get("global_pos_deletes"):
-            return None
-        schema = StructType.fromJson(raw["schema"])
-        for f in schema.fields:
-            md = f.metadata or {}
-            if md.get("former_names") or "initial_default" in md:
-                return None
-        lays: set[tuple] = set()
-        for sid in segs:
-            ss = stats.get(sid) or {}
-            if not ss.get("clean") or "lay" not in ss:
-                return None
-            lays.update(tuple(l) for l in ss["lay"])
-        if len(lays) > 1:
-            return None
-        paths = self._collect_seg_paths(name, segs)
-        if paths is None:
-            return None
-        layout = list(next(iter(lays))) if lays else []
-        return paths, layout
-
-    def _collect_seg_paths(self, name: str, sids: list[str]):
-        """Every entry path across ``sids`` — from the process cache
-        when hot, else a vectorized single-column Arrow read of each
-        columnar segment (no entry dicts). None if any segment predates
-        the columnar format."""
-        import pyarrow.parquet as papq
-
-        def _one(sid: str):
-            cached = self._seg_cache.get((name, sid))
-            if cached is not None:
-                return [e["path"] for e in cached]
-            p = self._seg_path(name, sid)
-            if not os.path.exists(p):
-                return None
-            return (
-                papq.read_table(p, columns=["path"]).column(0).to_pylist()
-            )
-
-        if len(sids) > 4:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=8) as pool:
-                chunks = list(pool.map(_one, sids))
-        else:
-            chunks = [_one(sid) for sid in sids]
-        out: list[str] = []
-        for c in chunks:
-            if c is None:
-                return None
-            out.extend(c)
-        return out
-
-    def _pruned_entries(self, name: str, sids: list[str], spec, where):
-        """Entries of the surviving segments that pass per-entry stats
-        pruning. Driver-side for small segment counts; above
-        ``SCAN_DIST_SEGMENTS`` the prune runs EXECUTOR-PARALLEL over
-        the columnar segment files (one Arrow kernel per batch, only
-        survivors come back to the driver) — the shape that keeps
-        planning a 1M-file table off the driver's critical path."""
-        if (
-            len(sids) >= self.SCAN_DIST_SEGMENTS
-            and self.spark is not None
-        ):
-            seg_paths = [self._seg_path(name, sid) for sid in sids]
-            if all(os.path.exists(p) for p in seg_paths):
-                return self._prune_entries_distributed(
-                    seg_paths, spec, where
-                )
-        out: list[dict] = []
-        for sid in sids:
-            try:
-                entries = self._seg_entries(name, sid)
-            except FileNotFoundError:
-                return None
-            out.extend(e for e in entries if _may_match(spec, e, where))
-        return out
-
-    def _prune_entries_distributed(self, seg_paths, spec, where):
-        """Executor-parallel entry pruning: Spark reads the columnar
-        segment files (one task per segment split), reconstructs entries
-        Arrow-batch-wise, applies the SAME ``_may_match`` kernel the
-        driver path uses, and ships back only survivors as JSON —
-        planning I/O and CPU scale out with the cluster, the driver
-        parses O(survivors)."""
-        sdf = self.spark.read.schema(
-            "path string, partition string, records long, bytes long, "
-            "rest string"
-        ).parquet(*seg_paths)
-
-        def _prune(batches):
-            import pyarrow as pa
-
-            for batch in batches:
-                ents = _seg_rows_to_entries(
-                    batch.column("path").to_pylist(),
-                    batch.column("partition").to_pylist(),
-                    batch.column("records").to_pylist(),
-                    batch.column("bytes").to_pylist(),
-                    batch.column("rest").to_pylist(),
-                )
-                keep = [
-                    json.dumps(e, sort_keys=True)
-                    for e in ents
-                    if _may_match(spec, e, where)
-                ]
-                if keep:
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(keep, type=pa.string())], names=["e"]
-                    )
-
-        return [
-            json.loads(r.e)
-            for r in sdf.mapInArrow(_prune, "e string").collect()
+        seg_stats = raw["seg_stats"]
+        surv = [
+            sid
+            for sid in raw["segments"]
+            if _seg_may_match(spec, seg_stats[sid], where)
         ]
-
-    def _read_clean_paths(self, name: str, raw: dict, paths_layout):
-        """Single-group read of an all-clean snapshot from its path list
-        — the read half of the broad fast plan. Matches _read_files'
-        one-group behavior exactly for the state _broad_plan admits (no
-        deletes, no externals, no renamed/defaulted columns): basePath +
-        explicit schema, hive partition columns restored by Spark's path
-        parsing, path-only partition columns dropped."""
-        paths, layout = paths_layout
-        schema = StructType.fromJson(raw["schema"])
-        names = {f.name for f in schema.fields}
-        hidden = [k for k in layout if k not in names]
-        read_schema = StructType(
-            [
-                StructField(f.name, _nested_nullable(f.dataType), True)
-                for f in schema.fields
-            ]
-            + [StructField(h, StringType(), True) for h in hidden]
-        )
-        if not paths:
-            return self.spark.createDataFrame([], schema)
-        df = (
-            self.spark.read.option(
-                "basePath", os.path.join(self._dir(name), "data")
-            )
-            .schema(read_schema)
-            .parquet(*[os.path.join(self._dir(name), p) for p in paths])
-        )
-        return df.select(
-            *[
-                F.col(f.name).cast(_nested_nullable(f.dataType))
-                for f in schema.fields
-            ]
-        )
+        self._prefetch_segments(name, surv)
+        files = [
+            e
+            for sid in surv
+            for e in self._seg_entries(name, sid)
+            if _may_match(spec, e, where)
+        ]
+        files = self._prune_buckets(raw, spec, files, where)
+        total = sum(seg_stats[sid]["n"] for sid in raw["segments"])
+        return raw, files, total
 
     # ------------------------------------------------------------- metadata
     def snapshots(self, name: str, ref: str = "main") -> DataFrame:
@@ -5437,22 +5136,12 @@ class ParquetTableManager:
         rows = []
         for v in sorted(self._ancestors(name, self._resolve(name, ref=ref))):
             raw = self._manifest_raw(name, v)
-            stats = raw.get("seg_stats") or {}
-            segs = raw.get("segments")
-            if segs is not None and all(
-                {"n", "rec", "byt"} <= set(stats.get(sid) or ())
-                for sid in segs
-            ):
-                # O(segments) rollup from the per-segment summaries —
-                # snapshot inspection never touches entries
-                n_f = sum(stats[sid]["n"] for sid in segs)
-                n_r = sum(stats[sid]["rec"] for sid in segs)
-                n_b = sum(stats[sid]["byt"] for sid in segs)
-            else:
-                m = self._load_manifest(name, v)
-                n_f = len(m["files"])
-                n_r = int(sum(e["records"] for e in m["files"]))
-                n_b = int(sum(e["bytes"] for e in m["files"]))
+            # O(segments) rollup from the per-segment summaries —
+            # snapshot inspection never touches entries
+            stats = [raw["seg_stats"][sid] for sid in raw["segments"]]
+            n_f = sum(st["n"] for st in stats)
+            n_r = sum(st["rec"] for st in stats)
+            n_b = sum(st["byt"] for st in stats)
             rows.append(
                 (
                     raw["version"],
@@ -5482,27 +5171,9 @@ class ParquetTableManager:
             else snapshot_id
         )
         raw = self._manifest_raw(name, v)
-        segs = raw.get("segments")
-        if segs is not None and self.spark is not None:
-            seg_paths = [self._seg_path(name, sid) for sid in segs]
-            if seg_paths and all(os.path.exists(p) for p in seg_paths):
-                return self.spark.read.schema(
-                    "path string, partition string, records long, "
-                    "bytes long"
-                ).parquet(*seg_paths)
-        m = self._load_manifest(name, v)
-        rows = [
-            (
-                e["path"],
-                json.dumps(e["partition"], sort_keys=True),
-                int(e["records"]),
-                int(e["bytes"]),
-            )
-            for e in m["files"]
-        ]
-        return self.spark.createDataFrame(
-            rows, "path STRING, partition STRING, records BIGINT, bytes BIGINT"
-        )
+        return self.spark.read.schema(
+            "path string, partition string, records long, bytes long"
+        ).parquet(*[self._seg_path(name, sid) for sid in raw["segments"]])
 
     def partitions(self, name: str) -> DataFrame:
         return (
@@ -5527,27 +5198,13 @@ class ParquetTableManager:
         maps with ZERO entry decodes and zero data reads — while
         :meth:`partitions` recomputes the same table from the full file
         inventory every call. Value-identical to :meth:`partitions` at
-        every snapshot (gated in tests); segments predating the rollup
-        field fall back to a one-time entry decode."""
+        every snapshot (gated in tests)."""
         v = (
             self._current_version(name)
             if snapshot_id is None
             else snapshot_id
         )
         folded = self._fold_partition_stats(name, v)
-        if folded is None:
-            # legacy non-segmented manifest: recompute from the
-            # inventory AT THE REQUESTED SNAPSHOT (partitions() always
-            # reads the head)
-            return (
-                self.files(name, v)
-                .groupBy("partition")
-                .agg(
-                    F.count("*").alias("n_files"),
-                    F.sum("records").alias("n_records"),
-                    F.sum("bytes").alias("total_bytes"),
-                )
-            )
         return self.spark.createDataFrame(
             [(k, *vals) for k, vals in sorted(folded.items())],
             "partition STRING, n_files BIGINT, n_records BIGINT, "
@@ -5556,30 +5213,15 @@ class ParquetTableManager:
 
     def _fold_partition_stats(
         self, name: str, version: int
-    ) -> dict[str, list[int]] | None:
+    ) -> dict[str, list[int]]:
         """The maintained-stats fold shared by :meth:`partition_stats`
         and the ``snaptable`` connector's ``partitions`` metadata table:
         canonical-partition-JSON -> [n_files, n_records, n_bytes],
-        O(segments x partitions-per-segment) with zero entry decodes on
-        current-format segments. None for legacy non-segmented
-        manifests (callers recompute from the inventory)."""
+        O(segments x partitions-per-segment) with zero entry decodes."""
         raw = self._manifest_raw(name, version)
-        segs = raw.get("segments")
-        if segs is None:
-            return None
-        seg_stats = raw.get("seg_stats", {})
         folded: dict[str, list[int]] = {}
-        for sid in segs:
-            pr = (seg_stats.get(sid) or {}).get("pr")
-            if pr is None:  # pre-rollup segment: decode once, same math
-                pr = {}
-                for e in self._seg_entries(name, sid):
-                    k = json.dumps(e["partition"], sort_keys=True)
-                    slot = pr.setdefault(k, [0, 0, 0])
-                    slot[0] += 1
-                    slot[1] += int(e["records"])
-                    slot[2] += int(e["bytes"])
-            for k, (nf, nr, nb) in pr.items():
+        for sid in raw["segments"]:
+            for k, (nf, nr, nb) in raw["seg_stats"][sid]["pr"].items():
                 slot = folded.setdefault(k, [0, 0, 0])
                 slot[0] += nf
                 slot[1] += nr
@@ -5918,7 +5560,7 @@ class ParquetTableManager:
         live_segs: set[str] = set()
         for v in keep:
             mm = self._load_manifest(name, v)
-            live_segs.update(sid for sid, _ in mm.get("_seg_layout") or [])
+            live_segs.update(sid for sid, _ in mm["_seg_layout"])
             for e in mm["files"]:
                 live.update(_paths(e))
             live.update(
@@ -5932,7 +5574,7 @@ class ParquetTableManager:
         drop_segs: set[str] = set()
         for v in drop:
             dm = self._load_manifest(name, v)
-            drop_segs.update(sid for sid, _ in dm.get("_seg_layout") or [])
+            drop_segs.update(sid for sid, _ in dm["_seg_layout"])
             dropped_paths = [
                 p for e in dm["files"] for p in _paths(e, owned_only=True)
             ] + [
@@ -5955,12 +5597,9 @@ class ParquetTableManager:
         # of the data-file reap above; dropped AFTER every dropped
         # manifest's inventory was materialized)
         for sid in drop_segs - live_segs:
-            for sp in (
-                self._seg_path(name, sid),
-                self._seg_path_legacy(name, sid),
-            ):
-                if os.path.exists(sp):
-                    os.remove(sp)
+            sp = self._seg_path(name, sid)
+            if os.path.exists(sp):
+                os.remove(sp)
             self._seg_cache_drop((name, sid))
         # crash-orphaned segments: a writer that died between segment
         # write and manifest create leaves segments NO manifest ever

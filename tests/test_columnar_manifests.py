@@ -6,10 +6,12 @@ Pins, in order:
 - codec round-trip EXACTNESS: an entry with every irregular key class
   (delete attachments, bloom bytes, external marker, seq stamp) decodes
   back key-for-key, value-for-value — the facade contract;
-- broad fast-path (path-column-only planning) result identity vs the
-  materialized read, and every fallback trigger (MoR state, externals,
-  renamed/defaulted schema, global deletes) actually falling back;
-- executor-parallel entry pruning == driver pruning, entry for entry;
+- the one read planner behind scan() and read(): on clean multi-segment,
+  MoR-deleted, delete-rewritten, externally registered, renamed-column
+  and initial-default tables, read() == scan() row for row, a broad
+  scan plans every file, and a selective scan returns read().filter()'s
+  rows while planning exactly the files per-entry pruning keeps over
+  the full materialized inventory;
 - files()/partitions() metadata tables (manager AND snaptable
   DataSource) matching the materialized inventory;
 - snapshots() per-segment rollups matching entry sums.
@@ -94,64 +96,7 @@ def _mk(spark, mgr, name, n=400, target=8):
     return df
 
 
-def _materialized_read(mgr, name):
-    m = mgr._load_manifest(name)
-    return mgr._read_files(name, m, m["files"])
-
-
-def test_broad_fast_path_matches_materialized_and_falls_back(
-    mgr, spark, tmp_path
-):
-    df = _mk(spark, mgr, "t")
-    raw = mgr._manifest_raw("t", mgr._current_version("t"))
-    assert mgr._broad_plan("t", raw) is not None, "clean table: fast path"
-    fast = {tuple(r) for r in mgr.read("t").collect()}
-    slow = {tuple(r) for r in _materialized_read(mgr, "t").collect()}
-    assert fast == slow and len(fast) == 400
-    # scan broad counts come from segment summaries, not entries
-    _df, planned, total = mgr.scan("t")
-    assert (planned, total) == (total, total) and total > 0
-    # MoR delete -> the dirty snapshot must NOT take the fast path
-    mgr.delete("t", where=[("k", "==", 1)], mode="mor")
-    raw2 = mgr._manifest_raw("t", mgr._current_version("t"))
-    assert mgr._broad_plan("t", raw2) is None
-    assert mgr.read("t").count() == 399
-    # rewriting the deletes away restores fast-path eligibility
-    mgr.rewrite_deletes("t")
-    raw3 = mgr._manifest_raw("t", mgr._current_version("t"))
-    assert mgr._broad_plan("t", raw3) is not None
-    assert mgr.read("t").count() == 399
-
-
-def test_fast_path_fallback_on_externals_and_schema_evolution(
-    mgr, spark, tmp_path
-):
-    # externals: partition restore needs entry values -> no fast path
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, cat string")
-    ext = str(tmp_path / "ext")
-    df.coalesce(1).write.partitionBy("cat").parquet(ext)
-    import glob
-
-    paths = sorted(glob.glob(os.path.join(ext, "cat=*", "*.parquet")))
-    mgr.create_table("e", df.schema, [identity("cat")])
-    mgr.add_files("e", paths)
-    raw = mgr._manifest_raw("e", mgr._current_version("e"))
-    assert mgr._broad_plan("e", raw) is None
-    assert {(r.k, r.cat) for r in mgr.read("e").collect()} == {
-        (1, "a"),
-        (2, "b"),
-    }
-    # renamed column (former_names metadata) -> no fast path, coalesced read
-    _mk(spark, mgr, "r", n=20)
-    mgr.rename_column("r", "s", "label")
-    raw2 = mgr._manifest_raw("r", mgr._current_version("r"))
-    assert mgr._broad_plan("r", raw2) is None
-    got = mgr.read("r")
-    assert "label" in got.columns and got.count() == 20
-    assert got.filter(F.col("label") == "r3").count() == 1
-
-
-def test_distributed_entry_pruning_matches_driver(mgr, spark):
+def _clean(spark, mgr, tmp_path):
     _mk(spark, mgr, "t", n=600, target=4)
     mgr.append(
         "t",
@@ -160,32 +105,80 @@ def test_distributed_entry_pruning_matches_driver(mgr, spark):
             "k long, cell int, s string",
         ),
     )
-    where = [("cell", "==", 2), ("k", "<", 500)]
-    raw = mgr._manifest_raw("t", mgr._current_version("t"))
-    spec = mgr._spec(raw)
-    segs = raw["segments"]
-    # force the driver path then the distributed path and compare
-    old = ParquetTableManager.SCAN_DIST_SEGMENTS
-    try:
-        ParquetTableManager.SCAN_DIST_SEGMENTS = 10**9
-        d_files = mgr._pruned_entries("t", segs, spec, where)
-        ParquetTableManager.SCAN_DIST_SEGMENTS = 1
-        x_files = mgr._pruned_entries("t", segs, spec, where)
-    finally:
-        ParquetTableManager.SCAN_DIST_SEGMENTS = old
-    key = lambda e: e["path"]  # noqa: E731
-    assert sorted(d_files, key=key) == sorted(x_files, key=key)
-    assert d_files, "predicate should keep some files"
-    # and scan() itself returns identical results under either regime
-    try:
-        ParquetTableManager.SCAN_DIST_SEGMENTS = 1
-        df1, p1, t1 = mgr.scan("t", where=where)
-        rows1 = sorted(tuple(r) for r in df1.collect())
-    finally:
-        ParquetTableManager.SCAN_DIST_SEGMENTS = old
-    df2, p2, t2 = mgr.scan("t", where=where)
-    assert (p1, t1) == (p2, t2)
-    assert rows1 == sorted(tuple(r) for r in df2.collect())
+    return "t", [("cell", "==", 2), ("k", "<", 500)], 640
+
+
+def _mor_deleted(spark, mgr, tmp_path):
+    _mk(spark, mgr, "t")
+    mgr.delete("t", where=[("k", "==", 1)], mode="mor")
+    return "t", [("cell", "==", 1)], 399
+
+
+def _deletes_rewritten(spark, mgr, tmp_path):
+    name, where, n = _mor_deleted(spark, mgr, tmp_path)
+    mgr.rewrite_deletes(name)
+    m = mgr._load_manifest(name)
+    assert not any(e.get("deletes") for e in m["files"])
+    return name, where, n
+
+
+def _external(spark, mgr, tmp_path):
+    import glob
+
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, cat string")
+    ext = str(tmp_path / "ext")
+    df.coalesce(1).write.partitionBy("cat").parquet(ext)
+    paths = sorted(glob.glob(os.path.join(ext, "cat=*", "*.parquet")))
+    mgr.create_table("e", df.schema, [identity("cat")])
+    mgr.add_files("e", paths)
+    return "e", [("cat", "==", "a")], 2
+
+
+def _renamed(spark, mgr, tmp_path):
+    _mk(spark, mgr, "r", n=20)
+    mgr.rename_column("r", "s", "label")
+    return "r", [("label", "==", "r3")], 20
+
+
+def _defaulted(spark, mgr, tmp_path):
+    _mk(spark, mgr, "d", n=20)
+    mgr.add_column("d", "tag", "string", default="old")
+    mgr.append(
+        "d",
+        spark.createDataFrame(
+            [(100, 1, "n", "new"), (101, 2, "n", None)],
+            "k long, cell int, s string, tag string",
+        ),
+    )
+    return "d", [("cell", "==", 1), ("tag", "==", "old")], 22
+
+
+@pytest.mark.parametrize(
+    "build",
+    [_clean, _mor_deleted, _deletes_rewritten, _external, _renamed, _defaulted],
+    ids=lambda f: f.__name__.lstrip("_"),
+)
+def test_scan_and_read_share_one_plan(mgr, spark, tmp_path, build):
+    name, where, n_rows = build(spark, mgr, tmp_path)
+    rows = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
+    full = rows(mgr.read(name))
+    assert len(full) == n_rows
+    df, planned, total = mgr.scan(name)
+    assert rows(df) == full
+    assert planned == total > 0
+    # the selective scan: read().filter() rows, and exactly the files
+    # per-entry pruning keeps over the whole materialized inventory
+    # (segment-summary pruning may only skip provably-empty segments)
+    from iceberg_poc_spark.tables.manager import _may_match, _predicate
+
+    m = mgr._load_manifest(name)
+    spec = mgr._spec(m)
+    want_planned = sum(_may_match(spec, e, where) for e in m["files"])
+    df, planned, total = mgr.scan(name, where=where)
+    want = rows(mgr.read(name).filter(_predicate(where)))
+    assert want, "predicate should keep some rows"
+    assert rows(df) == want
+    assert (planned, total) == (want_planned, len(m["files"]))
 
 
 def test_metadata_tables_match_inventory(mgr, spark):

@@ -171,25 +171,12 @@ def test_segment_layer_matches_model_under_random_ops(spark, ops, probe):
         want = Counter(r for r in model if r[1] == probe)
         assert got == want
         assert 0 <= planned <= total
-        # broad scan (columnar path-only fast plan when the state is
-        # clean, materialized otherwise) equals the full model
+        # broad scan equals the full model and plans every file
         bdf, bp, bt = mgr.scan("t")
         assert Counter((r.k, r.part, r.v) for r in bdf.collect()) == Counter(
             model
         )
         assert bp == bt
-        # the same selective scan under the EXECUTOR-PARALLEL entry
-        # pruning regime: identical rows AND identical planned counts
-        old_thresh = ParquetTableManager.SCAN_DIST_SEGMENTS
-        try:
-            ParquetTableManager.SCAN_DIST_SEGMENTS = 1
-            df2, p2, t2 = mgr.scan("t", where=[("part", "==", probe)])
-            assert (
-                Counter((r.k, r.part, r.v) for r in df2.collect()) == want
-            )
-            assert (p2, t2) == (planned, total)
-        finally:
-            ParquetTableManager.SCAN_DIST_SEGMENTS = old_thresh
         # the table never owns registered data: every external file
         # survived all interleaved compactions and expiries
         assert all(os.path.exists(p) for p in ext_files)

@@ -113,3 +113,22 @@ def test_minhash_signatures_match_oracle(spark, docs):
         """,
     )
     assert got == want
+
+
+def test_propagate_labels_releases_cache_and_conf_on_error(spark, monkeypatch):
+    """A failing fixpoint loop must not leak the cached edge RDD nor
+    leave AQE switched off for the next query on the session."""
+    from iceberg_poc_spark.operators import dedup
+
+    def _boom(*_a, **_k):
+        raise RuntimeError("injected")
+
+    monkeypatch.setattr(dedup, "_propagate_rounds", _boom)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "doc_a INT, doc_b INT")
+    with pytest.raises(RuntimeError, match="injected"):
+        dedup._propagate_labels(spark, pairs)
+    assert jsc.getPersistentRDDs().size() == before
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
