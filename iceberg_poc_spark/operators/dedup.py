@@ -766,10 +766,10 @@ KEEP_FIRST_SALTS = 8
     "one extra (tiny, candidates-only) shuffle — which is why the "
     "single-window plan stays the default and this is the documented "
     "escape hatch for dup-heavy corpora. Worst-case smoke with task-size "
-    "bounds: tests/test_scale_smoke.py. The crossover is MEASURED, not "
-    "hypothetical: at the 100x re-keyed corpus (~100 copies per text, "
-    "BENCH_x100.json) the salted plan runs 3.2x FASTER than the single "
-    "window (1.6s vs 5.1s) — phase 2 sees only candidates, so dup depth "
+    "bounds: tests/test_scale_smoke.py. The crossover was MEASURED, not "
+    "hypothetical: at a 100x re-keyed corpus (~100 copies per text) the "
+    "salted plan ran 3.2x FASTER than the single window (1.6s vs 5.1s) "
+    "— phase 2 sees only candidates, so dup depth "
     "stops being the window's sort cost.",
 )
 def q_dedup_keep_first_salted(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1321,10 +1321,10 @@ def _setup_users_cd(spark: SparkSession, sf_dir: str) -> tuple:
     "seq` — regardless of epoch count. Zero data files moved, one "
     "metadata commit (stack==0 + global fold + unchanged values + "
     "post-compaction-epoch refold + superseded-file expiry asserted in "
-    "tests/test_table_manager.py; measured read-tax curve in "
-    "BENCH_MOR.json: 100-epoch read 12.1s -> 0.93s, back to "
-    "single-epoch cost). The post-compaction read must still collapse "
-    "to exactly the last event per user, which the oracle computes "
+    "tests/test_table_manager.py, which also pins the read tax: one "
+    "LeftAnti per stacked epoch before the fold, exactly one after). "
+    "The post-compaction read must still collapse to exactly the "
+    "last event per user, which the oracle computes "
     "with one window over raw events. At 100 TB CDC cadence this is "
     "what keeps thousand-epoch MoR tables readable without ever paying "
     "the full rewrite.",

@@ -23,9 +23,10 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # local[32] + sf<=0.1: 32 gives one wave; AQE coalesces further.
-    # On a real cluster this should be ~2-3x total cores.
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
+    # 32 gives one wave on up to 32 local cores; AQE coalesces further.
+    # On a real cluster this should be ~2-3x total cores (override it
+    # through get_spark(extra_conf=...)).
+    "spark.sql.shuffle.partitions": "32",
     # --- deterministic semantics for the DuckDB oracle ---
     "spark.sql.session.timeZone": "UTC",
     # testdata parquet timestamps are isAdjustedToUTC=false -> read as
@@ -42,12 +43,11 @@ DEFAULT_CONF: dict[str, str] = {
     # broadcast threshold: default 10MB is fine; make it explicit so the
     # intent (dims broadcast, facts shuffle) is visible.
     "spark.sql.autoBroadcastJoinThreshold": str(10 * 1024 * 1024),
-    # local mode runs driver and all 32 executor threads in ONE JVM; the
+    # local mode runs the driver and every executor thread in ONE JVM; the
     # 1g driver default that suits a real cluster's driver-only process
-    # OOMs here once inputs outgrow toy SFs (first seen on the 10x sf1
-    # sweep). Only honored at session creation — a cluster deploy sets
-    # its own executor/driver sizing.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+    # OOMs here once inputs outgrow toy SFs. Only honored at session
+    # creation — a cluster deploy sets its own executor/driver sizing.
+    "spark.driver.memory": "8g",
 }
 
 
@@ -83,13 +83,14 @@ def scoped_conf(spark: SparkSession, conf: dict[str, str]):
     """Set session confs for one block, restoring the prior values on
     any exit path.
 
-    NOTE (ADVICE r12): SparkSession conf is session-GLOBAL. Scoping it
-    this way is sound only because the harness drives one query at a
-    time on the session (bench.py / the oracle driver are single-
-    threaded); a concurrent query on the same session would observe the
-    override. The restore also only covers work that EXECUTES inside
-    the block — callers must consume (or eagerly materialize) anything
-    that depends on the override before the block exits."""
+    NOTE (ADVICE r12): SparkSession conf is session-GLOBAL, so this is
+    sound only while one query at a time runs on the session. That does
+    not hold everywhere: perfbench's set-up check runs registry queries
+    concurrently on one session, and those queries see the override
+    (ROADMAP item 5 replaces this helper with plan-local means). The
+    restore also only covers work that EXECUTES inside the block —
+    callers must consume (or eagerly materialize) anything that depends
+    on the override before the block exits."""
     prev = {k: spark.conf.get(k, None) for k in conf}
     for k, v in conf.items():
         spark.conf.set(k, v)

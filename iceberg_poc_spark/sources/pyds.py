@@ -190,7 +190,7 @@ def _apply_mor_deletes(tbl, entry: dict, table_dir: str):
                 filters=[("_file_name", "==", fn)],
             )
             sel = t
-            if d.get("dv") and d.get("dvf") == 2:
+            if d.get("dv"):
                 # BITMAP deletion vector (dvf=2): one row per data file
                 # carrying 64-bit word structs — decode word w's set
                 # bit i to position w*64+i, the executor-side twin of
@@ -204,17 +204,6 @@ def _apply_mor_deletes(tbl, entry: dict, table_dir: str):
                             if (b >> i) & 1:
                                 pos.append(base + i)
                 kill_parts.append(np.asarray(pos, dtype=np.int64))
-            elif d.get("dv"):
-                # deletion-vector file: one row per data file with its
-                # sorted position list — flatten this file's row(s)
-                kill_parts.append(
-                    np.asarray(
-                        sel["positions"]
-                        .combine_chunks()
-                        .flatten()
-                        .to_numpy(zero_copy_only=False)
-                    )
-                )
             else:
                 kill_parts.append(
                     np.asarray(
@@ -476,6 +465,8 @@ class SnapMetaReader(DataSourceReader):
         return [InputPartition(p) for p in self._seg_paths]
 
     def read(self, partition):
+        if partition is None:  # no segments: Spark reads one None split
+            return
         import pyarrow.parquet as pq
 
         cols = ["path", "partition", "records", "bytes"]
@@ -587,6 +578,8 @@ class SnapTableReader(DataSourceReader):
         ]
 
     def read(self, partition):
+        if partition is None:  # no files: Spark reads one None split
+            return
         entry, table_dir, schema_json, where = partition.value
         yield from _read_file_as_batches(entry, table_dir, schema_json, where)
 

@@ -392,7 +392,7 @@ TXN_APPLIED_KEEP = 64
 
 
 # upsert_equality auto-runs compact_deletes once any file's delete stack
-# reaches this depth (0/absent = off); BENCH_MOR.json measures the curve
+# reaches this depth (0/absent = off)
 DELETE_COMPACT_THRESHOLD_PROP = "write.delete.compact-threshold"
 
 # append auto-runs compact_partitions once any partition's file count
@@ -3345,62 +3345,41 @@ class ParquetTableManager:
     def _write_dv_files(self, name: str, dv: DataFrame) -> list[dict]:
         """Persist a per-file DELETION VECTOR table as parquet under
         ``deletes/`` (≙ Iceberg v3 deletion vectors: positions stored
-        compressed per file instead of one row per coordinate). Two
-        formats, detected from the written schema:
+        compressed per file instead of one row per coordinate). One row
+        per data file carrying ``words: array<struct<w, b>>`` — 64-bit
+        word bitmaps, the dense-container half of Iceberg v3's roaring
+        DV spec — plus a per-row ``n`` bit count. Descriptors carry
+        ``dv: True`` and ``dvf: 2``.
 
-        - BITMAP (current writer): one row per data file carrying
-          ``words: array<struct<w, b>>`` — 64-bit word bitmaps, the
-          dense-container half of Iceberg v3's roaring DV spec — plus a
-          per-row ``n`` bit count. Descriptors carry ``dv: True`` and
-          ``dvf: 2``.
-        - sorted ``positions`` array (read-compat with pre-bitmap DV
-          history): ``dv: True``, no ``dvf``.
-
-        Both record ``n_pos`` — the TOTAL coordinate count (footer leaf
-        counts for lists; a one-column driver read of the tiny per-file
-        ``n`` rollup for bitmaps) — because a compressed DV's on-disk
-        bytes under-represent the exploded rows the read-side anti-join
-        materializes; the 64 MB broadcast guard must see coordinates,
-        not compressed bytes."""
+        Each descriptor records ``n_pos`` — the TOTAL coordinate count (a
+        one-column driver read of the tiny per-file ``n`` rollup) —
+        because a compressed DV's on-disk bytes under-represent the
+        exploded rows the read-side anti-join materializes; the 64 MB
+        broadcast guard must see coordinates, not compressed bytes."""
         import pyarrow.parquet as pq
 
         out: list[dict] = []
         for dst in self._stage_delete_parquet(name, dv, "dv"):
-            pf = pq.ParquetFile(dst)
-            md = pf.metadata
-            names = set(pf.schema_arrow.names)
-            entry = {
-                "path": os.path.relpath(dst, self._dir(name)),
-                "bytes": os.path.getsize(dst),
-                "dv": True,
-            }
-            if "words" in names:
-                ncol = pq.read_table(dst, columns=["n"])["n"]
-                entry["n_pos"] = int(
-                    sum(v.as_py() or 0 for v in ncol)
-                )
-                entry["dvf"] = 2
-            else:
-                n_pos = 0
-                for rg in range(md.num_row_groups):
-                    g = md.row_group(rg)
-                    for c in range(g.num_columns):
-                        col = g.column(c)
-                        if col.path_in_schema.startswith("positions."):
-                            n_pos += col.num_values
-                entry["n_pos"] = int(n_pos)
-            out.append(entry)
+            ncol = pq.read_table(dst, columns=["n"])["n"]
+            out.append(
+                {
+                    "path": os.path.relpath(dst, self._dir(name)),
+                    "bytes": os.path.getsize(dst),
+                    "dv": True,
+                    "dvf": 2,
+                    "n_pos": int(sum(v.as_py() or 0 for v in ncol)),
+                }
+            )
         return out
 
     def _global_pos_coords(self, name: str, gpos: list[dict]) -> DataFrame:
         """(_file_name, _pos) coordinates of a global positional-delete
         descriptor list — reading each storage class natively
-        (coordinate files select, DV files explode their position
-        lists). THE single format dispatch: the fold's input and the
-        read path's anti-join side both come through here."""
+        (coordinate files select, DV files expand their bitmaps). THE
+        single format dispatch: the fold's input and the read path's
+        anti-join side both come through here."""
         coord_g = [g for g in gpos if not g.get("dv")]
-        dv_list = [g for g in gpos if g.get("dv") and g.get("dvf") != 2]
-        dv_bmp = [g for g in gpos if g.get("dv") and g.get("dvf") == 2]
+        dv_g = [g for g in gpos if g.get("dv")]
         parts: list[DataFrame] = []
         if coord_g:
             parts.append(
@@ -3411,25 +3390,14 @@ class ParquetTableManager:
                     ]
                 ).select("_file_name", "_pos")
             )
-        if dv_list:
-            parts.append(
-                self.spark.read.parquet(
-                    *[
-                        os.path.join(self._dir(name), g["path"])
-                        for g in dv_list
-                    ]
-                ).select(
-                    "_file_name", F.explode("positions").alias("_pos")
-                )
-            )
-        if dv_bmp:
+        if dv_g:
             # bitmap DV: word w contributes position w*64+i for every
             # set bit i — pure JVM expressions, no Python in the path
             parts.append(
                 self.spark.read.parquet(
                     *[
                         os.path.join(self._dir(name), g["path"])
-                        for g in dv_bmp
+                        for g in dv_g
                     ]
                 )
                 .select("_file_name", F.explode("words").alias("wd"))
@@ -3460,9 +3428,7 @@ class ParquetTableManager:
         equivalence, since their own on-disk bytes under-represent the
         exploded rows the join materializes."""
         return sum(
-            g["n_pos"] * 10
-            if g.get("dv") and "n_pos" in g
-            else g.get("bytes", 0)
+            g["n_pos"] * 10 if g.get("dv") else g.get("bytes", 0)
             for g in gpos
         )
 
@@ -3497,9 +3463,9 @@ class ParquetTableManager:
         :meth:`rewrite_deletes`.
 
         Auto-maintenance: with the ``write.delete.compact-threshold``
-        table property set (an int; BENCH_MOR.json measures ~10 as the
-        point the stacked-epoch read tax turns superlinear), an upsert
-        that leaves any file's delete stack at/over the threshold
+        table property set (an int: each stacked epoch adds one
+        anti-join to every read until the fold), an upsert that leaves
+        any file's delete stack at/over the threshold
         triggers :meth:`compact_deletes` inline — the stack depth check
         is metadata-only, and the read tax stays bounded without an
         external maintenance scheduler (≙ Iceberg's
@@ -3734,13 +3700,15 @@ class ParquetTableManager:
         broadcast anti-join per key-column set — condition
         ``keys match AND __del_seq > file seq`` — instead of one
         anti-join per (file-group × epoch): plan complexity O(1) in the
-        number of stacked epochs, which BENCH_MOR.json shows is the
-        actual read tax (the delete files themselves are tiny; the 100
-        per-group anti-joins were the cost). Correctness of the seq
-        scoping: an upsert epoch's delete file is only ever attached to
-        files that existed BEFORE its commit, so ``delete birth > file
-        birth`` reproduces the explicit attachment exactly (stats-pruned
-        attachments it re-adds are no-ops — no matching keys); each
+        number of stacked epochs, which is the actual read tax (the
+        delete files themselves are tiny; the per-group anti-joins are
+        the cost — tests/test_table_manager.py pins the plan shape: one
+        ``LeftAnti`` per stacked epoch before the fold, one after).
+        Correctness of the seq scoping: an upsert epoch's delete file is
+        only ever attached to files that existed BEFORE its commit, so
+        ``delete birth > file birth`` reproduces the explicit attachment
+        exactly (stats-pruned attachments it re-adds are no-ops — no
+        matching keys); each
         epoch's own files share the delete's birth version and are
         exempt by the strict inequality, exactly Iceberg's same-sequence
         rule. Stacked POSITIONAL delete files merge per stack (they bind
@@ -3802,8 +3770,7 @@ class ParquetTableManager:
                 # (file names are uuid-unique within the table). The
                 # previous per-file read-then-union loop scheduled one
                 # Spark job PER epoch — pure job-submission overhead
-                # that dominated a 100-epoch fold (BENCH_MOR.json
-                # fix_sec measures the collapse).
+                # that dominated a 100-epoch fold.
                 pmap = self.spark.createDataFrame(
                     [(os.path.basename(p), b) for p, b in paths.items()],
                     "__fn string, __del_seq long",
@@ -3907,13 +3874,12 @@ class ParquetTableManager:
                 e["pos_deletes"] = []
         if pos_fold:
             # fold target is a DELETION-VECTOR file (Iceberg v3 DV
-            # direction): one row PER DATA FILE carrying its sorted
-            # deleted-position list — RLE/delta-friendly columnar
-            # storage, and the read side recovers coordinates with one
+            # direction): one row PER DATA FILE carrying its deleted
+            # positions, and the read side recovers coordinates with one
             # explode of a tiny broadcast (value-identical to the
-            # coordinate form, oracle-pinned). Prior global files may
-            # be either format (coordinate from pre-DV history, DV from
-            # a previous fold): read each class natively and union.
+            # coordinate form, oracle-pinned). The fold's inputs are the
+            # per-file coordinate files being folded plus the DV of any
+            # previous fold: read each class natively and union.
             merged = self._global_pos_coords(
                 name,
                 [{"path": p} for p in pos_fold] + gpos,
@@ -3924,9 +3890,9 @@ class ParquetTableManager:
             # reads natively): position p lives in word p>>6 at bit
             # p&63, so a file's delete set stores ceil(density*rows/64)
             # 16-byte rows instead of 8 bytes PER position — up to 32x
-            # smaller at full density, where the old sorted-list DV was
-            # largest. bit_count() sums give n_pos (the broadcast-guard
-            # coordinate count) in the same pass.
+            # smaller at full density, where a sorted position list
+            # would be largest. bit_count() sums give n_pos (the
+            # broadcast-guard coordinate count) in the same pass.
             dv = (
                 merged.distinct()
                 .select(

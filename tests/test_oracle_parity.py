@@ -1,9 +1,10 @@
 """Differential correctness: every registered query vs its DuckDB oracle.
 
-Replicates the driver's t2 gate locally (row count + column names + values,
-order-insensitive) so CORRECTNESS_r{N}.json holds no surprises. Values are
-compared exactly after canonicalization — floats must already be stabilized
-in-query (rounding), which is the same bar the driver's value-hash sets.
+Replicates the ``__spark_entry__`` consumer's correctness check locally (row
+count + column names + values, order-insensitive), so a divergence shows here
+first. Values are compared exactly after canonicalization — floats must
+already be stabilized in-query (rounding), which is the same bar the
+driver's value-hash sets.
 """
 
 from __future__ import annotations

@@ -98,6 +98,25 @@ def test_pushdown_prunes_files(mgr, spark):
     assert len(r2.partitions()) == 0
 
 
+@pytest.mark.parametrize("case", ["no_appends", "all_pruned", "files_no_appends"])
+def test_zero_file_plan_reads_zero_rows(mgr, spark, case):
+    """A connector read that plans no file or segment yields zero rows,
+    as the manager's own read/scan/files do."""
+    df = spark.createDataFrame([(i, i % 4) for i in range(20)], "k long, cell long")
+    mgr.create_table("t", df.schema, [identity("cell")])
+    if case == "all_pruned":
+        mgr.append("t", df)
+        got = _load(spark, mgr, "t").filter("k = 99")
+        assert mgr.scan("t", [("k", "==", 99)])[0].count() == 0
+    elif case == "files_no_appends":
+        got = _load(spark, mgr, "t", meta="files")
+        assert mgr.files("t").count() == 0
+    else:
+        got = _load(spark, mgr, "t")
+        assert mgr.read("t").count() == 0
+    assert got.collect() == []
+
+
 def test_stream_replays_appends_only(mgr, spark, tmp_path):
     mgr.create_table("t", EVENTS_SCHEMA)
     v0 = mgr._current_version("t")

@@ -1208,11 +1208,16 @@ def test_compact_deletes_folds_stacks_into_global_seq_deletes(mgr, spark):
     sequence-scoped global delete file per key-column set (per-key MAX
     seq) with IDENTICAL row-visible VALUES, stamps every entry's birth
     seq, is a no-op when nothing is stacked, and the superseded delete
-    files are reaped by expire_snapshots once unreferenced. Epochs
-    landed AFTER a compaction stack per-entry again and FOLD INTO the
-    existing global file on the next pass; rewrite_deletes clears the
-    global state entirely."""
+    files are reaped by expire_snapshots once unreferenced. The fold
+    makes the read tax constant in the epoch count: the read plan holds
+    one anti-join per stacked epoch before it and exactly one after.
+    Epochs landed AFTER a compaction stack per-entry again and FOLD INTO
+    the existing global file on the next pass; rewrite_deletes clears
+    the global state entirely."""
     import os
+
+    def n_anti(df):
+        return df._jdf.queryExecution().optimizedPlan().toString().count("LeftAnti")
 
     base = spark.createDataFrame(
         [(i, f"v0-{i}") for i in range(40)], "k long, v string"
@@ -1228,9 +1233,11 @@ def test_compact_deletes_folds_stacks_into_global_seq_deletes(mgr, spark):
     before = sorted(tuple(map(str, r)) for r in mgr.read("cd").collect())
     m = mgr._load_manifest("cd")
     assert max(len(e.get("eq_deletes", [])) for e in m["files"]) == 8
+    assert n_anti(mgr.read("cd")) == 8
     v = mgr.compact_deletes("cd")
     m2 = mgr._load_manifest("cd")
     assert m2["operation"] == "compact-deletes"
+    assert n_anti(mgr.read("cd")) == 1
     # every per-entry stack folded away; ONE global file for the one
     # key-column set; every entry carries its birth seq
     assert max(len(e.get("eq_deletes", [])) for e in m2["files"]) == 0

@@ -5,7 +5,8 @@ pre-handoff check that catches scale-dependent divergence the sf0.01
 driver gate can't see. Two real bug classes only materialized at sf0.1
 row counts: cross-job range-boundary sampling nondeterminism
 (q_win_ntile_share) and RANGE-frame peer semantics on second-truncated
-epochs (q_win_frame_range). Run from the repo root:
+epochs (q_win_frame_range). The master follows ``SPARK_GRAFT_CPUS`` like
+the tests and the benchmark. Run from the repo root:
 
     python tools/sweep_oracle.py [sf_dir] [--only qid1,qid2,...]
 
@@ -31,8 +32,10 @@ def main() -> int:
     import duckdb
     from pyspark.sql import SparkSession
 
+    from iceberg_poc_spark.session import default_master
+
     spark = (
-        SparkSession.builder.master("local[32]")
+        SparkSession.builder.master(default_master())
         .config("spark.sql.session.timeZone", "America/New_York")
         .appName("oracle-sweep")
         .getOrCreate()
