@@ -759,7 +759,7 @@ _ANN_DEL_STATE: dict[str, object] = {}
 def _ann_delete_scan(spark: SparkSession, sf_dir: str):
     """Build the frozen-anchor IVF index over the full corpus, then
     REMOVE the opted-out vectors (vec_id % 7 == 3) with a merge-on-read
-    positional delete + compact_deletes fold — no index file rewritten —
+    positional delete + compact_deletes pass — no index file rewritten —
     and plan the budgeted multi-probe over the redacted index. Returns
     (df, planned, total, qemb, mgr, pre_paths)."""
     import atexit
@@ -786,8 +786,8 @@ def _ann_delete_scan(spark: SparkSession, sf_dir: str):
         )
         # the redaction epoch: positional MoR delete of the opted-out
         # rows (coordinates, so even a bit-identical duplicate of a
-        # surviving vector could be removed), folded to ONE global
-        # coordinate file — the index data files never move
+        # surviving vector could be removed), kept at ONE table-level
+        # deletion vector — the index data files never move
         coords = (
             mgr.read_with_positions("emb_ivf_del")
             .filter(F.col("vec_id") % 7 == 3)
@@ -856,8 +856,8 @@ def _ann_delete_scan(spark: SparkSession, sf_dir: str):
     f"append path: opted-out vectors (vec_id %% 7 == 3) are removed from "
     f"the anchor-IVF index with a merge-on-read POSITIONAL delete "
     f"(coordinates, the one delete class that could also remove one of "
-    f"two bit-identical vectors) folded by compact_deletes into ONE "
-    f"global coordinate file — zero index data files rewritten (file "
+    f"two bit-identical vectors) kept by compact_deletes at ONE "
+    f"table-level deletion vector — zero index data files rewritten (file "
     f"identity asserted in tests/test_ann_recall.py), and the probe "
     f"read pays a single broadcast coordinate anti-join on top of the "
     f"manifest cell pruning. A deleted vector can NEVER surface from "

@@ -916,15 +916,15 @@ def _setup_orders_eqd(spark: SparkSession, sf_dir: str) -> tuple:
     "express, and the shape a streaming CDC upsert pipeline commits "
     "daily): two stacked key-set deletes (single-column order keys, "
     "then customer keys — distinct column sets exercising the per-set "
-    "anti-join grouping) land as parquet delete files attached to only "
-    "the stats-overlapping manifest entries, with ZERO data files "
-    "rewritten (path identity asserted in tests/test_tablelayer.py). "
-    "Reads apply a null-safe BROADCAST anti-join of the key set against "
-    "exactly the affected files — at 100 TB the delete file is KBs "
-    "against TBs scanned, and files outside the key range skip the join "
-    "entirely. A follow-up append RE-INSERTS half the first delete's "
-    "keys and survives (sequence semantics: a delete binds only to "
-    "files present at its commit) — delete-then-reinsert replay, which "
+    "anti-join grouping) land as parquet delete files recorded as "
+    "table-level descriptors, with ZERO data files rewritten and no "
+    "manifest entry changed (path identity asserted in "
+    "tests/test_tablelayer.py). Reads apply one null-safe BROADCAST "
+    "anti-join per key-column set, scoped by sequence number — at "
+    "100 TB the delete file is KBs against TBs scanned. A follow-up "
+    "append RE-INSERTS half the first delete's keys and survives "
+    "(sequence semantics: a delete applies only to files with a lower "
+    "seq, i.e. present at its commit) — delete-then-reinsert replay, which "
     "the oracle reproduces relationally. rewrite_deletes() folds key "
     "sets in and frees the delete files for snapshot-expiry GC "
     "(tests/test_table_manager.py).",
@@ -1231,9 +1231,10 @@ def _setup_users_upsert(spark: SparkSession, sf_dir: str) -> tuple:
     "micro-batch, and the write shape q_merge_upsert's copy-on-write "
     "deliberately avoids): three batches of per-user latest events are "
     "applied in order through manager.upsert_equality, each commit "
-    "atomically retiring every prior version of its keys (delete file "
-    "attached to stats-overlapping older files only) while its OWN new "
-    "rows are exempt by sequence position. ZERO existing files "
+    "atomically retiring every prior version of its keys (one "
+    "table-level delete descriptor whose seq exceeds every older "
+    "file's) while its OWN new rows are exempt by sequence position "
+    "(same seq). ZERO existing files or manifest entries "
     "rewritten across all three epochs (path-identity asserted in "
     "tests/test_tablelayer.py); write cost per epoch is O(batch), not "
     "O(table) — the property that makes minute-level CDC ingestion "
@@ -1256,10 +1257,10 @@ CD_BOUNDS = [f"2024-01-{d:02d} 00:00:00" for d in (6, 11, 16, 21, 26)]
 
 
 def _setup_users_cd(spark: SparkSession, sf_dir: str) -> tuple:
-    """users_cd: SIX stacked CDC upsert epochs (5-day event slices, each
-    the latest row per user in its slice), then ONE compact_deletes pass
-    — the stacked per-epoch equality-delete files merge into a single
-    delete file per data file, zero data files touched."""
+    """users_cd: SIX CDC upsert epochs (5-day event slices, each the
+    latest row per user in its slice), then ONE compact_deletes pass —
+    the per-epoch equality-delete files merge into a single
+    table-level delete file, zero data files touched."""
     from pyspark.sql import Window
 
     mgr, wh = _mgr_for(spark, sf_dir)
@@ -1311,23 +1312,20 @@ def _setup_users_cd(spark: SparkSession, sf_dir: str) -> tuple:
     doc="SEQUENCE-SCOPED equality-delete compaction (≙ Iceberg v2's "
     "actual delete design — delete files scoped by data sequence number "
     "— and the light alternative to rewrite_deletes' full data "
-    "rewrite): six stacked upsert epochs leave up to six delete files "
-    "attached to the oldest data files, and the READ TAX is plan "
-    "complexity — every distinct stack is its own scan group with its "
-    "own anti-joins. compact_deletes folds ALL stacks into ONE global "
-    "delete file per key-column set carrying (keys, max birth version) "
-    "and stamps each data file's own birth version; reads then apply a "
-    "single broadcast anti-join — `keys match AND __del_seq > file "
-    "seq` — regardless of epoch count. Zero data files moved, one "
-    "metadata commit (stack==0 + global fold + unchanged values + "
-    "post-compaction-epoch refold + superseded-file expiry asserted in "
-    "tests/test_table_manager.py, which also pins the read tax: one "
-    "LeftAnti per stacked epoch before the fold, exactly one after). "
-    "The post-compaction read must still collapse to exactly the "
-    "last event per user, which the oracle computes "
-    "with one window over raw events. At 100 TB CDC cadence this is "
-    "what keeps thousand-epoch MoR tables readable without ever paying "
-    "the full rewrite.",
+    "rewrite): six upsert epochs leave six table-level delete files, "
+    "each carrying its commit's seq; every data file carries its own. "
+    "Reads apply ONE broadcast anti-join per key-column set — `keys "
+    "match AND __del_seq > file seq` — however many epochs are "
+    "outstanding. compact_deletes merges the six files into ONE "
+    "carrying (keys, highest seq per key), so a read scans one delete "
+    "file instead of one per epoch. Zero data files moved, one "
+    "metadata commit (one merged file + unchanged values + "
+    "post-compaction-epoch re-merge + superseded-file expiry asserted "
+    "in tests/test_table_manager.py, which also pins the plan shape: "
+    "exactly one LeftAnti before the merge and after). The "
+    "post-compaction read must still collapse to exactly the last "
+    "event per user, which the oracle computes with one window over "
+    "raw events; a wrong seq on any file or key breaks the hash.",
 )
 def q_compact_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     mgr, _snaps = _setup_users_cd(spark, sf_dir)
@@ -1436,10 +1434,10 @@ def _setup_txn_cdc(spark: SparkSession, sf_dir: str) -> tuple:
     "staged as two equality-delete upsert epochs and landed with ONE "
     "txn-record publish, so a reader joining state to totals can never "
     "observe state-new/totals-old (crash injection + read-repair in "
-    "tests/test_table_manager.py). Delete-file attachment resolves at "
-    "APPLY time against the then-current head — concurrent commits "
-    "that win in between correctly fall under the delete, Iceberg "
-    "sequence-order semantics. The oracle recomputes both tables' "
+    "tests/test_table_manager.py). The delete takes its sequence "
+    "number at APPLY time against the then-current head — concurrent "
+    "commits that win in between correctly fall under the delete, "
+    "Iceberg sequence-order semantics. The oracle recomputes both tables' "
     "final states from raw events and joins them; any torn epoch, "
     "lost key, or double-applied delta breaks the hash. At 100 TB "
     "each epoch costs O(batch) writes + one metadata publish.",
@@ -1498,26 +1496,26 @@ def _setup_orders_mc(spark: SparkSession, sf_dir: str) -> tuple:
     "case q_meta_count's pure-manifest answer disclaims: per-year "
     "counts over a table carrying a partition-bounded MoR delete, "
     "computed as manifest record counts for every CLEAN file plus a "
-    "real post-delete scan of ONLY the delete-dirty files (here: the "
-    "1997 partition — the only-dirty-year split is asserted in "
-    "tests/test_tablelayer.py, so the metadata half is provably doing "
-    "the work for the other years). Cost is O(files) metadata + "
-    "O(dirty data) — at 100 TB with a GDPR erasure stream touching one "
-    "partition, the count never rescans the other 99.9% (the "
-    "exactness-with-deletes trick Iceberg's count(*) planning uses). "
-    "The oracle recomputes post-delete counts from raw parquet, so a "
-    "clean file misclassified as dirty (or a dirty file's deletes "
+    "real post-delete scan of ONLY the delete-dirty files. Which files "
+    "a delete may touch comes from the manager's one owner of the "
+    "delete format (file_deletes: predicate deletes on the entry, "
+    "equality deletes with a higher seq, deletion vectors naming the "
+    "file) — here: the 1997 partition; the only-dirty-year split is "
+    "asserted in tests/test_tablelayer.py, so the metadata half is "
+    "provably doing the work for the other years. Cost is O(files) "
+    "metadata + O(dirty data) — at 100 TB with a GDPR erasure stream "
+    "touching one partition, the count never rescans the other 99.9% "
+    "(the exactness-with-deletes trick Iceberg's count(*) planning "
+    "uses). The oracle recomputes post-delete counts from raw parquet, "
+    "so a clean file misclassified as dirty (or a dirty file's deletes "
     "skipped) breaks the hash.",
 )
 def q_meta_count_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     mgr, _snaps = _setup_orders_mc(spark, sf_dir)
     m = mgr._load_manifest("orders_mc")
-    clean = [
-        e
-        for e in m["files"]
-        if not (e.get("deletes") or e.get("eq_deletes"))
-    ]
-    dirty = [e for e in m["files"] if e.get("deletes") or e.get("eq_deletes")]
+    deletes = mgr.file_deletes("orders_mc", m)
+    clean = [e for e in m["files"] if not deletes[e["path"]].dirty]
+    dirty = [e for e in m["files"] if deletes[e["path"]].dirty]
     # clean half: pure manifest arithmetic (no file opened)
     meta_rows = [
         (int(e["partition"]["o_orderdate_years"]), int(e["records"]))
@@ -2506,12 +2504,12 @@ def _setup_ev_pd(spark: SparkSession, sf_dir: str) -> tuple:
     "that no predicate or key set can separate; an audit read exposing "
     "(_file_name, _pos) coordinates (Spark _metadata hidden columns) "
     "names every copy after the first, and manager.delete_positions "
-    "commits those coordinates as parquet delete files attached to "
-    "EXACTLY the named files — zero data files rewritten (path identity "
+    "commits those coordinates as one deletion vector naming EXACTLY "
+    "those rows — zero data files rewritten (path identity "
     "asserted in tests/test_tablelayer.py, along with changelog "
     "rendering, time travel to the dup state, rewrite_deletes folding, "
     "and the snaptable DataSource honoring the positions). Reads "
-    "anti-join the broadcast (file,row) set for just the touched files. "
+    "anti-join the broadcast (file,row) set decoded from the vector. "
     "The final state must equal the raw corpus exactly — the oracle "
     "aggregates raw events. At 100 TB this is the surgical post-hoc "
     "dedup tool: commit cost O(delete set), never a table pass.",
@@ -2940,43 +2938,27 @@ def q_sorted_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Metadata-EXACT count under outstanding POSITIONAL deletes — the "
     "arithmetic q_meta_count_mor cannot do for its predicate/equality "
     "deletes (those need a scan of the dirty files to know how many "
-    "rows they kill): a position-delete file names exact (file, row) "
-    "coordinates, so each file's live count is records minus its "
-    "attached coordinate count — pure manifest + delete-file metadata, "
-    "ZERO data files opened (the delete files are O(delete set), "
-    "kilobytes). Computed at the PINNED post-delete snapshot of ev_pd "
-    "(time-traveled metadata: the later rewrite_deletes in pytest "
-    "doesn't perturb it), and the double-delivery dups retired by "
-    "q_delete_mor_pos's repair mean the exact count must equal the raw "
-    "corpus — same total as the oracle's COUNT(*). This is precisely "
-    "why Iceberg's count(*) planning stays metadata-only under "
-    "position deletes but degrades to a scan under equality deletes.",
+    "rows they kill): a deletion vector names exact (file, row) "
+    "positions, so each file's live count is records minus its "
+    "deleted-position count — pure manifest + delete-file metadata "
+    "(file_deletes decodes the vectors' bitmaps driver-side, exact "
+    "across overlapping vectors), ZERO data files opened (the vectors "
+    "are O(delete set), kilobytes). Computed at the PINNED post-delete "
+    "snapshot of ev_pd (time-traveled metadata: the later "
+    "rewrite_deletes in pytest doesn't perturb it), and the "
+    "double-delivery dups retired by q_delete_mor_pos's repair mean the "
+    "exact count must equal the raw corpus — same total as the "
+    "oracle's COUNT(*). This is precisely why Iceberg's count(*) "
+    "planning stays metadata-only under position deletes but degrades "
+    "to a scan under equality deletes.",
 )
 def q_meta_count_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    import pyarrow.parquet as pq
-
     mgr, snaps = _setup_ev_pd(spark, sf_dir)
     m = mgr._load_manifest("ev_pd", snaps["snap_fixed"])
-    cache: dict[str, list] = {}
-    total = 0
-    for e in m["files"]:
-        fn = os.path.basename(e["path"])
-        coords: set = set()
-        for d in e.get("pos_deletes", []):
-            rows = cache.get(d["path"])
-            if rows is None:
-                rows = pq.read_table(
-                    os.path.join(mgr._dir("ev_pd"), d["path"])
-                ).to_pylist()
-                cache[d["path"]] = rows
-            coords |= {
-                (r["_file_name"], r["_pos"])
-                for r in rows
-                if r["_file_name"] == fn
-            }
-        total += int(e["records"]) - len(coords)
+    deletes = mgr.file_deletes("ev_pd", m)
+    total = sum(
+        int(e["records"]) - deletes[e["path"]].n_pos for e in m["files"]
+    )
     return spark.createDataFrame([(total,)], "n_events BIGINT")
 
 

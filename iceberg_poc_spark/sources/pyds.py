@@ -55,6 +55,7 @@ from pyspark.sql.types import (
 
 from iceberg_poc_spark.tables.manager import (
     ParquetTableManager,
+    _dv_positions,
     _may_match,
     _nested_nullable,
 )
@@ -159,63 +160,41 @@ def _coerce_scalar(v, typ):
 
 
 def _apply_mor_deletes(tbl, entry: dict, table_dir: str):
-    """Apply the entry's outstanding merge-on-read deletes to an aligned
+    """Apply the merge-on-read deletes that touch this file to an aligned
     Arrow table — the executor-side twin of the manager read path's
     NOT(predicate) filters and null-safe anti-joins, so `.format(
     "snaptable")` readers see the SAME post-delete state as
     ``manager.read`` (a dirty table must never leak deleted rows through
-    the connector face)."""
+    the connector face). Besides the entry's own predicate ``deletes``,
+    the driver attaches (:meth:`ParquetTableManager.file_deletes`)
+    ``_dv`` — the deletion vectors naming the file — and ``_eq`` — the
+    equality-delete descriptors with a higher seq."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     # positional deletes FIRST, while row indices are still physical
-    # (predicate/equality filters below would shift them). Folded global
-    # coordinate files (_global_pos, from compact_deletes) apply the
-    # same way — coordinates bind by file name, so filtering to THIS
-    # file's name is the whole scoping.
-    pos_dels = entry.get("pos_deletes", []) + entry.get("_global_pos", [])
-    if pos_dels:
+    # (predicate/equality filters below would shift them)
+    if entry.get("_dv"):
         import numpy as np
 
         fn = os.path.basename(entry["path"])
-        kill_parts = []
-        for d in pos_dels:
-            # predicate pushdown into the parquet scan: each data-file
-            # task keeps only ITS rows of the (possibly table-wide)
-            # delete/DV file — row-group stats + dictionary pages skip
-            # the rest instead of decoding everything and filtering
-            t = pq.read_table(
-                os.path.join(table_dir, d["path"]),
-                filters=[("_file_name", "==", fn)],
-            )
-            sel = t
-            if d.get("dv"):
-                # BITMAP deletion vector (dvf=2): one row per data file
-                # carrying 64-bit word structs — decode word w's set
-                # bit i to position w*64+i, the executor-side twin of
-                # the manager read path's JVM bit expansion
-                pos = []
-                for row in sel.to_pylist():
-                    for wd in row["words"]:
-                        w, b = wd["w"], wd["b"]
-                        base = w * 64
-                        for i in range(64):
-                            if (b >> i) & 1:
-                                pos.append(base + i)
-                kill_parts.append(np.asarray(pos, dtype=np.int64))
-            else:
-                kill_parts.append(
-                    np.asarray(
-                        sel["_pos"].to_numpy(zero_copy_only=False)
+        # predicate pushdown into the parquet scan: each data-file task
+        # keeps only ITS row of each (table-wide) vector — row-group
+        # stats + dictionary pages skip the rest
+        kill = _dv_positions(
+            pa.concat_tables(
+                [
+                    pq.read_table(
+                        os.path.join(table_dir, d["path"]),
+                        columns=["_file_name", "words"],
+                        filters=[("_file_name", "==", fn)],
                     )
-                )
-        kill = (
-            np.concatenate(kill_parts)
-            if kill_parts
-            else np.empty(0, dtype=np.int64)
-        )
-        if kill.size:
+                    for d in entry["_dv"]
+                ]
+            )
+        ).get(fn)
+        if kill is not None and kill.size:
             keep = ~np.isin(np.arange(tbl.num_rows, dtype=np.int64), kill)
             tbl = tbl.filter(pa.array(keep))
     ops = {
@@ -243,35 +222,20 @@ def _apply_mor_deletes(tbl, entry: dict, table_dir: str):
         if mask is not None:
             # SQL DELETE keeps NULL-predicate rows: null -> keep
             tbl = tbl.filter(pc.fill_null(pc.invert(mask), True))
-    eq_by_cols: dict[tuple, list[str]] = {}
-    for d in entry.get("eq_deletes", []):
-        eq_by_cols.setdefault(tuple(d["cols"]), []).append(d["path"])
-    key_sets: list[tuple[tuple, "pa.Table"]] = [
-        (
-            cols,
-            pa.concat_tables(
-                [
-                    pq.read_table(
-                        os.path.join(table_dir, p), columns=list(cols)
-                    )
-                    for p in dpaths
-                ]
-            ),
-        )
-        for cols, dpaths in eq_by_cols.items()
-    ]
-    # sequence-scoped GLOBAL equality deletes (compact_deletes): the key
-    # set applying to THIS file is the rows with __del_seq above the
-    # file's birth seq — the executor-side twin of the manager read
-    # path's `__del_seq > __file_seq` anti-join condition
-    for g in entry.get("_global_eq", []):
+    # the key set applying to THIS file: every row of a delete file
+    # written at birth (its descriptor seq is above the file's), the rows
+    # of a merged file whose __del_seq is — the executor-side twin of
+    # the manager read path's `__del_seq > __file_seq` condition
+    key_sets: dict[tuple, list["pa.Table"]] = {}
+    for g in entry.get("_eq", []):
         gt = pq.read_table(os.path.join(table_dir, g["path"]))
-        gt = gt.filter(
-            pc.greater(gt["__del_seq"], entry["seq"])
-        ).select(list(g["cols"]))
-        if gt.num_rows:
-            key_sets.append((tuple(g["cols"]), gt))
-    for cols, keys in key_sets:
+        if "__del_seq" in gt.column_names:
+            gt = gt.filter(pc.greater(gt["__del_seq"], entry["seq"]))
+        key_sets.setdefault(tuple(g["cols"]), []).append(
+            gt.select(list(g["cols"]))
+        )
+    for cols, parts in key_sets.items():
+        keys = pa.concat_tables(parts)
         nn_mask = None
         for c in cols:
             m = pc.is_valid(keys[c])
@@ -306,9 +270,9 @@ def _plan_row_groups(pf, where: list) -> list[int]:
     executor-side twin of the manifest's per-file pruning, one level
     finer (≙ Iceberg's vectorized parquet reader consulting row-group
     stats). Conservative: missing column / missing stats / any doubt →
-    keep. Only called for files with NO positional deletes attached
-    (skipping a row group shifts physical row ordinals, which positional
-    delete application depends on)."""
+    keep. Only called for files no deletion vector names (skipping a row
+    group shifts physical row ordinals, which positional delete
+    application depends on)."""
     schema_names = set(pf.schema_arrow.names)
     keep = []
     for i in range(pf.metadata.num_row_groups):
@@ -385,11 +349,7 @@ def _read_file_as_batches(
         timestamp_utc=False,
     )
     pf = pq.ParquetFile(os.path.join(table_dir, entry["path"]))
-    if (
-        where
-        and not entry.get("pos_deletes")
-        and not entry.get("_global_pos")
-    ):
+    if where and not entry.get("_dv"):
         rgs = _plan_row_groups(pf, where)
         if len(rgs) == pf.metadata.num_row_groups:
             tbl = pf.read()
@@ -517,25 +477,19 @@ class SnapPartitionsReader(DataSourceReader):
 class SnapTableReader(DataSourceReader):
     def __init__(self, options, schema: StructType):
         manifest, table_dir = _resolve_manifest(options)
+        mgr, table = _mgr(options)
         self._table_dir = table_dir
         self._schema_json = manifest["schema"]
         self._spec = manifest["spec"]
-        gdels = manifest.get("global_eq_deletes", [])
-        gpos = manifest.get("global_pos_deletes", [])
-        self._files = [
-            # seq-stamped entries ride with the global delete descriptors;
-            # unstamped entries are younger than every folded delete
-            # (folded positional coordinates can only name files that
-            # existed — hence were stamped — at fold time)
-            {
-                **e,
-                **({"_global_eq": gdels} if gdels else {}),
-                **({"_global_pos": gpos} if gpos else {}),
-            }
-            if (gdels or gpos) and "seq" in e
-            else e
-            for e in manifest["files"]
-        ]
+        # each entry rides with exactly the table-level deletes that
+        # touch it; untouched files read (and row-group prune) clean
+        deletes = mgr.file_deletes(table, manifest)
+        self._files = []
+        for e in manifest["files"]:
+            d = deletes[e["path"]]
+            if d.eq or d.dv:
+                e = {**e, "_eq": d.eq, "_dv": d.dv}
+            self._files.append(e)
 
     def pushFilters(self, filters: list[Filter]):
         """Plan-time file pruning from Spark's own pushed predicates:

@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     DataType,
+    LongType,
     MapType,
     StringType,
     StructField,
@@ -391,16 +392,12 @@ class RollbackConflictError(TxnConflictError):
 TXN_APPLIED_KEEP = 64
 
 
-# upsert_equality auto-runs compact_deletes once any file's delete stack
-# reaches this depth (0/absent = off)
-DELETE_COMPACT_THRESHOLD_PROP = "write.delete.compact-threshold"
-
 # append auto-runs compact_partitions once any partition's file count
-# reaches this depth (0/absent = off) — the data-file twin of the delete
-# threshold: streaming micro-appends self-heal without an external
-# scheduler. The trigger check is metadata-only; only partitions that
-# meet compact_partitions' own criteria (>= threshold files, at least
-# one small) are rewritten, every other partition keeps file identity.
+# reaches this depth (0/absent = off): streaming micro-appends self-heal
+# without an external scheduler. The trigger check is metadata-only;
+# only partitions that meet compact_partitions' own criteria (>=
+# threshold files, at least one small) are rewritten, every other
+# partition keeps file identity.
 # Connector-face writes (df.write.format("snaptable")) commit from a
 # session-less Python worker and cannot compact inline — run
 # compact_partitions from a maintenance job there.
@@ -416,8 +413,8 @@ SEGMENT_MERGE_RUN_PROP = "meta.segment-merge-run"
 
 # columnar segment codec: each manifest segment persists as ONE parquet
 # file with typed columns for the universally-present entry fields plus
-# a JSON spill column for the irregular rest (delete attachments, bloom
-# filters, writer schemas, ...). Decode is Arrow-speed, and the
+# a JSON spill column for the irregular rest (seq, predicate deletes,
+# bloom filters, writer schemas, ...). Decode is Arrow-speed, and the
 # files/partitions metadata tables read the segment files directly
 # through Spark (≙ Iceberg's Avro manifests being Spark-readable).
 _SEG_BASE_KEYS = ("path", "partition", "records", "bytes")
@@ -617,6 +614,91 @@ def _null_safe_eq(left: DataFrame, right: DataFrame, cols: list[str]) -> Column:
     for c in cols[1:]:
         cond = cond & left[c].eqNullSafe(right[c])
     return cond
+
+
+# ------------------------------------------------- row-level delete state
+# Equality deletes and deletion vectors are TABLE-LEVEL descriptors on
+# the manifest (``global_eq_deletes`` / ``global_pos_deletes``), bound by
+# sequence number (≙ Iceberg v2): every data-file entry and descriptor
+# carries ``seq``, the version of the commit that added it, and a delete
+# applies to a file exactly when ``delete seq > file seq``. A delete file
+# written at birth cannot hold its own seq (the version is allocated
+# after the write), so its seq lives on the descriptor; a file merged by
+# compact_deletes holds ``__del_seq`` per row and its descriptor's seq is
+# the highest of them. Predicate MoR deletes stay per-entry (``deletes``).
+
+
+def _stamped(d: dict, seq: int) -> dict:
+    """``d`` as persisted by a commit allocating ``seq``: entries and
+    descriptors the commit adds take its seq, carried ones keep theirs."""
+    return d if "seq" in d else {**d, "seq": seq}
+
+
+def _seq_by_name(items: list[dict]) -> Column:
+    """The ``seq`` of the file a scanned row comes from, looked up by
+    file name in a literal map over ``items`` (entries or descriptors
+    of the files being read) — plain expression, no join. Built as ONE
+    SQL string: a per-literal Column costs a py4j round trip each."""
+
+    def quoted(s: str) -> str:
+        return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+    pairs = ", ".join(
+        f"{quoted(os.path.basename(d['path']))}, {int(d['seq'])}L"
+        for d in items
+    )
+    return F.expr(f"element_at(map({pairs}), _metadata.file_name)")
+
+
+def _by_cols(gdels: list[dict]) -> dict[tuple, list[dict]]:
+    """Equality-delete descriptors grouped by key-column set."""
+    out: dict[tuple, list[dict]] = {}
+    for g in gdels:
+        out.setdefault(tuple(g["cols"]), []).append(g)
+    return out
+
+
+def _dv_positions(tbl) -> dict[str, Any]:
+    """Deleted row positions per data file name, decoded from bitmap
+    deletion-vector rows (``_file_name``, ``words: [{w, b}]``): word w's
+    set bit i is position w*64+i. Positions come back sorted and unique,
+    merged across every row naming the same file."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    words = tbl.column("words").combine_chunks()
+    lens = pc.list_value_length(words).to_numpy(zero_copy_only=False)
+    flat = words.flatten()
+    w = flat.field("w").to_numpy(zero_copy_only=False).astype(np.int64)
+    b = flat.field("b").to_numpy(zero_copy_only=False).astype("<i8")
+    bits = np.unpackbits(
+        b.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
+    )
+    word, bit = np.nonzero(bits)
+    pos = w[word] * 64 + bit
+    owner = np.repeat(np.arange(len(lens)), lens)[word]  # row of each bit
+    counts = np.bincount(owner, minlength=len(lens))
+    out: dict[str, list] = {}
+    for fn, p in zip(
+        tbl.column("_file_name").to_pylist(),
+        np.split(pos, np.cumsum(counts)[:-1]),
+    ):
+        out.setdefault(fn, []).append(p)
+    return {fn: np.unique(np.concatenate(ps)) for fn, ps in out.items()}
+
+
+@dataclass
+class FileDeletes:
+    """The merge-on-read deletes that apply to one data file."""
+
+    preds: list  # predicate deletes attached to the entry
+    eq: list[dict]  # equality-delete descriptors with seq > file seq
+    dv: list[dict]  # deletion-vector descriptors naming the file
+    n_pos: int  # distinct row positions those vectors delete
+
+    @property
+    def dirty(self) -> bool:
+        return bool(self.preds or self.eq or self.n_pos)
 
 
 def _predicate(where: list) -> Column | None:
@@ -894,8 +976,8 @@ class ParquetTableManager:
     # per-snapshot ordered segment-id list and per-segment summaries
     # ("segments" / "seg_stats") in the manifest JSON. An append reuses
     # every base segment by reference and writes ONE new segment with its
-    # own files; a delete-attach rewrites ONLY the segment(s) holding the
-    # touched entries.
+    # own files; a predicate MoR delete rewrites ONLY the segment(s)
+    # holding the touched entries.
     #
     # Facade contract: _load_manifest returns a plain dict whose "files"
     # key is the FULL materialized entry list, so the write-side consumer
@@ -903,7 +985,7 @@ class ParquetTableManager:
     # process-wide segment cache (a load is O(entry refs), never a
     # per-entry copy — metadata ops stay sub-linear in inventory size).
     # INVARIANT: consumers MUST NOT mutate an entry in place — copy it
-    # (`e = dict(e)`) and REPLACE it in the list, as every attach site
+    # (`e = dict(e)`) and REPLACE it in the list, as every mutating site
     # does. Commit-time segment reuse is decided by entry-object identity
     # runs, so an in-place mutation would be lost to segment reuse even
     # before cache aliasing is considered (test_segments.py pins both).
@@ -1114,10 +1196,12 @@ class ParquetTableManager:
         return summary
 
     def _write_segments(
-        self, name: str, manifest: dict
-    ) -> tuple[list[str], dict]:
+        self, name: str, manifest: dict, seq: int
+    ) -> tuple[list[str], dict, list[str]]:
         """Persist a manifest's inventory as segment files; returns the
-        ordered segment-id list. Reused segments cost zero I/O. Runs of
+        ordered segment-id list, their summaries and the ids written
+        fresh. Entries without a ``seq`` are persisted with ``seq``.
+        Reused segments cost zero I/O. Runs of
         >= merge-run consecutive small pieces (tiny reused segments from
         past micro-appends + the new delta) coalesce into fresh
         target-sized segments, so the per-snapshot segment count stays
@@ -1142,17 +1226,19 @@ class ParquetTableManager:
         prior_stats = manifest.get("_seg_stats", {})
         out_ids: list[str] = []
         out_stats: dict[str, dict] = {}
+        fresh: list[str] = []
 
         def emit_new(entries: list[dict]) -> None:
             if not entries:
                 return
             os.makedirs(self._segs_dir(name), exist_ok=True)
             for j in range(0, len(entries), target):
-                chunk = entries[j : j + target]
+                chunk = [_stamped(e, seq) for e in entries[j : j + target]]
                 sid = f"s-{uuid.uuid4().hex[:16]}"
                 _seg_encode_parquet(self._seg_path(name, sid), chunk)
                 self._seg_cache_put((name, sid), [dict(e) for e in chunk])
                 out_ids.append(sid)
+                fresh.append(sid)
                 out_stats[sid] = self._seg_summary(chunk)
 
         def reuse(sid: str) -> None:
@@ -1184,7 +1270,7 @@ class ParquetTableManager:
                 else:
                     emit_new(es)
         flush()
-        return out_ids, out_stats
+        return out_ids, out_stats, fresh
 
     def _max_manifest_version(self, name: str) -> int:
         meta = self._meta_dir(name)
@@ -1209,28 +1295,39 @@ class ParquetTableManager:
         files (unchanged base segments reused by reference — zero bytes
         rewritten), and the manifest JSON stores only the segment-id list
         plus table metadata, so a micro-append's commit I/O is O(delta)
-        no matter how many files the table holds. The in-memory manifest
-        dict (facade "files" + reuse bookkeeping) is left intact for the
-        caller's CAS retry loop."""
-        seg_ids, seg_stats = self._write_segments(name, manifest)
+        no matter how many files the table holds.
+
+        Every data-file entry and delete descriptor this commit adds
+        (the ones without a ``seq``) is persisted with ``seq`` = the
+        allocated version — the sequence number deletes are scoped by.
+        The in-memory manifest dict (facade "files" + reuse bookkeeping)
+        is left intact and unstamped for the caller's CAS retry loop, so
+        a commit that loses the race and rebases takes its later
+        version; a lost allocation removes the segments it wrote."""
         persist = {
             k: v
             for k, v in manifest.items()
             if k
             not in ("files", "_base_entries", "_seg_layout", "_seg_stats")
         }
-        persist["segments"] = seg_ids
-        persist["seg_stats"] = seg_stats
         while True:
             v = self._max_manifest_version(name) + 1
-            manifest["version"] = v
+            seg_ids, seg_stats, fresh = self._write_segments(name, manifest, v)
+            for key in ("global_eq_deletes", "global_pos_deletes"):
+                if key in manifest:
+                    persist[key] = [_stamped(d, v) for d in manifest[key]]
+            persist["segments"] = seg_ids
+            persist["seg_stats"] = seg_stats
             persist["version"] = v
             try:
                 with open(self._manifest_path(name, v), "x") as f:
                     json.dump(persist, f)
+                manifest["version"] = v
                 return v
             except FileExistsError:
-                continue
+                for sid in fresh:
+                    os.remove(self._seg_path(name, sid))
+                    self._seg_cache_drop((name, sid))
 
     def _link_pointer(self, path: str, content: str) -> bool:
         """Atomically publish ``content`` at ``path`` iff it doesn't exist
@@ -1413,15 +1510,15 @@ class ParquetTableManager:
             if any(
                 any(c == col for c, _op, _v in dw)
                 for dw in e.get("deletes", [])
-            ) or any(col in d["cols"] for d in e.get("eq_deletes", [])):
+            ):
                 raise ValueError(
                     f"column {col!r} has outstanding merge-on-read "
                     f"deletes; run rewrite_deletes() before dropping"
                 )
         if any(col in g["cols"] for g in m.get("global_eq_deletes", [])):
             raise ValueError(
-                f"column {col!r} keys outstanding global equality "
-                f"deletes; run rewrite_deletes() before dropping"
+                f"column {col!r} keys outstanding equality deletes; "
+                f"run rewrite_deletes() before dropping"
             )
         m["schema"] = json.loads(
             StructType([f for f in schema.fields if f.name != col]).json()
@@ -1455,16 +1552,10 @@ class ParquetTableManager:
                         f"column {old!r} has outstanding merge-on-read "
                         f"deletes; run rewrite_deletes() before renaming"
                     )
-            for d in e.get("eq_deletes", []):
-                if old in d["cols"]:
-                    raise ValueError(
-                        f"column {old!r} keys outstanding equality "
-                        f"deletes; run rewrite_deletes() before renaming"
-                    )
         if any(old in g["cols"] for g in m.get("global_eq_deletes", [])):
             raise ValueError(
-                f"column {old!r} keys outstanding global equality "
-                f"deletes; run rewrite_deletes() before renaming"
+                f"column {old!r} keys outstanding equality deletes; "
+                f"run rewrite_deletes() before renaming"
             )
         fields = []
         for f in schema.fields:
@@ -2081,8 +2172,7 @@ class ParquetTableManager:
         count check is metadata-only, so streaming micro-appends
         (foreachBatch → append) self-heal their fragmentation without
         an external scheduler, and untouched partitions keep file
-        identity (≙ Iceberg's commit-triggered table maintenance,
-        the data-file twin of ``write.delete.compact-threshold``)."""
+        identity (≙ Iceberg's commit-triggered table maintenance)."""
         if merge_schema:
             self._merge_schema(name, df)
         _seq, head = self._ref_head(name, ref)
@@ -2201,8 +2291,8 @@ class ParquetTableManager:
 
         The files stay where they are: entries carry ABSOLUTE paths and
         an ``external`` marker, and :meth:`expire_snapshots` never
-        deletes data the table doesn't own (delete files later attached
-        to them are still owned and reaped normally). Bloom indexes are
+        deletes data the table doesn't own (delete files that later
+        apply to them are still owned and reaped normally). Bloom indexes are
         not built (that would need a data pass — the zero-copy point);
         stats pruning still applies.
 
@@ -2962,16 +3052,17 @@ class ParquetTableManager:
         shape): instead of a predicate, the rows to delete are identified
         by a SET OF KEY TUPLES. ``keys`` must carry exactly the
         ``equality`` columns; it is deduplicated and written as parquet
-        delete file(s) under ``deletes/``, and each CURRENT data file
-        whose column stats / partition values can overlap the key range
-        gets the delete file attached to its manifest entry. Reads
-        anti-join the delete set (null-safe, so a NULL key deletes NULL
-        rows) against exactly the affected files. Sequence semantics
-        match Iceberg: the delete binds only to files present at commit
-        time — rows APPENDED AFTERWARDS with the same keys are NOT
-        affected, which is what makes delete-then-reinsert (CDC upsert
-        replay) correct. With ``mode="cow"`` the affected files are
-        instead rewritten immediately via the same anti-join."""
+        delete file(s) under ``deletes/``, recorded as one table-level
+        descriptor in ``global_eq_deletes``; no manifest entry changes.
+        Reads anti-join the delete set (null-safe, so a NULL key deletes
+        NULL rows). Sequence semantics match Iceberg: the delete applies
+        to files whose ``seq`` is below its own, i.e. files present at
+        commit time — rows APPENDED AFTERWARDS with the same keys are
+        NOT affected, which is what makes delete-then-reinsert (CDC
+        upsert replay) correct. An empty key set, or keys that no
+        current file's partition values / stats can hold, is a no-op.
+        With ``mode="cow"`` the affected files are instead rewritten
+        immediately via the same anti-join."""
         m = self._load_manifest(name)
         if equality is not None:
             if keys is None:
@@ -3012,12 +3103,11 @@ class ParquetTableManager:
         keys: DataFrame,
         mode: str,
     ) -> int:
-        """Write an equality-delete file and attach it (mor) or fold it
+        """Write an equality-delete file and record it (mor) or fold it
         (cow). Affected-file selection maps the key set's per-column
         [min, max] range through the SAME stats/partition-transform
-        pruning a scan uses, so a point-keyed delete touches only the
-        files that can hold those keys — at 100 TB the delete commit cost
-        is O(matching files' metadata), never a table pass."""
+        pruning a scan uses: cow rewrites only the files that can hold
+        those keys, and either mode is a no-op when no file can."""
         schema = StructType.fromJson(m["schema"])
         names = {f.name for f in schema.fields}
         missing = [c for c in equality if c not in names]
@@ -3041,7 +3131,7 @@ class ParquetTableManager:
             # value semantics — the probe reads the file back through
             # the session, not pyarrow, so collected key values convert
             # exactly as before. The basename-uniqueness guard runs
-            # later, just before the attach, so a no-op delete (empty
+            # later, just before the commit, so a no-op delete (empty
             # keys, nothing bound) stays a silent no-op even on a
             # colliding-basename table — the pre-reorder contract.
             del_entries = self._write_eq_delete_files(name, dkeys, equality)
@@ -3084,7 +3174,7 @@ class ParquetTableManager:
         del_entries: list[dict],
         _discard_written,
     ) -> int:
-        """Predicate/split/attach half of :meth:`_delete_equality` —
+        """Predicate/split/commit half of :meth:`_delete_equality` —
         runs after the delete file is staged; any raise before the
         commit is cleaned up by the caller's discard wrapper."""
         where_bounds, has_null_keys = self._eq_key_predicate(dkeys, equality)
@@ -3141,16 +3231,15 @@ class ParquetTableManager:
             return self._commit(name, m)
         if mode != "mor":
             raise ValueError(f"unknown delete mode {mode!r}")
-        # the equality MoR read/fold path scopes delete applicability via
-        # a basename-keyed seq map — colliding external basenames would
+        # the equality MoR read path scopes delete applicability via a
+        # basename-keyed seq map — colliding external basenames would
         # duplicate data rows through that left join. Checked HERE (after
         # the no-op early returns) so provably-empty deletes never raise.
         self._require_unique_basenames(name, m, "delete(mode='mor')")
-        for e in affected:
-            e = dict(e)
-            e["eq_deletes"] = [*e.get("eq_deletes", []), *del_entries]
-            untouched.append(e)
-        m["files"] = untouched
+        m["global_eq_deletes"] = [
+            *m.get("global_eq_deletes", []),
+            *del_entries,
+        ]
         m["operation"] = "delete-mor"
         m["parent"] = m["version"]
         return self._commit(name, m)
@@ -3170,7 +3259,7 @@ class ParquetTableManager:
         Small single-column sets become an exact ``IN`` membership test —
         which :func:`_may_match` maps through ANY deterministic transform
         and :meth:`_prune_buckets` maps through bucket transforms, so a
-        point-keyed delete on a bucket-partitioned table attaches to only
+        point-keyed delete on a bucket-partitioned table selects only
         the matching buckets' files (the 100 TB GDPR-erasure shape).
         Larger or composite key sets fall back to per-column min/max
         ranges from one tiny agg job."""
@@ -3202,15 +3291,18 @@ class ParquetTableManager:
     def _write_eq_delete_files(
         self, name: str, dkeys: DataFrame, equality: list[str]
     ) -> list[dict]:
-        """Persist a deduplicated key set as parquet equality-delete
-        file(s) under ``deletes/``; returns manifest-attachable entries."""
+        """Persist a deduplicated key set as ONE parquet equality-delete
+        file under ``deletes/`` (a key set is small next to the data it
+        deletes); returns its descriptor."""
         return [
             {
                 "path": os.path.relpath(dst, self._dir(name)),
                 "cols": list(equality),
                 "bytes": os.path.getsize(dst),
             }
-            for dst in self._stage_delete_parquet(name, dkeys, "eqdel")
+            for dst in self._stage_delete_parquet(
+                name, dkeys.coalesce(1), "eqdel"
+            )
         ]
 
     def read_with_positions(
@@ -3267,12 +3359,13 @@ class ParquetTableManager:
         files — the third delete class next to predicate and equality
         MoR). ``positions`` carries (``_file_name``, ``_pos``): physical
         data-file name + 0-based row ordinal, the coordinates
-        :meth:`read_with_positions` emits. The pairs are written as
-        parquet delete file(s) under ``deletes/`` and attached to EXACTLY
-        the named files' manifest entries — no stats guesswork, perfect
-        attachment — and every read anti-joins the (file, row) set for
-        just those files. No data file is rewritten; commit cost is
-        O(delete set).
+        :meth:`read_with_positions` emits. The pairs are written as ONE
+        bitmap deletion vector (:meth:`_dv_encode`) under ``deletes/``,
+        recorded as a table-level descriptor in ``global_pos_deletes`` —
+        no manifest entry changes, and it binds to exactly the named
+        rows (file names are unique, so no stats guesswork). Every read
+        anti-joins the decoded (file, row) set. No data file is
+        rewritten; commit cost is O(delete set).
 
         This is the only delete class that can remove ONE of two
         physically identical rows (predicate and equality deletes name
@@ -3280,8 +3373,10 @@ class ParquetTableManager:
         post-hoc dedup of an already-committed corpus. Later appends are
         naturally unaffected (new files have new names); renames/drops of
         columns don't unbind it (positions are name-agnostic).
-        :meth:`rewrite_deletes` folds it in; :meth:`expire_snapshots`
-        GCs the delete files once unreferenced."""
+        :meth:`compact_deletes` merges the vectors into one,
+        :meth:`rewrite_deletes` folds them into the data;
+        :meth:`expire_snapshots` GCs the delete files once
+        unreferenced."""
         if sorted(positions.columns) != ["_file_name", "_pos"]:
             raise ValueError(
                 f"positions needs exactly (_file_name, _pos); got "
@@ -3300,8 +3395,10 @@ class ParquetTableManager:
             )
         if not touched:
             return m["version"]  # empty delete set: no-op
-        del_entries = self._write_pos_delete_files(name, dpos)
-        m["files"] = self._attach_pos_deletes(m["files"], touched, del_entries)
+        m["global_pos_deletes"] = [
+            *m.get("global_pos_deletes", []),
+            *self._write_dv_files(name, self._dv_encode(dpos)),
+        ]
         m["operation"] = "delete-mor"
         m["parent"] = m["version"]
         return self._commit(name, m)
@@ -3311,8 +3408,8 @@ class ParquetTableManager:
     ) -> list[str]:
         """Write ``df`` via a private staging dir and promote each part
         file into ``deletes/`` under a uuid name — THE delete-file
-        staging workflow (coordinate, equality, and DV writers all ride
-        it); returns the promoted absolute paths."""
+        staging workflow (equality and DV writers both ride it);
+        returns the promoted absolute paths."""
         del_dir = os.path.join(self._dir(name), "deletes")
         staging = os.path.join(self._dir(name), "_staging", uuid.uuid4().hex)
         df.write.mode("overwrite").option("compression", "zstd").parquet(
@@ -3331,25 +3428,44 @@ class ParquetTableManager:
         _sh.rmtree(staging, ignore_errors=True)
         return out
 
-    def _write_pos_delete_files(self, name: str, dpos: DataFrame) -> list[dict]:
-        """Persist a deduplicated (file, row) coordinate set as parquet
-        position-delete file(s) under ``deletes/``."""
-        return [
-            {
-                "path": os.path.relpath(dst, self._dir(name)),
-                "bytes": os.path.getsize(dst),
-            }
-            for dst in self._stage_delete_parquet(name, dpos, "posdel")
-        ]
+    @staticmethod
+    def _dv_encode(coords: DataFrame) -> DataFrame:
+        """(_file_name, _pos) coordinates -> BITMAP deletion-vector rows
+        (≙ Iceberg v3 DV spec direction: roaring bitmaps per data file —
+        our 64-bit word rows are exactly roaring's dense "bitmap
+        container" shape, in a form Spark reads natively): one row per
+        data file, ``words: array<struct<w, b>>`` sorted by w, where
+        position p lives in word p>>6 at bit p&63, plus the per-file bit
+        count ``n``. A file's delete set stores ceil(density*rows/64)
+        16-byte rows instead of 8 bytes PER position — up to 32x smaller
+        at full density, where a sorted position list would be
+        largest."""
+        return (
+            coords.distinct()
+            .select(
+                "_file_name",
+                F.shiftright("_pos", 6).alias("w"),
+                F.expr(
+                    "shiftleft(CAST(1 AS BIGINT),"
+                    " CAST(pmod(_pos, 64) AS INT))"
+                ).alias("bit"),
+            )
+            .groupBy("_file_name", "w")
+            .agg(F.expr("bit_or(bit)").alias("b"))
+            .groupBy("_file_name")
+            .agg(
+                F.sort_array(
+                    F.collect_list(F.struct(F.col("w"), F.col("b")))
+                ).alias("words"),
+                F.expr("CAST(sum(bit_count(b)) AS BIGINT)").alias("n"),
+            )
+            .coalesce(1)
+        )
 
     def _write_dv_files(self, name: str, dv: DataFrame) -> list[dict]:
-        """Persist a per-file DELETION VECTOR table as parquet under
-        ``deletes/`` (≙ Iceberg v3 deletion vectors: positions stored
-        compressed per file instead of one row per coordinate). One row
-        per data file carrying ``words: array<struct<w, b>>`` — 64-bit
-        word bitmaps, the dense-container half of Iceberg v3's roaring
-        DV spec — plus a per-row ``n`` bit count. Descriptors carry
-        ``dv: True`` and ``dvf: 2``.
+        """Persist :meth:`_dv_encode` rows as parquet under ``deletes/``
+        (≙ Iceberg v3 deletion vectors: positions stored compressed per
+        file instead of one row per coordinate).
 
         Each descriptor records ``n_pos`` — the TOTAL coordinate count (a
         one-column driver read of the tiny per-file ``n`` rollup) —
@@ -3365,85 +3481,95 @@ class ParquetTableManager:
                 {
                     "path": os.path.relpath(dst, self._dir(name)),
                     "bytes": os.path.getsize(dst),
-                    "dv": True,
-                    "dvf": 2,
                     "n_pos": int(sum(v.as_py() or 0 for v in ncol)),
                 }
             )
         return out
 
-    def _global_pos_coords(self, name: str, gpos: list[dict]) -> DataFrame:
-        """(_file_name, _pos) coordinates of a global positional-delete
-        descriptor list — reading each storage class natively
-        (coordinate files select, DV files expand their bitmaps). THE
-        single format dispatch: the fold's input and the read path's
-        anti-join side both come through here."""
-        coord_g = [g for g in gpos if not g.get("dv")]
-        dv_g = [g for g in gpos if g.get("dv")]
-        parts: list[DataFrame] = []
-        if coord_g:
-            parts.append(
-                self.spark.read.parquet(
-                    *[
-                        os.path.join(self._dir(name), g["path"])
-                        for g in coord_g
-                    ]
-                ).select("_file_name", "_pos")
+    def _dv_coords(self, name: str, gpos: list[dict]) -> DataFrame:
+        """(_file_name, _pos) coordinates of deletion-vector descriptors:
+        word w contributes position w*64+i for every set bit i — pure
+        JVM expressions, no Python in the path. The read path's
+        anti-join side, the changelog's and compact_deletes' input."""
+        return (
+            self.spark.read.parquet(
+                *[os.path.join(self._dir(name), g["path"]) for g in gpos]
             )
-        if dv_g:
-            # bitmap DV: word w contributes position w*64+i for every
-            # set bit i — pure JVM expressions, no Python in the path
-            parts.append(
-                self.spark.read.parquet(
-                    *[
-                        os.path.join(self._dir(name), g["path"])
-                        for g in dv_g
-                    ]
-                )
-                .select("_file_name", F.explode("words").alias("wd"))
-                .select(
-                    "_file_name",
-                    F.explode(
-                        F.expr(
-                            "filter(transform(sequence(0, 63), i -> "
-                            "IF((shiftright(wd.b, i) & 1) = 1, "
-                            "wd.w * 64 + CAST(i AS BIGINT), "
-                            "CAST(NULL AS BIGINT))), "
-                            "x -> x IS NOT NULL)"
-                        )
-                    ).alias("_pos"),
-                )
+            .select("_file_name", F.explode("words").alias("wd"))
+            .select(
+                "_file_name",
+                F.explode(
+                    F.expr(
+                        "filter(transform(sequence(0, 63), i -> "
+                        "IF((shiftright(wd.b, i) & 1) = 1, "
+                        "wd.w * 64 + CAST(i AS BIGINT), "
+                        "CAST(NULL AS BIGINT))), "
+                        "x -> x IS NOT NULL)"
+                    )
+                ).alias("_pos"),
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    @staticmethod
-    def _gpos_est_bytes(gpos: list[dict]) -> int:
-        """Broadcast-budget estimate of a global positional-delete set:
-        coordinate files count their on-disk bytes (the calibration the
-        64 MB guard was built on — ~10 B per zstd coordinate row); DV
-        descriptors contribute their COORDINATE COUNT at the same ~10 B
-        equivalence, since their own on-disk bytes under-represent the
-        exploded rows the join materializes."""
-        return sum(
-            g["n_pos"] * 10 if g.get("dv") else g.get("bytes", 0)
-            for g in gpos
         )
 
-    @staticmethod
-    def _attach_pos_deletes(
-        files: list[dict], touched: list[str], del_entries: list[dict]
-    ) -> list[dict]:
-        out_files = []
-        touched_set = set(touched)
-        for e in files:
-            if os.path.basename(e["path"]) in touched_set:
-                e = dict(e)
-                e["pos_deletes"] = [*e.get("pos_deletes", []), *del_entries]
-            out_files.append(e)
-        return out_files
+    def _eq_delete_keys(
+        self, name: str, schema: StructType, cols: tuple, gdels: list[dict]
+    ) -> DataFrame:
+        """``(cols..., __del_seq)`` rows of equality-delete descriptors
+        sharing one key-column set, in ONE multi-path scan: a merged file
+        carries ``__del_seq`` per row, a file written at birth takes its
+        descriptor's seq (looked up by file name). Explicit read schema
+        at the current table types — widening promotion covers
+        pre-widen delete files, same as data files."""
+        types = {f.name: f.dataType for f in schema.fields}
+        return (
+            self.spark.read.schema(
+                StructType(
+                    [StructField(c, types[c], True) for c in cols]
+                    + [StructField("__del_seq", LongType(), True)]
+                )
+            )
+            .parquet(*[os.path.join(self._dir(name), g["path"]) for g in gdels])
+            .select(
+                *cols,
+                F.coalesce("__del_seq", _seq_by_name(gdels)).alias(
+                    "__del_seq"
+                ),
+            )
+        )
+
+    def file_deletes(self, name: str, manifest: dict) -> dict[str, FileDeletes]:
+        """Path -> :class:`FileDeletes` for every entry of ``manifest`` —
+        THE owner of the delete format's two per-file facts: which
+        deletes may touch a file (predicate deletes on its entry,
+        equality descriptors with a higher seq, deletion vectors naming
+        it) and how many row positions it has deleted (decoded from the
+        vectors driver-side, exact across overlapping vectors). Used by
+        rewrite_deletes, the metadata count queries and the snaptable
+        connector."""
+        import numpy as np
+        import pyarrow.parquet as pq
+
+        gdels = manifest.get("global_eq_deletes", [])
+        named: dict[str, tuple[list[dict], list]] = {}
+        for g in manifest.get("global_pos_deletes", []):
+            tbl = pq.read_table(
+                os.path.join(self._dir(name), g["path"]),
+                columns=["_file_name", "words"],
+            )
+            for fn, pos in _dv_positions(tbl).items():
+                descs, parts = named.setdefault(fn, ([], []))
+                descs.append(g)
+                parts.append(pos)
+        out: dict[str, FileDeletes] = {}
+        for e in manifest["files"]:
+            descs, parts = named.get(os.path.basename(e["path"]), ([], []))
+            n_pos = len(np.unique(np.concatenate(parts))) if parts else 0
+            out[e["path"]] = FileDeletes(
+                e.get("deletes", []),
+                [g for g in gdels if g["seq"] > e["seq"]],
+                descs,
+                n_pos,
+            )
+        return out
 
     def upsert_equality(
         self, name: str, df: DataFrame, keys: list[str], ref: str = "main"
@@ -3452,47 +3578,19 @@ class ParquetTableManager:
         upsert epoch: equality-delete file + data files under one
         snapshot/sequence number — the shape a CDC `foreachBatch` sink
         commits per micro-batch). The incoming rows' key tuples become an
-        equality-delete file attached to the stats-overlapping EXISTING
-        files (old versions of those keys vanish), and the incoming rows
-        land as new data files the delete does NOT bind to — so the
-        commit atomically replaces each key's row(s). NO existing file is
-        rewritten; cost is one metadata commit + the new rows' write,
+        equality-delete file, recorded as one table-level descriptor in
+        ``global_eq_deletes``, and the incoming rows land as new data
+        files. Both take the commit's ``seq``: the delete applies to
+        every OLDER file (old versions of those keys vanish) and not to
+        the epoch's own files, so the commit atomically replaces each
+        key's row(s). NO existing file is rewritten and no manifest
+        entry changes; cost is one metadata commit + the new rows' write,
         regardless of table size. Rows sharing a key within ``df`` all
         survive (dedupe upstream per batch — Iceberg's upsert contract).
-        Readers pay the anti-join until :meth:`compact_deletes` /
-        :meth:`rewrite_deletes`.
-
-        Auto-maintenance: with the ``write.delete.compact-threshold``
-        table property set (an int: each stacked epoch adds one
-        anti-join to every read until the fold), an upsert that leaves
-        any file's delete stack at/over the threshold
-        triggers :meth:`compact_deletes` inline — the stack depth check
-        is metadata-only, and the read tax stays bounded without an
-        external maintenance scheduler (≙ Iceberg's
-        commit-triggered table maintenance)."""
-        entry = self._stage_upsert(name, df, keys)
-        v = self._apply_upsert(name, ref, entry)
-        # defensive parse (the data-compact twin's discipline): a bad
-        # property value must never fail the upsert AFTER its commit
-        try:
-            thresh = int(
-                self.properties(name).get(DELETE_COMPACT_THRESHOLD_PROP, 0)
-            )
-        except (TypeError, ValueError):
-            thresh = 0
-        if thresh > 0 and ref == "main" and self.spark is not None:
-            m = self._load_manifest(name)
-            if any(
-                len(e.get("eq_deletes", [])) >= thresh for e in m["files"]
-            ):
-                # adopt the fold COMMIT's version only if it actually
-                # folded — the no-op path (a concurrent fold already
-                # flattened the stacks) returns the head it examined,
-                # which can be a foreign commit's id
-                nv, did = self._compact_deletes(name)
-                if did:
-                    v = nv
-        return v
+        Readers pay one anti-join per key-column set, however many
+        epochs are outstanding, until :meth:`rewrite_deletes`;
+        :meth:`compact_deletes` merges the epochs' delete files."""
+        return self._apply_upsert(name, ref, self._stage_upsert(name, df, keys))
 
     def _stage_upsert(
         self,
@@ -3502,13 +3600,13 @@ class ParquetTableManager:
         schema_json: dict | None = None,
     ) -> dict:
         """Run the DATA half of an upsert epoch (distributed writes of
-        the new rows + the key-set delete file, plus the pruning bounds),
-        with no head advance — the JSON-able entry is applied later by
-        :meth:`_apply_upsert` (directly, or through a multi-table
-        :class:`Transaction`). ``schema_json`` overrides the alignment
-        schema — a Transaction passes its staged-DDL projection so an
-        upsert staged after an add_column writes the evolved shape
-        instead of silently dropping the new column."""
+        the new rows + the key-set delete file), with no head advance —
+        the JSON-able entry is applied later by :meth:`_apply_upsert`
+        (directly, or through a multi-table :class:`Transaction`).
+        ``schema_json`` overrides the alignment schema — a Transaction
+        passes its staged-DDL projection so an upsert staged after an
+        add_column writes the evolved shape instead of silently
+        dropping the new column."""
         m = self._load_manifest(name)
         self._require_unique_basenames(name, m, "upsert")
         schema = StructType.fromJson(schema_json or m["schema"])
@@ -3529,53 +3627,34 @@ class ParquetTableManager:
         dkeys = aligned.select(
             *[F.col(c).cast(types[c]).alias(c) for c in keys]
         ).distinct()
-        where, has_null_keys = self._eq_key_predicate(dkeys, keys)
-        del_entries = self._write_eq_delete_files(name, dkeys, keys)
-        new_files = self._write_files(name, aligned, self._spec(m))
         return {
             "op": "upsert",
-            "added": new_files,
-            "eq_deletes": del_entries,
-            "bounds": [[c, op, _json_lit(v)] for c, op, v in where],
-            "null_keys": has_null_keys,
+            "added": self._write_files(name, aligned, self._spec(m)),
+            "eq_delete_files": self._write_eq_delete_files(name, dkeys, keys),
         }
 
     def _apply_upsert(self, name: str, ref: str, entry: dict) -> int:
-        """Idempotent head advance of a staged upsert: attach the delete
-        file to every CURRENT stats-overlapping file (apply-time head —
-        commits that won meanwhile correctly fall under the delete, per
-        sequence ordering), then add the epoch's own files exempt."""
-        bounds = [tuple(b) for b in entry["bounds"]]
-        empty_keys = not bounds and not entry["null_keys"]
+        """Idempotent head advance of a staged upsert: append the delete
+        descriptor(s) and the epoch's files on the apply-time head. Both
+        take this commit's seq, so commits that won meanwhile correctly
+        fall under the delete (sequence order) while the epoch's own
+        files are exempt."""
         added_paths = {e["path"] for e in entry["added"]}
         while True:
             seq_head, cur = self._ref_head(name, ref)
             m = self._load_manifest(name, cur)
             if added_paths <= {e["path"] for e in m["files"]}:
                 return cur  # already applied (idempotent replay)
-            spec = self._spec(m)
-            pruned = set(
-                id(e)
-                for e in self._prune_buckets(m, spec, m["files"], bounds)
-            )
-            out_files: list[dict] = []
-            for e in m["files"]:
-                if not empty_keys and (
-                    (id(e) in pruned and _may_match(spec, e, bounds))
-                    or entry["null_keys"]
-                ):
-                    e = dict(e)
-                    e["eq_deletes"] = [
-                        *e.get("eq_deletes", []),
-                        *entry["eq_deletes"],
-                    ]
-                out_files.append(e)
             nm = dict(m)
             nm.pop("txn_entry", None)
             # the upsert adds files without blob maintenance: an
             # inherited NDV blob would exclude every upserted value
             nm.pop("ndv_tbl", None)
-            nm["files"] = out_files + entry["added"]
+            nm["files"] = m["files"] + entry["added"]
+            nm["global_eq_deletes"] = [
+                *m.get("global_eq_deletes", []),
+                *entry["eq_delete_files"],
+            ]
             nm["operation"] = "upsert"
             nm["parent"] = cur
             if entry.get("txn"):
@@ -3600,37 +3679,22 @@ class ParquetTableManager:
     def rewrite_deletes(self, name: str) -> int:
         """Materialize merge-on-read deletes (≙ Iceberg
         ``rewrite_position_delete_files`` + data-file rewrite): ONLY the
-        files carrying delete predicates OR equality-delete files are
-        read (deletes applied) and rewritten clean; every delete-free
-        file survives untouched. After this, reads of the new snapshot
-        pay no delete filters, and the delete files become unreferenced
-        (reaped by :meth:`expire_snapshots` once no surviving snapshot
-        points at them). No-op if nothing carries deletes."""
+        files some delete may touch (:meth:`file_deletes`) are read
+        (deletes applied) and rewritten clean; every other file survives
+        untouched. After this, reads of the new snapshot pay no delete
+        filters, and the delete files become unreferenced (reaped by
+        :meth:`expire_snapshots` once no surviving snapshot points at
+        them). No-op if nothing carries deletes."""
         m = self._load_manifest(name)
-        gdels = m.get("global_eq_deletes", [])
-        g_max = max((g.get("max_seq", 1 << 62) for g in gdels), default=-1)
-        gpos = m.get("global_pos_deletes", [])
-        gp_max = max((g.get("max_seq", 1 << 62) for g in gpos), default=-1)
-
-        def _dirty(e: dict) -> bool:
-            if e.get("deletes") or e.get("eq_deletes") or e.get("pos_deletes"):
-                return True
-            # sequence-scoped global deletes guard every file older than
-            # the newest folded delete (a folded positional coordinate
-            # can only name files that existed at its birth)
-            seq = e.get("seq", 1 << 62)
-            return (bool(gdels) and seq < g_max) or (
-                bool(gpos) and seq < gp_max
-            )
-
-        dirty = [e for e in m["files"] if _dirty(e)]
+        deletes = self.file_deletes(name, m)
+        dirty = [e for e in m["files"] if deletes[e["path"]].dirty]
         if not dirty:
             return m["version"]
-        # the fold below (and the MoR read applying the deletes) keys
-        # rows by basename; colliding external names would misattribute
-        # coordinates / duplicate rows through basename joins
+        # the MoR read applying the deletes keys rows by basename;
+        # colliding external names would misattribute coordinates /
+        # duplicate rows through basename joins
         self._require_unique_basenames(name, m, "rewrite_deletes")
-        clean = [e for e in m["files"] if not _dirty(e)]
+        clean = [e for e in m["files"] if not deletes[e["path"]].dirty]
         df = self._read_files(name, m, dirty)
         new_files = self._write_files(name, df, self._spec(m))
         m["files"] = clean + new_files
@@ -3640,318 +3704,52 @@ class ParquetTableManager:
         m["parent"] = m["version"]
         return self._commit(name, m)
 
-    def _birth_versions(self, name: str) -> dict[str, int]:
-        """First snapshot version referencing each data-file path / each
-        attached equality-delete path, walking the main chain root→head.
-        Versions are globally monotone along the chain (allocation is
-        max+1), so birth version IS the Iceberg data sequence number: a
-        delete applies to exactly the files with a SMALLER birth.
-
-        Expired history: when the walk hits a pruned manifest, births
-        first observed at the OLDEST loadable manifest are upper bounds,
-        not truths — those paths are omitted (their entries just keep
-        per-file stacks). Per-entry ``seq`` stamps from a prior
-        compaction are authoritative and survive any expiry, so a table
-        compacted at least once never loses fold eligibility."""
-        chain: list[dict] = []
-        v: int | None = self._current_version(name)
-        complete = True
-        try:
-            while v is not None:
-                mm = self._load_manifest(name, v)
-                chain.append(mm)
-                v = mm.get("parent")
-        except FileNotFoundError:
-            complete = False
-        births: dict[str, int] = {}
-        for mm in reversed(chain):  # oldest → newest
-            ver = mm["version"]
-            for e in mm["files"]:
-                births.setdefault(e["path"], ver)
-                for d in e.get("eq_deletes", []):
-                    births.setdefault(d["path"], ver)
-                for d in e.get("pos_deletes", []):
-                    births.setdefault(d["path"], ver)
-        if not complete and chain:
-            oldest = chain[-1]["version"]
-            births = {p: b for p, b in births.items() if b != oldest}
-        for e in self._load_manifest(name)["files"]:
-            if "seq" in e:
-                births[e["path"]] = e["seq"]
-        return births
-
     def compact_deletes(self, name: str) -> int:
-        """Public wrapper over :meth:`_compact_deletes` (same contract,
-        version-only return — the int every existing caller expects)."""
-        v, _changed = self._compact_deletes(name)
-        return v
-
-    def _compact_deletes(self, name: str) -> tuple[int, bool]:
-        """Fold stacked merge-on-read delete files into SEQUENCE-SCOPED
-        GLOBAL deletes without touching any data file (≙ Iceberg's v2
-        equality-delete design, where one delete file + sequence numbers
-        guard the whole table — and the delete-file half of
-        rewrite_position_delete_files): the per-entry equality-delete
-        stacks union into ONE table-level delete file per key-column set
-        carrying ``(keys..., __del_seq = birth version of the folded
-        delete)``, per-key MAX (a later delete of the same key subsumes
-        an earlier one); every data-file entry is stamped with its own
-        birth version (``seq``). The read side then applies ONE
-        broadcast anti-join per key-column set — condition
-        ``keys match AND __del_seq > file seq`` — instead of one
-        anti-join per (file-group × epoch): plan complexity O(1) in the
-        number of stacked epochs, which is the actual read tax (the
-        delete files themselves are tiny; the per-group anti-joins are
-        the cost — tests/test_table_manager.py pins the plan shape: one
-        ``LeftAnti`` per stacked epoch before the fold, one after).
-        Correctness of the seq scoping: an upsert epoch's delete file is
-        only ever attached to files that existed BEFORE its commit, so
-        ``delete birth > file birth`` reproduces the explicit attachment
-        exactly (stats-pruned attachments it re-adds are no-ops — no
-        matching keys); each
-        epoch's own files share the delete's birth version and are
-        exempt by the strict inequality, exactly Iceberg's same-sequence
-        rule. Stacked POSITIONAL delete files merge per stack (they bind
-        by physical coordinates, no seq needed). Falls back to per-stack
-        merging when expired history prevents the birth walk.
-        Row-visible state is unchanged (oracle-pinned by
-        q_compact_deletes + value-identity pytest); superseded delete
-        files become unreferenced and are reaped by
-        :meth:`expire_snapshots`."""
+        """Merge the table-level delete files without touching any data
+        file (≙ the delete-file half of Iceberg's
+        rewrite_position_delete_files): the equality-delete files of each
+        key-column set become ONE file carrying ``(keys..., __del_seq)``
+        with the highest seq per key (a later delete of the same key
+        subsumes an earlier one, since ``delete seq > file seq`` holds
+        for the max whenever it holds for any), and the deletion vectors
+        become ONE vector. The read plan is one anti-join per key-column
+        set either way; compaction bounds the number of delete files a
+        read scans and a snapshot references. Row-visible state is
+        unchanged (oracle-pinned by q_compact_deletes + value-identity
+        pytest); superseded delete files become unreferenced and are
+        reaped by :meth:`expire_snapshots`. Returns the head version —
+        unchanged when nothing needed merging."""
         m = self._load_manifest(name)
-        births = self._birth_versions(name)
-        gdels = list(m.get("global_eq_deletes", []))
-        has_eq = any(e.get("eq_deletes") for e in m["files"])
-        has_pos = any(e.get("pos_deletes") for e in m["files"])
-        if not has_eq and not has_pos:
-            return m["version"], False
-        # seq_df scoping and coordinate folds below are basename-keyed;
+        gdels = m.get("global_eq_deletes", [])
+        gpos = m.get("global_pos_deletes", [])
+        merge_eq = {c: ds for c, ds in _by_cols(gdels).items() if len(ds) > 1}
+        if not merge_eq and len(gpos) <= 1:
+            return m["version"]
+        # the read path applying the merged deletes is basename-keyed;
         # refuse colliding external basenames before any of that work
         self._require_unique_basenames(name, m, "compact_deletes")
-        files = [dict(e) for e in m["files"]]
-        changed = False
-        # stamp every known-birth entry's data sequence number up front —
-        # both delete classes' global folds scope by it, and the
-        # unstamped-skip read fast path relies on "unstamped = younger
-        # than every folded delete"
-        for e in files:
-            if e["path"] in births:
-                e["seq"] = births[e["path"]]
-
-        if has_eq:
-            # fold eligibility: entry birth known AND every attached
-            # delete provably younger than the entry (always true for
-            # upsert epochs; unknown births from expired pre-compaction
-            # history, or a hypothetical op carrying attachments onto
-            # NEWER rewritten files, keep their per-entry stacks and take
-            # the per-stack merge below instead)
-            by_cols: dict[tuple, dict[str, int]] = {}
-            for e in files:
-                if e["path"] in births:
-                    e["seq"] = births[e["path"]]
-                eds = e.get("eq_deletes", [])
-                if (
-                    eds
-                    and e["path"] in births
-                    and all(
-                        births.get(d["path"], -1) > births[e["path"]]
-                        for d in eds
-                    )
-                ):
-                    for d in eds:
-                        by_cols.setdefault(tuple(d["cols"]), {})[
-                            d["path"]
-                        ] = births[d["path"]]
-                    e["eq_deletes"] = []
-            for cols, paths in by_cols.items():
-                # ONE multi-path read over every folded epoch file of
-                # this key-column set, with the per-file birth seq
-                # restored through a broadcast file-name -> seq map join
-                # (file names are uuid-unique within the table). The
-                # previous per-file read-then-union loop scheduled one
-                # Spark job PER epoch — pure job-submission overhead
-                # that dominated a 100-epoch fold.
-                pmap = self.spark.createDataFrame(
-                    [(os.path.basename(p), b) for p, b in paths.items()],
-                    "__fn string, __del_seq long",
-                )
-                merged = (
-                    self.spark.read.parquet(
-                        *[os.path.join(self._dir(name), p) for p in paths]
-                    )
-                    .select(
-                        *cols, F.col("_metadata.file_name").alias("__fn")
-                    )
-                    .join(F.broadcast(pmap), "__fn")
-                    .select(*cols, "__del_seq")
-                )
-                max_seq = max(paths.values())
-                prior = [g for g in gdels if tuple(g["cols"]) == cols]
-                if prior:
-                    # prior global files already carry __del_seq — one
-                    # more multi-path read, not one per file
-                    merged = merged.unionByName(
-                        self.spark.read.parquet(
-                            *[
-                                os.path.join(self._dir(name), g["path"])
-                                for g in prior
-                            ]
-                        ).select(*cols, "__del_seq")
-                    )
-                    for g in prior:
-                        max_seq = max(max_seq, g.get("max_seq", max_seq))
-                        gdels.remove(g)
+        if merge_eq:
+            schema = StructType.fromJson(m["schema"])
+            new_eq = [g for g in gdels if tuple(g["cols"]) not in merge_eq]
+            for cols, ds in merge_eq.items():
                 keys = (
-                    merged.groupBy(*cols)
+                    self._eq_delete_keys(name, schema, cols, ds)
+                    .groupBy(*cols)
                     .agg(F.max("__del_seq").alias("__del_seq"))
-                    .coalesce(1)
                 )
-                new_g = self._write_eq_delete_files(name, keys, list(cols))
-                for g in new_g:
-                    g["max_seq"] = max_seq
-                gdels.extend(new_g)
-            if by_cols:
-                m["global_eq_deletes"] = gdels
-                changed = True
-            # unfoldable entries (unknown births): merge each distinct
-            # remaining stack into one file per key-column set instead
-            stacks: dict[str, list[dict]] = {}
-            for e in files:
-                if len(e.get("eq_deletes", [])) > 1:
-                    stacks.setdefault(
-                        json.dumps(e["eq_deletes"], sort_keys=True), []
-                    ).append(e)
-            for ek, es in stacks.items():
-                eq_by_cols: dict[tuple, list[dict]] = {}
-                for d in json.loads(ek):
-                    eq_by_cols.setdefault(tuple(d["cols"]), []).append(d)
-                merged_eq: list[dict] = []
-                for cols, ds in eq_by_cols.items():
-                    if len(ds) == 1:
-                        merged_eq.extend(ds)
-                        continue
-                    keys = self.spark.read.parquet(
-                        *[
-                            os.path.join(self._dir(name), d["path"])
-                            for d in ds
-                        ]
-                    ).distinct()
-                    merged_eq.extend(
-                        self._write_eq_delete_files(
-                            name, keys.coalesce(1), list(cols)
-                        )
-                    )
-                for e in es:
-                    if e["eq_deletes"] != merged_eq:
-                        e["eq_deletes"] = merged_eq
-                        changed = True
-
-        # positional deletes: fold EVERY known-birth entry's stack into
-        # ONE table-level coordinate file (global_pos_deletes) stamped
-        # with max_seq = newest folded file's birth. Coordinates bind by
-        # physical (file_name, pos) — uuid file names can never recur —
-        # so a global coordinate set is semantically identical to the
-        # per-entry attachments; what it buys is PLAN shape: entries
-        # stop differing by pos-delete stack, read groups collapse, and
-        # the whole read pays ONE broadcast coordinate anti-join no
-        # matter how many positional epochs stacked up (the eq fold's
-        # O(1)-in-epochs property, extended to the third delete class).
-        # Entries with unknown births must keep per-entry stacks (the
-        # unstamped-files-skip fast path in _read_files would otherwise
-        # skip THEIR deletes); they take the per-stack merge below.
-        gpos = list(m.get("global_pos_deletes", []))
-        pos_fold: dict[str, int] = {}
-        for e in files:
-            pds = e.get("pos_deletes", [])
-            if (
-                pds
-                and e["path"] in births
-                and all(births.get(d["path"], -1) >= 0 for d in pds)
-            ):
-                e["seq"] = births[e["path"]]
-                for d in pds:
-                    pos_fold[d["path"]] = births[d["path"]]
-                e["pos_deletes"] = []
-        if pos_fold:
-            # fold target is a DELETION-VECTOR file (Iceberg v3 DV
-            # direction): one row PER DATA FILE carrying its deleted
-            # positions, and the read side recovers coordinates with one
-            # explode of a tiny broadcast (value-identical to the
-            # coordinate form, oracle-pinned). The fold's inputs are the
-            # per-file coordinate files being folded plus the DV of any
-            # previous fold: read each class natively and union.
-            merged = self._global_pos_coords(
-                name,
-                [{"path": p} for p in pos_fold] + gpos,
-            )
-            # BITMAP encoding (≙ Iceberg v3 DV spec direction: roaring
-            # bitmaps per data file — our 64-bit word rows are exactly
-            # roaring's dense "bitmap container" shape, in a form Spark
-            # reads natively): position p lives in word p>>6 at bit
-            # p&63, so a file's delete set stores ceil(density*rows/64)
-            # 16-byte rows instead of 8 bytes PER position — up to 32x
-            # smaller at full density, where a sorted position list
-            # would be largest. bit_count() sums give n_pos (the
-            # broadcast-guard coordinate count) in the same pass.
-            dv = (
-                merged.distinct()
-                .select(
-                    "_file_name",
-                    F.shiftright("_pos", 6).alias("w"),
-                    F.expr(
-                        "shiftleft(CAST(1 AS BIGINT),"
-                        " CAST(pmod(_pos, 64) AS INT))"
-                    ).alias("bit"),
+                for g in self._write_eq_delete_files(name, keys, list(cols)):
+                    new_eq.append({**g, "seq": max(d["seq"] for d in ds)})
+            m["global_eq_deletes"] = new_eq
+        if len(gpos) > 1:
+            m["global_pos_deletes"] = [
+                {**g, "seq": max(d["seq"] for d in gpos)}
+                for g in self._write_dv_files(
+                    name, self._dv_encode(self._dv_coords(name, gpos))
                 )
-                .groupBy("_file_name", "w")
-                .agg(F.expr("bit_or(bit)").alias("b"))
-                .groupBy("_file_name")
-                .agg(
-                    F.sort_array(
-                        F.collect_list(F.struct(F.col("w"), F.col("b")))
-                    ).alias("words"),
-                    F.expr("CAST(sum(bit_count(b)) AS BIGINT)").alias("n"),
-                )
-                .coalesce(1)
-            )
-            max_seq = max(
-                list(pos_fold.values())
-                + [g.get("max_seq", 1 << 62) for g in gpos]
-            )
-            new_g = self._write_dv_files(name, dv)
-            for g in new_g:
-                g["max_seq"] = max_seq
-            m["global_pos_deletes"] = new_g
-            changed = True
-
-        pos_stacks: dict[str, list[dict]] = {}
-        for e in files:
-            if len(e.get("pos_deletes", [])) > 1:
-                pos_stacks.setdefault(
-                    json.dumps(e["pos_deletes"], sort_keys=True), []
-                ).append(e)
-        for pk, es in pos_stacks.items():
-            dpos = (
-                self.spark.read.parquet(
-                    *[
-                        os.path.join(self._dir(name), d["path"])
-                        for d in json.loads(pk)
-                    ]
-                )
-                .select("_file_name", "_pos")
-                .distinct()
-            )
-            merged_pos = self._write_pos_delete_files(name, dpos.coalesce(1))
-            for e in es:
-                e["pos_deletes"] = merged_pos
-                changed = True
-
-        if not changed:
-            return m["version"], False
-        m["files"] = files
+            ]
         m["operation"] = "compact-deletes"
         m["parent"] = m["version"]
-        return self._commit(name, m), True
+        return self._commit(name, m)
 
     def update(
         self,
@@ -3968,7 +3766,7 @@ class ParquetTableManager:
         ``mode="mor"``: merge-on-read (≙ Iceberg's MERGE-ON-READ update:
         position-delete file + replacement data files under ONE
         snapshot). The matched rows' (file, row) coordinates become a
-        positional delete retiring the OLD versions in place, and the
+        deletion vector retiring the OLD versions in place, and the
         updated copies land as new data files — NO existing file is
         rewritten, write cost is O(matched rows), not O(affected files).
         The frequent-small-update shape at 100 TB: a CoW update of 1k
@@ -3998,11 +3796,11 @@ class ParquetTableManager:
             for col, expr in set_exprs.items():
                 updated = updated.withColumn(col, expr)
             new_files = self._write_files(name, updated, self._spec(m))
-            del_entries = self._write_pos_delete_files(name, dpos)
-            m["files"] = (
-                self._attach_pos_deletes(m["files"], touched, del_entries)
-                + new_files
-            )
+            m["global_pos_deletes"] = [
+                *m.get("global_pos_deletes", []),
+                *self._write_dv_files(name, self._dv_encode(dpos)),
+            ]
+            m["files"] = m["files"] + new_files
             m["operation"] = "update-mor"
             m["parent"] = m["version"]
             return self._commit(name, m)
@@ -4181,27 +3979,34 @@ class ParquetTableManager:
         partition columns are typed string and dropped; their parse type
         never matters.
 
-        Merge-on-read deletes: a file entry may carry ``deletes`` — the
-        predicate list(s) of :meth:`delete` commits made in ``mor`` mode
-        — and/or ``eq_deletes`` — parquet key-set delete files of
-        equality-delete commits — and/or ``pos_deletes`` — parquet
-        (file, row-ordinal) coordinate files of positional-delete
-        commits. Files are additionally grouped by their delete sets;
-        each group's read applies NOT(predicate) per predicate delete, a
-        null-safe broadcast anti-join per equality-delete column set,
-        and a broadcast (file, row) anti-join per positional delete, so
-        readers see the post-delete state without any file having been
-        rewritten."""
+        Merge-on-read deletes, applied so readers see the post-delete
+        state without any file having been rewritten:
+
+        - a file entry may carry ``deletes`` — the predicate list(s) of
+          :meth:`delete` commits made in ``mor`` mode. Files are
+          additionally grouped by them; each group's read applies
+          NOT(predicate) per predicate delete.
+        - the manifest's table-level equality deletes apply to the whole
+          read as ONE null-safe broadcast anti-join per key-column set,
+          on ``keys match AND __del_seq > __file_seq``: each row's file
+          seq is looked up by its file name in a literal map, each
+          delete row's seq comes from :meth:`_eq_delete_keys`.
+        - the manifest's deletion vectors apply as ONE broadcast
+          (file, row) anti-join.
+
+        The plan shape is the same however many delete commits are
+        outstanding. A descriptor whose seq is at or below every planned
+        file's seq cannot touch any of them and is skipped."""
         schema = StructType.fromJson(manifest["schema"])
-        gdels = manifest.get("global_eq_deletes", [])
-        gpos = manifest.get("global_pos_deletes", [])
-        if not any("seq" in e for e in files):
-            # only unstamped (post-compaction) files planned: younger than
-            # every folded delete — skip the global anti-joins entirely
-            # (folded positional coordinates can only name files that
-            # existed at fold time, all of which are stamped)
-            gdels = []
-            gpos = []
+        min_seq = min((e["seq"] for e in files), default=0)
+        gdels = [
+            g for g in manifest.get("global_eq_deletes", [])
+            if g["seq"] > min_seq
+        ]
+        gpos = [
+            g for g in manifest.get("global_pos_deletes", [])
+            if g["seq"] > min_seq
+        ]
         if not files:
             if with_positions:
                 schema = schema.add("_file_name", StringType()).add(
@@ -4236,8 +4041,6 @@ class ParquetTableManager:
         groups: dict[tuple, list[dict]] = {}
         for e in files:
             dkey = json.dumps(e.get("deletes", []), sort_keys=True)
-            ekey = json.dumps(e.get("eq_deletes", []), sort_keys=True)
-            pkey = json.dumps(e.get("pos_deletes", []), sort_keys=True)
             ecols = set(e["cols"])
             absent = tuple(
                 sorted(c for c in dflt if not (dflt_names[c] & ecols))
@@ -4258,12 +4061,11 @@ class ParquetTableManager:
                 else (ext, (), ())
             )
             groups.setdefault(
-                (tuple(sorted(e["partition"])), dkey, ekey, pkey, absent, extkey),
-                [],
+                (tuple(sorted(e["partition"])), dkey, absent, extkey), []
             ).append(e)
 
         parts: list[DataFrame] = []
-        for (layout, dkey, ekey, pkey, absent, extkey), entries in groups.items():
+        for (layout, dkey, absent, extkey), entries in groups.items():
             external = extkey[0]
             hidden = [k for k in layout if k not in names]
             read_schema = StructType(
@@ -4306,15 +4108,16 @@ class ParquetTableManager:
                                 _nested_nullable(f.dataType)
                             ),
                         )
-            pos_dels = json.loads(pkey)
             meta_cols = (
                 [
                     F.col("_metadata.file_name").alias("_file_name"),
                     F.col("_metadata.row_index").alias("_pos"),
                 ]
-                if (with_positions or pos_dels or gdels or gpos)
+                if (with_positions or gpos)
                 else []
             )
+            if gdels:
+                meta_cols.append(_seq_by_name(entries).alias("__file_seq"))
             def _field_expr(f: StructField) -> Column:
                 if f.name in absent:
                     v, dt = dflt[f.name]
@@ -4336,114 +4139,39 @@ class ParquetTableManager:
                 pred = _predicate([tuple(w) for w in dw])
                 if pred is not None:
                     proj = proj.filter(~F.coalesce(pred, F.lit(False)))
-            # equality deletes: null-safe anti-join per key-column set;
-            # delete files sharing a column set are unioned into ONE
-            # anti-join (one shuffle-free broadcast for typical key-set
-            # sizes — the set is 32-byte-keys small next to the data)
-            eq_by_cols: dict[tuple, list[str]] = {}
-            for d in json.loads(ekey):
-                eq_by_cols.setdefault(tuple(d["cols"]), []).append(d["path"])
-            for cols, dpaths in eq_by_cols.items():
-                # explicit read schema (current table types — widening
-                # promotion covers pre-widen delete files, same as data
-                # files) skips a footer-inference job per key set; no
-                # .distinct(): each delete file is written deduplicated
-                # and an anti-join is insensitive to build-side
-                # duplicates across epochs — the removed Exchange +
-                # HashAggregate pair was pure per-read overhead
-                types = {f.name: f.dataType for f in schema.fields}
-                dels = self.spark.read.schema(
-                    StructType(
-                        [StructField(c, types[c], True) for c in cols]
-                    )
-                ).parquet(
-                    *[os.path.join(self._dir(name), p) for p in dpaths]
-                )
-                total_bytes = sum(
-                    d.get("bytes", 0)
-                    for d in json.loads(ekey)
-                    if tuple(d["cols"]) == cols
-                )
-                if total_bytes < 64 * 1024 * 1024:
-                    dels = F.broadcast(dels)
-                proj = proj.join(
-                    dels,
-                    on=_null_safe_eq(proj, dels, list(cols)),
-                    how="left_anti",
-                )
-            # positional deletes: anti-join on the physical (file, row)
-            # coordinate — applies to exactly the named rows, which is
-            # what lets one of two IDENTICAL rows be removed (a shape no
-            # predicate or key set can express). The delete set is
-            # (file_name, pos) pairs — broadcast-small next to the data.
-            if pos_dels:
-                # explicit schema + no .distinct() — same rationale as
-                # the equality path above (coordinate files are written
-                # deduplicated; anti-join tolerates cross-epoch dups)
-                pd_df = self.spark.read.schema(
-                    "_file_name string, _pos long"
-                ).parquet(
-                    *[
-                        os.path.join(self._dir(name), d["path"])
-                        for d in pos_dels
-                    ]
-                ).select("_file_name", "_pos")
-                proj = proj.join(
-                    F.broadcast(pd_df), on=["_file_name", "_pos"], how="left_anti"
-                )
-            if meta_cols and not with_positions and not gdels and not gpos:
-                proj = proj.drop("_file_name", "_pos")
             parts.append(proj)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         if gpos:
-            # global positional deletes (compact_deletes): ONE broadcast
-            # coordinate anti-join for the whole read, regardless of how
-            # many positional epochs were folded. Coordinates bind by
-            # physical (file_name, pos); uuid names never recur, so no
-            # seq condition is needed row-side — max_seq on the
-            # descriptor only drives the unstamped-skip fast path above
-            # and rewrite_deletes' dirty test.
-            gp_df = self._global_pos_coords(name, gpos).distinct()
-            # same broadcast-size discipline as the equality path: a
-            # coordinate set that outgrew broadcast (billions of folded
-            # deletes between rewrites) falls back to a shuffle
-            # anti-join — rewrite_deletes is the pressure valve there
-            if self._gpos_est_bytes(gpos) < 64 * 1024 * 1024:
+            # deletion vectors: anti-join on the physical (file, row)
+            # coordinate — applies to exactly the named rows, which is
+            # what lets one of two IDENTICAL rows be removed (a shape no
+            # predicate or key set can express). Coordinates bind by file
+            # name; uuid names never recur, so no seq condition is needed
+            # row-side. A coordinate set that outgrew broadcast (billions
+            # of deletes between rewrites, estimated at ~10 B per
+            # coordinate) falls back to a shuffle anti-join —
+            # rewrite_deletes is the pressure valve there.
+            gp_df = self._dv_coords(name, gpos)
+            if sum(g["n_pos"] for g in gpos) * 10 < 64 * 1024 * 1024:
                 gp_df = F.broadcast(gp_df)
             out = out.join(
                 gp_df, on=["_file_name", "_pos"], how="left_anti"
             )
         if gdels:
-            # sequence-scoped GLOBAL equality deletes (compact_deletes):
-            # ONE broadcast anti-join per key-column set over the whole
-            # read — condition `keys match AND __del_seq > file seq` —
-            # regardless of how many epochs were folded. The per-row file
-            # seq comes from a broadcast join against the O(files)
-            # manifest map; entries without a stamp (appended after the
-            # compaction) get NULL, which no __del_seq compares above, so
-            # no folded delete ever touches them (they are younger than
-            # every folded delete by construction).
-            seq_df = self.spark.createDataFrame(
-                [
-                    (os.path.basename(e["path"]), e.get("seq"))
-                    for e in files
-                ],
-                "_file_name string, __file_seq long",
-            )
-            out = out.join(F.broadcast(seq_df), on="_file_name", how="left")
-            for g in gdels:
-                dels = self.spark.read.parquet(
-                    os.path.join(self._dir(name), g["path"])
-                )
-                cond = _null_safe_eq(out, dels, list(g["cols"])) & (
+            for cols, ds in _by_cols(gdels).items():
+                # no .distinct(): an anti-join is insensitive to
+                # build-side duplicates across delete files
+                dels = self._eq_delete_keys(name, schema, cols, ds)
+                if sum(d.get("bytes", 0) for d in ds) < 64 * 1024 * 1024:
+                    dels = F.broadcast(dels)
+                cond = _null_safe_eq(out, dels, list(cols)) & (
                     dels["__del_seq"] > out["__file_seq"]
                 )
-                out = out.join(F.broadcast(dels), on=cond, how="left_anti")
+                out = out.join(dels, on=cond, how="left_anti")
         if gdels or gpos:
-            # the coordinate/name-keyed joins floated _file_name to the
-            # front — restore the canonical column order callers rely on
+            # drop the columns only the delete joins needed
             out = out.select(
                 *[f.name for f in schema.fields],
                 *(["_file_name", "_pos"] if with_positions else []),
@@ -4937,7 +4665,13 @@ class ParquetTableManager:
             if parent is not None
             else set()
         )
-        added = [e for e in snap["files"] if e["path"] not in parent_paths]
+        # re-added files take the cherry-pick commit's seq: deletes the
+        # target committed before the pick never apply to them
+        added = [
+            {k: v for k, v in e.items() if k != "seq"}
+            for e in snap["files"]
+            if e["path"] not in parent_paths
+        ]
 
         def apply(base: dict) -> dict:
             clash = {e["path"] for e in base["files"]} & {
@@ -5264,6 +4998,11 @@ class ParquetTableManager:
           newly-attached delete predicates (evaluated against the file's
           PARENT-visible content, so stacked deletes don't double-count)
           are deletes.
+        - ``upsert`` / equality or positional ``delete-mor`` /
+          ``update-mor``: the table-level delete descriptors new in the
+          commit, applied to the parent-visible rows (a semi-join per
+          key-column set and one per deletion-vector set, in one plan),
+          give the deletes; added files give the inserts.
 
         Rows are read under each commit's own schema and aligned by name
         (columns added later read as NULL for earlier commits)."""
@@ -5310,48 +5049,9 @@ class ParquetTableManager:
                         _reduce(lambda a, b: a | b, conds)
                     )
                     dels = hit if dels is None else dels.unionByName(hit)
-                # equality deletes: rows of the file's PARENT-visible
-                # content matching the newly-attached key set (semi-join
-                # per key-column set; parent visibility means stacked
-                # deletes never double-count a row)
-                old_e = len(pe.get("eq_deletes", []))
-                new_eq = e.get("eq_deletes", [])[old_e:]
-                by_cols: dict[tuple, list[str]] = {}
-                for d in new_eq:
-                    by_cols.setdefault(tuple(d["cols"]), []).append(d["path"])
-                for cols, dpaths in by_cols.items():
-                    dk = self.spark.read.parquet(
-                        *[os.path.join(self._dir(name), dp) for dp in dpaths]
-                    ).distinct()
-                    base = self._read_files(name, pm, [pe])
-                    hit = base.join(
-                        F.broadcast(dk),
-                        on=_null_safe_eq(base, dk, list(cols)),
-                        how="left_semi",
-                    )
-                    dels = hit if dels is None else dels.unionByName(hit)
-                # positional deletes: parent-visible rows of the file at
-                # the newly-deleted (file, row) coordinates
-                old_p = len(pe.get("pos_deletes", []))
-                new_pos = e.get("pos_deletes", [])[old_p:]
-                if new_pos:
-                    pk = (
-                        self.spark.read.parquet(
-                            *[
-                                os.path.join(self._dir(name), d["path"])
-                                for d in new_pos
-                            ]
-                        )
-                        .select("_file_name", "_pos")
-                        .distinct()
-                    )
-                    base = self._read_files(
-                        name, pm, [pe], with_positions=True
-                    )
-                    hit = base.join(
-                        F.broadcast(pk), on=["_file_name", "_pos"], how="left_semi"
-                    ).drop("_file_name", "_pos")
-                    dels = hit if dels is None else dels.unionByName(hit)
+            hit = self._new_delete_hits(name, pm, m)
+            if hit is not None:
+                dels = hit if dels is None else dels.unionByName(hit)
             if ins is not None and dels is not None:
                 ins, dels = ins.exceptAll(dels), dels.exceptAll(ins)
             for df, tag in ((ins, "insert"), (dels, "delete")):
@@ -5369,6 +5069,43 @@ class ParquetTableManager:
         return _reduce(
             lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
         )
+
+    def _new_delete_hits(
+        self, name: str, pm: dict, m: dict
+    ) -> DataFrame | None:
+        """Parent-visible rows of ``pm`` that the table-level delete
+        descriptors NEW in commit ``m`` remove, or None. Every parent
+        file is older than the new descriptors, so they apply to all
+        of it; each row matched by any of them is returned once (rows
+        are told apart by their physical coordinate)."""
+        def new_in_m(lk: str) -> list[dict]:
+            old = {g["path"] for g in pm.get(lk, [])}
+            return [g for g in m.get(lk, []) if g["path"] not in old]
+
+        new_eq = new_in_m("global_eq_deletes")
+        new_pos = new_in_m("global_pos_deletes")
+        if not new_eq and not new_pos:
+            return None
+        key = ["_file_name", "_pos"]
+        base = self._read_files(name, pm, pm["files"], with_positions=True)
+        hits: list[DataFrame] = []
+        if new_pos:
+            dv = F.broadcast(self._dv_coords(name, new_pos))
+            hits.append(base.join(dv, on=key, how="left_semi"))
+        schema = StructType.fromJson(pm["schema"])
+        for cols, ds in _by_cols(new_eq).items():
+            dk = F.broadcast(self._eq_delete_keys(name, schema, cols, ds))
+            hits.append(
+                base.join(
+                    dk, on=_null_safe_eq(base, dk, list(cols)), how="left_semi"
+                )
+            )
+        out = hits[0]
+        for h in hits[1:]:
+            out = out.unionByName(h)
+        if len(hits) > 1:
+            out = out.dropDuplicates(key)
+        return out.drop(*key)
 
     def diff_refs(
         self, name: str, to_ref: str, from_ref: str = "main"
@@ -5504,31 +5241,12 @@ class ParquetTableManager:
             for v in range(self._max_manifest_version(name) + 1)
             if v not in keep and os.path.exists(self._manifest_path(name, v))
         ]
-        def _paths(entry: dict, owned_only: bool = False) -> list[str]:
-            # a manifest entry references its data file AND any
-            # equality-/position-delete files attached to it — all live.
-            # owned_only (the REMOVAL walk) excludes external data files
-            # (add_files-registered): the table never owns them, so
-            # expiry must never delete them — their attached delete
-            # files ARE table-owned and reap normally
-            data = (
-                []
-                if owned_only and entry.get("external")
-                else [entry["path"]]
-            )
-            return (
-                data
-                + [d["path"] for d in entry.get("eq_deletes", [])]
-                + [d["path"] for d in entry.get("pos_deletes", [])]
-            )
-
         live: set[str] = set()
         live_segs: set[str] = set()
         for v in keep:
             mm = self._load_manifest(name, v)
             live_segs.update(sid for sid, _ in mm["_seg_layout"])
-            for e in mm["files"]:
-                live.update(_paths(e))
+            live.update(e["path"] for e in mm["files"])
             live.update(
                 g["path"]
                 for g in (
@@ -5541,8 +5259,10 @@ class ParquetTableManager:
         for v in drop:
             dm = self._load_manifest(name, v)
             drop_segs.update(sid for sid, _ in dm["_seg_layout"])
+            # external (add_files-registered) data files are never
+            # owned by the table, so expiry must never delete them
             dropped_paths = [
-                p for e in dm["files"] for p in _paths(e, owned_only=True)
+                e["path"] for e in dm["files"] if not e.get("external")
             ] + [
                 g["path"]
                 for g in (
@@ -5589,10 +5309,10 @@ class ParquetTableManager:
                         self._seg_cache_drop((name, sid))
             # delete files no manifest ever referenced (a writer that
             # crashed between staging the equality/positional delete
-            # parquet and committing the attach — the write-first delete
+            # parquet and committing its descriptor — the write-first delete
             # path's crash window): same age gate, same invariant (every
-            # REFERENCED delete file is in `live` via _paths/global
-            # descriptors above, so only true orphans can pass)
+            # REFERENCED delete file is in `live` via the descriptors
+            # above, so only true orphans can pass)
             del_dir = os.path.join(self._dir(name), "deletes")
             if os.path.isdir(del_dir):
                 now = _time.time()
@@ -5807,9 +5527,9 @@ class ParquetTableManager:
         new_files = self._write_files(name, df, spec, sort_within=cluster)
         m["files"] = new_files
         m["operation"] = "replace"
-        # every file was rewritten post-delete: folded global deletes are
-        # fully materialized (their seq guards would no-op against the
-        # fresh births anyway) — drop them so expiry can reap the files
+        # every file was rewritten post-delete: the table-level deletes
+        # are fully materialized (their seq guards would no-op against
+        # the fresh files anyway) — drop them so expiry can reap them
         m.pop("global_eq_deletes", None)
         m.pop("global_pos_deletes", None)
         m["parent"] = m["version"]
@@ -6027,9 +5747,9 @@ class Transaction:
         batch's data files — :meth:`ParquetTableManager.upsert_equality`
         semantics) to land atomically with the transaction's other
         staged operations: the fact-and-dim-CDC-epoch-together shape.
-        The delete file's attachment to existing files is resolved at
-        APPLY time against the then-current head, so commits that win
-        in between correctly fall under the delete (sequence order).
+        The delete takes its sequence number at APPLY time against the
+        then-current head, so commits that win in between correctly
+        fall under the delete (sequence order).
         An upsert staged AFTER a staged DDL aligns (and writes) the
         evolved schema, same as :meth:`append`."""
         if self._done:

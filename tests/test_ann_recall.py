@@ -345,11 +345,13 @@ def test_ann_delete_redacts_without_rebuild(spark):
 
     df, planned, total, _q, mgr, pre_paths = _ann_delete_scan(spark, SF_DIR)
     m = mgr._load_manifest("emb_ivf_del")
-    # (b) redaction moved no data file; the delete state is ONE folded
-    # global coordinate file
+    # (b) redaction moved no data file; the delete state is ONE
+    # table-level deletion vector, whose per-file counts add up to it
     assert {e["path"] for e in m["files"]} == set(pre_paths)
     assert len(m["global_pos_deletes"]) == 1
-    assert all(not e.get("pos_deletes") for e in m["files"])
+    assert sum(
+        d.n_pos for d in mgr.file_deletes("emb_ivf_del", m).values()
+    ) == m["global_pos_deletes"][0]["n_pos"]
     # (c) manifest pruning still on; one coordinate anti-join
     assert 0 < planned < total
     plan = df._jdf.queryExecution().optimizedPlan().toString()

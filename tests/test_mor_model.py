@@ -11,10 +11,12 @@ then another fold."""
 from __future__ import annotations
 
 import random
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
+from iceberg_poc_spark.sources.pyds import register_snaptable
 from iceberg_poc_spark.tables import ParquetTableManager
 
 
@@ -45,7 +47,7 @@ def test_random_mor_interleavings_match_model(mgr, spark, seed):
     base = fresh_batch(30)
     df0 = spark.createDataFrame(base, "k long, v string, g int")
     mgr.create_table("m", df0.schema, [])
-    mgr.append("m", df0)
+    v0 = mgr.append("m", df0)
     model: dict[int, tuple[str, int]] = {k: (v, g) for k, v, g in base}
 
     ops = ["append", "upsert", "pos_delete", "pred_delete",
@@ -112,6 +114,22 @@ def test_random_mor_interleavings_match_model(mgr, spark, seed):
             f"seed={seed} step={step} op={op}: "
             f"missing={sorted(want - got)[:5]} extra={sorted(got - want)[:5]}"
         )
+    # the connector face reads the same final state
+    register_snaptable(spark)
+    snap = (
+        spark.read.format("snaptable")
+        .option("warehouse", mgr.warehouse)
+        .option("table", "m")
+        .load()
+    )
+    assert {(r.k, r.v, r.g) for r in snap.collect()} == want
+    # replaying the change stream over the base rows reproduces the
+    # model, and no row is ever deleted more than inserted (or twice)
+    net = Counter((k, v, g) for k, v, g in base)
+    for r in mgr.changelog("m", v0).collect():
+        net[(r.k, r.v, r.g)] += 1 if r["_change_type"] == "insert" else -1
+    assert set(net.values()) <= {0, 1}, sorted(net.items())[:5]
+    assert {row for row, n in net.items() if n == 1} == want
 
 
 @pytest.mark.parametrize("seed", [5, 31, 77])

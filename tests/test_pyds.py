@@ -339,11 +339,11 @@ def test_stream_walks_through_compact_deletes(mgr, spark):
 
 
 def test_datasource_applies_global_seq_deletes(mgr, spark):
-    """A table whose stacked upsert epochs were compacted into
-    sequence-scoped GLOBAL delete files must read identically through
-    the connector face — including rows appended AFTER the compaction
-    (unstamped entries: younger than every folded delete, untouched by
-    them)."""
+    """A table whose upsert epochs recorded sequence-scoped table-level
+    delete files must read identically through the connector face —
+    with one delete file per epoch, after compact_deletes merged them
+    into one carrying per-key seqs, and for rows appended AFTER the
+    compaction (younger than every delete, untouched by them)."""
     ev = make_events(spark, 40).coalesce(1)
     mgr.create_table("g", EVENTS_SCHEMA, [])
     mgr.append("g", ev)
@@ -352,12 +352,13 @@ def test_datasource_applies_global_seq_deletes(mgr, spark):
             spark, 8, start=dt.datetime(2025, epoch, 1)
         ).coalesce(1)
         mgr.upsert_equality("g", batch, ["tenant_id", "service_id"])
+    assert len(mgr._load_manifest("g")["global_eq_deletes"]) == 3
+    assert _rows(_load(spark, mgr, "g")) == _rows(mgr.read("g"))
     mgr.compact_deletes("g")
     m = mgr._load_manifest("g")
-    assert m.get("global_eq_deletes"), "compaction must have gone global"
-    assert all(not e.get("eq_deletes") for e in m["files"])
+    assert len(m["global_eq_deletes"]) == 1, "compaction must merge"
     assert _rows(_load(spark, mgr, "g")) == _rows(mgr.read("g"))
-    # post-compaction append: unstamped entries ride global-free
+    # post-compaction append: younger entries ride delete-free
     mgr.append("g", make_events(spark, 5, start=dt.datetime(2026, 1, 1)))
     assert _rows(_load(spark, mgr, "g")) == _rows(mgr.read("g"))
 
@@ -403,15 +404,20 @@ def test_row_group_pruning_on_stats_sorted_file(tmp_path, spark):
         )
     )
     assert rows == 20  # only the last two groups were decoded
-    # positional delete attached: full read, delete applied, no pruning
-    dpath = str(tmp_path / "posdel.parquet")
+    # deletion vector naming the file: full read, delete applied, no
+    # pruning (row 99 = word 1, bit 35)
+    dpath = str(tmp_path / "dv.parquet")
     pq.write_table(
-        pa.table({"_file_name": ["rg.parquet"], "_pos": [99]}), dpath
+        pa.table(
+            {
+                "_file_name": ["rg.parquet"],
+                "words": [[{"w": 1, "b": 1 << 35}]],
+                "n": [1],
+            }
+        ),
+        dpath,
     )
-    entry_pos = {
-        **entry,
-        "pos_deletes": [{"path": "posdel.parquet"}],
-    }
+    entry_pos = {**entry, "_dv": [{"path": "dv.parquet"}]}
     rows = sum(
         b.num_rows
         for b in _read_file_as_batches(
@@ -560,12 +566,14 @@ def test_pushdown_prunes_null_predicates(mgr, spark):
 
 
 def test_datasource_applies_global_pos_deletes(mgr, spark):
-    """A table whose stacked positional-delete epochs were folded into a
-    GLOBAL coordinate file must read identically through the connector
-    face — coordinates bind by file name, so the executor applies the
-    folded file's rows for exactly its own file; rows appended AFTER the
-    fold (unstamped) ride global-free, and row-group pruning stays off
-    for coordinate-guarded files (ordinal safety)."""
+    """A table whose positional-delete epochs recorded table-level
+    deletion vectors must read identically through the connector face —
+    with one vector per epoch and after compact_deletes merged them.
+    Vectors bind by file name, so the executor decodes only its own
+    file's row; rows appended AFTER the merge ride delete-free,
+    row-group pruning stays off for files a vector names (ordinal
+    safety), and positions past the first word decode exactly —
+    including bit 63, where the signed word is negative."""
     ev = make_events(spark, 40).coalesce(1)
     mgr.create_table("gp", EVENTS_SCHEMA, [])
     mgr.append("gp", ev)
@@ -578,14 +586,34 @@ def test_datasource_applies_global_pos_deletes(mgr, spark):
             .select("_file_name", "_pos")
         )
         mgr.delete_positions("gp", pos)
+    assert len(mgr._load_manifest("gp")["global_pos_deletes"]) == 3
+    assert _rows(_load(spark, mgr, "gp")) == _rows(mgr.read("gp"))
     mgr.compact_deletes("gp")
     m = mgr._load_manifest("gp")
-    assert m.get("global_pos_deletes"), "fold must have gone global"
-    assert all(not e.get("pos_deletes") for e in m["files"])
+    assert len(m["global_pos_deletes"]) == 1, "compaction must merge"
     assert _rows(_load(spark, mgr, "gp")) == _rows(mgr.read("gp"))
-    # post-fold append: unstamped entries ride global-free
+    # post-merge append: younger entries ride delete-free
     mgr.append("gp", make_events(spark, 5, start=dt.datetime(2026, 1, 1)))
     assert _rows(_load(spark, mgr, "gp")) == _rows(mgr.read("gp"))
+    # a 130-row file losing positions 63 (bit 63 of word 0: the signed
+    # word is negative), 64 and 127 (word 1)
+    mgr.append(
+        "gp", make_events(spark, 130, start=dt.datetime(2027, 1, 1)).coalesce(1)
+    )
+    rp = mgr.read_with_positions("gp").filter(
+        F.col("ts") >= F.lit("2027-01-01 00:00:00").cast("timestamp_ntz")
+    )
+    kill = rp.filter(F.col("_pos").isin(63, 64, 127))
+    want_gone = {r["value"] for r in kill.collect()}
+    assert len(want_gone) == 3
+    mgr.delete_positions("gp", kill.select("_file_name", "_pos"))
+    got = _load(spark, mgr, "gp")
+    assert _rows(got) == _rows(mgr.read("gp"))
+    late = got.filter(
+        F.col("ts") >= F.lit("2027-01-01 00:00:00").cast("timestamp_ntz")
+    )
+    assert late.count() == 127
+    assert not want_gone & {r["value"] for r in late.collect()}
     # pushed filters on a coordinate-guarded file must not row-group
     # prune (ordinals shift) — values stay exact under a filter
     got = _load(spark, mgr, "gp").filter("value >= 100")

@@ -869,16 +869,21 @@ def _mk_ranged(spark, mgr):
 
 
 def test_eq_delete_attaches_only_to_overlapping_files(mgr, spark):
-    """A key set spanning [0, 50) must attach its delete file to ONLY
-    the data file whose stats can hold those keys — the delete commit is
-    O(matching files), never a table pass."""
+    """A key set spanning [0, 50) is recorded as ONE table-level
+    descriptor: no manifest entry changes — the delete commit is O(1)
+    metadata, never a per-file pass — and, scoped by sequence number,
+    it may touch exactly the files present at its commit."""
     _mk_ranged(spark, mgr)
+    m0 = mgr._load_manifest("eqt")
     keys = spark.range(0, 50).select(F.col("id").alias("k"))
     mgr.delete("eqt", equality=["k"], keys=keys, mode="mor")
     m = mgr._load_manifest("eqt")
-    dirty = [e for e in m["files"] if e.get("eq_deletes")]
-    assert len(dirty) == 1
-    assert dirty[0]["partition"]["g"] == "0"
+    assert m["files"] == m0["files"]
+    gs = m["global_eq_deletes"]
+    assert [(g["cols"], g["seq"]) for g in gs] == [(["k"], m["version"])]
+    assert all(e["seq"] < m["version"] for e in m["files"])
+    deletes = mgr.file_deletes("eqt", m)
+    assert all(deletes[e["path"]].eq == gs for e in m["files"])
     assert mgr.read("eqt").count() == 950
 
 
@@ -902,21 +907,27 @@ def test_eq_delete_stacked_rewrite_and_gc(mgr, spark):
         mode="mor",
     )
     assert mgr.read("eqt").count() == 985
+    # a file appended after both deletes is younger than them: clean
+    mgr.append(
+        "eqt",
+        spark.createDataFrame([(2000, 20, 0.0)], "k long, g long, v double"),
+    )
     m = mgr._load_manifest("eqt")
-    clean_paths = {e["path"] for e in m["files"] if not e.get("eq_deletes")}
+    deletes = mgr.file_deletes("eqt", m)
+    clean_paths = {e["path"] for e in m["files"] if not deletes[e["path"]].dirty}
+    assert len(clean_paths) == 1
     del_paths = [
         os.path.join(mgr._dir("eqt"), d["path"])
-        for e in m["files"]
-        for d in e.get("eq_deletes", [])
+        for d in m["global_eq_deletes"]
     ]
-    assert del_paths and all(os.path.exists(p) for p in del_paths)
+    assert len(del_paths) == 2 and all(os.path.exists(p) for p in del_paths)
     mgr.rewrite_deletes("eqt")
     m2 = mgr._load_manifest("eqt")
-    assert not any(e.get("eq_deletes") for e in m2["files"])
+    assert "global_eq_deletes" not in m2
     assert clean_paths <= {e["path"] for e in m2["files"]}, (
         "delete-free files must survive rewrite by identity"
     )
-    assert mgr.read("eqt").count() == 985
+    assert mgr.read("eqt").count() == 986
     # delete files are still referenced by historical snapshots; expiry
     # to the head frees them
     mgr.expire_snapshots("eqt", keep_last=1)
@@ -1203,21 +1214,21 @@ def test_txn_crash_before_publish_invisible(mgr, spark):
 
 
 def test_compact_deletes_folds_stacks_into_global_seq_deletes(mgr, spark):
-    """Stacked upsert epochs leave one eq-delete file per epoch on the
-    oldest data files; compact_deletes folds ALL stacks into ONE
-    sequence-scoped global delete file per key-column set (per-key MAX
-    seq) with IDENTICAL row-visible VALUES, stamps every entry's birth
-    seq, is a no-op when nothing is stacked, and the superseded delete
-    files are reaped by expire_snapshots once unreferenced. The fold
-    makes the read tax constant in the epoch count: the read plan holds
-    one anti-join per stacked epoch before it and exactly one after.
-    Epochs landed AFTER a compaction stack per-entry again and FOLD INTO
-    the existing global file on the next pass; rewrite_deletes clears
-    the global state entirely."""
+    """Each upsert epoch records one sequence-scoped table-level delete
+    file, carrying its commit's seq like the epoch's data files; no
+    manifest entry ever changes. The read plan is independent of the
+    epoch count: ONE anti-join and no Union over 8 epochs, before and
+    after compaction. compact_deletes merges the files into ONE per
+    key-column set (per-key MAX seq) with IDENTICAL row-visible VALUES,
+    moves no data file, is a no-op when nothing is left to merge, and
+    the superseded delete files are reaped by expire_snapshots once
+    unreferenced. Epochs landed AFTER a compaction add files again and
+    MERGE INTO the existing one on the next pass; rewrite_deletes
+    clears the table-level state entirely."""
     import os
 
-    def n_anti(df):
-        return df._jdf.queryExecution().optimizedPlan().toString().count("LeftAnti")
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
 
     base = spark.createDataFrame(
         [(i, f"v0-{i}") for i in range(40)], "k long, v string"
@@ -1232,32 +1243,37 @@ def test_compact_deletes_folds_stacks_into_global_seq_deletes(mgr, spark):
         mgr.upsert_equality("cd", batch, ["k"])
     before = sorted(tuple(map(str, r)) for r in mgr.read("cd").collect())
     m = mgr._load_manifest("cd")
-    assert max(len(e.get("eq_deletes", [])) for e in m["files"]) == 8
-    assert n_anti(mgr.read("cd")) == 8
+    gdels = m["global_eq_deletes"]
+    assert len(gdels) == 8
+    # each epoch's delete and data files share the epoch's commit seq
+    seqs = [g["seq"] for g in gdels]
+    assert seqs == sorted(set(seqs))
+    assert sorted({e["seq"] for e in m["files"]}) == [seqs[0] - 1, *seqs]
+    assert plan(mgr.read("cd")).count("LeftAnti") == 1
+    assert "Union" not in plan(mgr.read("cd"))
     v = mgr.compact_deletes("cd")
     m2 = mgr._load_manifest("cd")
     assert m2["operation"] == "compact-deletes"
-    assert n_anti(mgr.read("cd")) == 1
-    # every per-entry stack folded away; ONE global file for the one
-    # key-column set; every entry carries its birth seq
-    assert max(len(e.get("eq_deletes", [])) for e in m2["files"]) == 0
+    assert plan(mgr.read("cd")).count("LeftAnti") == 1
+    # ONE table-level file for the one key-column set, scoped by the
+    # newest merged seq; entries unchanged
     assert [tuple(g["cols"]) for g in m2["global_eq_deletes"]] == [("k",)]
-    assert all("seq" in e for e in m2["files"])
-    # data files untouched — metadata-only compaction
-    assert {e["path"] for e in m2["files"]} == {e["path"] for e in m["files"]}
+    assert m2["global_eq_deletes"][0]["seq"] == seqs[-1]
+    assert m2["files"] == m["files"]
     assert sorted(tuple(map(str, r)) for r in mgr.read("cd").collect()) == before
-    # idempotent no-op once flat: no new commit
+    # idempotent no-op once merged: no new commit
     assert mgr.compact_deletes("cd") == v
     deldir = os.path.join(mgr._dir("cd"), "deletes")
     n_before = len(os.listdir(deldir))
     mgr.expire_snapshots("cd", keep_last=1)
     assert len(os.listdir(deldir)) < n_before
-    # a post-compaction epoch: per-entry stack again, values correct,
-    # and the next compaction folds it into the SAME global file
+    # a post-compaction epoch: a second table-level file, values
+    # correct, and the next compaction merges it into ONE again
     batch = spark.createDataFrame(
         [(k, f"late-{k}") for k in range(0, 4)], "k long, v string"
     ).coalesce(1)
     mgr.upsert_equality("cd", batch, ["k"])
+    assert len(mgr._load_manifest("cd")["global_eq_deletes"]) == 2
     want = {
         **{i: f"v0-{i}" for i in range(40)},
     }
@@ -1270,17 +1286,67 @@ def test_compact_deletes_folds_stacks_into_global_seq_deletes(mgr, spark):
     assert got == want
     mgr.compact_deletes("cd")
     m3 = mgr._load_manifest("cd")
-    assert max(len(e.get("eq_deletes", [])) for e in m3["files"]) == 0
     assert len(m3["global_eq_deletes"]) == 1
     assert {r.k: r.v for r in mgr.read("cd").collect()} == want
-    # global deletes also block unsafe schema evolution, like stacks do
-    with pytest.raises(ValueError, match="global equality"):
+    # table-level deletes block unsafe schema evolution
+    with pytest.raises(ValueError, match="outstanding equality"):
         mgr.drop_column("cd", "k")
-    # rewrite_deletes materializes and clears the global state
+    # rewrite_deletes materializes and clears the table-level state
     mgr.rewrite_deletes("cd")
     m4 = mgr._load_manifest("cd")
     assert "global_eq_deletes" not in m4
     assert {r.k: r.v for r in mgr.read("cd").collect()} == want
+
+
+def test_upsert_changes_no_entry_and_runs_no_bounds_job(mgr, spark, monkeypatch):
+    """An upsert appends its delete descriptor and data files and
+    leaves every parent entry unchanged — on a bucketed table too — and
+    stages without a key-bounds collect or a bucket-probe job."""
+    df = spark.range(0, 200).select(
+        F.concat(F.lit("k"), F.col("id")).alias("k"), F.col("id").alias("v")
+    )
+    mgr.create_table("up", df.schema, [bucket("k", 4)])
+    mgr.append("up", df)
+    m0 = mgr._load_manifest("up")
+
+    def forbidden(*_a, **_k):
+        raise AssertionError("upsert must not compute key bounds")
+
+    monkeypatch.setattr(ParquetTableManager, "_eq_key_predicate", forbidden)
+    monkeypatch.setattr(ParquetTableManager, "_bucket_allowed", forbidden)
+    up = spark.createDataFrame([("k7", -7), ("k900", 900)], "k string, v long")
+    v = mgr.upsert_equality("up", up, ["k"])
+    monkeypatch.undo()
+    m = mgr._load_manifest("up")
+    assert m["files"][: len(m0["files"])] == m0["files"]
+    assert all(e["seq"] == v for e in m["files"][len(m0["files"]) :])
+    assert [g["seq"] for g in m["global_eq_deletes"]] == [v]
+    got = {r.k: r.v for r in mgr.read("up").collect()}
+    assert len(got) == 201 and got["k7"] == -7 and got["k900"] == 900
+
+
+def test_cherry_pick_across_upsert_takes_fresh_seq(mgr, spark):
+    """A cherry-picked append lands after an upsert of the same key on
+    the target: its re-added file takes the cherry-pick commit's seq,
+    so the earlier upsert's delete never applies to it — before and
+    after compact_deletes."""
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    mgr.create_table("cp", df.schema, [])
+    mgr.append("cp", df)
+    mgr.create_branch("cp", "b")
+    snap = mgr.append(
+        "cp",
+        spark.createDataFrame([(1, "branch")], "k long, v string"),
+        ref="b",
+    )
+    mgr.upsert_equality(
+        "cp", spark.createDataFrame([(1, "main-up")], "k long, v string"), ["k"]
+    )
+    mgr.cherry_pick("cp", snap)
+    want = {(1, "branch"), (1, "main-up"), (2, "b")}
+    assert {(r.k, r.v) for r in mgr.read("cp").collect()} == want
+    mgr.compact_deletes("cp")
+    assert {(r.k, r.v) for r in mgr.read("cp").collect()} == want
 
 
 def test_append_merge_schema_adds_and_widens(mgr, spark):
@@ -1308,35 +1374,6 @@ def test_append_merge_schema_adds_and_widens(mgr, spark):
                                            "k long, w long, note string, extra double"))
     assert "extra" not in mgr.read("ms").columns
     assert mgr.read("ms").count() == 4
-
-
-def test_auto_compact_threshold_bounds_delete_stacks(mgr, spark):
-    """write.delete.compact-threshold: upsert epochs auto-fold into the
-    global delete file whenever any stack reaches the threshold, so the
-    stack depth (the read-tax driver) stays bounded without external
-    maintenance — and values stay exactly last-writer-wins."""
-    from iceberg_poc_spark.tables.manager import (
-        DELETE_COMPACT_THRESHOLD_PROP,
-    )
-
-    base = spark.createDataFrame(
-        [(i, "v0") for i in range(20)], "k long, v string"
-    ).coalesce(1)
-    mgr.create_table("ac", base.schema, [])
-    mgr.set_properties("ac", {DELETE_COMPACT_THRESHOLD_PROP: "3"})
-    mgr.append("ac", base)
-    for epoch in range(1, 8):
-        batch = spark.createDataFrame(
-            [(k, f"e{epoch}") for k in range(4)], "k long, v string"
-        ).coalesce(1)
-        mgr.upsert_equality("ac", batch, ["k"])
-        m = mgr._load_manifest("ac")
-        assert (
-            max(len(e.get("eq_deletes", [])) for e in m["files"]) < 3
-        ), f"stack exceeded threshold after epoch {epoch}"
-    got = {r.k: r.v for r in mgr.read("ac").collect()}
-    assert got == {**{i: "v0" for i in range(20)}, **{k: "e7" for k in range(4)}}
-    assert mgr._load_manifest("ac").get("global_eq_deletes")
 
 
 def test_incremental_read_walks_through_compact_deletes(mgr, spark):
@@ -1393,8 +1430,9 @@ def test_expire_reaps_orphan_staging(mgr, spark):
 
 
 def test_compact_deletes_merges_positional_stacks(mgr, spark):
-    """Stacked positional deletes fold into ONE table-level coordinate
-    file (global_pos_deletes); visible rows unchanged."""
+    """Three positional deletes record three table-level deletion
+    vectors (global_pos_deletes); compact_deletes merges them into ONE;
+    visible rows unchanged."""
     base = spark.range(30).select(F.col("id").alias("k")).coalesce(1)
     mgr.create_table("cp", base.schema, [])
     mgr.append("cp", base)
@@ -1407,10 +1445,10 @@ def test_compact_deletes_merges_positional_stacks(mgr, spark):
         mgr.delete_positions("cp", pos)
     before = sorted(r.k for r in mgr.read("cp").collect())
     m = mgr._load_manifest("cp")
-    assert max(len(e.get("pos_deletes", [])) for e in m["files"]) == 3
+    assert len(m["global_pos_deletes"]) == 3
     mgr.compact_deletes("cp")
     m2 = mgr._load_manifest("cp")
-    assert max(len(e.get("pos_deletes", [])) for e in m2["files"]) == 0
+    assert m2["files"] == m["files"]
     assert len(m2["global_pos_deletes"]) == 1
     assert sorted(r.k for r in mgr.read("cp").collect()) == before
     assert before == [3, 4, 8, 9, *range(13, 30)]
@@ -1500,10 +1538,11 @@ def test_txn_upsert_crash_repair_no_partial_epoch(mgr, spark):
 
 
 def test_eq_delete_point_keys_prune_through_buckets(mgr, spark):
-    """A small single-column key set prunes as exact membership: on a
-    bucket-partitioned table the delete file attaches to ONLY the
-    matching buckets' files — the GDPR-erasure shape where a handful of
-    keys must not touch 10k files' metadata."""
+    """A small point-keyed delete on a bucket-partitioned table — the
+    GDPR-erasure shape where a handful of keys must not touch 10k
+    files' metadata — changes NO manifest entry: it records one
+    table-level descriptor. The same holds through a staged
+    (transactional) upsert; values stay exact."""
     df = spark.range(0, 2000).select(
         F.concat(F.lit("k"), F.col("id")).alias("k"), F.col("id").alias("v")
     )
@@ -1511,13 +1550,12 @@ def test_eq_delete_point_keys_prune_through_buckets(mgr, spark):
     mgr.append("bup", df)
     total = len(mgr._load_manifest("bup")["files"])
     assert total >= 8
+    m0 = mgr._load_manifest("bup")
     keys = spark.createDataFrame([("k42",), ("k99",)], "k string")
     mgr.delete("bup", equality=["k"], keys=keys, mode="mor")
     m = mgr._load_manifest("bup")
-    dirty = [e for e in m["files"] if e.get("eq_deletes")]
-    assert 1 <= len(dirty) <= 2 * (total // 8 + 1), (
-        f"{len(dirty)} of {total} files attached; bucket pruning failed"
-    )
+    assert m["files"] == m0["files"]
+    assert len(m["global_eq_deletes"]) == 1
     assert mgr.read("bup").count() == 1998
     # and the same through a staged (transactional) upsert
     up = spark.createDataFrame([("k42", -1), ("k7", -2)], "k string, v long")
@@ -1525,15 +1563,11 @@ def test_eq_delete_point_keys_prune_through_buckets(mgr, spark):
     txn.upsert("bup", up, ["k"])
     txn.commit()
     m2 = mgr._load_manifest("bup")
-    base_paths = {e["path"] for e in m["files"]}
-    newly_dirty = [
-        e
-        for e in m2["files"]
-        if e["path"] in base_paths
-        and len(e.get("eq_deletes", [])) > 0
-        and e["path"] not in {d["path"] for d in dirty}
+    assert m2["files"][:total] == m["files"]
+    assert [g["seq"] for g in m2["global_eq_deletes"]] == [
+        m["version"],
+        m2["version"],
     ]
-    assert len(newly_dirty) <= 2 * (total // 8 + 1)
     got = {r["k"]: r["v"] for r in mgr.read("bup").collect()}
     assert got["k42"] == -1 and got["k7"] == -2 and len(got) == 1999
 
@@ -1758,13 +1792,14 @@ def test_txn_rollback_refuses_table_first_snapshot(mgr, spark):
 
 
 def test_compact_deletes_folds_positional_stacks_globally(mgr, spark):
-    """50 stacked positional-delete epochs fold into ONE table-level
-    coordinate file (global_pos_deletes): per-entry stacks vanish, every
-    entry is seq-stamped, the read plan pays exactly ONE coordinate
-    anti-join regardless of epoch count, row-visible values are
-    unchanged, a post-fold epoch folds into the SAME global file on the
-    next pass, a read planning only post-fold files skips the global
-    anti-join entirely, and rewrite_deletes clears the state."""
+    """50 positional-delete epochs record 50 table-level deletion
+    vectors; the read plan pays exactly ONE coordinate anti-join
+    regardless of epoch count, before and after compact_deletes merges
+    them into ONE vector (scoped by the newest merged seq), row-visible
+    values are unchanged, a post-merge epoch merges into ONE again on
+    the next pass, a read planning only files younger than every vector
+    skips the anti-join entirely, and rewrite_deletes clears the
+    state."""
     import os
 
     base = spark.createDataFrame(
@@ -1790,21 +1825,26 @@ def test_compact_deletes_folds_positional_stacks_globally(mgr, spark):
     before = sorted(tuple(map(str, r)) for r in mgr.read("pd").collect())
     assert len(before) == 150
     m = mgr._load_manifest("pd")
-    stacks = [len(e.get("pos_deletes", [])) for e in m["files"]]
-    assert max(stacks) > 1 and len({s for s in stacks if s}) > 1
+    assert len(m["global_pos_deletes"]) == 50
+    deletes = mgr.file_deletes("pd", m)
+    assert sorted(d.n_pos for d in deletes.values()) == [0, 16, 17, 17]
 
     def n_anti(df):
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         return plan.count("LeftAnti")
 
-    assert n_anti(mgr.read("pd")) >= 3  # one per dirty stack group
+    assert n_anti(mgr.read("pd")) == 1
     v = mgr.compact_deletes("pd")
     m2 = mgr._load_manifest("pd")
     assert m2["operation"] == "compact-deletes"
-    assert all(not e.get("pos_deletes") for e in m2["files"])
+    assert m2["files"] == m["files"]
     assert len(m2["global_pos_deletes"]) == 1
-    assert "max_seq" in m2["global_pos_deletes"][0]
-    assert all("seq" in e for e in m2["files"])
+    assert m2["global_pos_deletes"][0]["seq"] == max(
+        g["seq"] for g in m["global_pos_deletes"]
+    )
+    assert {
+        p: d.n_pos for p, d in mgr.file_deletes("pd", m2).items()
+    } == {p: d.n_pos for p, d in deletes.items()}
     # metadata-only: data files untouched
     assert {e["path"] for e in m2["files"]} == {e["path"] for e in m["files"]}
     # ONE coordinate anti-join for the whole read — O(1) in epochs
@@ -1818,20 +1858,20 @@ def test_compact_deletes_folds_positional_stacks_globally(mgr, spark):
     n_files = len(os.listdir(deldir))
     mgr.expire_snapshots("pd", keep_last=1)
     assert len(os.listdir(deldir)) < n_files
-    # post-fold epoch stacks per-entry again, then folds into the global
+    # a post-merge epoch adds a second vector, then merges into ONE
     coords = (
         mgr.read_with_positions("pd")
         .filter(F.col("k") == 61)
         .select("_file_name", "_pos")
     )
     mgr.delete_positions("pd", coords)
+    assert len(mgr._load_manifest("pd")["global_pos_deletes"]) == 2
     assert mgr.read("pd").count() == 149
     mgr.compact_deletes("pd")
     m3 = mgr._load_manifest("pd")
-    assert all(not e.get("pos_deletes") for e in m3["files"])
     assert len(m3["global_pos_deletes"]) == 1
     assert mgr.read("pd").count() == 149
-    # a read planning ONLY post-fold (unstamped) files skips the global
+    # a read planning ONLY files younger than every vector skips the
     # anti-join: append a stats-disjoint file and scan just it
     mgr.append(
         "pd",
@@ -2719,29 +2759,27 @@ def test_per_ref_retention_policies(mgr, spark, tmp_path):
 
 
 def test_global_pos_fold_is_deletion_vector(mgr, spark):
-    """compact_deletes folds positional stacks into a DELETION-VECTOR
-    file: one row per data file with its 64-bit word BITMAP (dvf=2 —
-    the dense-container half of Iceberg v3's roaring DV spec), 'dv'
-    descriptor flag, and n_pos = total coordinate count (feeding the
-    broadcast-size estimate). Reads are value-identical, a second fold
-    over mixed DV + fresh coordinate history still works, and
-    rewrite_deletes clears the state."""
+    """delete_positions writes a DELETION-VECTOR file at birth: one row
+    per data file with its 64-bit word BITMAP (the dense-container half
+    of Iceberg v3's roaring DV spec), a descriptor carrying the commit's
+    seq and n_pos = total coordinate count (feeding the broadcast-size
+    estimate). Reads are value-identical, compact_deletes merges a
+    second epoch's vector INTO one, and rewrite_deletes clears the
+    state."""
     df = spark.createDataFrame([(i, float(i)) for i in range(100)], "k long, v double")
     mgr.create_table("t", df.schema, [])
     mgr.append("t", df.coalesce(2))
     coords = mgr.read_with_positions("t").filter(F.pmod("k", F.lit(10)) == 0)
-    mgr.delete_positions("t", coords.select("_file_name", "_pos"))
-    mgr.compact_deletes("t")
+    v = mgr.delete_positions("t", coords.select("_file_name", "_pos"))
+    assert mgr.compact_deletes("t") == v  # one vector: nothing to merge
     m = mgr._load_manifest("t")
     gpos = m["global_pos_deletes"]
-    assert len(gpos) == 1 and gpos[0]["dv"] is True
-    assert gpos[0]["dvf"] == 2
+    assert len(gpos) == 1 and gpos[0]["seq"] == v
     assert gpos[0]["n_pos"] == 10
-    assert all(not e.get("pos_deletes") for e in m["files"])
     assert {r.k for r in mgr.read("t").collect()} == {
         i for i in range(100) if i % 10
     }
-    # second epoch: fresh coordinates fold INTO the existing DV
+    # second epoch: fresh coordinates merge INTO the existing DV
     c2 = mgr.read_with_positions("t").filter(F.col("k") == 7)
     mgr.delete_positions("t", c2.select("_file_name", "_pos"))
     mgr.compact_deletes("t")
@@ -2775,6 +2813,36 @@ def test_global_pos_fold_is_deletion_vector(mgr, spark):
         }
         assert got == deleted_by_fn[row["_file_name"]]
         assert row["n"] == len(got)
+    # the vectorised decoder matches the bit loop above, also on signed
+    # words with bit 63 set and on one file named by two rows
+    from iceberg_poc_spark.tables.manager import _dv_positions
+    import pyarrow as pa
+
+    assert {
+        fn: set(p.tolist()) for fn, p in _dv_positions(tab).items()
+    } == deleted_by_fn
+    odd = pa.table(
+        {
+            "_file_name": ["a", "b", "a"],
+            "words": [
+                [{"w": 0, "b": -(1 << 63)}, {"w": 2, "b": 5}],
+                [{"w": 1, "b": -1}],
+                [{"w": 0, "b": 1 | (1 << 62)}],
+            ],
+        }
+    )
+    want = {}
+    for row in odd.to_pylist():
+        want.setdefault(row["_file_name"], set()).update(
+            w["w"] * 64 + i
+            for w in row["words"]
+            for i in range(64)
+            if (w["b"] >> i) & 1
+        )
+    assert {
+        fn: set(p.tolist()) for fn, p in _dv_positions(odd).items()
+    } == want
+    assert want["a"] == {0, 62, 63, 128, 130}
     mgr.rewrite_deletes("t")
     m3 = mgr._load_manifest("t")
     assert "global_pos_deletes" not in m3
@@ -2865,11 +2933,7 @@ def test_expire_reaps_orphaned_delete_files(mgr, spark):
     mgr.append("t", df)
     keys = spark.createDataFrame([(1,), (2,)], "k long")
     mgr.delete("t", equality=["k"], keys=keys, mode="mor")
-    live = [
-        d["path"]
-        for e in mgr._load_manifest("t")["files"]
-        for d in e.get("eq_deletes", [])
-    ]
+    live = [d["path"] for d in mgr._load_manifest("t")["global_eq_deletes"]]
     assert live
     # fabricate the crash leftover
     orphan = _os.path.join(

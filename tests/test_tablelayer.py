@@ -441,21 +441,21 @@ def test_eq_deletes_are_metadata_only_and_sequence_scoped(spark):
         e["path"] for e in m_base["files"]
     }, "equality merge-on-read must rewrite nothing"
     assert m_eq["operation"] == "delete-mor"
-    assert any(e.get("eq_deletes") for e in m_eq["files"])
-    # two distinct key-column sets are attached
-    colsets = {
-        tuple(d["cols"])
-        for e in m_eq["files"]
-        for d in e.get("eq_deletes", [])
-    }
-    assert colsets == {("o_orderkey",), ("o_custkey",)}
+    assert m_eq["files"] == m_base["files"], "no manifest entry changes"
+    # two distinct key-column sets, one table-level descriptor each
+    colsets = [tuple(d["cols"]) for d in m_eq["global_eq_deletes"]]
+    assert colsets == [("o_orderkey",), ("o_custkey",)]
     n_all = load_table(spark, SF_DIR, "orders").count()
     assert mgr.read("orders_eqd", snapshot_id=snaps["base"]).count() == n_all
-    # re-appended files (post-delete) carry NO eq_deletes entries
+    # re-appended files (post-delete) are younger than both deletes: no
+    # delete may touch them
     m_head = mgr._load_manifest("orders_eqd", snaps["head"])
     base_paths = {e["path"] for e in m_base["files"]}
     new_entries = [e for e in m_head["files"] if e["path"] not in base_paths]
-    assert new_entries and all(not e.get("eq_deletes") for e in new_entries)
+    deletes = mgr.file_deletes("orders_eqd", m_head)
+    assert new_entries and all(
+        not deletes[e["path"]].dirty for e in new_entries
+    )
     # and their rows are all visible at head
     n_readd = sum(e["records"] for e in new_entries)
     got = mgr.read("orders_eqd")
@@ -473,31 +473,31 @@ def test_eq_deletes_are_metadata_only_and_sequence_scoped(spark):
 
 def test_upsert_equality_epochs_are_single_commit_zero_rewrite(spark):
     """Each CDC epoch advances the table by exactly ONE snapshot whose
-    operation is 'upsert'; no pre-existing data file is ever rewritten
-    or dropped by an upsert; each epoch's own files carry no delete;
-    and stacked epochs leave exactly one visible row per key."""
+    operation is 'upsert'; no pre-existing manifest entry is ever
+    rewritten, changed or dropped by an upsert; each epoch's own files
+    fall under no delete of its own; and stacked epochs leave exactly
+    one visible row per key."""
     mgr, snaps = tablelayer._setup_users_upsert(spark, SF_DIR)
     heads = snaps["heads"]
     assert len(heads) == 3
-    paths_before: set = set()
+    entries_before: list = []
     for i, v in enumerate(heads):
         m = mgr._load_manifest("users_up", v)
         assert m["operation"] == "upsert"
-        paths_now = {e["path"] for e in m["files"]}
-        assert paths_before <= paths_now, "upsert must not rewrite/drop files"
-        new_entries = [
-            e for e in m["files"] if e["path"] not in paths_before
-        ]
+        n = len(entries_before)
+        assert m["files"][:n] == entries_before, (
+            "upsert must not rewrite/change/drop entries"
+        )
+        new_entries = m["files"][n:]
+        deletes = mgr.file_deletes("users_up", m)
         assert new_entries and all(
-            not e.get("eq_deletes") for e in new_entries
-        ), "an epoch's own files must not carry its delete"
-        if i > 0:
-            old_entries = [
-                e for e in m["files"] if e["path"] in paths_before
-            ]
-            assert all(e.get("eq_deletes") for e in old_entries)
+            not deletes[e["path"]].eq for e in new_entries
+        ), "an epoch's own files must not fall under its delete"
+        assert all(e["seq"] == v for e in new_entries)
+        assert m["global_eq_deletes"][-1]["seq"] == v
+        assert all(deletes[e["path"]].eq for e in entries_before)
         assert v == heads[i - 1] + 1 if i > 0 else True
-        paths_before = paths_now
+        entries_before = m["files"]
     got = mgr.read("users_up")
     n_users = (
         load_table(spark, SF_DIR, "events")
@@ -617,10 +617,11 @@ def test_positional_delete_surgical_and_zero_rewrite(spark):
     # zero rewrite: the delete commit kept every data file path
     m_dup = mgr._load_manifest("ev_pd", snaps["snap_dup"])
     m_fix = mgr._load_manifest("ev_pd", snaps["snap_fixed"])
-    assert {e["path"] for e in m_dup["files"]} == {
-        e["path"] for e in m_fix["files"]
-    }
-    assert any(e.get("pos_deletes") for e in m_fix["files"])
+    assert m_dup["files"] == m_fix["files"]
+    assert len(m_fix["global_pos_deletes"]) == 1
+    assert sum(
+        d.n_pos for d in mgr.file_deletes("ev_pd", m_fix).values()
+    ) == n_extra
     # time travel: the dup snapshot still shows the duplicates
     assert mgr.read("ev_pd", snapshot_id=snaps["snap_dup"]).count() == (
         n_raw + n_extra
@@ -634,10 +635,10 @@ def test_positional_delete_surgical_and_zero_rewrite(spark):
     assert by_type == {"delete": n_extra}
     deleted_ids = {r["event_id"] for r in cl.select("event_id").collect()}
     assert all(i % tablelayer.PD_DUP_MOD == 0 for i in deleted_ids)
-    # rewrite_deletes folds: same rows, no pos_deletes left
+    # rewrite_deletes folds: same rows, no deletion vector left
     mgr.rewrite_deletes("ev_pd")
     m2 = mgr._load_manifest("ev_pd")
-    assert not any(e.get("pos_deletes") for e in m2["files"])
+    assert "global_pos_deletes" not in m2
     assert mgr.read("ev_pd").count() == n_raw
 
 
@@ -687,9 +688,9 @@ def test_update_mor_zero_rewrite_and_changelog_pairs(spark):
     upd_paths = {e["path"] for e in m_upd["files"]}
     assert base_paths <= upd_paths  # nothing rewritten or removed
     assert len(upd_paths) > len(base_paths)  # updated copies landed
-    assert any(
-        e.get("pos_deletes") for e in m_upd["files"] if e["path"] in base_paths
-    )
+    deletes = mgr.file_deletes("ev_um", m_upd)
+    assert any(deletes[p].n_pos for p in base_paths)
+    assert not any(deletes[p].n_pos for p in upd_paths - base_paths)
     got = mgr.read("ev_um")
     assert got.count() == n_raw
     # every purchase row carries the bump exactly once
