@@ -1499,8 +1499,8 @@ def _setup_orders_mc(spark: SparkSession, sf_dir: str) -> tuple:
     "real post-delete scan of ONLY the delete-dirty files. Which files "
     "a delete may touch comes from the manager's one owner of the "
     "delete format (file_deletes: predicate deletes on the entry, "
-    "equality deletes with a higher seq, deletion vectors naming the "
-    "file) — here: the 1997 partition; the only-dirty-year split is "
+    "equality deletes with a higher seq whose key bounds may match the "
+    "file, deletion vectors naming the file) — here: the 1997 partition; the only-dirty-year split is "
     "asserted in tests/test_tablelayer.py, so the metadata half is "
     "provably doing the work for the other years. Cost is O(files) "
     "metadata + O(dirty data) — at 100 TB with a GDPR erasure stream "

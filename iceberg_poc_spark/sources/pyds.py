@@ -168,7 +168,8 @@ def _apply_mor_deletes(tbl, entry: dict, table_dir: str):
     the connector face). Besides the entry's own predicate ``deletes``,
     the driver attaches (:meth:`ParquetTableManager.file_deletes`)
     ``_dv`` — the deletion vectors naming the file — and ``_eq`` — the
-    equality-delete descriptors with a higher seq."""
+    equality-delete descriptors with a higher seq whose key bounds may
+    match it."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq

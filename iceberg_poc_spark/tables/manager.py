@@ -2364,7 +2364,9 @@ class ParquetTableManager:
         # collide routinely — but the row-level MoR machinery keys rows
         # by basename (_file_name), so ITS entry points refuse tables
         # with colliding basenames (_require_unique_basenames; compact()
-        # rewrites externals into uuid names and clears the state)
+        # rewrites externals into uuid names and clears the state), and
+        # while such deletes are outstanding a colliding add is refused
+        # (_refuse_colliding_adds)
         known_paths = {e["path"] for e in m["files"]}
         for ap, _segs in flat:
             if ap in known_paths:
@@ -2442,11 +2444,13 @@ class ParquetTableManager:
                     "external": True,
                 }
             )
+        self._refuse_colliding_adds(name, m, entries)
         m["files"] = m["files"] + entries
         m["operation"] = "add-files"
         m["parent"] = m["version"]
 
         def rebase(cur_m: dict) -> dict:
+            self._refuse_colliding_adds(name, cur_m, entries)
             out = dict(cur_m)
             out["files"] = cur_m["files"] + entries
             out["operation"] = "add-files"
@@ -3124,27 +3128,14 @@ class ParquetTableManager:
         del_entries: list[dict] = []
         if mode == "mor":
             # write-first: the key set's ONE source-lineage job is the
-            # delete-file write; the pruning predicate is then derived
-            # from the tiny written parquet instead of re-running the
-            # source scan for a collect and a bounds agg (2 extra jobs
-            # per delete commit before this reorder). Same Spark-side
-            # value semantics — the probe reads the file back through
-            # the session, not pyarrow, so collected key values convert
-            # exactly as before. The basename-uniqueness guard runs
-            # later, just before the commit, so a no-op delete (empty
-            # keys, nothing bound) stays a silent no-op even on a
-            # colliding-basename table — the pre-reorder contract.
+            # delete-file write; the pruning predicate is then read from
+            # the tiny written file (_eq_delete_bounds, the same bounds
+            # file_deletes uses) instead of re-running the source scan
+            # for a collect and a bounds agg. The basename-uniqueness
+            # guard runs later, just before the commit, so a no-op
+            # delete (empty keys, nothing bound) stays a silent no-op
+            # even on a colliding-basename table.
             del_entries = self._write_eq_delete_files(name, dkeys, equality)
-            dkeys = self.spark.read.schema(
-                StructType(
-                    [StructField(c, types[c], True) for c in equality]
-                )
-            ).parquet(
-                *[
-                    os.path.join(self._dir(name), d["path"])
-                    for d in del_entries
-                ]
-            )
         def _discard_written() -> None:
             # nothing references the just-written delete file(s) yet —
             # remove them so no-op/error paths can't orphan parquet
@@ -3177,7 +3168,11 @@ class ParquetTableManager:
         """Predicate/split/commit half of :meth:`_delete_equality` —
         runs after the delete file is staged; any raise before the
         commit is cleaned up by the caller's discard wrapper."""
-        where_bounds, has_null_keys = self._eq_key_predicate(dkeys, equality)
+        where_bounds, has_null_keys = (
+            self._eq_delete_bounds(name, del_entries[0])
+            if mode == "mor"
+            else self._eq_key_predicate(dkeys, equality)
+        )
         if not where_bounds and not has_null_keys:
             _discard_written()  # wrote for nothing: empty key set
             return m["version"]  # empty key set: no-op
@@ -3351,6 +3346,28 @@ class ParquetTableManager:
                     f"basenames ({bn!r}, externally registered) — "
                     f"row-level deletes key rows by file name; run "
                     f"compact() first to rewrite them under unique names"
+                )
+            seen.add(bn)
+
+    @staticmethod
+    def _refuse_colliding_adds(name: str, m: dict, added: list[dict]) -> None:
+        """The add_files half of the basename rule: while equality
+        deletes or deletion vectors are outstanding, a file whose
+        basename matches another entry's (or another added file's) is
+        refused — deletion vectors name files by basename and the read's
+        file-seq map is keyed by it, so the deletes would bind to the
+        wrong file. Once none is outstanding, collisions are allowed."""
+        if not (m.get("global_eq_deletes") or m.get("global_pos_deletes")):
+            return
+        seen = {os.path.basename(e["path"]) for e in m["files"]}
+        for e in added:
+            bn = os.path.basename(e["path"])
+            if bn in seen:
+                raise ValueError(
+                    f"add_files: {e['path']!r} collides by basename with "
+                    f"another file of {name!r}, which has outstanding "
+                    f"equality or positional deletes keyed by file name; "
+                    f"run rewrite_deletes() or compact() first"
                 )
             seen.add(bn)
 
@@ -3540,15 +3557,30 @@ class ParquetTableManager:
         """Path -> :class:`FileDeletes` for every entry of ``manifest`` —
         THE owner of the delete format's two per-file facts: which
         deletes may touch a file (predicate deletes on its entry,
-        equality descriptors with a higher seq, deletion vectors naming
-        it) and how many row positions it has deleted (decoded from the
-        vectors driver-side, exact across overlapping vectors). Used by
-        rewrite_deletes, the metadata count queries and the snaptable
+        equality descriptors with a higher seq whose key bounds
+        (:meth:`_eq_delete_bounds`) pass the scan's stats, partition and
+        bucket pruning, deletion vectors naming it) and how many row
+        positions it has deleted (decoded from the vectors driver-side,
+        exact across overlapping vectors). Used by rewrite_deletes,
+        changelog, the metadata count queries and the snaptable
         connector."""
         import numpy as np
         import pyarrow.parquet as pq
 
         gdels = manifest.get("global_eq_deletes", [])
+        spec = self._spec(manifest)
+        bounds = [self._eq_delete_bounds(name, g) for g in gdels]
+        allowed = self._bucket_allowed_each(
+            manifest, spec, [w for w, _null in bounds]
+        )
+        eq_touch: list[set[int]] = []
+        for g, (where, has_null), al in zip(gdels, bounds, allowed):
+            older = [e for e in manifest["files"] if e["seq"] < g["seq"]]
+            if not has_null:  # min/max never covers NULL keys
+                older = [e for e in older if _may_match(spec, e, where)]
+                if al is not None:
+                    older = self._bucket_filter(older, al)
+            eq_touch.append({id(e) for e in older})
         named: dict[str, tuple[list[dict], list]] = {}
         for g in manifest.get("global_pos_deletes", []):
             tbl = pq.read_table(
@@ -3565,11 +3597,49 @@ class ParquetTableManager:
             n_pos = len(np.unique(np.concatenate(parts))) if parts else 0
             out[e["path"]] = FileDeletes(
                 e.get("deletes", []),
-                [g for g in gdels if g["seq"] > e["seq"]],
+                [g for g, ids in zip(gdels, eq_touch) if id(e) in ids],
                 descs,
                 n_pos,
             )
         return out
+
+    def _eq_delete_bounds(self, name: str, g: dict) -> tuple[list, bool]:
+        """(pruning predicate, has_null_keys) of one equality-delete
+        file, read driver-side from the small file itself: a
+        single-column set of at most :attr:`EQ_POINT_KEY_LIMIT` integer
+        or string keys becomes an exact ``in`` list (which also maps
+        through bucket transforms); any other set becomes per-column
+        [min, max] from the file's footer, normalized exactly like
+        data-file stats."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        pf = pq.ParquetFile(os.path.join(self._dir(name), g["path"]))
+        md = pf.metadata
+        cols = list(g["cols"])
+        if md.num_rows == 0:
+            return [(cols[0], "in", [])], False
+        nulls = _collect_null_counts(md)
+        has_null = any(nulls.get(c, 1) > 0 for c in cols)
+        t = pf.schema_arrow.field(cols[0]).type
+        if (
+            len(cols) == 1
+            and md.num_rows <= self.EQ_POINT_KEY_LIMIT
+            and (pa.types.is_integer(t) or pa.types.is_string(t))
+        ):
+            vals = pf.read(columns=cols).column(0).to_pylist()
+            return [(cols[0], "in", [v for v in vals if v is not None])], has_null
+        stats = _collect_column_stats(md)
+        # no bound on timestamps: footer stats are UTC, while time
+        # partition transforms use the session zone
+        where = [
+            (c, op, stats[c][i])
+            for c in cols
+            if c in stats
+            and not pa.types.is_timestamp(pf.schema_arrow.field(c).type)
+            for op, i in ((">=", 0), ("<=", 1))
+        ]
+        return where, has_null
 
     def upsert_equality(
         self, name: str, df: DataFrame, keys: list[str], ref: str = "main"
@@ -3684,19 +3754,24 @@ class ParquetTableManager:
         untouched. After this, reads of the new snapshot pay no delete
         filters, and the delete files become unreferenced (reaped by
         :meth:`expire_snapshots` once no surviving snapshot points at
-        them). No-op if nothing carries deletes."""
+        them). Table-level deletes that touch no file are dropped
+        without a data rewrite. No-op if no delete is outstanding."""
         m = self._load_manifest(name)
         deletes = self.file_deletes(name, m)
         dirty = [e for e in m["files"] if deletes[e["path"]].dirty]
-        if not dirty:
+        if not dirty and not (
+            m.get("global_eq_deletes") or m.get("global_pos_deletes")
+        ):
             return m["version"]
-        # the MoR read applying the deletes keys rows by basename;
-        # colliding external names would misattribute coordinates /
-        # duplicate rows through basename joins
-        self._require_unique_basenames(name, m, "rewrite_deletes")
         clean = [e for e in m["files"] if not deletes[e["path"]].dirty]
-        df = self._read_files(name, m, dirty)
-        new_files = self._write_files(name, df, self._spec(m))
+        new_files: list[dict] = []
+        if dirty:
+            # the MoR read applying the deletes keys rows by basename;
+            # colliding external names would misattribute coordinates /
+            # duplicate rows through basename joins
+            self._require_unique_basenames(name, m, "rewrite_deletes")
+            df = self._read_files(name, m, dirty)
+            new_files = self._write_files(name, df, self._spec(m))
         m["files"] = clean + new_files
         m["operation"] = "rewrite-deletes"
         m.pop("global_eq_deletes", None)  # every guarded file rewritten
@@ -4739,24 +4814,33 @@ class ParquetTableManager:
         """allowed bucket values for a predicate, or None when bucket
         pruning does not apply (no bucket probes, or a metadata-only
         manager without a session — conservative, keep all files)."""
-        probes = self._bucket_probes(m, spec, where)
-        if not probes or self.spark is None:
-            return None
-        return self._bucket_allowed_cached(probes)
+        return self._bucket_allowed_each(m, spec, [where])[0]
 
-    def _bucket_allowed_cached(
-        self, probes: list[tuple[str, Column]]
-    ) -> dict[str, set[str]]:
-        """field -> allowed bucket-value strings for a probe list — ONE
-        single-row driver job, computed once per (delete/scan) call and
-        reusable across every segment span."""
-        row = self.spark.range(1).select(
-            *[c.alias(f"b{i}") for i, (_f, c) in enumerate(probes)]
-        ).collect()[0]
-        allowed: dict[str, set[str]] = {}
-        for i, (fname, _c) in enumerate(probes):
-            allowed.setdefault(fname, set()).add(str(row[i]))
-        return allowed
+    def _bucket_allowed_each(
+        self, m: dict, spec: list["Transform"], wheres: list[list]
+    ) -> list[dict[str, set[str]] | None]:
+        """:meth:`_bucket_allowed` of each predicate (field -> allowed
+        bucket-value strings) — ONE single-row driver job for all of
+        them, computed once per (delete/scan) call and reusable across
+        every segment span."""
+        if self.spark is None:  # probes are Columns: they need a session
+            return [None] * len(wheres)
+        probes = [self._bucket_probes(m, spec, w) for w in wheres]
+        flat = [p for ps in probes for p in ps]
+        if not flat:
+            return [None] * len(wheres)
+        row = iter(
+            self.spark.range(1)
+            .select(*[c.alias(f"b{i}") for i, (_f, c) in enumerate(flat)])
+            .collect()[0]
+        )
+        out: list[dict[str, set[str]] | None] = []
+        for ps in probes:
+            allowed: dict[str, set[str]] = {}
+            for fname, _c in ps:
+                allowed.setdefault(fname, set()).add(str(next(row)))
+            out.append(allowed or None)
+        return out
 
     @staticmethod
     def _bucket_filter(
@@ -5000,9 +5084,10 @@ class ParquetTableManager:
           are deletes.
         - ``upsert`` / equality or positional ``delete-mor`` /
           ``update-mor``: the table-level delete descriptors new in the
-          commit, applied to the parent-visible rows (a semi-join per
-          key-column set and one per deletion-vector set, in one plan),
-          give the deletes; added files give the inserts.
+          commit, applied to the parent-visible rows of the files they
+          may touch (a semi-join per key-column set and one per
+          deletion-vector set, in one plan), give the deletes; added
+          files give the inserts.
 
         Rows are read under each commit's own schema and aligned by name
         (columns added later read as NULL for earlier commits)."""
@@ -5074,10 +5159,12 @@ class ParquetTableManager:
         self, name: str, pm: dict, m: dict
     ) -> DataFrame | None:
         """Parent-visible rows of ``pm`` that the table-level delete
-        descriptors NEW in commit ``m`` remove, or None. Every parent
-        file is older than the new descriptors, so they apply to all
-        of it; each row matched by any of them is returned once (rows
-        are told apart by their physical coordinate)."""
+        descriptors NEW in commit ``m`` remove, or None. Only the parent
+        files those descriptors may touch (:meth:`file_deletes`: the
+        files a deletion vector names, the files an equality key set's
+        bounds may match) are read; each row matched by any of them is
+        returned once (rows are told apart by their physical
+        coordinate)."""
         def new_in_m(lk: str) -> list[dict]:
             old = {g["path"] for g in pm.get(lk, [])}
             return [g for g in m.get(lk, []) if g["path"] not in old]
@@ -5086,8 +5173,18 @@ class ParquetTableManager:
         new_pos = new_in_m("global_pos_deletes")
         if not new_eq and not new_pos:
             return None
+        deletes = self.file_deletes(
+            name,
+            {**pm, "global_eq_deletes": new_eq, "global_pos_deletes": new_pos},
+        )
+        touched = [
+            e for e in pm["files"]
+            if deletes[e["path"]].eq or deletes[e["path"]].dv
+        ]
+        if not touched:
+            return None
         key = ["_file_name", "_pos"]
-        base = self._read_files(name, pm, pm["files"], with_positions=True)
+        base = self._read_files(name, pm, touched, with_positions=True)
         hits: list[DataFrame] = []
         if new_pos:
             dv = F.broadcast(self._dv_coords(name, new_pos))

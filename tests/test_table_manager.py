@@ -871,8 +871,9 @@ def _mk_ranged(spark, mgr):
 def test_eq_delete_attaches_only_to_overlapping_files(mgr, spark):
     """A key set spanning [0, 50) is recorded as ONE table-level
     descriptor: no manifest entry changes — the delete commit is O(1)
-    metadata, never a per-file pass — and, scoped by sequence number,
-    it may touch exactly the files present at its commit."""
+    metadata, never a per-file pass — and, scoped by sequence number
+    and pruned by the key set's bounds, it may touch only the older
+    files whose stats overlap the keys."""
     _mk_ranged(spark, mgr)
     m0 = mgr._load_manifest("eqt")
     keys = spark.range(0, 50).select(F.col("id").alias("k"))
@@ -882,8 +883,12 @@ def test_eq_delete_attaches_only_to_overlapping_files(mgr, spark):
     gs = m["global_eq_deletes"]
     assert [(g["cols"], g["seq"]) for g in gs] == [(["k"], m["version"])]
     assert all(e["seq"] < m["version"] for e in m["files"])
+    # the key set's bounds (an exact IN list) prune by stats and
+    # partition: only the g=0 file may hold a deleted key
     deletes = mgr.file_deletes("eqt", m)
-    assert all(deletes[e["path"]].eq == gs for e in m["files"])
+    touched = [e for e in m["files"] if deletes[e["path"]].eq]
+    assert {str(e["partition"]["g"]) for e in touched} == {"0"}
+    assert all(deletes[e["path"]].eq == gs for e in touched)
     assert mgr.read("eqt").count() == 950
 
 
@@ -907,15 +912,19 @@ def test_eq_delete_stacked_rewrite_and_gc(mgr, spark):
         mode="mor",
     )
     assert mgr.read("eqt").count() == 985
-    # a file appended after both deletes is younger than them: clean
+    # a file appended after both deletes is younger than them: clean,
+    # though it re-adds a deleted key to the g=0 partition
     mgr.append(
         "eqt",
-        spark.createDataFrame([(2000, 20, 0.0)], "k long, g long, v double"),
+        spark.createDataFrame([(3, 0, 0.0)], "k long, g long, v double"),
     )
     m = mgr._load_manifest("eqt")
     deletes = mgr.file_deletes("eqt", m)
     clean_paths = {e["path"] for e in m["files"] if not deletes[e["path"]].dirty}
-    assert len(clean_paths) == 1
+    # both key sets lie in [0, 15): only the older g=0 file is dirty
+    dirty = [e for e in m["files"] if e["path"] not in clean_paths]
+    assert [str(e["partition"]["g"]) for e in dirty] == ["0"]
+    assert m["files"][-1]["path"] in clean_paths
     del_paths = [
         os.path.join(mgr._dir("eqt"), d["path"])
         for d in m["global_eq_deletes"]
@@ -1543,6 +1552,8 @@ def test_eq_delete_point_keys_prune_through_buckets(mgr, spark):
     files' metadata — changes NO manifest entry: it records one
     table-level descriptor. The same holds through a staged
     (transactional) upsert; values stay exact."""
+    import os
+
     df = spark.range(0, 2000).select(
         F.concat(F.lit("k"), F.col("id")).alias("k"), F.col("id").alias("v")
     )
@@ -1557,6 +1568,21 @@ def test_eq_delete_point_keys_prune_through_buckets(mgr, spark):
     assert m["files"] == m0["files"]
     assert len(m["global_eq_deletes"]) == 1
     assert mgr.read("bup").count() == 1998
+    # the point keys map through the bucket transform: only the keys'
+    # buckets may be touched, and the changelog reads only those files
+    b = spark.range(1).select(
+        *[F.pmod(F.xxhash64(F.lit(k)), F.lit(8)).alias(k) for k in ("k42", "k99")]
+    ).first()
+    deletes = mgr.file_deletes("bup", m)
+    touched = {e["path"] for e in m["files"] if deletes[e["path"]].eq}
+    assert touched and {
+        str(e["partition"]["k_bucket8"]) for e in m["files"] if e["path"] in touched
+    } <= {str(b["k42"]), str(b["k99"])}
+    assert len(touched) < total
+    read = {os.path.basename(f) for f in mgr.changelog("bup", m0["version"]).inputFiles()}
+    assert {os.path.basename(e["path"]) for e in m["files"]} & read == {
+        os.path.basename(p) for p in touched
+    }
     # and the same through a staged (transactional) upsert
     up = spark.createDataFrame([("k42", -1), ("k7", -2)], "k string, v long")
     txn = mgr.transaction()
@@ -1570,6 +1596,15 @@ def test_eq_delete_point_keys_prune_through_buckets(mgr, spark):
     ]
     got = {r["k"]: r["v"] for r in mgr.read("bup").collect()}
     assert got["k42"] == -1 and got["k7"] == -2 and len(got) == 1999
+    # rewrite_deletes rewrites only the touched files
+    deletes = mgr.file_deletes("bup", m2)
+    clean = {e["path"] for e in m2["files"] if not deletes[e["path"]].dirty}
+    assert len(clean) >= total - 3
+    mgr.rewrite_deletes("bup")
+    m3 = mgr._load_manifest("bup")
+    assert clean <= {e["path"] for e in m3["files"]}
+    assert "global_eq_deletes" not in m3
+    assert {r["k"]: r["v"] for r in mgr.read("bup").collect()} == got
 
 
 def test_concurrent_transactions_lose_nothing(mgr, spark):
@@ -2579,6 +2614,62 @@ def test_mor_basename_guard_covers_every_entry_point(mgr, spark, tmp_path):
     # but coordinate-writing entry points refuse on this table state
     with pytest.raises(ValueError, match="compact"):
         mgr.update("h3", {"k": F.col("k") + 10}, [("k", "==", 1)], mode="mor")
+
+
+def test_add_files_refuses_basename_collision_under_table_level_deletes(
+    mgr, spark, tmp_path
+):
+    """Deletion vectors name files by basename and the read's file-seq
+    map is keyed by it, so while such deletes are outstanding add_files
+    must refuse a basename that collides with a table file (the vector
+    would drop the new file's rows) or with another file of the batch
+    (the seq map would hold a duplicate key). Once rewrite_deletes has
+    cleared them, the same adds are allowed and read back whole."""
+    import glob
+    import os
+
+    def external(dirname, ks, bn):
+        d = str(tmp_path / dirname)
+        spark.createDataFrame([(k, "x") for k in ks], "k long, s string") \
+            .coalesce(1).write.parquet(d)
+        src = sorted(glob.glob(os.path.join(d, "*.parquet")))[0]
+        dst = os.path.join(d, bn)
+        os.rename(src, dst)
+        return dst
+
+    rows = spark.createDataFrame([(k, "a") for k in range(5)], "k long, s string")
+    # (1) a deletion vector, then an external named like the DV's file
+    mgr.create_table("dvc", rows.schema, [])
+    mgr.append("dvc", rows.coalesce(1))
+    managed = mgr._load_manifest("dvc")["files"][0]["path"]
+    bn = os.path.basename(managed)
+    mgr.delete_positions(
+        "dvc", spark.createDataFrame([(bn, 0)], "_file_name string, _pos long")
+    )
+    coll = external("ext_dv", [100, 101], bn)
+    with pytest.raises(ValueError, match="rewrite_deletes"):
+        mgr.add_files("dvc", [coll])
+    assert sorted(r.k for r in mgr.read("dvc").collect()) == [1, 2, 3, 4]
+    mgr.rewrite_deletes("dvc")
+    mgr.add_files("dvc", [coll])
+    assert sorted(r.k for r in mgr.read("dvc").collect()) == [1, 2, 3, 4, 100, 101]
+    # (2) an upsert, then two externals colliding with each other
+    mgr.create_table("eqc", rows.schema, [])
+    mgr.append("eqc", rows)
+    mgr.upsert_equality(
+        "eqc", spark.createDataFrame([(1, "b")], "k long, s string"), ["k"]
+    )
+    pair = [external("ext_a", [200], "same.parquet"),
+            external("ext_b", [201], "same.parquet")]
+    with pytest.raises(ValueError, match="rewrite_deletes"):
+        mgr.add_files("eqc", pair)
+    mgr.rewrite_deletes("eqc")
+    assert "global_eq_deletes" not in mgr._load_manifest("eqc")
+    mgr.add_files("eqc", pair)
+    assert sorted((r.k, r.s) for r in mgr.read("eqc").collect()) == [
+        (0, "a"), (1, "b"), (2, "a"), (3, "a"), (4, "a"),
+        (200, "x"), (201, "x"),
+    ]
 
 
 def test_add_files_partition_parse_scoped_to_passed_root(
