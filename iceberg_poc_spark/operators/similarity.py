@@ -966,14 +966,11 @@ def reanchor_index(
     # content (the cell assignment), so changelog/diff_refs must see it
     # as delete+insert of the split cells' rows — "replace" is reserved
     # for row-equivalent rewrites (compaction), which changelog skips
-    untouched = [
-        e for e in m["files"] if int(e["partition"]["cell"]) not in hot
-    ]
+    split = [e for e in m["files"] if int(e["partition"]["cell"]) in hot]
     new_files = mgr._write_files(table, resub, mgr._spec(m))
-    m["files"] = untouched + new_files
-    m["operation"] = "overwrite"
-    m["parent"] = m["version"]
-    mgr._commit(table, m)
+    mgr._advance(
+        table, "main", "overwrite", mgr._rewrite(m, split, new_files), base=m
+    )
     out = [(aid, aemb) for aid, aemb in anchors if aid not in hot]
     out += [(sub_cell, semb) for _cell, sub_cell, semb in sub_rows]
     return sorted(out)

@@ -2653,7 +2653,7 @@ def _setup_docs_cw(spark: SparkSession, sf_dir: str) -> tuple:
     write path — two df.write.format('snaptable') appends (each one
     atomic snapshot staged by executor tasks and committed by the
     driver), one of them racing nothing but still exercising the CAS
-    rebase — then read back through the manager."""
+    head advance — then read back through the manager."""
     from iceberg_poc_spark.sources.pyds import register_snaptable
 
     mgr, wh = _mgr_for(spark, sf_dir)

@@ -775,6 +775,7 @@ class SnapTableWriter(DataSourceArrowWriter):
             _bloom_build,
             _collect_column_stats,
             _collect_null_counts,
+            _without_deletes,
         )
         # the commit callback runs in a Python worker with no Spark
         # session; manifest ops below are pure JSON/OS, and the CHECK
@@ -882,35 +883,21 @@ class SnapTableWriter(DataSourceArrowWriter):
         for root in staging_roots:  # executor-side staging dirs (streaming)
             shutil.rmtree(root, ignore_errors=True)
 
-        def stamp(man: dict) -> dict:
+        def derive(head: dict) -> dict:
+            out = (
+                {**_without_deletes(head), "files": entries}
+                if self._overwrite
+                else {**head, "files": head["files"] + entries}
+            )
             if epoch is not None:
-                man["properties"] = {
-                    **man.get("properties", {}),
+                out["properties"] = {
+                    **head.get("properties", {}),
                     STREAM_EPOCH_PROP: str(epoch),
                 }
-            return man
+            return out
 
-        m = mgr._load_manifest(self._table)
-        if self._overwrite:
-            m["files"] = entries
-            m["operation"] = "overwrite"
-            m.pop("global_eq_deletes", None)  # no prior file survives
-            m.pop("global_pos_deletes", None)
-            m["parent"] = m["version"]
-            mgr._commit(self._table, stamp(m))
-            return
-        m["files"] = m["files"] + entries
-        m["operation"] = "append"
-        m["parent"] = m["version"]
-
-        def rebase(cur_m: dict) -> dict:
-            out = dict(cur_m)
-            out["files"] = cur_m["files"] + entries
-            out["operation"] = "append"
-            out["parent"] = cur_m["version"]
-            return stamp(out)
-
-        mgr._commit(self._table, stamp(m), rebase=rebase)
+        op = "overwrite" if self._overwrite else "append"
+        mgr._advance(self._table, "main", op, derive)
 
 
 class SnapTableStreamWriter(SnapTableWriter, DataSourceStreamArrowWriter):

@@ -360,11 +360,12 @@ class ConstraintViolation(ValueError):
     """An ingest batch failed a ``constraints.check.*`` table property."""
 
 
-class CompactionConflict(RuntimeError):
-    """A targeted rewrite aborted because a concurrent commit removed a
-    file it planned to rewrite (Iceberg rewrite_data_files validation
-    semantics). The table is untouched; retry or let the next trigger
-    cover it."""
+class CommitConflict(RuntimeError):
+    """A commit could not be re-derived on the head it would swap: a
+    concurrent commit removed a file it rewrites, added a delete its
+    rewritten rows would escape, or (dynamic partition overwrite) added
+    files into a partition it replaces — Iceberg's commit validation.
+    The table is untouched; retry, or let the next trigger cover it."""
 
 
 class TxnConflictError(RuntimeError):
@@ -632,6 +633,16 @@ def _stamped(d: dict, seq: int) -> dict:
     """``d`` as persisted by a commit allocating ``seq``: entries and
     descriptors the commit adds take its seq, carried ones keep theirs."""
     return d if "seq" in d else {**d, "seq": seq}
+
+
+def _without_deletes(m: dict) -> dict:
+    """``m`` without its table-level delete descriptors — for a commit
+    whose files replace every file a descriptor could touch."""
+    return {
+        k: v
+        for k, v in m.items()
+        if k not in ("global_eq_deletes", "global_pos_deletes")
+    }
 
 
 def _seq_by_name(items: list[dict]) -> Column:
@@ -1301,9 +1312,10 @@ class ParquetTableManager:
         (the ones without a ``seq``) is persisted with ``seq`` = the
         allocated version — the sequence number deletes are scoped by.
         The in-memory manifest dict (facade "files" + reuse bookkeeping)
-        is left intact and unstamped for the caller's CAS retry loop, so
-        a commit that loses the race and rebases takes its later
-        version; a lost allocation removes the segments it wrote."""
+        is left unstamped; its only caller is :meth:`_advance`, which
+        re-derives a commit that loses the head CAS on the winning head
+        and allocates again. A lost allocation removes the segments it
+        wrote."""
         persist = {
             k: v
             for k, v in manifest.items()
@@ -1347,67 +1359,115 @@ class ParquetTableManager:
         finally:
             os.remove(tmp)
 
-    def _commit(
+    def _advance(
         self,
         name: str,
-        manifest: dict,
-        rebase=None,
-        ref: str = "main",
-        keep_ndv: bool = False,
+        ref: str,
+        operation: str,
+        derive,
+        base: dict | None = None,
+        txn: tuple[str, int] | None = None,
     ) -> int:
-        """Atomic commit to a branch: allocate the manifest (globally-
-        numbered snapshot), then advance the branch head by exclusive-create
-        of the next ``seq`` pointer — a lock-free compare-and-swap. Readers
-        resolve the head pointer first, so they always see a complete
-        snapshot — all-or-nothing visibility exactly like the reference's
-        single AppendFiles.commit().
+        """THE head advance; every commit to a branch goes through here.
+        Loop: resolve ``ref``'s head, ``derive(head)``, allocate the
+        snapshot (:meth:`_alloc_version`), exclusive-create the next
+        ``seq`` pointer — a lock-free CAS, so readers always see a
+        complete snapshot (≙ the reference's single AppendFiles.commit()).
+        A writer that loses the CAS re-derives on the head that won and
+        never links a snapshot derived from a stale one (Iceberg's retry
+        contract); its orphaned manifest is reaped by
+        :meth:`expire_snapshots`.
 
-        ``rebase(head_manifest) -> manifest`` re-derives the commit on top
-        of a concurrently-advanced branch state (Iceberg's retry semantics
-        for appends: re-stage the same added files on the new base instead
-        of clobbering the winner's files). A manifest whose head-advance
-        lost the CAS is left orphaned and reaped by
-        :meth:`expire_snapshots`."""
-        os.makedirs(self._meta_dir(name), exist_ok=True)
+        ``derive(head)`` is a pure function of the head manifest (None
+        on a branch with no commits; never mutated) and the caller's
+        staged delta. It returns a new manifest; an existing snapshot id
+        to link without allocating (:meth:`fast_forward`); or None when
+        the change is already on the head (idempotent replay — the head
+        version is returned). It raises :class:`CommitConflict` when the
+        change cannot be re-applied there, ``ValueError`` when a guard
+        no longer holds. ``base``, the manifest the caller already
+        loaded, is derived on as is while it is still the head.
+
+        The stamp rules live only here: ``operation``; ``parent`` = the
+        head ``derive`` saw; a fresh ``committed_at``; ``txn`` /
+        ``txn_entry`` only from ``txn`` = (record, entry index), never
+        inherited (an inherited stamp makes a plain commit impersonate a
+        txn member, or false-positives a DDL entry's idempotence walk);
+        ``ndv_tbl`` only when ``derive`` set a blob of its own — the
+        head's is valid only for the head's exact file set."""
         import time as _time
 
-        manifest["committed_at"] = _time.time()
-        # txn stamps belong ONLY to snapshots _apply_txn/_apply_upsert
-        # hand-link; call sites here build manifests by mutating the
-        # loaded head dict, which would otherwise inherit the parent's
-        # stamp and make a plain append impersonate a txn member (breaks
-        # rollback_transaction's has-the-table-advanced guard) — and an
-        # inherited txn_entry would false-positive a later DDL entry's
-        # idempotence walk (a staged DDL silently skipped)
-        manifest.pop("txn", None)
-        manifest.pop("txn_entry", None)
-        # the table-level NDV blob is valid only for the exact file set
-        # the maintaining APPEND computed it for — any other op that
-        # inherited it from the loaded head dict would serve stale
-        # estimates (CoW delete shrank the data; overwrite replaced it).
-        # Only append() re-derives and keeps it (keep_ndv=True, its
-        # rebase re-deriving against the winner); everything else drops
-        # to the per-file sketch fold, which is always correct.
-        if not keep_ndv:
-            manifest.pop("ndv_tbl", None)
+        os.makedirs(self._meta_dir(name), exist_ok=True)
         while True:
             seq, cur = self._ref_head(name, ref)
-            if (
-                rebase is not None
-                and manifest.get("parent") is not None
-                and cur != manifest["parent"]
+            if base is not None and base["version"] == cur:
+                head = base
+            else:
+                head = self._load_manifest(name, cur) if cur >= 0 else None
+            base = None  # a lost CAS means the head moved: reload
+            out = derive(head)
+            if out is None:
+                return cur
+            if isinstance(out, int):
+                version = out
+            else:
+                out.pop("txn", None)
+                out.pop("txn_entry", None)
+                if head is not None and out.get("ndv_tbl") is head.get(
+                    "ndv_tbl"
+                ):
+                    out.pop("ndv_tbl", None)
+                if txn is not None:
+                    out["txn"], out["txn_entry"] = txn
+                out["operation"] = operation
+                out["parent"] = None if head is None else head["version"]
+                out["committed_at"] = _time.time()
+                version = self._alloc_version(name, out)
+            if self._link_pointer(
+                os.path.join(self._heads_dir(name, ref), f"seq-{seq + 1:09d}"),
+                str(version),
             ):
-                manifest = rebase(self._load_manifest(name, cur))
-                manifest.pop("txn", None)
-                manifest.pop("txn_entry", None)
-                if not keep_ndv:
-                    manifest.pop("ndv_tbl", None)
-            version = self._alloc_version(name, manifest)
-            seq_path = os.path.join(
-                self._heads_dir(name, ref), f"seq-{seq + 1:09d}"
-            )
-            if self._link_pointer(seq_path, str(version)):
                 return version
+
+    @staticmethod
+    def _validate_rewrite(base: dict, head: dict, removed: list[dict]) -> None:
+        """Iceberg's RewriteFiles validation, for a commit that carries
+        rows read at ``base`` and retires ``removed`` (entries of
+        ``base``): raise :class:`CommitConflict` when ``head`` lost one
+        of those files, or gained a delete ``base`` lacked — an equality
+        descriptor, a deletion vector, or a changed predicate-delete
+        list on a removed entry. The rewritten rows take this commit's
+        newer seq, so such a delete would no longer reach them."""
+        if head is base:
+            return
+        live = {e["path"]: e for e in head["files"]}
+        for e in removed:
+            h = live.get(e["path"])
+            if h is None or h.get("deletes") != e.get("deletes"):
+                raise CommitConflict(
+                    f"a concurrent commit removed or deleted from "
+                    f"{e['path']!r}, which this commit rewrites; aborting"
+                )
+        for key in ("global_eq_deletes", "global_pos_deletes"):
+            had = {g["path"] for g in base.get(key, [])}
+            if any(g["path"] not in had for g in head.get(key, [])):
+                raise CommitConflict(
+                    "a concurrent commit added a delete the rows this "
+                    "commit rewrites would escape; aborting"
+                )
+
+    def _rewrite(self, base: dict, removed: list[dict], added: list[dict]):
+        """``derive`` of a commit that replaces ``removed`` (entries of
+        ``base`` whose rows it read) with ``added``: files other commits
+        stacked on the head stay, under :meth:`_validate_rewrite`."""
+        gone = {e["path"] for e in removed}
+
+        def derive(head: dict) -> dict:
+            self._validate_rewrite(base, head, removed)
+            files = [e for e in head["files"] if e["path"] not in gone]
+            return {**head, "files": files + added}
+
+        return derive
 
     # ----------------------------------------------------------------- DDL
     def create_table(
@@ -1417,24 +1477,25 @@ class ParquetTableManager:
         partition_by: list[Transform] | None = None,
         properties: dict[str, str] | None = None,
     ) -> None:
-        if self.exists(name):
-            raise ValueError(f"table {name!r} already exists")
         props = dict(DEFAULT_PROPERTIES)
         props.update(properties or {})
         spec = [
             {"kind": t.kind, "source": t.source, "arg": t.arg}
             for t in (partition_by or [])
         ]
-        manifest = {
-            "operation": "create",
-            "parent": None,
-            "schema": json.loads(schema.json()),
-            "spec": spec,
-            "properties": props,
-            "files": [],
-        }
+
+        def derive(head: dict | None) -> dict:
+            if head is not None:
+                raise ValueError(f"table {name!r} already exists")
+            return {
+                "schema": json.loads(schema.json()),
+                "spec": spec,
+                "properties": props,
+                "files": [],
+            }
+
         os.makedirs(os.path.join(self._dir(name), "data"), exist_ok=True)
-        self._commit(name, manifest)
+        self._advance(name, "main", "create", derive)
 
     def exists(self, name: str) -> bool:
         return self._ref_head(name, "main")[1] >= 0
@@ -1456,11 +1517,11 @@ class ParquetTableManager:
         return m["properties"]
 
     def set_properties(self, name: str, props: dict[str, str]) -> int:
+        def derive(h: dict) -> dict:
+            return {**h, "properties": {**h["properties"], **props}}
+
         m = self._load_manifest(name)
-        m["properties"].update(props)
-        m["operation"] = "set-properties"
-        m["parent"] = m["version"]
-        return self._commit(name, m)
+        return self._advance(name, "main", "set-properties", derive, base=m)
 
     def add_column(
         self, name: str, col: str, dtype: str, default: Any = None
@@ -1475,11 +1536,8 @@ class ParquetTableManager:
         NULLs (presence is decided per data file by its recorded writer
         schema, never by value coalescing). Metadata-only either way: no
         file is rewritten, old files resolve the default at read time."""
-        m = self._load_manifest(name)
-        # single source of truth with the transactional DDL path: the
-        # same validation + schema mutation _apply_txn replays
-        m["schema"] = _apply_schema_ddl(
-            m["schema"],
+        return self._evolve_schema(
+            name,
             {
                 "kind": "add-column",
                 "col": col,
@@ -1487,45 +1545,59 @@ class ParquetTableManager:
                 **({"default": default} if default is not None else {}),
             },
         )
-        m["operation"] = "add-column"
-        m["parent"] = m["version"]
-        return self._commit(name, m)
+
+    def _evolve_schema(self, name: str, ddl: dict) -> int:
+        """Commit one add/widen DDL entry, validated and applied on the
+        head it swaps — the same :func:`_apply_schema_ddl` a transaction
+        replays."""
+        def derive(h: dict) -> dict:
+            return {**h, "schema": _apply_schema_ddl(h["schema"], ddl)}
+
+        m = self._load_manifest(name)
+        return self._advance(name, "main", ddl["kind"], derive, base=m)
+
+    @staticmethod
+    def _refuse_delete_bound(m: dict, col: str, verb: str) -> None:
+        """Merge-on-read deletes bind by column NAME (Iceberg binds by
+        field id): dropping or renaming a column one of them names would
+        leave the read unable to apply it — materialize them first."""
+        if any(
+            c == col
+            for e in m["files"]
+            for dw in e.get("deletes", [])
+            for c, _op, _v in dw
+        ):
+            raise ValueError(
+                f"column {col!r} has outstanding merge-on-read "
+                f"deletes; run rewrite_deletes() before {verb}"
+            )
+        if any(col in g["cols"] for g in m.get("global_eq_deletes", [])):
+            raise ValueError(
+                f"column {col!r} keys outstanding equality deletes; "
+                f"run rewrite_deletes() before {verb}"
+            )
 
     def drop_column(self, name: str, col: str) -> int:
         """Schema evolution: drop a column. Metadata-only — data files keep
         the physical column; the explicit read schema simply stops
         projecting it (Iceberg semantics). Partition source columns cannot
         be dropped while a transform references them."""
-        m = self._load_manifest(name)
-        schema = StructType.fromJson(m["schema"])
-        if col not in schema.fieldNames():
-            raise ValueError(f"no such column {col!r}")
-        if any(t.source == col for t in self._spec(m)):
-            raise ValueError(
-                f"{col!r} is a partition source; drop the partition field first"
-            )
-        # outstanding MoR deletes bind by name; dropping the column would
-        # leave the read path unable to apply them
-        for e in m["files"]:
-            if any(
-                any(c == col for c, _op, _v in dw)
-                for dw in e.get("deletes", [])
-            ):
+
+        def derive(h: dict) -> dict:
+            schema = StructType.fromJson(h["schema"])
+            if col not in schema.fieldNames():
+                raise ValueError(f"no such column {col!r}")
+            if any(t.source == col for t in self._spec(h)):
                 raise ValueError(
-                    f"column {col!r} has outstanding merge-on-read "
-                    f"deletes; run rewrite_deletes() before dropping"
+                    f"{col!r} is a partition source; drop the partition "
+                    f"field first"
                 )
-        if any(col in g["cols"] for g in m.get("global_eq_deletes", [])):
-            raise ValueError(
-                f"column {col!r} keys outstanding equality deletes; "
-                f"run rewrite_deletes() before dropping"
-            )
-        m["schema"] = json.loads(
-            StructType([f for f in schema.fields if f.name != col]).json()
-        )
-        m["operation"] = "drop-column"
-        m["parent"] = m["version"]
-        return self._commit(name, m)
+            self._refuse_delete_bound(h, col, "dropping")
+            kept = StructType([f for f in schema.fields if f.name != col])
+            return {**h, "schema": json.loads(kept.json())}
+
+        m = self._load_manifest(name)
+        return self._advance(name, "main", "drop-column", derive, base=m)
 
     def rename_column(self, name: str, old: str, new: str) -> int:
         """Schema evolution: rename a column, metadata-only (≙ Iceberg
@@ -1534,43 +1606,31 @@ class ParquetTableManager:
         historical names so files written before the rename still resolve.
         Renaming a partition source is rejected (transforms bind by name
         here, and identity sources are baked into hive paths)."""
-        m = self._load_manifest(name)
-        schema = StructType.fromJson(m["schema"])
-        if old not in schema.fieldNames():
-            raise ValueError(f"no such column {old!r}")
-        if new in schema.fieldNames():
-            raise ValueError(f"column {new!r} already exists")
-        if any(t.source == old for t in self._spec(m)):
-            raise ValueError(f"{old!r} is a partition source; cannot rename")
-        # merge-on-read delete predicates bind by column NAME (Iceberg
-        # binds by field id); renaming under outstanding deletes would
-        # silently unbind them — materialize first
-        for e in m["files"]:
-            for dw in e.get("deletes", []):
-                if any(c == old for c, _op, _v in dw):
-                    raise ValueError(
-                        f"column {old!r} has outstanding merge-on-read "
-                        f"deletes; run rewrite_deletes() before renaming"
-                    )
-        if any(old in g["cols"] for g in m.get("global_eq_deletes", [])):
-            raise ValueError(
-                f"column {old!r} keys outstanding equality deletes; "
-                f"run rewrite_deletes() before renaming"
-            )
-        fields = []
-        for f in schema.fields:
-            if f.name == old:
-                meta = dict(f.metadata)
-                meta["former_names"] = list(
-                    dict.fromkeys([*meta.get("former_names", []), old])
+
+        def derive(h: dict) -> dict:
+            schema = StructType.fromJson(h["schema"])
+            if old not in schema.fieldNames():
+                raise ValueError(f"no such column {old!r}")
+            if new in schema.fieldNames():
+                raise ValueError(f"column {new!r} already exists")
+            if any(t.source == old for t in self._spec(h)):
+                raise ValueError(
+                    f"{old!r} is a partition source; cannot rename"
                 )
-                fields.append(StructField(new, f.dataType, f.nullable, meta))
-            else:
+            self._refuse_delete_bound(h, old, "renaming")
+            fields = []
+            for f in schema.fields:
+                if f.name == old:
+                    meta = dict(f.metadata)
+                    meta["former_names"] = list(
+                        dict.fromkeys([*meta.get("former_names", []), old])
+                    )
+                    f = StructField(new, f.dataType, f.nullable, meta)
                 fields.append(f)
-        m["schema"] = json.loads(StructType(fields).json())
-        m["operation"] = "rename-column"
-        m["parent"] = m["version"]
-        return self._commit(name, m)
+            return {**h, "schema": json.loads(StructType(fields).json())}
+
+        m = self._load_manifest(name)
+        return self._advance(name, "main", "rename-column", derive, base=m)
 
     def add_partition_field(self, name: str, transform: Transform) -> int:
         """Partition-spec evolution (≙ ``ALTER TABLE ... ADD PARTITION
@@ -1578,38 +1638,48 @@ class ParquetTableManager:
         writes partition by the extended spec; existing files keep their
         old layout and are never rewritten. Pruning stays correct on both:
         a file missing the new partition value is conservatively kept."""
+
+        def derive(h: dict) -> dict:
+            schema = StructType.fromJson(h["schema"])
+            if transform.source not in schema.fieldNames():
+                raise ValueError(f"no such column {transform.source!r}")
+            if any(
+                t.field_name == transform.field_name for t in self._spec(h)
+            ):
+                raise ValueError(
+                    f"partition field {transform.field_name!r} already in spec"
+                )
+            field = {
+                "kind": transform.kind,
+                "source": transform.source,
+                "arg": transform.arg,
+            }
+            return {**h, "spec": h["spec"] + [field]}
+
         m = self._load_manifest(name)
-        schema = StructType.fromJson(m["schema"])
-        if transform.source not in schema.fieldNames():
-            raise ValueError(f"no such column {transform.source!r}")
-        if any(
-            t.field_name == transform.field_name for t in self._spec(m)
-        ):
-            raise ValueError(f"partition field {transform.field_name!r} already in spec")
-        m["spec"] = m["spec"] + [
-            {"kind": transform.kind, "source": transform.source, "arg": transform.arg}
-        ]
-        m["operation"] = "add-partition-field"
-        m["parent"] = m["version"]
-        return self._commit(name, m)
+        return self._advance(name, "main", "add-partition-field", derive, base=m)
 
     def drop_partition_field(self, name: str, field_name: str) -> int:
         """Partition-spec evolution (≙ ``ALTER TABLE ... DROP PARTITION
         FIELD``, aig/TimeBasedPartitioningExamples.java:218-221): future
         writes stop partitioning by the field; existing files keep their
         layout and their manifest partition values still prune."""
+
+        def derive(h: dict) -> dict:
+            spec = self._spec(h)
+            if not any(t.field_name == field_name for t in spec):
+                raise ValueError(f"no partition field {field_name!r} in spec")
+            return {
+                **h,
+                "spec": [
+                    s
+                    for s, t in zip(h["spec"], spec)
+                    if t.field_name != field_name
+                ],
+            }
+
         m = self._load_manifest(name)
-        spec = self._spec(m)
-        if not any(t.field_name == field_name for t in spec):
-            raise ValueError(f"no partition field {field_name!r} in spec")
-        m["spec"] = [
-            s
-            for s, t in zip(m["spec"], spec)
-            if t.field_name != field_name
-        ]
-        m["operation"] = "drop-partition-field"
-        m["parent"] = m["version"]
-        return self._commit(name, m)
+        return self._advance(name, "main", "drop-partition-field", derive, base=m)
 
     # value-preserving widenings Iceberg allows (no file rewrite needed:
     # reads up-cast old files through the align-cast in _read_files)
@@ -1620,15 +1690,9 @@ class ParquetTableManager:
         float→double — the promotions Iceberg permits). Metadata-only:
         existing files keep the narrow type and reads cast up; anything
         else would silently corrupt values and is rejected."""
-        m = self._load_manifest(name)
-        # single source of truth with the transactional DDL path
-        m["schema"] = _apply_schema_ddl(
-            m["schema"],
-            {"kind": "widen-column", "col": col, "to_type": to_type},
+        return self._evolve_schema(
+            name, {"kind": "widen-column", "col": col, "to_type": to_type}
         )
-        m["operation"] = "widen-column"
-        m["parent"] = m["version"]
-        return self._commit(name, m)
 
     # --------------------------------------------------------------- writes
     def _write_files(
@@ -1978,22 +2042,18 @@ class ParquetTableManager:
                     if r[c] is not None
                 }
 
-        def apply_and_blob(manifest: dict) -> dict:
-            out = dict(manifest)
-            out["files"] = [
+        def derive(head: dict) -> dict:
+            # the sketches describe the files as read at m
+            self._validate_rewrite(m, head, missing)
+            files = [
                 {**e, "ndv_sk": new_sk[e["path"]]}
                 if e.get("ndv_sk") is None and e["path"] in new_sk
                 else e
-                for e in manifest["files"]
+                for e in head["files"]
             ]
-            out["ndv_tbl"] = self._ndv_blob_of(out["files"])
-            out["operation"] = "analyze-ndv"
-            out["parent"] = manifest["version"]
-            return out
+            return {**head, "files": files, "ndv_tbl": self._ndv_blob_of(files)}
 
-        return self._commit(
-            name, apply_and_blob(m), rebase=apply_and_blob, keep_ndv=True
-        )
+        return self._advance(name, "main", "analyze-ndv", derive, base=m)
 
     def _ndv_blob_of(self, files: list[dict]) -> dict:
         """Union ALL files' sketches into the table-level blob shape
@@ -2159,11 +2219,15 @@ class ParquetTableManager:
         of being dropped.
 
         ``snapshot_properties`` merge into the committed manifest's
-        properties ATOMICALLY with the data (rebase-safe) — the
-        snapshot-summary-property shape streaming sinks use to carry an
-        epoch marker inside the very commit it marks (a separate
-        set-properties commit would leave a crash window where the data
-        landed unmarked and a replay duplicates it).
+        properties ATOMICALLY with the data — the snapshot-summary-
+        property shape streaming sinks use to carry an epoch marker
+        inside the very commit it marks (a separate set-properties
+        commit would leave a crash window where the data landed unmarked
+        and a replay duplicates it).
+
+        Concurrency: the new files (and ``snapshot_properties``) stack
+        on whichever head the commit swaps, so a concurrent commit is
+        never lost — the data-adding rule of :meth:`transaction`.
 
         Auto-maintenance: with the ``write.compact-threshold`` table
         property set (an int), an append that leaves any partition's
@@ -2198,45 +2262,28 @@ class ParquetTableManager:
         props_m = m if ref == "main" else None  # properties are table-level
         self._enforce_constraints(name, aligned, props_m)
         new_files = self._write_files(name, aligned, spec, manifest=props_m)
-        ndv_blob = self._ndv_union_blob(m, new_files)
-        m["files"] = m["files"] + new_files
-        m["operation"] = "append"
-        m["parent"] = m["version"]
-        if ndv_blob is not None:
-            m["ndv_tbl"] = ndv_blob
-        else:  # unsketched batch: an inherited blob would under-count
-            m.pop("ndv_tbl", None)
-        if snapshot_properties:
-            m["properties"] = {
-                **(m.get("properties") or {}),
-                **snapshot_properties,
-            }
 
-        def rebase(cur_m: dict) -> dict:
-            # lost-update protection: re-stage OUR files on the advanced
-            # base (the concurrent winner's files are in cur_m already)
-            out = dict(cur_m)
-            out["files"] = cur_m["files"] + new_files
-            out["operation"] = "append"
-            out["parent"] = cur_m["version"]
-            blob = self._ndv_union_blob(cur_m, new_files)
+        def derive(head: dict) -> dict:
+            # our files stack on whatever head won (its files included)
+            out = {**head, "files": head["files"] + new_files}
+            # an unsketched batch breaks the blob chain: _advance drops
+            # the head's blob unless a fresh one is set here
+            blob = self._ndv_union_blob(head, new_files)
             if blob is not None:
                 out["ndv_tbl"] = blob
-            else:
-                out.pop("ndv_tbl", None)
             if snapshot_properties:
                 out["properties"] = {
-                    **(cur_m.get("properties") or {}),
+                    **(head.get("properties") or {}),
                     **snapshot_properties,
                 }
             return out
 
-        v = self._commit(name, m, rebase=rebase, ref=ref, keep_ndv=True)
+        v = self._advance(name, ref, "append", derive, base=m)
         # threshold + counts from the manifest already in hand — the
         # hot append path pays no extra manifest load; compact_partitions
         # re-derives against the true head if the trigger fires (a
-        # rebased concurrent append can only make counts HIGHER, and the
-        # loser's own trigger covers that commit)
+        # concurrent append can only make counts HIGHER, and that
+        # append's own trigger covers its commit)
         # defensive parse: an unparsable property value must never fail
         # the append AFTER its commit already landed — maintenance is
         # opt-in metadata, not a correctness surface
@@ -2246,7 +2293,7 @@ class ParquetTableManager:
             thresh = 0
         if thresh > 0 and ref == "main" and self.spark is not None:
             counts: dict[tuple, int] = {}
-            for e in m["files"]:
+            for e in m["files"] + new_files:
                 k = tuple(sorted(e["partition"].items()))
                 counts[k] = counts.get(k, 0) + 1
             if any(c >= thresh for c in counts.values()):
@@ -2260,10 +2307,11 @@ class ParquetTableManager:
                     res = self.compact_partitions(name, min_files=thresh)
                     if res.get("rewritten"):
                         v = res["version"]
-                except CompactionConflict:
-                    # two concurrent appends both crossed the threshold
-                    # and raced their compactions: the loser's rewrite
-                    # aborts (files it planned were already rewritten).
+                except CommitConflict:
+                    # a concurrent commit rewrote files this compaction
+                    # planned (two appends crossed the threshold and
+                    # raced their compactions) or added a delete its
+                    # rewritten rows would escape: the rewrite aborts.
                     # Maintenance is best-effort — the append itself
                     # committed, and the winner's compaction (or the
                     # next append's trigger) covers the fragmentation.
@@ -2357,21 +2405,6 @@ class ParquetTableManager:
                 flat.append((ap, list(reversed(chain))))
         if not flat:
             raise ValueError(f"add_files: no parquet files under {paths!r}")
-        # duplicate guard (Iceberg add_files' check_duplicate_files):
-        # re-registering a path would double every row on read.
-        # Basename COLLISIONS are allowed — Spark's partitionBy reuses
-        # one task file name across partition dirs, so hive datasets
-        # collide routinely — but the row-level MoR machinery keys rows
-        # by basename (_file_name), so ITS entry points refuse tables
-        # with colliding basenames (_require_unique_basenames; compact()
-        # rewrites externals into uuid names and clears the state), and
-        # while such deletes are outstanding a colliding add is refused
-        # (_refuse_colliding_adds)
-        known_paths = {e["path"] for e in m["files"]}
-        for ap, _segs in flat:
-            if ap in known_paths:
-                raise ValueError(f"add_files: {ap} is already registered")
-            known_paths.add(ap)
         entries: list[dict] = []
         for ap, psegs in flat:
             md = pq.ParquetFile(ap).metadata
@@ -2444,20 +2477,29 @@ class ParquetTableManager:
                     "external": True,
                 }
             )
-        self._refuse_colliding_adds(name, m, entries)
-        m["files"] = m["files"] + entries
-        m["operation"] = "add-files"
-        m["parent"] = m["version"]
 
-        def rebase(cur_m: dict) -> dict:
-            self._refuse_colliding_adds(name, cur_m, entries)
-            out = dict(cur_m)
-            out["files"] = cur_m["files"] + entries
-            out["operation"] = "add-files"
-            out["parent"] = cur_m["version"]
-            return out
+        def derive(head: dict) -> dict:
+            # duplicate guard (Iceberg add_files' check_duplicate_files):
+            # re-registering a path would double every row on read.
+            # Basename COLLISIONS are allowed — Spark's partitionBy reuses
+            # one task file name across partition dirs, so hive datasets
+            # collide routinely — but the row-level MoR machinery keys
+            # rows by basename (_file_name), so ITS entry points refuse
+            # tables with colliding basenames (_require_unique_basenames;
+            # compact() rewrites externals into uuid names and clears the
+            # state), and while such deletes are outstanding a colliding
+            # add is refused (_refuse_colliding_adds)
+            known = {e["path"] for e in head["files"]}
+            for e in entries:
+                if e["path"] in known:
+                    raise ValueError(
+                        f"add_files: {e['path']} is already registered"
+                    )
+                known.add(e["path"])
+            self._refuse_colliding_adds(name, head, entries)
+            return {**head, "files": head["files"] + entries}
 
-        return self._commit(name, m, rebase=rebase, ref=ref)
+        return self._advance(name, ref, "add-files", derive, base=m)
 
     # ------------------------------------------------- multi-table commits
     def _txns_dir(self) -> str:
@@ -2471,8 +2513,8 @@ class ParquetTableManager:
 
     def transaction(self) -> "Transaction":
         """Open a multi-table transaction (≙ Iceberg catalog multi-table
-        transactions; the single-table :meth:`_commit` CAS is the
-        degenerate case): stage appends, upserts, and schema DDL
+        transactions; a single-table commit is the degenerate case):
+        stage appends, upserts, and schema DDL
         (add/widen — see :class:`Transaction`) on ANY number of tables, then
         land them with ONE atomic publish — fact and dims together or
         not at all, the backfill-consistency shape.
@@ -2495,14 +2537,31 @@ class ParquetTableManager:
         is skipped; per-table done-markers short-circuit), so concurrent
         repairers and the committing writer never double-append.
 
-        Conflict semantics: if a :class:`TxnConflictError` aborts the
-        apply (a foreign DDL invalidated a staged entry in the
-        publish→apply window), member-table entries applied BEFORE the
-        conflicting one stay applied — the record is aborted, not
-        compensated. "Together or not at all" therefore holds against
-        crashes (roll-forward repair) but not against concurrent
-        conflicting DDL; callers needing atomicity under concurrent DDL
-        must serialize schema changes with transactions externally."""
+        Isolation: every commit, in a transaction or not, is re-derived
+        by :meth:`_advance` on the head it swaps. Metadata-only ops (DDL,
+        spec, properties, segment rewrite, rollback, predicate-delete and
+        deletion-vector attachment) re-run there with their guards
+        re-checked; ops that add data (append, add_files, upsert,
+        txn-append, cherry_pick, the snaptable writer) stack their files
+        and delete descriptors there; ops that carry rows read at their
+        base (compactions, rewrite_deletes, copy-on-write
+        delete/update/merge, merge-on-read update, analyze_ndv,
+        compact_deletes' merged descriptors) raise
+        :class:`CommitConflict` when the head lost a file they remove or
+        gained a delete their base lacked (Iceberg's RewriteFiles
+        validation). ``overwrite`` replaces on the head;
+        ``overwrite_partitions`` raises :class:`CommitConflict` when a
+        concurrent commit added files into a partition it replaces.
+
+        Conflict semantics: a staged entry that no longer applies on the
+        head in the publish→apply window (:class:`CommitConflict` or a
+        guard's ``ValueError``) aborts the record with
+        :class:`TxnConflictError`; member-table entries applied BEFORE
+        it stay applied — aborted, not compensated. "Together or not at
+        all" therefore holds against crashes (roll-forward repair) but
+        not against concurrent conflicting commits; callers needing
+        atomicity under concurrent DDL must serialize schema changes
+        with transactions externally."""
         return Transaction(self)
 
     def _publish_txn(self, entries: list[dict]) -> str:
@@ -2530,186 +2589,30 @@ class ParquetTableManager:
 
     def _apply_txn(self, seq: str, record: dict) -> dict[str, int]:
         """Idempotently roll a published txn forward on every table it
-        touches; returns {table: head version after apply}."""
+        touches; returns {table: head version after apply}. Each entry
+        is one :meth:`_advance` stamped (txn, entry index); an entry
+        that no longer applies on the head aborts the record."""
         prev, self._in_txn_repair = self._in_txn_repair, True
         try:
             out: dict[str, int] = {}
             for idx, entry in enumerate(record["entries"]):
                 name, ref = entry["table"], entry.get("ref", "main")
-                added = entry.get("added", [])
                 marker = self._txn_marker(seq, idx, name)
                 if not os.path.exists(marker):
-                    if entry.get("op") == "upsert":
-                        self._apply_upsert(
-                            name, ref, {**entry, "txn": seq}
+                    operation, derive = self._txn_entry_derive(seq, idx, entry)
+                    try:
+                        self._advance(name, ref, operation, derive, txn=(seq, idx))
+                    except (CommitConflict, ValueError) as exc:
+                        # consume the record instead of poisoning repair
+                        self._abort_txn(seq, record)
+                        err = (
+                            RollbackConflictError
+                            if entry.get("op") == "rollback"
+                            else TxnConflictError
                         )
-                    elif entry.get("op") == "rollback":
-                        # txn-scoped rollback: CAS the head to a rollback
-                        # manifest of the pre-txn snapshot's file set.
-                        # Idempotent via the head's own txn stamp, so a
-                        # crashed rollback replays cleanly.
-                        import time as _time
-
-                        while True:
-                            seq_head, cur = self._ref_head(name, ref)
-                            cm = self._load_manifest(name, cur)
-                            if (
-                                cm.get("txn") == seq
-                                and cm["operation"] == "rollback"
-                            ):
-                                break  # a concurrent repairer applied it
-                            # re-validate INSIDE the CAS loop: the head
-                            # must still belong to the txn being undone
-                            # (rollback_transaction's pre-publish guard
-                            # has a TOCTOU window — a foreign commit
-                            # landing between guard and CAS, or between
-                            # a crash after _publish_txn and a repair
-                            # replay, must abort the rollback, never be
-                            # clobbered by it). The exclusive-create CAS
-                            # on seq_head+1 makes this airtight: if our
-                            # link wins, nothing landed after the check.
-                            undoes = entry.get("undoes")
-                            if (
-                                undoes is not None
-                                and cm.get("txn") != undoes
-                            ):
-                                self._abort_txn(seq, record)
-                                raise RollbackConflictError(
-                                    f"table {name!r} advanced past "
-                                    f"transaction {undoes!r} while the "
-                                    f"rollback was in flight (head txn "
-                                    f"is {cm.get('txn')!r}); rollback "
-                                    f"{seq!r} aborted"
-                                )
-                            nm = dict(self._load_manifest(name, entry["to"]))
-                            nm.pop("txn_entry", None)
-                            nm["operation"] = "rollback"
-                            nm["parent"] = cur
-                            nm["txn"] = seq
-                            nm["committed_at"] = _time.time()
-                            version = self._alloc_version(name, nm)
-                            if self._link_pointer(
-                                os.path.join(
-                                    self._heads_dir(name, ref),
-                                    f"seq-{seq_head + 1:09d}",
-                                ),
-                                str(version),
-                            ):
-                                break
-                    elif entry.get("op") == "ddl":
-                        # schema DDL staged inside the transaction: apply
-                        # against the CURRENT head's schema (rebase-safe
-                        # over foreign appends, which never change the
-                        # schema). Idempotence: the committed manifest is
-                        # stamped with (txn, txn_entry); a repairer walks
-                        # the txn-stamped ancestry for this entry index.
-                        import time as _time
-
-                        while True:
-                            seq_head, cur = self._ref_head(name, ref)
-                            # FULL-ancestry idempotence scan for this
-                            # entry's (txn, txn_entry) stamp — not just
-                            # the txn-stamped head prefix: a crash after
-                            # the DDL's head CAS but before its marker
-                            # write, followed by a foreign commit on
-                            # top, leaves the applied DDL below a
-                            # foreign manifest. The scan must run BEFORE
-                            # re-applying, not only in the conflict
-                            # handler: a no-op re-apply (e.g. widen to a
-                            # type already in place) raises nothing, so
-                            # an error-path-only scan would re-commit a
-                            # duplicate entry stamp whose later rollback
-                            # resolves pre_txn to the foreign head.
-                            applied, v = False, cur
-                            while v is not None:
-                                try:
-                                    # metadata-only walk: raw manifest
-                                    # (txn/txn_entry/parent), never the
-                                    # materialized inventory — a deep
-                                    # ancestry scan must stay O(history),
-                                    # not O(history x files)
-                                    mm = self._manifest_raw(name, v)
-                                except FileNotFoundError:
-                                    # expired history: dangling parent
-                                    # pointer — stop the walk (never
-                                    # crash-loop repair)
-                                    break
-                                if (
-                                    mm.get("txn") == seq
-                                    and mm.get("txn_entry") == idx
-                                ):
-                                    applied = True
-                                    break
-                                v = mm.get("parent")
-                            if applied:
-                                break
-                            cm = self._load_manifest(name, cur)
-                            nm = dict(cm)
-                            try:
-                                nm["schema"] = _apply_schema_ddl(
-                                    cm["schema"], entry
-                                )
-                            except ValueError as exc:
-                                # the full scan above already proved this
-                                # entry never applied — a foreign DDL
-                                # invalidated it in the publish->apply
-                                # window: abort the record instead of
-                                # poisoning repair
-                                self._abort_txn(seq, record)
-                                raise TxnConflictError(
-                                    f"table {name!r}: staged DDL no "
-                                    f"longer applies ({exc}); txn {seq!r} "
-                                    "aborted"
-                                ) from exc
-                            nm["operation"] = entry["kind"]
-                            nm["parent"] = cur
-                            nm["txn"] = seq
-                            nm["txn_entry"] = idx
-                            nm["committed_at"] = _time.time()
-                            version = self._alloc_version(name, nm)
-                            if self._link_pointer(
-                                os.path.join(
-                                    self._heads_dir(name, ref),
-                                    f"seq-{seq_head + 1:09d}",
-                                ),
-                                str(version),
-                            ):
-                                break
-                    else:
-                        added_paths = {e["path"] for e in added}
-                        while True:
-                            seq_head, cur = self._ref_head(name, ref)
-                            m = self._load_manifest(name, cur)
-                            if added_paths <= {
-                                e["path"] for e in m["files"]
-                            }:
-                                break  # a concurrent repairer applied it
-                            nm = dict(m)
-                            # never inherit the parent's entry stamp: it
-                            # would false-positive a later DDL entry's
-                            # idempotence walk
-                            nm.pop("txn_entry", None)
-                            # files changed without blob maintenance:
-                            # an inherited NDV blob would serve stale
-                            nm.pop("ndv_tbl", None)
-                            nm["files"] = m["files"] + added
-                            nm["operation"] = "txn-append"
-                            nm["parent"] = cur
-                            nm["txn"] = seq
-                            import time as _time
-
-                            # fresh commit instant — inheriting the
-                            # parent's would corrupt TIMESTAMP AS OF
-                            nm["committed_at"] = _time.time()
-                            version = self._alloc_version(name, nm)
-                            if self._link_pointer(
-                                os.path.join(
-                                    self._heads_dir(name, ref),
-                                    f"seq-{seq_head + 1:09d}",
-                                ),
-                                str(version),
-                            ):
-                                break
+                        raise err(
+                            f"table {name!r}: {exc}; txn {seq!r} aborted"
+                        ) from exc
                     self._link_pointer(marker, "done")
                 out[name] = self._ref_head(name, ref)[1]
             # durable applied-record (name contains "." so pending-repair
@@ -2734,6 +2637,68 @@ class ParquetTableManager:
             return out
         finally:
             self._in_txn_repair = prev
+
+    def _txn_entry_derive(self, seq: str, idx: int, entry: dict):
+        """(operation, derive) of one published txn entry. Every derive
+        returns None once its entry is on the head, so a crashed apply
+        and a concurrent repairer replay it without doubling it."""
+        name, op = entry["table"], entry.get("op")
+        if op == "upsert":
+            return "upsert", self._upsert_derive(name, entry)
+        if op == "rollback":
+            # txn-scoped rollback: the pre-txn snapshot's manifest
+            def derive(head: dict) -> dict | None:
+                if head.get("txn") == seq and head["operation"] == "rollback":
+                    return None  # a concurrent repairer applied it
+                # the head must still belong to the txn being undone:
+                # rollback_transaction's pre-publish guard has a TOCTOU
+                # window, and a foreign commit landing in it (or between
+                # a crash after _publish_txn and a repair replay) must
+                # abort the rollback, never be clobbered by it
+                undoes = entry.get("undoes")
+                if undoes is not None and head.get("txn") != undoes:
+                    raise CommitConflict(
+                        f"advanced past transaction {undoes!r} while the "
+                        f"rollback was in flight (head txn is "
+                        f"{head.get('txn')!r})"
+                    )
+                return self._load_manifest(name, entry["to"])
+
+            return "rollback", derive
+        if op == "ddl":
+            # schema DDL staged inside the transaction, applied to the
+            # head's schema; a foreign DDL that invalidates it raises
+            def derive(head: dict) -> dict | None:
+                # FULL-ancestry idempotence scan for this entry's (txn,
+                # txn_entry) stamp, not just the head: a crash after the
+                # DDL's head CAS but before its marker write, followed by
+                # a foreign commit on top, leaves the applied DDL below a
+                # foreign manifest — and a no-op re-apply (widen to a
+                # type already in place) raises nothing, so it would
+                # re-commit a duplicate stamp whose later rollback
+                # resolves pre_txn to the foreign head
+                v = head["version"]
+                while v is not None:
+                    try:
+                        # raw manifest: O(history), not O(history x files)
+                        mm = self._manifest_raw(name, v)
+                    except FileNotFoundError:
+                        break  # expired history: dangling parent pointer
+                    if mm.get("txn") == seq and mm.get("txn_entry") == idx:
+                        return None
+                    v = mm.get("parent")
+                return {**head, "schema": _apply_schema_ddl(head["schema"], entry)}
+
+            return entry["kind"], derive
+        added = entry.get("added", [])
+        added_paths = {e["path"] for e in added}
+
+        def derive(head: dict) -> dict | None:
+            if added_paths <= {e["path"] for e in head["files"]}:
+                return None  # a concurrent repairer applied it
+            return {**head, "files": head["files"] + added}
+
+        return "txn-append", derive
 
     def _gc_applied_txns(self) -> None:
         """Keep only the newest ``TXN_APPLIED_KEEP`` ``<seq>.applied``
@@ -2909,9 +2874,10 @@ class ParquetTableManager:
         primitive — re-running a day's job replaces that day, never
         truncates the table.
 
-        Concurrency: rebases over commits that only touched OTHER
-        partitions; a concurrent commit that added files into a partition
-        being replaced aborts (its rows would be silently dropped —
+        Concurrency: replaces on the head it swaps, so commits that only
+        touched OTHER partitions survive; a concurrent commit that added
+        files into a partition being replaced raises
+        :class:`CommitConflict` (its rows would be silently dropped —
         Iceberg's validation semantics).
 
         ``ref`` targets a branch — the write-audit-publish staging shape
@@ -2943,38 +2909,36 @@ class ParquetTableManager:
             if tuple(sorted(e["partition"].items())) in touched
         }
 
-        def apply(base: dict) -> dict:
-            for e in base["files"]:
+        def derive(head: dict) -> dict:
+            for e in head["files"]:
                 if (
                     tuple(sorted(e["partition"].items())) in touched
                     and e["path"] not in base_files_in_touched
                 ):
-                    raise RuntimeError(
+                    raise CommitConflict(
                         "concurrent commit added files into a partition "
                         "being overwritten; aborting"
                     )
-            out = dict(base)
-            out["files"] = [
+            files = [
                 e
-                for e in base["files"]
+                for e in head["files"]
                 if tuple(sorted(e["partition"].items())) not in touched
-            ] + new_files
-            out["operation"] = "overwrite-partitions"
-            out["parent"] = base["version"]
-            return out
+            ]
+            return {**head, "files": files + new_files}
 
-        return self._commit(name, apply(m), rebase=apply, ref=ref)
+        return self._advance(name, ref, "overwrite-partitions", derive, base=m)
 
     def overwrite(self, name: str, df: DataFrame) -> int:
         m = self._load_manifest(name)
         self._enforce_constraints(name, df)
         new_files = self._write_files(name, df, self._spec(m))
-        m["files"] = new_files
-        m["operation"] = "overwrite"
-        m.pop("global_eq_deletes", None)  # no pre-overwrite file survives
-        m.pop("global_pos_deletes", None)
-        m["parent"] = m["version"]
-        return self._commit(name, m)
+        return self._advance(
+            name,
+            "main",
+            "overwrite",
+            lambda h: {**_without_deletes(h), "files": new_files},
+            base=m,
+        )
 
     # --------------------------------------------------- row-level (CoW)
     @staticmethod
@@ -3076,28 +3040,30 @@ class ParquetTableManager:
             return self._delete_equality(name, m, equality, keys, mode)
         if where is None:
             raise ValueError("predicate delete requires where=")
-        affected, untouched = self._split_files(m, where)
-        if not affected:
-            return m["version"]  # provably nothing to delete: no-op
         if mode == "mor":
             where_json = [[c, op, _json_lit(v)] for c, op, v in where]
-            for e in affected:
-                e = dict(e)
-                e["deletes"] = [*e.get("deletes", []), where_json]
-                untouched.append(e)
-            m["files"] = untouched
-            m["operation"] = "delete-mor"
-            m["parent"] = m["version"]
-            return self._commit(name, m)
+
+            def derive(head: dict) -> dict | None:
+                affected, untouched = self._split_files(head, where)
+                if not affected:
+                    return None  # provably nothing to delete: no-op
+                marked = [
+                    {**e, "deletes": [*e.get("deletes", []), where_json]}
+                    for e in affected
+                ]
+                return {**head, "files": untouched + marked}
+
+            return self._advance(name, "main", "delete-mor", derive, base=m)
         if mode != "cow":
             raise ValueError(f"unknown delete mode {mode!r}")
+        affected, _untouched = self._split_files(m, where)
+        if not affected:
+            return m["version"]  # provably nothing to delete: no-op
         df = self._read_files(name, m, affected)
         keep = df.filter(~F.coalesce(_predicate(where), F.lit(False)))
         new_files = self._write_files(name, keep, self._spec(m))
-        m["files"] = untouched + new_files
-        m["operation"] = "delete"
-        m["parent"] = m["version"]
-        return self._commit(name, m)
+        derive = self._rewrite(m, affected, new_files)
+        return self._advance(name, "main", "delete", derive, base=m)
 
     def _delete_equality(
         self,
@@ -3178,7 +3144,7 @@ class ParquetTableManager:
             return m["version"]  # empty key set: no-op
         spec = self._spec(m)
         seg_stats = m.get("_seg_stats") or {}
-        affected, untouched = [], []
+        affected: list[dict] = []
         allowed: dict[str, set[str]] | None = None
         allowed_known = False
         for sid, chunk in self._manifest_spans(m):
@@ -3195,7 +3161,6 @@ class ParquetTableManager:
                 and where_bounds
                 and not _seg_may_match(spec, seg_stats.get(sid), where_bounds)
             ):
-                untouched.extend(chunk)
                 continue
             if not allowed_known:
                 # the single-row bucket probe job runs at most once no
@@ -3211,7 +3176,8 @@ class ParquetTableManager:
                 hit = id(e) in pruned and _may_match(spec, e, where_bounds)
                 # NULL keys carry no range info; stats can't exclude a
                 # file for them (min/max never covers NULL)
-                (affected if hit or has_null_keys else untouched).append(e)
+                if hit or has_null_keys:
+                    affected.append(e)
         if not affected:
             _discard_written()  # keys bind to no current file
             return m["version"]
@@ -3220,24 +3186,27 @@ class ParquetTableManager:
             cond = _null_safe_eq(df, dkeys, equality)
             kept = df.join(dkeys, on=cond, how="left_anti")
             new_files = self._write_files(name, kept, spec)
-            m["files"] = untouched + new_files
-            m["operation"] = "delete"
-            m["parent"] = m["version"]
-            return self._commit(name, m)
+            derive = self._rewrite(m, affected, new_files)
+            return self._advance(name, "main", "delete", derive, base=m)
         if mode != "mor":
             raise ValueError(f"unknown delete mode {mode!r}")
-        # the equality MoR read path scopes delete applicability via a
-        # basename-keyed seq map — colliding external basenames would
-        # duplicate data rows through that left join. Checked HERE (after
-        # the no-op early returns) so provably-empty deletes never raise.
-        self._require_unique_basenames(name, m, "delete(mode='mor')")
-        m["global_eq_deletes"] = [
-            *m.get("global_eq_deletes", []),
-            *del_entries,
-        ]
-        m["operation"] = "delete-mor"
-        m["parent"] = m["version"]
-        return self._commit(name, m)
+
+        def derive(head: dict) -> dict:
+            # the equality MoR read path scopes delete applicability via
+            # a basename-keyed seq map — colliding external basenames
+            # would duplicate data rows through that left join. Checked
+            # HERE (after the no-op early returns) so provably-empty
+            # deletes never raise.
+            self._require_unique_basenames(name, head, "delete(mode='mor')")
+            return {
+                **head,
+                "global_eq_deletes": [
+                    *head.get("global_eq_deletes", []),
+                    *del_entries,
+                ],
+            }
+
+        return self._advance(name, "main", "delete-mor", derive, base=m)
 
     # exact-membership pruning bound: key sets at or under this size are
     # collected driver-side and prune as `col IN (...)` — through bucket
@@ -3412,13 +3381,23 @@ class ParquetTableManager:
             )
         if not touched:
             return m["version"]  # empty delete set: no-op
-        m["global_pos_deletes"] = [
-            *m.get("global_pos_deletes", []),
-            *self._write_dv_files(name, self._dv_encode(dpos)),
-        ]
-        m["operation"] = "delete-mor"
-        m["parent"] = m["version"]
-        return self._commit(name, m)
+        dv = self._write_dv_files(name, self._dv_encode(dpos))
+
+        def derive(head: dict) -> dict:
+            if head is not m:  # the guards above, on the head that won
+                self._require_unique_basenames(name, head, "delete_positions")
+                live = {os.path.basename(e["path"]) for e in head["files"]}
+                if not live.issuperset(touched):
+                    raise CommitConflict(
+                        "a concurrent commit removed a file these "
+                        "positions name; aborting"
+                    )
+            return {
+                **head,
+                "global_pos_deletes": [*head.get("global_pos_deletes", []), *dv],
+            }
+
+        return self._advance(name, "main", "delete-mor", derive, base=m)
 
     def _stage_delete_parquet(
         self, name: str, df: DataFrame, prefix: str
@@ -3660,7 +3639,8 @@ class ParquetTableManager:
         Readers pay one anti-join per key-column set, however many
         epochs are outstanding, until :meth:`rewrite_deletes`;
         :meth:`compact_deletes` merges the epochs' delete files."""
-        return self._apply_upsert(name, ref, self._stage_upsert(name, df, keys))
+        staged = self._stage_upsert(name, df, keys)
+        return self._advance(name, ref, "upsert", self._upsert_derive(name, staged))
 
     def _stage_upsert(
         self,
@@ -3671,8 +3651,9 @@ class ParquetTableManager:
     ) -> dict:
         """Run the DATA half of an upsert epoch (distributed writes of
         the new rows + the key-set delete file), with no head advance —
-        the JSON-able entry is applied later by :meth:`_apply_upsert`
-        (directly, or through a multi-table :class:`Transaction`).
+        the JSON-able entry is applied later through
+        :meth:`_upsert_derive` (directly, or through a multi-table
+        :class:`Transaction`).
         ``schema_json`` overrides the alignment schema — a Transaction
         passes its staged-DDL projection so an upsert staged after an
         add_column writes the evolved shape instead of silently
@@ -3703,48 +3684,30 @@ class ParquetTableManager:
             "eq_delete_files": self._write_eq_delete_files(name, dkeys, keys),
         }
 
-    def _apply_upsert(self, name: str, ref: str, entry: dict) -> int:
-        """Idempotent head advance of a staged upsert: append the delete
-        descriptor(s) and the epoch's files on the apply-time head. Both
-        take this commit's seq, so commits that won meanwhile correctly
-        fall under the delete (sequence order) while the epoch's own
-        files are exempt."""
+    def _upsert_derive(self, name: str, entry: dict):
+        """``derive`` of a staged upsert: append the delete descriptor(s)
+        and the epoch's files on the apply-time head. Both take this
+        commit's seq, so commits that won meanwhile correctly fall under
+        the delete (sequence order) while the epoch's own files are
+        exempt. Idempotent: None once the files are on the head."""
         added_paths = {e["path"] for e in entry["added"]}
-        while True:
-            seq_head, cur = self._ref_head(name, ref)
-            m = self._load_manifest(name, cur)
-            if added_paths <= {e["path"] for e in m["files"]}:
-                return cur  # already applied (idempotent replay)
-            nm = dict(m)
-            nm.pop("txn_entry", None)
-            # the upsert adds files without blob maintenance: an
-            # inherited NDV blob would exclude every upserted value
-            nm.pop("ndv_tbl", None)
-            nm["files"] = m["files"] + entry["added"]
-            nm["global_eq_deletes"] = [
-                *m.get("global_eq_deletes", []),
-                *entry["eq_delete_files"],
-            ]
-            nm["operation"] = "upsert"
-            nm["parent"] = cur
-            if entry.get("txn"):
-                nm["txn"] = entry["txn"]
-            else:
-                # a plain upsert on top of a txn snapshot must not
-                # inherit the parent's txn stamp — it would impersonate
-                # a txn member and let rollback_transaction roll it away
-                nm.pop("txn", None)
-            import time as _time
 
-            nm["committed_at"] = _time.time()
-            version = self._alloc_version(name, nm)
-            if self._link_pointer(
-                os.path.join(
-                    self._heads_dir(name, ref), f"seq-{seq_head + 1:09d}"
-                ),
-                str(version),
-            ):
-                return version
+        def derive(head: dict) -> dict | None:
+            if added_paths <= {e["path"] for e in head["files"]}:
+                return None  # already applied (idempotent replay)
+            # the staging-time guard, on the head the descriptor lands
+            # on: add_files may have registered colliding basenames since
+            self._require_unique_basenames(name, head, "upsert")
+            return {
+                **head,
+                "files": head["files"] + entry["added"],
+                "global_eq_deletes": [
+                    *head.get("global_eq_deletes", []),
+                    *entry["eq_delete_files"],
+                ],
+            }
+
+        return derive
 
     def rewrite_deletes(self, name: str) -> int:
         """Materialize merge-on-read deletes (≙ Iceberg
@@ -3763,7 +3726,6 @@ class ParquetTableManager:
             m.get("global_eq_deletes") or m.get("global_pos_deletes")
         ):
             return m["version"]
-        clean = [e for e in m["files"] if not deletes[e["path"]].dirty]
         new_files: list[dict] = []
         if dirty:
             # the MoR read applying the deletes keys rows by basename;
@@ -3772,12 +3734,15 @@ class ParquetTableManager:
             self._require_unique_basenames(name, m, "rewrite_deletes")
             df = self._read_files(name, m, dirty)
             new_files = self._write_files(name, df, self._spec(m))
-        m["files"] = clean + new_files
-        m["operation"] = "rewrite-deletes"
-        m.pop("global_eq_deletes", None)  # every guarded file rewritten
-        m.pop("global_pos_deletes", None)
-        m["parent"] = m["version"]
-        return self._commit(name, m)
+        rewrite = self._rewrite(m, dirty, new_files)
+        # every file a table-level delete touches was rewritten
+        return self._advance(
+            name,
+            "main",
+            "rewrite-deletes",
+            lambda h: _without_deletes(rewrite(h)),
+            base=m,
+        )
 
     def compact_deletes(self, name: str) -> int:
         """Merge the table-level delete files without touching any data
@@ -3803,9 +3768,9 @@ class ParquetTableManager:
         # the read path applying the merged deletes is basename-keyed;
         # refuse colliding external basenames before any of that work
         self._require_unique_basenames(name, m, "compact_deletes")
+        merged_eq: list[dict] = []
         if merge_eq:
             schema = StructType.fromJson(m["schema"])
-            new_eq = [g for g in gdels if tuple(g["cols"]) not in merge_eq]
             for cols, ds in merge_eq.items():
                 keys = (
                     self._eq_delete_keys(name, schema, cols, ds)
@@ -3813,18 +3778,42 @@ class ParquetTableManager:
                     .agg(F.max("__del_seq").alias("__del_seq"))
                 )
                 for g in self._write_eq_delete_files(name, keys, list(cols)):
-                    new_eq.append({**g, "seq": max(d["seq"] for d in ds)})
-            m["global_eq_deletes"] = new_eq
+                    merged_eq.append({**g, "seq": max(d["seq"] for d in ds)})
+        merged_pos: list[dict] = []
         if len(gpos) > 1:
-            m["global_pos_deletes"] = [
+            merged_pos = [
                 {**g, "seq": max(d["seq"] for d in gpos)}
                 for g in self._write_dv_files(
                     name, self._dv_encode(self._dv_coords(name, gpos))
                 )
             ]
-        m["operation"] = "compact-deletes"
-        m["parent"] = m["version"]
-        return self._commit(name, m)
+        eq_gone = {g["path"] for ds in merge_eq.values() for g in ds}
+        pos_gone = {g["path"] for g in gpos} if merged_pos else set()
+
+        def swap(descs: list[dict], gone: set, merged: list[dict]) -> list:
+            # descriptors the head gained since m stay as they are; the
+            # merged ones must all still be there
+            kept = [g for g in descs if g["path"] not in gone]
+            if len(kept) + len(gone) != len(descs):
+                raise CommitConflict(
+                    "a concurrent commit removed delete files this "
+                    "compaction merged; aborting"
+                )
+            return kept + merged
+
+        def derive(head: dict) -> dict:
+            out = dict(head)
+            if eq_gone:
+                out["global_eq_deletes"] = swap(
+                    head.get("global_eq_deletes", []), eq_gone, merged_eq
+                )
+            if pos_gone:
+                out["global_pos_deletes"] = swap(
+                    head.get("global_pos_deletes", []), pos_gone, merged_pos
+                )
+            return out
+
+        return self._advance(name, "main", "compact-deletes", derive, base=m)
 
     def update(
         self,
@@ -3849,7 +3838,7 @@ class ParquetTableManager:
         writes kilobytes. Reads pay the coordinate anti-join until
         :meth:`rewrite_deletes` folds it."""
         m = self._load_manifest(name)
-        affected, untouched = self._split_files(m, where)
+        affected, _untouched = self._split_files(m, where)
         if not affected:
             return m["version"]
         hit = F.coalesce(_predicate(where), F.lit(False))
@@ -3871,24 +3860,33 @@ class ParquetTableManager:
             for col, expr in set_exprs.items():
                 updated = updated.withColumn(col, expr)
             new_files = self._write_files(name, updated, self._spec(m))
-            m["global_pos_deletes"] = [
-                *m.get("global_pos_deletes", []),
-                *self._write_dv_files(name, self._dv_encode(dpos)),
+            dv = self._write_dv_files(name, self._dv_encode(dpos))
+            retired = [
+                e for e in affected if os.path.basename(e["path"]) in touched
             ]
-            m["files"] = m["files"] + new_files
-            m["operation"] = "update-mor"
-            m["parent"] = m["version"]
-            return self._commit(name, m)
+
+            def derive(head: dict) -> dict:
+                # the updated copies carry rows read at m
+                self._validate_rewrite(m, head, retired)
+                self._require_unique_basenames(name, head, "update(mode='mor')")
+                return {
+                    **head,
+                    "files": head["files"] + new_files,
+                    "global_pos_deletes": [
+                        *head.get("global_pos_deletes", []),
+                        *dv,
+                    ],
+                }
+
+            return self._advance(name, "main", "update-mor", derive, base=m)
         if mode != "cow":
             raise ValueError(f"unknown update mode {mode!r}")
         df = self._read_files(name, m, affected)
         for col, expr in set_exprs.items():
             df = df.withColumn(col, F.when(hit, expr).otherwise(F.col(col)))
         new_files = self._write_files(name, df, self._spec(m))
-        m["files"] = untouched + new_files
-        m["operation"] = "update"
-        m["parent"] = m["version"]
-        return self._commit(name, m)
+        derive = self._rewrite(m, affected, new_files)
+        return self._advance(name, "main", "update", derive, base=m)
 
     def merge(
         self,
@@ -3961,7 +3959,7 @@ class ParquetTableManager:
             hit = F.coalesce(delete_when, F.lit(False))
             source = source.filter(~hit)
         src = project(source)
-        affected, untouched = m["files"], []
+        affected = m["files"]
         if spec:
             pvals = (
                 pval_src.select(
@@ -3972,19 +3970,19 @@ class ParquetTableManager:
             )
             keys = {tuple(str(v) for v in r) for r in pvals}
             if not any(v == "None" for k in keys for v in k):
-                affected, untouched = [], []
-                for e in m["files"]:
-                    fk = tuple(
-                        str(e["partition"].get(t.field_name)) for t in spec
-                    )
-                    (affected if fk in keys else untouched).append(e)
+                affected = [
+                    e
+                    for e in m["files"]
+                    if tuple(str(e["partition"].get(t.field_name)) for t in spec)
+                    in keys
+                ]
         if not_matched_by_source is not None:
             # the clause can touch rows no source partition points at:
             # widen the affected set to files that may hold rows
             # satisfying its condition (all files when unconditioned) —
             # SQL semantics at manifest-pruned cost
             if not_matched_by_source_where is None:
-                affected, untouched = m["files"], []
+                affected = m["files"]
             else:
                 cond_aff, _cond_unt = self._split_files(
                     m, not_matched_by_source_where
@@ -3993,9 +3991,6 @@ class ParquetTableManager:
                     id(e) for e in cond_aff
                 }
                 affected = [e for e in m["files"] if id(e) in aff_ids]
-                untouched = [
-                    e for e in m["files"] if id(e) not in aff_ids
-                ]
         target = self._read_files(name, m, affected)
         survivors = target.join(match_keys, on, "left_anti")
         if not_matched_by_source is not None:
@@ -4016,10 +4011,8 @@ class ParquetTableManager:
                     )
         merged = survivors.unionByName(src)
         new_files = self._write_files(name, merged, spec)
-        m["files"] = untouched + new_files
-        m["operation"] = "merge"
-        m["parent"] = m["version"]
-        return self._commit(name, m)
+        derive = self._rewrite(m, affected, new_files)
+        return self._advance(name, "main", "merge", derive, base=m)
 
     # ---------------------------------------------------------------- reads
     def _read_files(
@@ -4659,15 +4652,18 @@ class ParquetTableManager:
         cost is an explicit O(table-entries) re-encode — the same deal
         Iceberg's action makes; run it on maintenance cadence, not per
         commit."""
+
+        def derive(head: dict) -> dict:
+            # no reuse bookkeeping: every entry re-bins into fresh
+            # target-sized segments instead of surviving by identity run
+            return {
+                k: v
+                for k, v in head.items()
+                if k not in ("_seg_layout", "_base_entries")
+            }
+
         m = self._load_manifest(name)
-        # drop the reuse bookkeeping so every entry re-bins into fresh
-        # target-sized segments instead of surviving by identity run
-        m.pop("_seg_layout", None)
-        m.pop("_base_entries", None)
-        m["files"] = list(m["files"])
-        m["operation"] = "rewrite-manifests"
-        m["parent"] = m["version"]
-        return self._commit(name, m)
+        return self._advance(name, "main", "rewrite-manifests", derive, base=m)
 
     def refs(self, name: str) -> DataFrame:
         """All named refs (≙ Iceberg ``.refs`` metadata table)."""
@@ -4702,25 +4698,24 @@ class ParquetTableManager:
         """Advance ``ref`` (default main) to ``branch``'s head — the
         publish step of write-audit-publish. Fails unless the target head
         descends from the current ``ref`` head (same rule as Iceberg's
-        ``fast_forward`` procedure); lock-free CAS retries if ``ref``
-        moves concurrently."""
-        while True:
-            seq, cur = self._ref_head(name, ref)
+        ``fast_forward`` procedure), re-checked if ``ref`` moves
+        concurrently."""
+
+        def derive(head: dict | None) -> int | None:
+            cur = -1 if head is None else head["version"]
             _bseq, target = self._ref_head(name, branch)
             if target < 0:
                 raise ValueError(f"no branch {branch!r} on table {name!r}")
             if target == cur:
-                return cur
+                return None
             if cur >= 0 and cur not in self._ancestors(name, target):
                 raise ValueError(
                     f"{ref!r} (at {cur}) is not an ancestor of "
                     f"{branch!r} (at {target}); not a fast-forward"
                 )
-            seq_path = os.path.join(
-                self._heads_dir(name, ref), f"seq-{seq + 1:09d}"
-            )
-            if self._link_pointer(seq_path, str(target)):
-                return target
+            return target
+
+        return self._advance(name, ref, "fast-forward", derive)
 
     def cherry_pick(self, name: str, snapshot_id: int, ref: str = "main") -> int:
         """Re-apply one append snapshot's added files on top of ``ref``'s
@@ -4748,8 +4743,8 @@ class ParquetTableManager:
             if e["path"] not in parent_paths
         ]
 
-        def apply(base: dict) -> dict:
-            clash = {e["path"] for e in base["files"]} & {
+        def derive(head: dict) -> dict:
+            clash = {e["path"] for e in head["files"]} & {
                 e["path"] for e in added
             }
             if clash:
@@ -4757,15 +4752,11 @@ class ParquetTableManager:
                     f"cherry-pick of {snapshot_id} conflicts: "
                     f"{len(clash)} file(s) already on target"
                 )
-            out = dict(base)
-            out["files"] = base["files"] + added
-            out["operation"] = "append"
-            out["parent"] = base["version"]
-            return out
+            return {**head, "files": head["files"] + added}
 
         _seq, head = self._ref_head(name, ref)
-        return self._commit(
-            name, apply(self._load_manifest(name, head)), rebase=apply, ref=ref
+        return self._advance(
+            name, ref, "append", derive, base=self._load_manifest(name, head)
         )
 
     def _prune_buckets(
@@ -5014,9 +5005,7 @@ class ParquetTableManager:
 
     def rollback(self, name: str, snapshot_id: int) -> int:
         m = self._load_manifest(name, snapshot_id)
-        m["operation"] = "rollback"
-        m["parent"] = self._current_version(name)
-        return self._commit(name, m)
+        return self._advance(name, "main", "rollback", lambda _head: dict(m))
 
     def read_incremental(
         self, name: str, from_snapshot: int, to_snapshot: int | None = None
@@ -5468,10 +5457,10 @@ class ParquetTableManager:
         large, and unnecessary: streaming ingest fragments the recent
         partitions only.
 
-        Concurrency: commits with a rebase that keeps files added by a
-        concurrent append; a concurrent commit that removed any file being
-        rewritten aborts the rewrite (Iceberg ``rewrite_data_files``
-        validation semantics)."""
+        Concurrency: files a concurrent append added stay; a concurrent
+        commit that removed a file being rewritten, or added a delete
+        the rewritten rows would escape, raises :class:`CommitConflict`
+        (Iceberg ``rewrite_data_files`` validation semantics)."""
         m = self._load_manifest(name)
         target = int(
             m["properties"].get("write.target-file-size-bytes", 128 * 1024 * 1024)
@@ -5498,24 +5487,9 @@ class ParquetTableManager:
                 int(max(1, -(-sum(e["bytes"] for e in affected) // target)))
             )
         new_files = self._write_files(name, df, self._spec(m))
-        rewritten = {e["path"] for e in affected}
-
-        def apply(base: dict) -> dict:
-            paths = {e["path"] for e in base["files"]}
-            if not rewritten <= paths:
-                raise CompactionConflict(
-                    "concurrent commit removed files being rewritten; aborting"
-                )
-            out = dict(base)
-            out["files"] = [
-                e for e in base["files"] if e["path"] not in rewritten
-            ] + new_files
-            out["operation"] = "rewrite-data-files"
-            out["parent"] = base["version"]
-            return out
-
-        v = self._commit(name, apply(m), rebase=apply)
-        return {"version": v, "rewritten": len(rewritten), "added": len(new_files)}
+        derive = self._rewrite(m, affected, new_files)
+        v = self._advance(name, "main", "rewrite-data-files", derive, base=m)
+        return {"version": v, "rewritten": len(affected), "added": len(new_files)}
 
     _ZBITS = 16  # bin resolution per z-order dimension
 
@@ -5622,15 +5596,13 @@ class ParquetTableManager:
         else:
             df = df.repartition(n_out)
         new_files = self._write_files(name, df, spec, sort_within=cluster)
-        m["files"] = new_files
-        m["operation"] = "replace"
+        rewrite = self._rewrite(m, m["files"], new_files)
         # every file was rewritten post-delete: the table-level deletes
         # are fully materialized (their seq guards would no-op against
         # the fresh files anyway) — drop them so expiry can reap them
-        m.pop("global_eq_deletes", None)
-        m.pop("global_pos_deletes", None)
-        m["parent"] = m["version"]
-        return self._commit(name, m)
+        return self._advance(
+            name, "main", "replace", lambda h: _without_deletes(rewrite(h)), base=m
+        )
 
 
 _INT_RANGES = {
@@ -5666,8 +5638,9 @@ def _validate_initial_default(default: Any, dtype: str) -> None:
 def _apply_schema_ddl(schema_json: dict, entry: dict) -> dict:
     """Validate + apply one staged-DDL txn entry to a schema — shared by
     stage-time validation (fail fast, before any publish) and apply-time
-    re-derivation (rebase-safe over foreign appends; a foreign DDL that
-    invalidates the entry raises and aborts the record)."""
+    re-derivation on the head a commit swaps (foreign appends never
+    change the schema; a foreign DDL that invalidates the entry raises
+    and aborts the record)."""
     schema = StructType.fromJson(schema_json)
     kind = entry["kind"]
     if kind == "add-column":

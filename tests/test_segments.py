@@ -162,9 +162,7 @@ def test_entry_replacement_is_isolated_and_persisted(mgr, spark):
     base_v = mgr._current_version("t")
     m1 = mgr._load_manifest("t")
     m1["files"][0] = {**m1["files"][0], "eq_deletes": [{"path": "d1"}]}
-    m1["operation"] = "delete-mor"
-    m1["parent"] = m1["version"]
-    v = mgr._commit("t", m1)
+    v = mgr._advance("t", "main", "delete-mor", lambda head: dict(head), base=m1)
     # persisted in the new snapshot...
     got = mgr._load_manifest("t", v)["files"]
     assert any(e.get("eq_deletes") == [{"path": "d1"}] for e in got)

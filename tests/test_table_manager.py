@@ -3309,3 +3309,294 @@ def test_analyze_ndv_persists_and_upsert_drops_blob(mgr, spark, tmp_path):
     assert "ndv_tbl" not in m3
     est2 = {r.col_name: r for r in fresh.ndv_estimates("t").collect()}
     assert abs(est2["k"].ndv_est - 602) <= 60
+
+
+# ---------------------------------------------------------------------------
+# Isolation of head advances: a commit landing between an operation's head
+# load and its head CAS must be re-derived on, never dropped.
+
+RACE_SCHEMA = "k long, g long, s string"
+
+
+def _race_from_alloc(mgr, monkeypatch, commit, nth=1):
+    """Run ``commit(other)`` — one commit by a second manager on the same
+    warehouse — from the ``nth`` ``_alloc_version`` of ``mgr``: after the
+    operation under test derived its snapshot, before its head CAS.
+    Returns a list that holds the concurrent commit's version once it
+    fired."""
+    other = ParquetTableManager(mgr.spark, mgr.warehouse)
+    alloc = mgr._alloc_version
+    calls = iter(range(1, nth + 1))
+    fired: list[int] = []
+
+    def seam(name, manifest):
+        if next(calls, None) == nth:
+            fired.append(commit(other))
+        return alloc(name, manifest)
+
+    monkeypatch.setattr(mgr, "_alloc_version", seam)
+    return fired
+
+
+def _race_rows(spark, ks):
+    return spark.createDataFrame([(k, k % 2, "old") for k in ks], RACE_SCHEMA)
+
+
+def _race_table(mgr, spark) -> int:
+    """Partitioned by g, one file per partition per append: keys 1, 3
+    and 5 share the g=1 file. Returns the append's version."""
+    mgr.create_table(
+        "t", spark.createDataFrame([], RACE_SCHEMA).schema, [identity("g")]
+    )
+    return mgr.append("t", _race_rows(spark, range(6)))
+
+
+def _add_external_row(tmp_path):
+    """A commit that needs no Spark job: register one external file
+    holding the row (100, 0, 'new')."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "ext-100.parquet")
+    pq.write_table(pa.table({"k": [100], "g": [0], "s": ["new"]}), path)
+    return lambda o: o.add_files("t", [path], partition_values={"g": 0})
+
+
+def _positions_of(mgr, spark, k):
+    rows = (
+        mgr.read_with_positions("t")
+        .filter(F.col("k") == k)
+        .select("_file_name", "_pos")
+        .collect()
+    )
+    return spark.createDataFrame(
+        [tuple(r) for r in rows], "_file_name string, _pos long"
+    )
+
+
+def _eq_keys(spark, *ks):
+    return spark.createDataFrame([(k,) for k in ks], "k long")
+
+
+# op -> (preparation committed before the race, operation under test)
+LOST_UPDATE_OPS = {
+    "set_properties": (None, lambda m, s, v1: m.set_properties("t", {"x": "1"})),
+    "add_column": (None, lambda m, s, v1: m.add_column("t", "c2", "string")),
+    "drop_column": (None, lambda m, s, v1: m.drop_column("t", "s")),
+    "add_partition_field": (
+        None,
+        lambda m, s, v1: m.add_partition_field("t", bucket("k", 4)),
+    ),
+    "rollback": (None, lambda m, s, v1: m.rollback("t", v1)),
+    "overwrite": (
+        None,
+        lambda m, s, v1: m.overwrite(
+            "t", s.createDataFrame([(50, 0, "ow")], RACE_SCHEMA)
+        ),
+    ),
+    "delete_cow": (None, lambda m, s, v1: m.delete("t", where=[("k", "==", 1)])),
+    "delete_mor": (
+        None,
+        lambda m, s, v1: m.delete("t", where=[("k", "==", 1)], mode="mor"),
+    ),
+    "delete_equality": (
+        None,
+        lambda m, s, v1: m.delete(
+            "t", equality=["k"], keys=_eq_keys(s, 1), mode="mor"
+        ),
+    ),
+    "delete_positions": (
+        None,
+        lambda m, s, v1: m.delete_positions("t", _positions_of(m, s, 1)),
+    ),
+    "update_cow": (
+        None,
+        lambda m, s, v1: m.update("t", {"s": F.lit("u")}, [("k", "==", 1)]),
+    ),
+    "update_mor": (
+        None,
+        lambda m, s, v1: m.update(
+            "t", {"s": F.lit("u")}, [("k", "==", 1)], mode="mor"
+        ),
+    ),
+    "merge": (
+        None,
+        lambda m, s, v1: m.merge(
+            "t", s.createDataFrame([(1, 1, "m")], RACE_SCHEMA), ["k"]
+        ),
+    ),
+    "compact": (None, lambda m, s, v1: m.compact("t")),
+    "rewrite_deletes": (
+        lambda m, s: m.delete("t", where=[("k", "==", 3)], mode="mor"),
+        lambda m, s, v1: m.rewrite_deletes("t"),
+    ),
+    "compact_deletes": (
+        lambda m, s: [
+            m.delete("t", equality=["k"], keys=_eq_keys(s, k), mode="mor")
+            for k in (2, 3)
+        ],
+        lambda m, s, v1: m.compact_deletes("t"),
+    ),
+    "rewrite_segments": (None, lambda m, s, v1: m.rewrite_segments("t")),
+}
+
+
+@pytest.mark.parametrize("op", sorted(LOST_UPDATE_OPS))
+def test_concurrent_commit_survives_every_head_advance(
+    mgr, spark, monkeypatch, tmp_path, op
+):
+    """Lost-update regression: a second manager commits new rows between
+    the operation's head load and its head CAS. The operation must land
+    on top of that commit — its snapshot's parent is the commit, and the
+    new row stays visible (an overwrite replaces it; a rollback restores
+    an older file set by design) — never link a snapshot derived from
+    the head it loaded."""
+    v1 = _race_table(mgr, spark)
+    prep, run = LOST_UPDATE_OPS[op]
+    if prep is not None:
+        prep(mgr, spark)
+    fired = _race_from_alloc(mgr, monkeypatch, _add_external_row(tmp_path))
+    run(mgr, spark, v1)
+    assert fired, "the operation never allocated a snapshot"
+    head = mgr._load_manifest("t")
+    assert head["version"] != fired[0]
+    assert head["parent"] == fired[0], (op, head["operation"])
+    if op not in ("overwrite", "rollback"):
+        assert mgr.read("t").filter(F.col("k") == 100).count() == 1
+
+
+@pytest.mark.parametrize("racer", ["upsert", "positions"])
+@pytest.mark.parametrize(
+    "op", ["compact_partitions", "compact", "rewrite_deletes"]
+)
+def test_rewrite_conflicts_with_concurrent_delete(
+    mgr, spark, monkeypatch, op, racer
+):
+    """A rewrite carries rows read at its base; its files take a newer
+    seq than a delete committed meanwhile, so committing it on the new
+    head would resurrect the deleted rows. It must raise CommitConflict
+    and leave the concurrent delete as the head (Iceberg's RewriteFiles
+    validation)."""
+    from iceberg_poc_spark.tables.manager import CommitConflict
+
+    _race_table(mgr, spark)
+    if op == "compact_partitions":  # a second file into each partition
+        mgr.append("t", _race_rows(spark, range(6, 10)))
+    if op == "rewrite_deletes":  # makes key 1's file dirty (same file)
+        mgr.delete("t", where=[("k", "==", 3)], mode="mor")
+    if racer == "upsert":
+        new = spark.createDataFrame([(1, 1, "new")], RACE_SCHEMA)
+        commit = lambda o: o.upsert_equality("t", new, ["k"])  # noqa: E731
+        want = [(1, "new")]
+    else:
+        pos = _positions_of(mgr, spark, 1)
+        commit = lambda o: o.delete_positions("t", pos)  # noqa: E731
+        want = []
+    fired = _race_from_alloc(mgr, monkeypatch, commit)
+    with pytest.raises(CommitConflict):
+        if op == "compact_partitions":
+            mgr.compact_partitions("t", min_files=2)
+        else:
+            getattr(mgr, op)("t")
+    assert mgr._current_version("t") == fired[0]
+    got = [(r.k, r.s) for r in mgr.read("t").filter(F.col("k") == 1).collect()]
+    assert sorted(got) == want
+
+
+def test_append_swallows_conflict_of_its_triggered_compaction(
+    mgr, spark, monkeypatch
+):
+    """The compaction an append triggers (write.compact-threshold) is
+    best-effort: when an upsert lands under it, the rewrite raises
+    CommitConflict inside append, which swallows it — the append stays
+    committed and the upsert stays the head."""
+    from iceberg_poc_spark.tables.manager import COMPACT_THRESHOLD_PROP
+
+    _race_table(mgr, spark)
+    mgr.set_properties("t", {COMPACT_THRESHOLD_PROP: "2"})
+    new = spark.createDataFrame([(1, 1, "new")], RACE_SCHEMA)
+    fired = _race_from_alloc(  # the append allocates first
+        mgr, monkeypatch, lambda o: o.upsert_equality("t", new, ["k"]), nth=2
+    )
+    v = mgr.append("t", _race_rows(spark, [7]))
+    head = mgr._load_manifest("t")
+    assert (head["version"], head["parent"]) == (fired[0], v)
+    got = [(r.k, r.s) for r in mgr.read("t").filter(F.col("k") == 1).collect()]
+    assert got == [(1, "new")]
+    assert mgr.read("t").filter(F.col("k") == 7).count() == 1
+
+
+@pytest.mark.parametrize("ddl", ["drop_column", "rename_column"])
+def test_column_guards_checked_on_swapped_head(mgr, spark, monkeypatch, ddl):
+    """drop/rename refuse a column that keys outstanding equality
+    deletes. The guard must hold on the head the DDL swaps, not only on
+    the head it loaded: an upsert keyed on the column that lands first
+    makes the DDL raise."""
+    schema = "k long, c long"
+    mgr.create_table("t", spark.createDataFrame([], schema).schema, [])
+    mgr.append("t", spark.createDataFrame([(1, 10), (2, 20)], schema))
+    up = spark.createDataFrame([(3, 10)], schema)
+    fired = _race_from_alloc(
+        mgr, monkeypatch, lambda o: o.upsert_equality("t", up, ["c"])
+    )
+    with pytest.raises(ValueError, match="outstanding equality deletes"):
+        if ddl == "drop_column":
+            mgr.drop_column("t", "c")
+        else:
+            mgr.rename_column("t", "c", "c2")
+    assert mgr._current_version("t") == fired[0]
+    assert "c" in mgr.schema("t").fieldNames()
+    assert sorted(tuple(r) for r in mgr.read("t").collect()) == [
+        (2, 20), (3, 10)
+    ]
+
+
+@pytest.mark.parametrize("in_txn", [False, True])
+def test_upsert_refuses_basenames_colliding_since_staging(
+    mgr, spark, monkeypatch, tmp_path, in_txn
+):
+    """An add_files of colliding basenames that lands between an
+    upsert's staging and its apply: the upsert's descriptor would key
+    rows of both files by one name, so the apply re-checks basenames on
+    the head it swaps — a plain upsert raises ValueError, a transaction
+    is aborted (tombstoned, never replayed) with TxnConflictError."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iceberg_poc_spark.tables.manager import TxnConflictError
+
+    schema = "k long, s string"
+    mgr.create_table("t", spark.createDataFrame([], schema).schema, [])
+    mgr.append("t", spark.createDataFrame([(1, "old"), (2, "old")], schema))
+    ext = []
+    for i, d in enumerate(("a", "b")):
+        os.makedirs(tmp_path / d)
+        p = str(tmp_path / d / "part-0.parquet")
+        pq.write_table(pa.table({"k": [10 + i], "s": ["ext"]}), p)
+        ext.append(p)
+
+    def add_colliding(o):
+        # a writer whose head resolution ran before the txn record was
+        # published (so it does not roll that record forward first)
+        o._in_txn_repair = True
+        return o.add_files("t", ext)
+
+    fired = _race_from_alloc(mgr, monkeypatch, add_colliding)
+    up = spark.createDataFrame([(1, "new")], schema)
+    if in_txn:
+        txn = mgr.transaction()
+        txn.upsert("t", up, ["k"])
+        with pytest.raises(TxnConflictError, match="compact"):
+            txn.commit()
+        left = os.listdir(mgr._txns_dir())
+        assert [fn for fn in left if "." not in fn[4:]] == []
+        assert any(fn.endswith(".aborted") for fn in left)
+    else:
+        with pytest.raises(ValueError, match="compact"):
+            mgr.upsert_equality("t", up, ["k"])
+    assert mgr._current_version("t") == fired[0]
+    assert sorted(tuple(r) for r in mgr.read("t").collect()) == [
+        (1, "old"), (2, "old"), (10, "ext"), (11, "ext")
+    ]
