@@ -486,7 +486,8 @@ def q_stream_live_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         for copy in ("a", "b"):
             os.symlink(f, os.path.join(d, f"{copy}_{i:04d}.parquet"))
     stream = dedup_stream(load_events_stream(spark, d))
-    parts = stream_state_partitions(spark, table_path(sf_dir, "events"))
+    # sized from the drained dir: it holds every file twice
+    parts = stream_state_partitions(spark, d)
     with scoped_conf(
         spark, {"spark.sql.shuffle.partitions": str(parts)}
     ):

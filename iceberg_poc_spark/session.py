@@ -6,6 +6,13 @@ zstd parquet, 128 MB target files — reference
 re-optimize at runtime (partition coalescing, skew-join splitting) — the
 behaviors that matter at 100 TB / 1000-executor scale, while still running
 on ``local[N]`` here.
+
+Shuffle width follows the session's cores: ``get_spark`` and
+``tune_existing`` set ``spark.sql.shuffle.partitions`` to the context's
+``defaultParallelism`` (one task per core in a shuffle stage; AQE still
+coalesces small stages further), unless ``extra_conf`` names it. A fixed
+width wider than the cores only adds per-task overhead to the short
+jobs the lakehouse path runs.
 """
 
 from __future__ import annotations
@@ -23,10 +30,6 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # 32 gives one wave on up to 32 local cores; AQE coalesces further.
-    # On a real cluster this should be ~2-3x total cores (override it
-    # through get_spark(extra_conf=...)).
-    "spark.sql.shuffle.partitions": "32",
     # --- deterministic semantics for the DuckDB oracle ---
     "spark.sql.session.timeZone": "UTC",
     # testdata parquet timestamps are isAdjustedToUTC=false -> read as
@@ -40,6 +43,12 @@ DEFAULT_CONF: dict[str, str] = {
     # --- physical layout (reference parity, BASELINE.md) ---
     "spark.sql.parquet.compression.codec": "zstd",
     "spark.sql.files.maxPartitionBytes": str(TARGET_FILE_SIZE),
+    # the table layer reads the explicit file list its manifest names;
+    # above this many paths Spark stats them in a distributed listing
+    # job (one extra job per read) instead of on the driver. Explicit
+    # files need no directory discovery, so the driver stats them all
+    # up to a large table's worth of files.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "10000",
     # broadcast threshold: default 10MB is fine; make it explicit so the
     # intent (dims broadcast, facts shuffle) is visible.
     "spark.sql.autoBroadcastJoinThreshold": str(10 * 1024 * 1024),
@@ -72,7 +81,18 @@ def get_spark(
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if "spark.sql.shuffle.partitions" not in conf:
+        _core_sized_shuffles(spark)
+    return spark
+
+
+def _core_sized_shuffles(spark: SparkSession) -> None:
+    """One shuffle partition per core of the session's context."""
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(spark.sparkContext.defaultParallelism),
+    )
 
 
 from contextlib import contextmanager
@@ -110,7 +130,6 @@ def tune_existing(spark: SparkSession) -> SparkSession:
     for k in (
         "spark.sql.session.timeZone",
         "spark.sql.adaptive.enabled",
-        "spark.sql.shuffle.partitions",
         "spark.sql.parquet.inferTimestampNTZ.enabled",
         "spark.sql.legacy.parquet.nanosAsLong",
     ):
@@ -118,4 +137,5 @@ def tune_existing(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, DEFAULT_CONF[k])
         except Exception:
             pass  # non-runtime-settable under some configs; defaults still fine
+    _core_sized_shuffles(spark)
     return spark

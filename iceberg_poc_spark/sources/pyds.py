@@ -56,6 +56,8 @@ from pyspark.sql.types import (
 from iceberg_poc_spark.tables.manager import (
     ParquetTableManager,
     _dv_positions,
+    _hive_values,
+    _key_files,
     _may_match,
     _nested_nullable,
 )
@@ -223,18 +225,35 @@ def _apply_mor_deletes(tbl, entry: dict, table_dir: str):
         if mask is not None:
             # SQL DELETE keeps NULL-predicate rows: null -> keep
             tbl = tbl.filter(pc.fill_null(pc.invert(mask), True))
-    # the key set applying to THIS file: every row of a delete file
-    # written at birth (its descriptor seq is above the file's), the rows
-    # of a merged file whose __del_seq is — the executor-side twin of
-    # the manager read path's `__del_seq > __file_seq` condition
+    # the key set applying to THIS file: every row of a descriptor's
+    # key files (its descriptor seq is above the file's), the rows of a
+    # merged file whose __del_seq is — the executor-side twin of the
+    # manager read path's `__del_seq > __file_seq` condition. An
+    # upsert's key files are its data files: only the key columns are
+    # read, identity partition columns come from the hive path.
     key_sets: dict[tuple, list["pa.Table"]] = {}
     for g in entry.get("_eq", []):
-        gt = pq.read_table(os.path.join(table_dir, g["path"]))
-        if "__del_seq" in gt.column_names:
-            gt = gt.filter(pc.greater(gt["__del_seq"], entry["seq"]))
-        key_sets.setdefault(tuple(g["cols"]), []).append(
-            gt.select(list(g["cols"]))
-        )
+        cols = list(g["cols"])
+        for p in _key_files(g):
+            pf = pq.ParquetFile(os.path.join(table_dir, p))
+            have = set(pf.schema_arrow.names)
+            gt = pf.read(columns=[c for c in (*cols, "__del_seq") if c in have])
+            if "__del_seq" in have:
+                gt = gt.filter(pc.greater(gt["__del_seq"], entry["seq"]))
+            hive = _hive_values(p)
+            key_sets.setdefault(tuple(cols), []).append(
+                pa.table(
+                    {
+                        c: pc.cast(
+                            gt[c]
+                            if c in have
+                            else pa.array([hive.get(c)] * gt.num_rows, pa.string()),
+                            tbl[c].type,
+                        )
+                        for c in cols
+                    }
+                )
+            )
     for cols, parts in key_sets.items():
         keys = pa.concat_tables(parts)
         nn_mask = None

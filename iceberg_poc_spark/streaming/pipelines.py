@@ -35,50 +35,30 @@ from pyspark.sql.types import (
 from iceberg_poc_spark.tables.manager import ParquetTableManager
 
 
-# ts physical type per file-set identity: the footer peek
-# (spark.read.parquet(path).schema) costs a driver-side listing +
-# inference pass PER STREAM SETUP; the answer is a property of the FILES
-# (not the session), so it is memoized on the realpath+stat of EVERY
-# data file in the directory (the uncached answer is inferred over the
-# whole directory, so a first-file-only key could serve a wrong cached
-# answer for a dir whose later files differ — ADVICE r12). Symlinked
-# scratch dirs (fresh per run) resolve to the same underlying corpus
-# files and hit. Bounded LRU, same convention as _SCAN_PLANS.
-from collections import OrderedDict
-
-_TS_IS_LONG: "OrderedDict[tuple, bool]" = OrderedDict()
-_TS_IS_LONG_MAX = 64
-
-
-def _ts_is_long(spark: SparkSession, path: str) -> bool:
+def _ts_is_long(path: str) -> bool:
+    """Whether the events stream under ``path`` carries ``ts`` as a long,
+    read driver-side from one parquet footer (no Spark job): the
+    logical type TIMESTAMP(NANOS) reads as long (``nanosAsLong``), as
+    does a bare INT64; INT96 and micro/millisecond timestamps read as
+    timestamps. A directory with no file yet reads as timestamp."""
+    import json
     import os
 
-    key = None
-    try:
-        files = sorted(
-            f
-            for f in os.listdir(path)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-        if files:
-            stats = []
-            for f in files:
-                real = os.path.realpath(os.path.join(path, f))
-                st = os.stat(real)
-                stats.append((real, st.st_mtime_ns, st.st_size, st.st_ino))
-            key = tuple(stats)
-            hit = _TS_IS_LONG.get(key)
-            if hit is not None:
-                _TS_IS_LONG.move_to_end(key)
-                return hit
-    except OSError:
-        key = None
-    ans = isinstance(spark.read.parquet(path).schema["ts"].dataType, LongType)
-    if key is not None:
-        _TS_IS_LONG[key] = ans
-        while len(_TS_IS_LONG) > _TS_IS_LONG_MAX:
-            _TS_IS_LONG.popitem(last=False)
-    return ans
+    import pyarrow.parquet as pq
+
+    files = sorted(
+        f
+        for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+    if not files:
+        return False
+    schema = pq.ParquetFile(os.path.join(path, files[0])).schema
+    col = schema.column(schema.names.index("ts"))
+    if col.physical_type != "INT64":
+        return False
+    lt = col.logical_type
+    return lt.type != "TIMESTAMP" or json.loads(lt.to_json())["timeUnit"] == "nanoseconds"
 
 
 # Stateful-stream parallelism target: bytes of SOURCE input per state
@@ -137,8 +117,9 @@ def load_events_stream(
     timestamp exactly like the batch loader so stream/batch twins agree
     byte-for-byte. The generator's physical ts type has varied across
     corpus versions (TIMESTAMP(NANOS) -> long under nanosAsLong vs
-    timestamp[us] -> native), so peek at the footer with a batch read and
-    adapt — the same defensive typing sources/tables.py applies.
+    timestamp[us] -> native), so read the footer's logical type
+    (:func:`_ts_is_long`, no Spark job) and adapt — the same defensive
+    typing sources/tables.py applies.
 
     ``files_per_trigger`` sizes the micro-batches. The default derives it
     from the directory (ceil(n_files/4)) so a multi-file corpus drains
@@ -170,7 +151,7 @@ def load_events_stream(
             [f for f in os.listdir(path) if not f.startswith(("_", "."))]
         )
         files_per_trigger = max(1, -(-n_files // 4))
-    ts_is_long = _ts_is_long(spark, path)
+    ts_is_long = _ts_is_long(path)
     raw = (
         spark.readStream.schema(
             _events_schema(LongType() if ts_is_long else TimestampType())
@@ -531,8 +512,9 @@ def run_to_table_upsert(
     """Streaming CDC-upsert sink: each micro-batch is reduced to its
     last row per key (``order_cols`` descending breaks intra-batch ties)
     and committed through :meth:`ParquetTableManager.upsert_equality` —
-    ONE merge-on-read epoch per micro-batch (equality-delete file + the
-    batch's data files under one snapshot, no existing file rewritten).
+    ONE merge-on-read epoch per micro-batch (the batch's data files,
+    written once and named by the epoch's equality delete as its key
+    set, under one snapshot; no existing file rewritten).
     This is the minute-level CDC ingestion loop at 100 TB: per-epoch
     write cost is O(batch), and a failure-replayed epoch CONVERGES —
     re-upserting the same batch retires the first application's rows via
@@ -545,8 +527,8 @@ def run_to_table_upsert(
     )
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # no isEmpty() probe: an empty batch writes no data file, and
+        # an upsert that wrote none commits nothing
         last = (
             batch_df.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)

@@ -65,6 +65,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from iceberg_poc_spark.tables.xxh64 import bucket_of
+
 
 def _nested_nullable(dt: DataType) -> DataType:
     """Strip NOT NULL flags from nested struct/array/map members. Parquet
@@ -626,7 +628,10 @@ def _null_safe_eq(left: DataFrame, right: DataFrame, cols: list[str]) -> Column:
 # written at birth cannot hold its own seq (the version is allocated
 # after the write), so its seq lives on the descriptor; a file merged by
 # compact_deletes holds ``__del_seq`` per row and its descriptor's seq is
-# the highest of them. Predicate MoR deletes stay per-entry (``deletes``).
+# the highest of them. An upsert writes no delete file: its descriptor
+# names the epoch's own data files (``src``) as the key source, and
+# shares their seq, so they never delete their own rows. Predicate MoR
+# deletes stay per-entry (``deletes``).
 
 
 def _stamped(d: dict, seq: int) -> dict:
@@ -645,20 +650,42 @@ def _without_deletes(m: dict) -> dict:
     }
 
 
-def _seq_by_name(items: list[dict]) -> Column:
-    """The ``seq`` of the file a scanned row comes from, looked up by
-    file name in a literal map over ``items`` (entries or descriptors
-    of the files being read) — plain expression, no join. Built as ONE
-    SQL string: a per-literal Column costs a py4j round trip each."""
+def _by_file_name(pairs) -> Column:
+    """The value of the file a scanned row comes from, looked up by file
+    name in a literal map over ``pairs`` ((path, int or str value)) —
+    plain expression, no join. Built as ONE SQL string: a per-literal
+    Column costs a py4j round trip each."""
 
     def quoted(s: str) -> str:
         return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-    pairs = ", ".join(
-        f"{quoted(os.path.basename(d['path']))}, {int(d['seq'])}L"
-        for d in items
+    kv = ", ".join(
+        f"{quoted(os.path.basename(p))}, "
+        + (quoted(v) if isinstance(v, str) else f"{int(v)}L")
+        for p, v in pairs
     )
-    return F.expr(f"element_at(map({pairs}), _metadata.file_name)")
+    return F.expr(f"element_at(map({kv}), _metadata.file_name)")
+
+
+def _key_files(g: dict) -> tuple[str, ...]:
+    """The files holding a delete descriptor's rows (table-relative
+    paths), which are also its identity: an upsert's descriptor names
+    the epoch's data files (``src``), any other its one delete file."""
+    return tuple(g["src"]) if "src" in g else (g["path"],)
+
+
+def _hive_values(path: str) -> dict[str, str | None]:
+    """Identity partition values of a managed data file, from its hive
+    path (``data/k=v/...``; unescaped, the default partition as None).
+    The hive layout strips these columns from the file itself."""
+    from urllib.parse import unquote
+
+    out: dict[str, str | None] = {}
+    for seg in os.path.dirname(path).split(os.sep):
+        k, eq, v = seg.partition("=")
+        if eq:
+            out[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
+    return out
 
 
 def _by_cols(gdels: list[dict]) -> dict[tuple, list[dict]]:
@@ -1449,8 +1476,8 @@ class ParquetTableManager:
                     f"{e['path']!r}, which this commit rewrites; aborting"
                 )
         for key in ("global_eq_deletes", "global_pos_deletes"):
-            had = {g["path"] for g in base.get(key, [])}
-            if any(g["path"] not in had for g in head.get(key, [])):
+            had = {_key_files(g) for g in base.get(key, [])}
+            if any(_key_files(g) not in had for g in head.get(key, [])):
                 raise CommitConflict(
                     "a concurrent commit added a delete the rows this "
                     "commit rewrites would escape; aborting"
@@ -3145,8 +3172,7 @@ class ParquetTableManager:
         spec = self._spec(m)
         seg_stats = m.get("_seg_stats") or {}
         affected: list[dict] = []
-        allowed: dict[str, set[str]] | None = None
-        allowed_known = False
+        allowed = self._bucket_allowed(m, spec, where_bounds)
         for sid, chunk in self._manifest_spans(m):
             # segment-level pre-prune (identity-partition summaries):
             # a non-overlapping segment's entries go untouched WHOLESALE
@@ -3162,12 +3188,6 @@ class ParquetTableManager:
                 and not _seg_may_match(spec, seg_stats.get(sid), where_bounds)
             ):
                 continue
-            if not allowed_known:
-                # the single-row bucket probe job runs at most once no
-                # matter how many spans match; the filter itself is pure
-                # and applied per chunk
-                allowed = self._bucket_allowed(m, spec, where_bounds)
-                allowed_known = True
             cand = chunk if allowed is None else self._bucket_filter(
                 chunk, allowed
             )
@@ -3510,26 +3530,36 @@ class ParquetTableManager:
         self, name: str, schema: StructType, cols: tuple, gdels: list[dict]
     ) -> DataFrame:
         """``(cols..., __del_seq)`` rows of equality-delete descriptors
-        sharing one key-column set, in ONE multi-path scan: a merged file
-        carries ``__del_seq`` per row, a file written at birth takes its
-        descriptor's seq (looked up by file name). Explicit read schema
-        at the current table types — widening promotion covers
-        pre-widen delete files, same as data files."""
+        sharing one key-column set, in ONE multi-path scan of their key
+        files (:func:`_key_files`) that reads only the key columns: a
+        merged file carries ``__del_seq`` per row, any other file takes
+        its descriptor's seq (looked up by file name). An upsert's data
+        file lacks its identity partition columns; they come from its
+        path, also by file name. Deletion vectors and predicate deletes
+        on those files never shrink the key set. Explicit read schema at
+        the current table types — widening promotion covers pre-widen
+        files."""
         types = {f.name: f.dataType for f in schema.fields}
-        return (
-            self.spark.read.schema(
-                StructType(
-                    [StructField(c, types[c], True) for c in cols]
-                    + [StructField("__del_seq", LongType(), True)]
-                )
+        files = [(p, g["seq"]) for g in gdels for p in _key_files(g)]
+        df = self.spark.read.schema(
+            StructType(
+                [StructField(c, types[c], True) for c in cols]
+                + [StructField("__del_seq", LongType(), True)]
             )
-            .parquet(*[os.path.join(self._dir(name), g["path"]) for g in gdels])
-            .select(
-                *cols,
-                F.coalesce("__del_seq", _seq_by_name(gdels)).alias(
-                    "__del_seq"
-                ),
-            )
+        ).parquet(*[os.path.join(self._dir(name), p) for p, _ in files])
+
+        hive = {p: _hive_values(p) for p, _ in files}
+
+        def key(c: str) -> Column:
+            parted = [(p, v) for p, h in hive.items() if (v := h.get(c)) is not None]
+            if not parted:
+                return F.col(c)
+            restored = _by_file_name(parted).cast(types[c])
+            return F.coalesce(F.col(c), restored).alias(c)
+
+        return df.select(
+            *[key(c) for c in cols],
+            F.coalesce("__del_seq", _by_file_name(files)).alias("__del_seq"),
         )
 
     def file_deletes(self, name: str, manifest: dict) -> dict[str, FileDeletes]:
@@ -3549,9 +3579,7 @@ class ParquetTableManager:
         gdels = manifest.get("global_eq_deletes", [])
         spec = self._spec(manifest)
         bounds = [self._eq_delete_bounds(name, g) for g in gdels]
-        allowed = self._bucket_allowed_each(
-            manifest, spec, [w for w, _null in bounds]
-        )
+        allowed = [self._bucket_allowed(manifest, spec, w) for w, _n in bounds]
         eq_touch: list[set[int]] = []
         for g, (where, has_null), al in zip(gdels, bounds, allowed):
             older = [e for e in manifest["files"] if e["seq"] < g["seq"]]
@@ -3584,39 +3612,51 @@ class ParquetTableManager:
 
     def _eq_delete_bounds(self, name: str, g: dict) -> tuple[list, bool]:
         """(pruning predicate, has_null_keys) of one equality-delete
-        file, read driver-side from the small file itself: a
-        single-column set of at most :attr:`EQ_POINT_KEY_LIMIT` integer
-        or string keys becomes an exact ``in`` list (which also maps
-        through bucket transforms); any other set becomes per-column
-        [min, max] from the file's footer, normalized exactly like
-        data-file stats."""
+        descriptor, read driver-side from its key files
+        (:func:`_key_files`): a single-column set of at most
+        :attr:`EQ_POINT_KEY_LIMIT` integer or string keys becomes an
+        exact ``in`` list (which also maps through bucket transforms);
+        any other set becomes per-column [min, max] from the files'
+        footers, normalized exactly like data-file stats. A key column
+        a file lacks (an identity partition column the hive layout
+        strips) gives no bound."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        pf = pq.ParquetFile(os.path.join(self._dir(name), g["path"]))
-        md = pf.metadata
         cols = list(g["cols"])
-        if md.num_rows == 0:
+        pfs = [
+            pq.ParquetFile(os.path.join(self._dir(name), p))
+            for p in _key_files(g)
+        ]
+        if any(c not in pf.schema_arrow.names for pf in pfs for c in cols):
+            return [], True
+        n_rows = sum(pf.metadata.num_rows for pf in pfs)
+        if n_rows == 0:
             return [(cols[0], "in", [])], False
-        nulls = _collect_null_counts(md)
-        has_null = any(nulls.get(c, 1) > 0 for c in cols)
-        t = pf.schema_arrow.field(cols[0]).type
+        nulls = [_collect_null_counts(pf.metadata) for pf in pfs]
+        has_null = any(n.get(c, 1) > 0 for n in nulls for c in cols)
+        t = pfs[0].schema_arrow.field(cols[0]).type
         if (
             len(cols) == 1
-            and md.num_rows <= self.EQ_POINT_KEY_LIMIT
+            and n_rows <= self.EQ_POINT_KEY_LIMIT
             and (pa.types.is_integer(t) or pa.types.is_string(t))
         ):
-            vals = pf.read(columns=cols).column(0).to_pylist()
-            return [(cols[0], "in", [v for v in vals if v is not None])], has_null
-        stats = _collect_column_stats(md)
+            vals = [
+                v
+                for pf in pfs
+                for v in pf.read(columns=cols).column(0).to_pylist()
+                if v is not None
+            ]
+            return [(cols[0], "in", vals)], has_null
+        stats = [_collect_column_stats(pf.metadata) for pf in pfs]
         # no bound on timestamps: footer stats are UTC, while time
         # partition transforms use the session zone
         where = [
-            (c, op, stats[c][i])
+            (c, op, pick(st[c][i] for st in stats))
             for c in cols
-            if c in stats
-            and not pa.types.is_timestamp(pf.schema_arrow.field(c).type)
-            for op, i in ((">=", 0), ("<=", 1))
+            if all(c in st for st in stats)
+            and not pa.types.is_timestamp(pfs[0].schema_arrow.field(c).type)
+            for op, i, pick in ((">=", 0, min), ("<=", 1, max))
         ]
         return where, has_null
 
@@ -3624,41 +3664,50 @@ class ParquetTableManager:
         self, name: str, df: DataFrame, keys: list[str], ref: str = "main"
     ) -> int:
         """Merge-on-read UPSERT in ONE commit (≙ an Iceberg v2 streaming
-        upsert epoch: equality-delete file + data files under one
+        upsert epoch: an equality delete + data files under one
         snapshot/sequence number — the shape a CDC `foreachBatch` sink
-        commits per micro-batch). The incoming rows' key tuples become an
-        equality-delete file, recorded as one table-level descriptor in
-        ``global_eq_deletes``, and the incoming rows land as new data
-        files. Both take the commit's ``seq``: the delete applies to
-        every OLDER file (old versions of those keys vanish) and not to
-        the epoch's own files, so the commit atomically replaces each
-        key's row(s). NO existing file is rewritten and no manifest
-        entry changes; cost is one metadata commit + the new rows' write,
-        regardless of table size. Rows sharing a key within ``df`` all
-        survive (dedupe upstream per batch — Iceberg's upsert contract).
+        commits per micro-batch). The incoming rows land as new data
+        files, written ONCE: they are also the delete's key set, so the
+        one table-level descriptor in ``global_eq_deletes`` names them
+        as its key source (``src``) instead of a separate delete file
+        (the primary-key merge-on-read shape of Paimon and Hudi, under
+        the Iceberg v2 sequence rule). Both take the commit's ``seq``:
+        the delete applies to every OLDER file (old versions of those
+        keys vanish) and not to the epoch's own files, so the commit
+        atomically replaces each key's row(s). NO existing file is
+        rewritten and no manifest entry changes; cost is one metadata
+        commit + the new rows' write (≤2 Spark jobs, one manifest load),
+        regardless of table size. An empty ``df`` commits nothing and
+        returns the head. Rows sharing a key within ``df`` all survive
+        (dedupe upstream per batch — Iceberg's upsert contract).
         Readers pay one anti-join per key-column set, however many
         epochs are outstanding, until :meth:`rewrite_deletes`;
-        :meth:`compact_deletes` merges the epochs' delete files."""
-        staged = self._stage_upsert(name, df, keys)
-        return self._advance(name, ref, "upsert", self._upsert_derive(name, staged))
+        :meth:`compact_deletes` merges the epochs' key sets into one
+        delete file."""
+        m = self._load_manifest(name)
+        staged = self._stage_upsert(name, m, df, keys)
+        return self._advance(
+            name, ref, "upsert", self._upsert_derive(name, staged), base=m
+        )
 
     def _stage_upsert(
         self,
         name: str,
+        m: dict,
         df: DataFrame,
         keys: list[str],
         schema_json: dict | None = None,
     ) -> dict:
-        """Run the DATA half of an upsert epoch (distributed writes of
-        the new rows + the key-set delete file), with no head advance —
-        the JSON-able entry is applied later through
+        """Run the DATA half of an upsert epoch — ONE distributed write
+        of the new rows, which are also the epoch's key set — with no
+        head advance; ``m`` is the main head, loaded once by the caller.
+        The JSON-able entry is applied later through
         :meth:`_upsert_derive` (directly, or through a multi-table
         :class:`Transaction`).
         ``schema_json`` overrides the alignment schema — a Transaction
         passes its staged-DDL projection so an upsert staged after an
         add_column writes the evolved shape instead of silently
         dropping the new column."""
-        m = self._load_manifest(name)
         self._require_unique_basenames(name, m, "upsert")
         schema = StructType.fromJson(schema_json or m["schema"])
         schema_cols = [f.name for f in schema.fields]
@@ -3673,24 +3722,29 @@ class ParquetTableManager:
                 for f in schema.fields
             ]
         )
-        self._enforce_constraints(name, aligned)
-        types = {f.name: f.dataType for f in schema.fields}
-        dkeys = aligned.select(
-            *[F.col(c).cast(types[c]).alias(c) for c in keys]
-        ).distinct()
-        return {
-            "op": "upsert",
-            "added": self._write_files(name, aligned, self._spec(m)),
-            "eq_delete_files": self._write_eq_delete_files(name, dkeys, keys),
-        }
+        self._enforce_constraints(name, aligned, m)
+        added = []
+        for e in self._write_files(name, aligned, self._spec(m), manifest=m):
+            if e["records"]:
+                added.append(e)
+            else:  # an empty batch's writer may leave a 0-row file
+                os.remove(os.path.join(self._dir(name), e["path"]))
+        return {"op": "upsert", "added": added, "keys": list(keys)}
 
     def _upsert_derive(self, name: str, entry: dict):
-        """``derive`` of a staged upsert: append the delete descriptor(s)
-        and the epoch's files on the apply-time head. Both take this
-        commit's seq, so commits that won meanwhile correctly fall under
-        the delete (sequence order) while the epoch's own files are
-        exempt. Idempotent: None once the files are on the head."""
+        """``derive`` of a staged upsert: append the epoch's files and
+        ONE equality descriptor naming them as its key source (``src``)
+        on the apply-time head. Both take this commit's seq, so commits
+        that won meanwhile correctly fall under the delete (sequence
+        order) while the epoch's own files are exempt. Idempotent: None
+        once the files are on the head — so an epoch that wrote no file
+        commits nothing."""
         added_paths = {e["path"] for e in entry["added"]}
+        desc = {
+            "cols": list(entry["keys"]),
+            "src": [e["path"] for e in entry["added"]],
+            "bytes": sum(e["bytes"] for e in entry["added"]),
+        }
 
         def derive(head: dict) -> dict | None:
             if added_paths <= {e["path"] for e in head["files"]}:
@@ -3703,7 +3757,7 @@ class ParquetTableManager:
                 "files": head["files"] + entry["added"],
                 "global_eq_deletes": [
                     *head.get("global_eq_deletes", []),
-                    *entry["eq_delete_files"],
+                    desc,
                 ],
             }
 
@@ -3745,10 +3799,11 @@ class ParquetTableManager:
         )
 
     def compact_deletes(self, name: str) -> int:
-        """Merge the table-level delete files without touching any data
-        file (≙ the delete-file half of Iceberg's
-        rewrite_position_delete_files): the equality-delete files of each
-        key-column set become ONE file carrying ``(keys..., __del_seq)``
+        """Merge the table-level deletes without touching any data file
+        (≙ the delete-file half of Iceberg's
+        rewrite_position_delete_files): the key sets of each key-column
+        set's descriptors (delete files, or an upsert epoch's data files)
+        become ONE delete file carrying ``(keys..., __del_seq)``
         with the highest seq per key (a later delete of the same key
         subsumes an earlier one, since ``delete seq > file seq`` holds
         for the max whenever it holds for any), and the deletion vectors
@@ -3787,13 +3842,13 @@ class ParquetTableManager:
                     name, self._dv_encode(self._dv_coords(name, gpos))
                 )
             ]
-        eq_gone = {g["path"] for ds in merge_eq.values() for g in ds}
-        pos_gone = {g["path"] for g in gpos} if merged_pos else set()
+        eq_gone = {_key_files(g) for ds in merge_eq.values() for g in ds}
+        pos_gone = {_key_files(g) for g in gpos} if merged_pos else set()
 
         def swap(descs: list[dict], gone: set, merged: list[dict]) -> list:
             # descriptors the head gained since m stay as they are; the
             # merged ones must all still be there
-            kept = [g for g in descs if g["path"] not in gone]
+            kept = [g for g in descs if _key_files(g) not in gone]
             if len(kept) + len(gone) != len(descs):
                 raise CommitConflict(
                     "a concurrent commit removed delete files this "
@@ -4185,7 +4240,11 @@ class ParquetTableManager:
                 else []
             )
             if gdels:
-                meta_cols.append(_seq_by_name(entries).alias("__file_seq"))
+                meta_cols.append(
+                    _by_file_name((e["path"], e["seq"]) for e in entries).alias(
+                        "__file_seq"
+                    )
+                )
             def _field_expr(f: StructField) -> Column:
                 if f.name in absent:
                     v, dt = dflt[f.name]
@@ -4766,72 +4825,43 @@ class ParquetTableManager:
         of an ``==``/``in`` predicate on the bucket's source column.
         Bucket transforms are not order-preserving, so :func:`_may_match`
         skips them; membership still maps exactly: x IN (v1..vn) =>
-        bucket(x) IN (bucket(v1)..bucket(vn)). The literals are hashed
-        with the writer's own expression (xxhash64 after a cast to the
-        column's declared type — hash input type changes the hash) in one
-        single-row driver job. Conservative: files from a spec generation
-        without the bucket value are kept."""
+        bucket(x) IN (bucket(v1)..bucket(vn)). Conservative: files from
+        a spec generation without the bucket value are kept."""
         allowed = self._bucket_allowed(m, spec, where)
         if allowed is None:
             return files
         return self._bucket_filter(files, allowed)
 
     @staticmethod
-    def _bucket_probes(
+    def _bucket_allowed(
         m: dict, spec: list["Transform"], where: list
-    ) -> list[tuple[str, Column]]:
+    ) -> dict[str, set[str]] | None:
+        """Bucket field -> the bucket-value strings the ``==``/``in``
+        literals of ``where`` on its source column can land in, or None
+        when bucket pruning does not apply. Each literal is hashed in
+        pure Python with the writer's own function (:func:`bucket_of`:
+        Spark's xxhash64 after a cast to the column's declared type —
+        hash input type changes the hash), so planning runs no Spark
+        job. A literal with no exact Python hash leaves its field
+        unpruned."""
         schema = StructType.fromJson(m["schema"])
-        probes: list[tuple[str, Column]] = []
+        allowed: dict[str, set[str]] = {}
+        blind: set[str] = set()
         for col, op, lit_v in where:
             if op not in ("==", "in"):
                 continue
-            vals = lit_v if op == "in" else [lit_v]
             for t in spec:
                 if t.kind != "bucket" or t.source != col:
                     continue
-                dt = schema[col].dataType
-                for v in vals:
-                    probes.append(
-                        (
-                            t.field_name,
-                            F.pmod(F.xxhash64(F.lit(v).cast(dt)), F.lit(t.arg)),
-                        )
-                    )
-        return probes
-
-    def _bucket_allowed(
-        self, m: dict, spec: list["Transform"], where: list
-    ) -> dict[str, set[str]] | None:
-        """allowed bucket values for a predicate, or None when bucket
-        pruning does not apply (no bucket probes, or a metadata-only
-        manager without a session — conservative, keep all files)."""
-        return self._bucket_allowed_each(m, spec, [where])[0]
-
-    def _bucket_allowed_each(
-        self, m: dict, spec: list["Transform"], wheres: list[list]
-    ) -> list[dict[str, set[str]] | None]:
-        """:meth:`_bucket_allowed` of each predicate (field -> allowed
-        bucket-value strings) — ONE single-row driver job for all of
-        them, computed once per (delete/scan) call and reusable across
-        every segment span."""
-        if self.spark is None:  # probes are Columns: they need a session
-            return [None] * len(wheres)
-        probes = [self._bucket_probes(m, spec, w) for w in wheres]
-        flat = [p for ps in probes for p in ps]
-        if not flat:
-            return [None] * len(wheres)
-        row = iter(
-            self.spark.range(1)
-            .select(*[c.alias(f"b{i}") for i, (_f, c) in enumerate(flat)])
-            .collect()[0]
-        )
-        out: list[dict[str, set[str]] | None] = []
-        for ps in probes:
-            allowed: dict[str, set[str]] = {}
-            for fname, _c in ps:
-                allowed.setdefault(fname, set()).add(str(next(row)))
-            out.append(allowed or None)
-        return out
+                for v in lit_v if op == "in" else [lit_v]:
+                    b = bucket_of(v, schema[col].dataType, t.arg)
+                    if b is None:
+                        blind.add(t.field_name)
+                    else:
+                        allowed.setdefault(t.field_name, set()).add(str(b))
+        for f in blind:
+            allowed.pop(f, None)
+        return allowed or None
 
     @staticmethod
     def _bucket_filter(
@@ -4863,9 +4893,9 @@ class ParquetTableManager:
         all-null files, and an all-null column fails every comparison
         even without min/max stats), Bloom indexes, and BUCKET
         membership for ``==``/``in`` (the literal's bucket is computed
-        with the same xxhash64 the writer used — one driver-side
-        single-row job per scan, never a data pass). ALL predicates are
-        still applied row-level as residuals.
+        in pure Python with the same xxhash64 the writer used, so
+        planning runs no Spark job). ALL predicates are still applied
+        row-level as residuals.
         Returns (df, files_planned, files_total)."""
         w = where or []
         raw, files, total = self._plan_read(name, self._current_version(name), w)
@@ -5155,8 +5185,8 @@ class ParquetTableManager:
         returned once (rows are told apart by their physical
         coordinate)."""
         def new_in_m(lk: str) -> list[dict]:
-            old = {g["path"] for g in pm.get(lk, [])}
-            return [g for g in m.get(lk, []) if g["path"] not in old]
+            old = {_key_files(g) for g in pm.get(lk, [])}
+            return [g for g in m.get(lk, []) if _key_files(g) not in old]
 
         new_eq = new_in_m("global_eq_deletes")
         new_pos = new_in_m("global_pos_deletes")
@@ -5333,12 +5363,15 @@ class ParquetTableManager:
             mm = self._load_manifest(name, v)
             live_segs.update(sid for sid, _ in mm["_seg_layout"])
             live.update(e["path"] for e in mm["files"])
+            # an upsert descriptor's source files stay while it is live,
+            # even once compaction or a delete took them out of files
             live.update(
-                g["path"]
+                p
                 for g in (
                     mm.get("global_eq_deletes", [])
                     + mm.get("global_pos_deletes", [])
                 )
+                for p in _key_files(g)
             )
         removed_files = removed_snaps = 0
         drop_segs: set[str] = set()
@@ -5350,11 +5383,12 @@ class ParquetTableManager:
             dropped_paths = [
                 e["path"] for e in dm["files"] if not e.get("external")
             ] + [
-                g["path"]
+                p
                 for g in (
                     dm.get("global_eq_deletes", [])
                     + dm.get("global_pos_deletes", [])
                 )
+                for p in _key_files(g)
             ]
             for p in dropped_paths:
                 if p not in live:
@@ -5813,10 +5847,11 @@ class Transaction:
     def upsert(
         self, name: str, df: DataFrame, keys: list[str], ref: str = "main"
     ) -> "Transaction":
-        """Stage a merge-on-read upsert epoch (equality-delete file + the
-        batch's data files — :meth:`ParquetTableManager.upsert_equality`
-        semantics) to land atomically with the transaction's other
-        staged operations: the fact-and-dim-CDC-epoch-together shape.
+        """Stage a merge-on-read upsert epoch (the batch's data files,
+        which its equality delete names as its key set —
+        :meth:`ParquetTableManager.upsert_equality` semantics) to land
+        atomically with the transaction's other staged operations: the
+        fact-and-dim-CDC-epoch-together shape.
         The delete takes its sequence number at APPLY time against the
         then-current head, so commits that win in between correctly
         fall under the delete (sequence order).
@@ -5825,7 +5860,11 @@ class Transaction:
         if self._done:
             raise ValueError("transaction already committed")
         entry = self.mgr._stage_upsert(
-            name, df, keys, schema_json=self._schemas.get((name, ref))
+            name,
+            self.mgr._load_manifest(name),
+            df,
+            keys,
+            schema_json=self._schemas.get((name, ref)),
         )
         self._staged.append({"table": name, "ref": ref, **entry})
         return self

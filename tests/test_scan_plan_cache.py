@@ -121,29 +121,3 @@ def test_subdir_write_invalidates(spark, tmp_path):
     again = scan_parquet(spark, root)
     assert again is not first
     assert again.count() == n1 + 2
-
-
-def test_ts_peek_keys_on_all_files(spark, tmp_path):
-    # _TS_IS_LONG must not serve a first-file-shared dir whose remaining
-    # files differ (ADVICE r12): the key covers EVERY data file's
-    # identity, so a dir that gains a file is a fresh entry, and the
-    # cache stays bounded.
-    import os
-
-    from iceberg_poc_spark.streaming import pipelines as P
-
-    src = os.path.realpath("/root/testdata/sf0.001/events.parquet")
-    d = str(tmp_path / "dir")
-    os.makedirs(d)
-    os.symlink(src, os.path.join(d, "a.parquet"))
-    P._TS_IS_LONG.clear()
-    a1 = P._ts_is_long(spark, d)
-    a2 = P._ts_is_long(spark, d)
-    assert a1 == a2
-    assert len(P._TS_IS_LONG) == 1  # repeat call hit, no new entry
-    # same FIRST file, but the dir gained a second file: must be a new
-    # key (the old single-file entry may not be served for the new set)
-    os.symlink(src, os.path.join(d, "b.parquet"))
-    P._ts_is_long(spark, d)
-    assert len(P._TS_IS_LONG) == 2
-    assert len(P._TS_IS_LONG) <= P._TS_IS_LONG_MAX

@@ -395,6 +395,39 @@ def test_stream_cdc_upsert_sink_converges_to_batch_state(spark, tmp_path):
     assert sorted(map(tuple, mgr.read("users_live").collect())) == want
 
 
+def test_ts_peek_reads_footer_logical_type(spark, tmp_path):
+    """The stream loader types ``ts`` from one parquet footer, as Spark
+    infers it under nanosAsLong: TIMESTAMP(NANOS) and a bare INT64 read
+    as long; INT96 and micro/millisecond TIMESTAMPs as timestamps."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType
+
+    from iceberg_poc_spark.streaming.pipelines import _ts_is_long
+
+    cases = {
+        "nanos": (pa.timestamp("ns"), {}),
+        "micros": (pa.timestamp("us"), {}),
+        "millis": (pa.timestamp("ms"), {}),
+        "int96": (pa.timestamp("ns"), {"use_deprecated_int96_timestamps": True}),
+        "int64": (pa.int64(), {}),
+    }
+    got = {}
+    for name, (t, kw) in cases.items():
+        d = tmp_path / name
+        d.mkdir()
+        v = dt.datetime(2024, 1, 1) if pa.types.is_timestamp(t) else 1
+        pq.write_table(pa.table({"ts": pa.array([v], t)}), str(d / "a.parquet"), **kw)
+        got[name] = _ts_is_long(str(d))
+        spark_type = spark.read.parquet(str(d)).schema["ts"].dataType
+        assert got[name] == isinstance(spark_type, LongType), name
+    assert got == {
+        "nanos": True, "micros": False, "millis": False, "int96": False, "int64": True
+    }
+
+
 def test_table_pipeline_incremental_and_exactly_once(spark):
     """Bronze->silver table-to-table pipeline: drain #2 (after the late
     fourth bronze append) resumes from the checkpoint and ships ONLY the

@@ -5,6 +5,7 @@ time travel, schema evolution, compaction, nested-schema round-trip."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -1224,16 +1225,16 @@ def test_txn_crash_before_publish_invisible(mgr, spark):
 
 def test_compact_deletes_folds_stacks_into_global_seq_deletes(mgr, spark):
     """Each upsert epoch records one sequence-scoped table-level delete
-    file, carrying its commit's seq like the epoch's data files; no
-    manifest entry ever changes. The read plan is independent of the
-    epoch count: ONE anti-join and no Union over 8 epochs, before and
-    after compaction. compact_deletes merges the files into ONE per
-    key-column set (per-key MAX seq) with IDENTICAL row-visible VALUES,
-    moves no data file, is a no-op when nothing is left to merge, and
-    the superseded delete files are reaped by expire_snapshots once
-    unreferenced. Epochs landed AFTER a compaction add files again and
-    MERGE INTO the existing one on the next pass; rewrite_deletes
-    clears the table-level state entirely."""
+    descriptor, carrying its commit's seq like the epoch's data files it
+    names as its key set; no manifest entry ever changes. The read plan
+    is independent of the epoch count: ONE anti-join and no Union over
+    8 epochs, before and after compaction. compact_deletes merges the
+    key sets into ONE delete file per key-column set (per-key MAX seq)
+    with IDENTICAL row-visible VALUES, moves no data file, is a no-op
+    when nothing is left to merge, and expiry keeps the merged file and
+    the data files. Epochs landed AFTER a compaction add descriptors
+    again and MERGE INTO the existing file on the next pass;
+    rewrite_deletes clears the table-level state entirely."""
     import os
 
     def plan(df):
@@ -1272,10 +1273,18 @@ def test_compact_deletes_folds_stacks_into_global_seq_deletes(mgr, spark):
     assert sorted(tuple(map(str, r)) for r in mgr.read("cd").collect()) == before
     # idempotent no-op once merged: no new commit
     assert mgr.compact_deletes("cd") == v
+    # the epochs wrote no delete file (their data files were their key
+    # sets): deletes/ holds only the merged file, and expiry keeps it
+    # and every data file the head lists
     deldir = os.path.join(mgr._dir("cd"), "deletes")
-    n_before = len(os.listdir(deldir))
+    merged = [os.path.basename(g["path"]) for g in m2["global_eq_deletes"]]
+    assert sorted(os.listdir(deldir)) == merged
     mgr.expire_snapshots("cd", keep_last=1)
-    assert len(os.listdir(deldir)) < n_before
+    assert sorted(os.listdir(deldir)) == merged
+    assert all(
+        os.path.exists(os.path.join(mgr._dir("cd"), e["path"]))
+        for e in m2["files"]
+    )
     # a post-compaction epoch: a second table-level file, values
     # correct, and the next compaction merges it into ONE again
     batch = spark.createDataFrame(
@@ -1307,10 +1316,27 @@ def test_compact_deletes_folds_stacks_into_global_seq_deletes(mgr, spark):
     assert {r.k: r.v for r in mgr.read("cd").collect()} == want
 
 
+def _jobs_of(spark, fn):
+    """(fn(), ids of the Spark jobs it ran) — counted by job group once
+    the listener bus has delivered every event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, "counted")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_upsert_changes_no_entry_and_runs_no_bounds_job(mgr, spark, monkeypatch):
     """An upsert appends its delete descriptor and data files and
     leaves every parent entry unchanged — on a bucketed table too — and
-    stages without a key-bounds collect or a bucket-probe job."""
+    stages without a key-bounds collect or a bucket probe: one manifest
+    load and at most two Spark jobs (the data write)."""
     df = spark.range(0, 200).select(
         F.concat(F.lit("k"), F.col("id")).alias("k"), F.col("id").alias("v")
     )
@@ -1323,15 +1349,58 @@ def test_upsert_changes_no_entry_and_runs_no_bounds_job(mgr, spark, monkeypatch)
 
     monkeypatch.setattr(ParquetTableManager, "_eq_key_predicate", forbidden)
     monkeypatch.setattr(ParquetTableManager, "_bucket_allowed", forbidden)
+    loads = []
+    real_load = ParquetTableManager._load_manifest
+
+    def counted_load(self, *a, **k):
+        loads.append(a)
+        return real_load(self, *a, **k)
+
+    monkeypatch.setattr(ParquetTableManager, "_load_manifest", counted_load)
     up = spark.createDataFrame([("k7", -7), ("k900", 900)], "k string, v long")
-    v = mgr.upsert_equality("up", up, ["k"])
+    v, jobs = _jobs_of(spark, lambda: mgr.upsert_equality("up", up, ["k"]))
     monkeypatch.undo()
+    # one manifest load and one data write: no key-set pass, no probe
+    assert len(loads) == 1
+    assert len(jobs) <= 2, jobs
     m = mgr._load_manifest("up")
     assert m["files"][: len(m0["files"])] == m0["files"]
-    assert all(e["seq"] == v for e in m["files"][len(m0["files"]) :])
-    assert [g["seq"] for g in m["global_eq_deletes"]] == [v]
+    added = m["files"][len(m0["files"]) :]
+    assert all(e["seq"] == v for e in added)
+    # the descriptor names the epoch's own files as its key set, at
+    # their seq; no delete file is written
+    assert m["global_eq_deletes"] == [
+        {
+            "cols": ["k"],
+            "src": [e["path"] for e in added],
+            "bytes": sum(e["bytes"] for e in added),
+            "seq": v,
+        }
+    ]
+    assert not os.path.exists(os.path.join(mgr._dir("up"), "deletes"))
     got = {r.k: r.v for r in mgr.read("up").collect()}
     assert len(got) == 201 and got["k7"] == -7 and got["k900"] == 900
+    # an empty batch writes no file and commits nothing
+    empty = spark.createDataFrame([], "k string, v long")
+    assert mgr.upsert_equality("up", empty, ["k"]) == v
+    assert len(mgr._load_manifest("up")["files"]) == len(m["files"])
+
+
+def test_bucket_scan_plans_without_a_spark_job(mgr, spark):
+    """Bucket pruning hashes the literals in Python: planning a point
+    scan over two bucket transforms runs no Spark job, prunes files, and
+    keeps every file holding a match."""
+    df = spark.range(0, 400).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("s"), (F.col("id") % 13).cast("string")).alias("s"),
+    )
+    mgr.create_table("bk", df.schema, [bucket("k", 8), bucket("s", 4)])
+    mgr.append("bk", df)
+    where = [("k", "in", [5, 18, 300]), ("s", "==", "s5")]
+    (out, planned, total), jobs = _jobs_of(spark, lambda: mgr.scan("bk", where))
+    assert jobs == []
+    assert planned < total
+    assert sorted(r.k for r in out.collect()) == [5, 18]
 
 
 def test_cherry_pick_across_upsert_takes_fresh_seq(mgr, spark):
@@ -1351,11 +1420,159 @@ def test_cherry_pick_across_upsert_takes_fresh_seq(mgr, spark):
     mgr.upsert_equality(
         "cp", spark.createDataFrame([(1, "main-up")], "k long, v string"), ["k"]
     )
-    mgr.cherry_pick("cp", snap)
+    v = mgr.cherry_pick("cp", snap)
     want = {(1, "branch"), (1, "main-up"), (2, "b")}
     assert {(r.k, r.v) for r in mgr.read("cp").collect()} == want
+    # the upsert's descriptor keeps its files' seq; the pick takes its own
+    m = mgr._load_manifest("cp")
+    (desc,) = m["global_eq_deletes"]
+    seqs = {e["path"]: e["seq"] for e in m["files"]}
+    assert {seqs[p] for p in desc["src"]} == {desc["seq"]}
+    assert m["files"][-1]["seq"] == v > desc["seq"]
     mgr.compact_deletes("cp")
     assert {(r.k, r.v) for r in mgr.read("cp").collect()} == want
+
+
+def _epoch_table(mgr, spark, name):
+    """A g-partitioned table plus one upsert epoch that MOVES key 5 from
+    g=0 to g=1: the epoch's data file lives in g=1, the row it shadows
+    in g=0. Returns (expected rows, the epoch's descriptor)."""
+    base = spark.createDataFrame(
+        [(k, k // 10, f"v{k}") for k in range(30)], "k long, g long, v string"
+    ).coalesce(1)
+    mgr.create_table(name, base.schema, [identity("g")])
+    mgr.append(name, base)
+    mgr.upsert_equality(
+        name,
+        spark.createDataFrame([(5, 1, "moved")], "k long, g long, v string"),
+        ["k"],
+    )
+    (desc,) = mgr._load_manifest(name)["global_eq_deletes"]
+    want = [(k, k // 10, f"v{k}") for k in range(30) if k != 5]
+    return sorted(want + [(5, 1, "moved")]), desc
+
+
+def _rows(mgr, name, **kw):
+    return sorted((r.k, r.g, r.v) for r in mgr.read(name, **kw).collect())
+
+
+@pytest.mark.parametrize("removal", ["cow_delete", "compact_partitions", "compact"])
+def test_upsert_key_source_outlives_its_entry(mgr, spark, removal):
+    """A data file an upsert descriptor names as its key set stays on
+    disk through expiry while a kept snapshot's descriptor names it,
+    after a CoW delete, compact_partitions or compact took it out of
+    the file list — the shadowed g=0 row stays deleted."""
+    want, desc = _epoch_table(mgr, spark, "src")
+    pre = mgr._load_manifest("src")["version"]
+    keep = 1
+    if removal == "cow_delete":
+        mgr.delete("src", where=[("v", "==", "moved")])
+        want = [r for r in want if r[0] != 5]
+    elif removal == "compact_partitions":
+        # g=1 holds the base file and the epoch's: only g=1 is rewritten
+        out = mgr.compact_partitions("src", small_file_bytes=1 << 30)
+        assert out["rewritten"] == 2
+    else:
+        mgr.compact("src")  # folds every delete: the descriptor leaves the head
+        assert "global_eq_deletes" not in mgr._load_manifest("src")
+        keep = 2  # ...but stays live in the kept pre-compact snapshot
+    head = {e["path"] for e in mgr._load_manifest("src")["files"]}
+    assert not head & set(desc["src"])
+    mgr.expire_snapshots("src", keep_last=keep)
+    for p in desc["src"]:
+        assert os.path.exists(os.path.join(mgr._dir("src"), p)), p
+    assert _rows(mgr, "src") == want
+    if removal == "compact":
+        assert _rows(mgr, "src", snapshot_id=pre) == want
+
+
+@pytest.mark.parametrize("fold", ["compact_deletes", "rewrite_deletes"])
+def test_upsert_descriptors_fold(mgr, spark, fold):
+    """compact_deletes merges upsert descriptors into one delete file at
+    their max seq, and rewrite_deletes materializes and drops them —
+    either way with unchanged rows."""
+    want, _desc = _epoch_table(mgr, spark, "fold")
+    mgr.upsert_equality(
+        "fold",
+        spark.createDataFrame([(25, 0, "back")], "k long, g long, v string"),
+        ["k"],
+    )
+    want = sorted([r for r in want if r[0] != 25] + [(25, 0, "back")])
+    assert _rows(mgr, "fold") == want
+    seqs = [g["seq"] for g in mgr._load_manifest("fold")["global_eq_deletes"]]
+    if fold == "compact_deletes":
+        mgr.compact_deletes("fold")
+        (g,) = mgr._load_manifest("fold")["global_eq_deletes"]
+        assert "src" not in g and g["path"].startswith("deletes")
+        assert g["seq"] == max(seqs)
+        assert _rows(mgr, "fold") == want
+    mgr.rewrite_deletes("fold")
+    assert "global_eq_deletes" not in mgr._load_manifest("fold")
+    assert _rows(mgr, "fold") == want
+
+
+def test_upsert_key_set_ignores_deletion_vectors(mgr, spark):
+    """A deletion vector on an epoch's own row removes that row but not
+    its key from the epoch's key set: the older row it shadows stays
+    deleted — on the manager read, after compact_deletes, and through
+    the snaptable connector."""
+    want, _desc = _epoch_table(mgr, spark, "dv")
+    pos = (
+        mgr.read_with_positions("dv")
+        .filter(F.col("v") == "moved")
+        .select("_file_name", "_pos")
+    )
+    mgr.delete_positions("dv", pos)
+    want = [r for r in want if r[0] != 5]
+    assert _rows(mgr, "dv") == want
+    from iceberg_poc_spark.sources.pyds import register_snaptable
+
+    register_snaptable(spark)
+    conn = (
+        spark.read.format("snaptable")
+        .option("warehouse", mgr.warehouse)
+        .option("table", "dv")
+        .load()
+    )
+    assert sorted((r.k, r.g, r.v) for r in conn.collect()) == want
+    mgr.upsert_equality(
+        "dv",
+        spark.createDataFrame([(7, 0, "up")], "k long, g long, v string"),
+        ["k"],
+    )
+    want = sorted([r for r in want if r[0] != 7] + [(7, 0, "up")])
+    mgr.compact_deletes("dv")
+    assert _rows(mgr, "dv") == want
+
+
+def test_txn_upsert_replay_keeps_seq_pairing(mgr, spark):
+    """A transaction upsert replayed by repair after a crash lands its
+    descriptor at its files' seq, above a commit that won meanwhile (so
+    that commit's row of the key falls under it), and re-applying the
+    entry is a no-op."""
+    base = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    mgr.create_table("tx", base.schema, [])
+    mgr.append("tx", base)
+    orig = ParquetTableManager._apply_txn
+    ParquetTableManager._apply_txn = lambda self, seq, record: (_ for _ in ()).throw(
+        RuntimeError("crash after publish")
+    )
+    try:
+        txn = mgr.transaction()
+        txn.upsert(
+            "tx", spark.createDataFrame([(1, "txn")], "k long, v string"), ["k"]
+        )
+        with pytest.raises(RuntimeError, match="crash after publish"):
+            txn.commit()
+    finally:
+        ParquetTableManager._apply_txn = orig
+    fresh = ParquetTableManager(spark, mgr.warehouse)
+    assert {(r.k, r.v) for r in fresh.read("tx").collect()} == {(1, "txn"), (2, "b")}
+    m = fresh._load_manifest("tx")
+    (desc,) = m["global_eq_deletes"]
+    seqs = {e["path"]: e["seq"] for e in m["files"]}
+    assert {seqs[p] for p in desc["src"]} == {desc["seq"]} == {m["version"]}
+    assert fresh._upsert_derive("tx", txn._staged[0])(m) is None
 
 
 def test_append_merge_schema_adds_and_widens(mgr, spark):
