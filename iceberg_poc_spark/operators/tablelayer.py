@@ -821,11 +821,13 @@ def q_meta_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Merge-on-read DELETE (≙ Iceberg v2 delete files, the other half "
     "of the CoW/MoR trade q_row_dml demonstrates): two stacked predicate "
-    "deletes commit as PURE METADATA — zero data files rewritten "
-    "(identical path sets asserted in tests/test_tablelayer.py) — and "
-    "the read path applies NOT(predicate) to exactly the affected "
-    "files, which is what this query exercises end-to-end against the "
-    "oracle's filtered aggregate. Write cost O(1) per delete regardless "
+    "deletes commit as PURE METADATA — each is one table-level "
+    "{where, seq} descriptor, zero data files rewritten and no manifest "
+    "entry changed (asserted in tests/test_tablelayer.py) — and the read "
+    "path applies NOT(predicate) to every file older than the delete, "
+    "as one filter in the scan's projection, which is what this query "
+    "exercises end-to-end against the oracle's filtered aggregate. "
+    "Write cost O(1) per delete regardless "
     "of table size (the GDPR-erasure-stream trade); readers pay the "
     "filter until rewrite_deletes() folds it (only dirty files "
     "rewritten — tests/test_table_manager.py). Time travel to the "
@@ -1498,9 +1500,11 @@ def _setup_orders_mc(spark: SparkSession, sf_dir: str) -> tuple:
     "computed as manifest record counts for every CLEAN file plus a "
     "real post-delete scan of ONLY the delete-dirty files. Which files "
     "a delete may touch comes from the manager's one owner of the "
-    "delete format (file_deletes: predicate deletes on the entry, "
-    "equality deletes with a higher seq whose key bounds may match the "
-    "file, deletion vectors naming the file) — here: the 1997 partition; the only-dirty-year split is "
+    "delete format (file_deletes: predicate and equality deletes with "
+    "a higher seq whose predicate or key bounds may match the file, "
+    "deletion vectors naming the file) — here: the 1997 partition's "
+    "files, which the predicate's partition bound selects; the "
+    "only-dirty-year split is "
     "asserted in tests/test_tablelayer.py, so the metadata half is "
     "provably doing the work for the other years. Cost is O(files) "
     "metadata + O(dirty data) — at 100 TB with a GDPR erasure stream "
@@ -3546,8 +3550,9 @@ def _setup_orders_snaphist(spark: SparkSession, sf_dir: str):
     """orders_snaphist: a deterministic 5-commit history — create, three
     keyspace-sliced appends (year-partitioned: one data file per year per
     append, so file counts are layout-deterministic), and one MoR
-    predicate delete (metadata-only attach: file/record rollups
-    unchanged — exactly what snapshot inspection must show)."""
+    predicate delete (one table-level descriptor, no manifest entry
+    changed: file/record rollups unchanged — exactly what snapshot
+    inspection must show)."""
     from iceberg_poc_spark.tables import years
 
     mgr, wh = _mgr_for(spark, sf_dir)
@@ -3612,11 +3617,11 @@ def _setup_orders_snaphist(spark: SparkSession, sf_dir: str):
     "touching entries (snapshot inspection of a 1M-file table reads "
     "~2k summary dicts). The history is deterministic by construction: "
     "year-partitioned appends write one file per year (the partition "
-    "co-location shuffle), and the MoR predicate delete is a "
-    "metadata-only attach whose rollups must NOT change — a delete "
-    "that rewrote files, double-counted attached entries, or lost a "
-    "segment summary all hash-diverge from the oracle's relational "
-    "replay of the same five commits.",
+    "co-location shuffle), and the MoR predicate delete is one "
+    "table-level descriptor that changes no entry, so its rollups must "
+    "NOT change — a delete that rewrote files, double-counted entries, "
+    "or lost a segment summary all hash-diverge from the oracle's "
+    "relational replay of the same five commits.",
 )
 def q_meta_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     mgr = _setup_orders_snaphist(spark, sf_dir)

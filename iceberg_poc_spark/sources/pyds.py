@@ -167,10 +167,11 @@ def _apply_mor_deletes(tbl, entry: dict, table_dir: str):
     NOT(predicate) filters and null-safe anti-joins, so `.format(
     "snaptable")` readers see the SAME post-delete state as
     ``manager.read`` (a dirty table must never leak deleted rows through
-    the connector face). Besides the entry's own predicate ``deletes``,
-    the driver attaches (:meth:`ParquetTableManager.file_deletes`)
-    ``_dv`` — the deletion vectors naming the file — and ``_eq`` — the
-    equality-delete descriptors with a higher seq whose key bounds may
+    the connector face). The driver attaches
+    (:meth:`ParquetTableManager.file_deletes`) ``_dv`` — the deletion
+    vectors naming the file — and, among the descriptors with a higher
+    seq than the file's, ``_pred`` — the predicate deletes that may
+    match it — and ``_eq`` — the equality deletes whose key bounds may
     match it."""
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -207,9 +208,9 @@ def _apply_mor_deletes(tbl, entry: dict, table_dir: str):
         ">": pc.greater,
         "<": pc.less,
     }
-    for dw in entry.get("deletes", []):
+    for g in entry.get("_pred", []):
         mask = None
-        for col, op, v in (tuple(w) for w in dw):
+        for col, op, v in g["where"]:
             c = tbl[col]
             if op == "in":
                 m = pc.is_in(
@@ -219,6 +220,8 @@ def _apply_mor_deletes(tbl, entry: dict, table_dir: str):
                         c.type,
                     ),
                 )
+            elif op in ("isnull", "notnull"):
+                m = pc.is_null(c) if op == "isnull" else pc.is_valid(c)
             else:
                 m = ops[op](c, _coerce_scalar(v, c.type))
             mask = m if mask is None else pc.and_kleene(mask, m)
@@ -507,8 +510,8 @@ class SnapTableReader(DataSourceReader):
         self._files = []
         for e in manifest["files"]:
             d = deletes[e["path"]]
-            if d.eq or d.dv:
-                e = {**e, "_eq": d.eq, "_dv": d.dv}
+            if d.dirty:
+                e = {**e, "_pred": d.preds, "_eq": d.eq, "_dv": d.dv}
             self._files.append(e)
 
     def pushFilters(self, filters: list[Filter]):

@@ -416,8 +416,8 @@ SEGMENT_MERGE_RUN_PROP = "meta.segment-merge-run"
 
 # columnar segment codec: each manifest segment persists as ONE parquet
 # file with typed columns for the universally-present entry fields plus
-# a JSON spill column for the irregular rest (seq, predicate deletes,
-# bloom filters, writer schemas, ...). Decode is Arrow-speed, and the
+# a JSON spill column for the irregular rest (seq, bloom filters,
+# writer schemas, ...). Decode is Arrow-speed, and the
 # files/partitions metadata tables read the segment files directly
 # through Spark (≙ Iceberg's Avro manifests being Spark-readable).
 _SEG_BASE_KEYS = ("path", "partition", "records", "bytes")
@@ -620,18 +620,19 @@ def _null_safe_eq(left: DataFrame, right: DataFrame, cols: list[str]) -> Column:
 
 
 # ------------------------------------------------- row-level delete state
-# Equality deletes and deletion vectors are TABLE-LEVEL descriptors on
-# the manifest (``global_eq_deletes`` / ``global_pos_deletes``), bound by
-# sequence number (≙ Iceberg v2): every data-file entry and descriptor
-# carries ``seq``, the version of the commit that added it, and a delete
-# applies to a file exactly when ``delete seq > file seq``. A delete file
-# written at birth cannot hold its own seq (the version is allocated
-# after the write), so its seq lives on the descriptor; a file merged by
-# compact_deletes holds ``__del_seq`` per row and its descriptor's seq is
-# the highest of them. An upsert writes no delete file: its descriptor
-# names the epoch's own data files (``src``) as the key source, and
-# shares their seq, so they never delete their own rows. Predicate MoR
-# deletes stay per-entry (``deletes``).
+# Every merge-on-read delete is a TABLE-LEVEL descriptor in one of the
+# manifest's three lists — equality deletes, deletion vectors, predicate
+# deletes ``{where, seq}`` — bound by sequence number (≙ Iceberg v2):
+# every data-file entry and descriptor carries ``seq``, the version of
+# the commit that added it, and a delete applies to a file exactly when
+# ``delete seq > file seq``. A delete file written at birth cannot hold
+# its own seq (the version is allocated after the write), so its seq
+# lives on the descriptor; a file merged by compact_deletes holds
+# ``__del_seq`` per row and its descriptor's seq is the highest of them.
+# An upsert writes no delete file: its descriptor names the epoch's own
+# data files (``src``) as the key source, and shares their seq, so they
+# never delete their own rows.
+_DELETE_LISTS = ("global_eq_deletes", "global_pos_deletes", "global_pred_deletes")
 
 
 def _stamped(d: dict, seq: int) -> dict:
@@ -643,11 +644,7 @@ def _stamped(d: dict, seq: int) -> dict:
 def _without_deletes(m: dict) -> dict:
     """``m`` without its table-level delete descriptors — for a commit
     whose files replace every file a descriptor could touch."""
-    return {
-        k: v
-        for k, v in m.items()
-        if k not in ("global_eq_deletes", "global_pos_deletes")
-    }
+    return {k: v for k, v in m.items() if k not in _DELETE_LISTS}
 
 
 def _by_file_name(pairs) -> Column:
@@ -672,6 +669,23 @@ def _key_files(g: dict) -> tuple[str, ...]:
     paths), which are also its identity: an upsert's descriptor names
     the epoch's data files (``src``), any other its one delete file."""
     return tuple(g["src"]) if "src" in g else (g["path"],)
+
+
+def _delete_files(m: dict) -> list[str]:
+    """Every file the delete descriptors of ``m`` read (a predicate delete
+    reads none)."""
+    return [
+        p
+        for k in ("global_eq_deletes", "global_pos_deletes")
+        for g in m.get(k, [])
+        for p in _key_files(g)
+    ]
+
+
+def _desc_id(g: dict):
+    """A persisted descriptor's identity: its key files, or a predicate
+    delete's seq (it has no files; a commit adds at most one)."""
+    return g["seq"] if "where" in g else _key_files(g)
 
 
 def _hive_values(path: str) -> dict[str, str | None]:
@@ -729,7 +743,7 @@ def _dv_positions(tbl) -> dict[str, Any]:
 class FileDeletes:
     """The merge-on-read deletes that apply to one data file."""
 
-    preds: list  # predicate deletes attached to the entry
+    preds: list[dict]  # predicate descriptors with seq > file seq that may match
     eq: list[dict]  # equality-delete descriptors with seq > file seq
     dv: list[dict]  # deletion-vector descriptors naming the file
     n_pos: int  # distinct row positions those vectors delete
@@ -1014,8 +1028,8 @@ class ParquetTableManager:
     # per-snapshot ordered segment-id list and per-segment summaries
     # ("segments" / "seg_stats") in the manifest JSON. An append reuses
     # every base segment by reference and writes ONE new segment with its
-    # own files; a predicate MoR delete rewrites ONLY the segment(s)
-    # holding the touched entries.
+    # own files; a merge-on-read delete changes no entry and writes no
+    # segment at all.
     #
     # Facade contract: _load_manifest returns a plain dict whose "files"
     # key is the FULL materialized entry list, so the write-side consumer
@@ -1352,7 +1366,7 @@ class ParquetTableManager:
         while True:
             v = self._max_manifest_version(name) + 1
             seg_ids, seg_stats, fresh = self._write_segments(name, manifest, v)
-            for key in ("global_eq_deletes", "global_pos_deletes"):
+            for key in _DELETE_LISTS:
                 if key in manifest:
                     persist[key] = [_stamped(d, v) for d in manifest[key]]
             persist["segments"] = seg_ids
@@ -1461,23 +1475,21 @@ class ParquetTableManager:
         """Iceberg's RewriteFiles validation, for a commit that carries
         rows read at ``base`` and retires ``removed`` (entries of
         ``base``): raise :class:`CommitConflict` when ``head`` lost one
-        of those files, or gained a delete ``base`` lacked — an equality
-        descriptor, a deletion vector, or a changed predicate-delete
-        list on a removed entry. The rewritten rows take this commit's
-        newer seq, so such a delete would no longer reach them."""
+        of those files, or gained a delete descriptor ``base`` lacked.
+        The rewritten rows take this commit's newer seq, so such a
+        delete would no longer reach them."""
         if head is base:
             return
-        live = {e["path"]: e for e in head["files"]}
+        live = {e["path"] for e in head["files"]}
         for e in removed:
-            h = live.get(e["path"])
-            if h is None or h.get("deletes") != e.get("deletes"):
+            if e["path"] not in live:
                 raise CommitConflict(
-                    f"a concurrent commit removed or deleted from "
-                    f"{e['path']!r}, which this commit rewrites; aborting"
+                    f"a concurrent commit removed {e['path']!r}, which "
+                    f"this commit rewrites; aborting"
                 )
-        for key in ("global_eq_deletes", "global_pos_deletes"):
-            had = {_key_files(g) for g in base.get(key, [])}
-            if any(_key_files(g) not in had for g in head.get(key, [])):
+        for key in _DELETE_LISTS:
+            had = {_desc_id(g) for g in base.get(key, [])}
+            if any(_desc_id(g) not in had for g in head.get(key, [])):
                 raise CommitConflict(
                     "a concurrent commit added a delete the rows this "
                     "commit rewrites would escape; aborting"
@@ -1590,9 +1602,8 @@ class ParquetTableManager:
         leave the read unable to apply it — materialize them first."""
         if any(
             c == col
-            for e in m["files"]
-            for dw in e.get("deletes", [])
-            for c, _op, _v in dw
+            for g in m.get("global_pred_deletes", [])
+            for c, _op, _v in g["where"]
         ):
             raise ValueError(
                 f"column {col!r} has outstanding merge-on-read "
@@ -2566,8 +2577,8 @@ class ParquetTableManager:
 
         Isolation: every commit, in a transaction or not, is re-derived
         by :meth:`_advance` on the head it swaps. Metadata-only ops (DDL,
-        spec, properties, segment rewrite, rollback, predicate-delete and
-        deletion-vector attachment) re-run there with their guards
+        spec, properties, segment rewrite, rollback, predicate and
+        positional merge-on-read deletes) re-run there with their guards
         re-checked; ops that add data (append, add_files, upsert,
         txn-append, cherry_pick, the snaptable writer) stack their files
         and delete descriptors there; ops that carry rows read at their
@@ -2972,10 +2983,7 @@ class ParquetTableManager:
     def _manifest_spans(m: dict) -> list[tuple[str | None, list[dict]]]:
         """m["files"] sliced back into its segment spans (sid, entries),
         aligned with _seg_layout; one (None, files) span when the list
-        no longer aligns with it (already rewritten in memory).
-        Slices are ref-copies in original order, so extending an output
-        list with a whole span preserves the contiguous identity runs
-        commit-time segment reuse matches on."""
+        no longer aligns with it (already rewritten in memory)."""
         files = m.get("files") or []
         layout = m.get("_seg_layout")
         if not layout or sum(c for _, c in layout) != len(files):
@@ -2987,33 +2995,26 @@ class ParquetTableManager:
             off += cnt
         return spans
 
-    def _split_files(
-        self, m: dict, where: list
-    ) -> tuple[list[dict], list[dict]]:
-        """(possibly-affected, provably-untouched) file partition.
+    def _affected_files(self, m: dict, where: list) -> list[dict]:
+        """The files of ``m`` whose rows may satisfy ``where``.
 
         Segment-level pre-prune first (same _seg_may_match the scan path
         uses): a segment whose [min, max] partition summary excludes the
-        predicate moves to untouched WHOLESALE — per-entry _may_match
-        runs only over matching segments' entries, so planning a
-        partition-scoped delete/update against a million-file table is
+        predicate is skipped WHOLESALE — per-entry _may_match runs only
+        over matching segments' entries, so planning a partition-scoped
+        delete/update against a million-file table is
         O(segments + matching entries), not O(table)."""
         spec = self._spec(m)
         seg_stats = m.get("_seg_stats") or {}
-        affected, untouched = [], []
-        for sid, chunk in self._manifest_spans(m):
-            if (
-                sid is not None
-                and where
-                and not _seg_may_match(spec, seg_stats.get(sid), where)
-            ):
-                untouched.extend(chunk)
-                continue
-            for e in chunk:
-                (affected if _may_match(spec, e, where) else untouched).append(
-                    e
-                )
-        return affected, untouched
+        return [
+            e
+            for sid, chunk in self._manifest_spans(m)
+            if sid is None
+            or not where
+            or _seg_may_match(spec, seg_stats.get(sid), where)
+            for e in chunk
+            if _may_match(spec, e, where)
+        ]
 
     def delete(
         self,
@@ -3032,15 +3033,16 @@ class ParquetTableManager:
         Write cost proportional to affected data, reads stay pure scans.
 
         ``mode="mor"``: merge-on-read (≙ Iceberg v2 delete files) — NO
-        data file is rewritten; the delete predicate is attached to the
-        affected manifest entries and every subsequent read applies
-        NOT(predicate) to those files. Write cost is one metadata commit
-        regardless of table size — the right trade for frequent small
-        deletes (GDPR erasure streams) — while reads pay a filter until
-        :meth:`rewrite_deletes` (or any rewriting op touching the file)
-        folds the deletes in. Both modes commit atomically and
-        time-travel correctly: prior snapshots keep the pre-delete
-        entries.
+        data file is rewritten and no manifest entry changes; the
+        predicate is recorded as one table-level descriptor
+        ``{where, seq}`` in ``global_pred_deletes``, and every later read
+        applies NOT(predicate) to the files older than it. Write cost is
+        one metadata commit regardless of table size — the right trade
+        for frequent small deletes (GDPR erasure streams) — while reads
+        pay a filter until :meth:`rewrite_deletes` (or any rewriting op
+        touching the file) folds the delete in. Both modes commit
+        atomically and time-travel correctly: prior snapshots keep the
+        pre-delete state.
 
         ``equality=[cols] + keys=<DataFrame>``: EQUALITY delete (≙
         Iceberg v2 equality-delete files — the streaming-CDC-upsert
@@ -3065,25 +3067,26 @@ class ParquetTableManager:
             if where is not None:
                 raise ValueError("pass either where= or equality=, not both")
             return self._delete_equality(name, m, equality, keys, mode)
-        if where is None:
+        if not where:
             raise ValueError("predicate delete requires where=")
         if mode == "mor":
             where_json = [[c, op, _json_lit(v)] for c, op, v in where]
 
             def derive(head: dict) -> dict | None:
-                affected, untouched = self._split_files(head, where)
-                if not affected:
+                if not self._affected_files(head, where):
                     return None  # provably nothing to delete: no-op
-                marked = [
-                    {**e, "deletes": [*e.get("deletes", []), where_json]}
-                    for e in affected
-                ]
-                return {**head, "files": untouched + marked}
+                return {
+                    **head,
+                    "global_pred_deletes": [
+                        *head.get("global_pred_deletes", []),
+                        {"where": where_json},
+                    ],
+                }
 
             return self._advance(name, "main", "delete-mor", derive, base=m)
         if mode != "cow":
             raise ValueError(f"unknown delete mode {mode!r}")
-        affected, _untouched = self._split_files(m, where)
+        affected = self._affected_files(m, where)
         if not affected:
             return m["version"]  # provably nothing to delete: no-op
         df = self._read_files(name, m, affected)
@@ -3565,8 +3568,9 @@ class ParquetTableManager:
     def file_deletes(self, name: str, manifest: dict) -> dict[str, FileDeletes]:
         """Path -> :class:`FileDeletes` for every entry of ``manifest`` —
         THE owner of the delete format's two per-file facts: which
-        deletes may touch a file (predicate deletes on its entry,
-        equality descriptors with a higher seq whose key bounds
+        deletes may touch a file (predicate descriptors with a higher
+        seq whose ``where`` passes the scan's stats and partition
+        pruning, equality descriptors with a higher seq whose key bounds
         (:meth:`_eq_delete_bounds`) pass the scan's stats, partition and
         bucket pruning, deletion vectors naming it) and how many row
         positions it has deleted (decoded from the vectors driver-side,
@@ -3598,12 +3602,16 @@ class ParquetTableManager:
                 descs, parts = named.setdefault(fn, ([], []))
                 descs.append(g)
                 parts.append(pos)
+        preds = manifest.get("global_pred_deletes", [])
         out: dict[str, FileDeletes] = {}
         for e in manifest["files"]:
             descs, parts = named.get(os.path.basename(e["path"]), ([], []))
             n_pos = len(np.unique(np.concatenate(parts))) if parts else 0
             out[e["path"]] = FileDeletes(
-                e.get("deletes", []),
+                [
+                    g for g in preds
+                    if g["seq"] > e["seq"] and _may_match(spec, e, g["where"])
+                ],
                 [g for g, ids in zip(gdels, eq_touch) if id(e) in ids],
                 descs,
                 n_pos,
@@ -3776,9 +3784,7 @@ class ParquetTableManager:
         m = self._load_manifest(name)
         deletes = self.file_deletes(name, m)
         dirty = [e for e in m["files"] if deletes[e["path"]].dirty]
-        if not dirty and not (
-            m.get("global_eq_deletes") or m.get("global_pos_deletes")
-        ):
+        if not dirty and not any(m.get(k) for k in _DELETE_LISTS):
             return m["version"]
         new_files: list[dict] = []
         if dirty:
@@ -3893,7 +3899,7 @@ class ParquetTableManager:
         writes kilobytes. Reads pay the coordinate anti-join until
         :meth:`rewrite_deletes` folds it."""
         m = self._load_manifest(name)
-        affected, _untouched = self._split_files(m, where)
+        affected = self._affected_files(m, where)
         if not affected:
             return m["version"]
         hit = F.coalesce(_predicate(where), F.lit(False))
@@ -4039,9 +4045,7 @@ class ParquetTableManager:
             if not_matched_by_source_where is None:
                 affected = m["files"]
             else:
-                cond_aff, _cond_unt = self._split_files(
-                    m, not_matched_by_source_where
-                )
+                cond_aff = self._affected_files(m, not_matched_by_source_where)
                 aff_ids = {id(e) for e in affected} | {
                     id(e) for e in cond_aff
                 }
@@ -4105,10 +4109,13 @@ class ParquetTableManager:
         Merge-on-read deletes, applied so readers see the post-delete
         state without any file having been rewritten:
 
-        - a file entry may carry ``deletes`` — the predicate list(s) of
-          :meth:`delete` commits made in ``mor`` mode. Files are
-          additionally grouped by them; each group's read applies
-          NOT(predicate) per predicate delete.
+        - each table-level predicate delete is one filter in the group's
+          projection: NOT(predicate) when every file of the group is
+          older than it, ``NOT (predicate AND __file_seq < seq)`` when
+          the group holds files on both sides of its seq, nothing when
+          none is older. External files, whose basenames may collide
+          and so cannot key the file-seq map, are grouped by the
+          predicate deletes that cover them instead.
         - the manifest's table-level equality deletes apply to the whole
           read as ONE null-safe broadcast anti-join per key-column set,
           on ``keys match AND __del_seq > __file_seq``: each row's file
@@ -4129,6 +4136,9 @@ class ParquetTableManager:
         gpos = [
             g for g in manifest.get("global_pos_deletes", [])
             if g["seq"] > min_seq
+        ]
+        preds = [
+            g for g in manifest.get("global_pred_deletes", []) if g["seq"] > min_seq
         ]
         if not files:
             if with_positions:
@@ -4163,7 +4173,6 @@ class ParquetTableManager:
         }
         groups: dict[tuple, list[dict]] = {}
         for e in files:
-            dkey = json.dumps(e.get("deletes", []), sort_keys=True)
             ecols = set(e["cols"])
             absent = tuple(
                 sorted(c for c in dflt if not (dflt_names[c] & ecols))
@@ -4173,22 +4182,39 @@ class ParquetTableManager:
             # by file column set: hive-layout files don't physically
             # carry identity partition columns, so the read restores
             # them from the manifest — which needs one literal per
-            # group, i.e. value-homogeneous groups
+            # group, i.e. value-homogeneous groups. They also split by
+            # how many predicate deletes are newer than the file:
+            # external basenames may collide, so no external group may
+            # need the basename-keyed file-seq map below
             extkey = (
                 (
                     ext,
                     tuple(sorted(e["partition"].items())),
                     tuple(e["cols"]),
+                    sum(g["seq"] > e["seq"] for g in preds),
                 )
                 if ext
-                else (ext, (), ())
+                else (ext, (), (), 0)
             )
             groups.setdefault(
-                (tuple(sorted(e["partition"])), dkey, absent, extkey), []
+                (tuple(sorted(e["partition"])), absent, extkey), []
             ).append(e)
+        # per group: (predicate delete some file is older than, whether
+        # some file is not)
+        filters = [
+            [
+                (g, any(e["seq"] >= g["seq"] for e in entries))
+                for g in preds
+                if any(e["seq"] < g["seq"] for e in entries)
+            ]
+            for entries in groups.values()
+        ]
+        file_seq = bool(gdels) or any(mx for fs in filters for _g, mx in fs)
 
         parts: list[DataFrame] = []
-        for (layout, dkey, absent, extkey), entries in groups.items():
+        for ((layout, absent, extkey), entries), fs in zip(
+            groups.items(), filters
+        ):
             external = extkey[0]
             hidden = [k for k in layout if k not in names]
             read_schema = StructType(
@@ -4239,7 +4265,7 @@ class ParquetTableManager:
                 if (with_positions or gpos)
                 else []
             )
-            if gdels:
+            if file_seq:
                 meta_cols.append(
                     _by_file_name((e["path"], e["seq"]) for e in entries).alias(
                         "__file_seq"
@@ -4262,10 +4288,11 @@ class ParquetTableManager:
             proj = df.select(
                 *[_field_expr(f) for f in schema.fields], *meta_cols
             )
-            for dw in json.loads(dkey):
-                pred = _predicate([tuple(w) for w in dw])
-                if pred is not None:
-                    proj = proj.filter(~F.coalesce(pred, F.lit(False)))
+            for g, mixed in fs:
+                hit = F.coalesce(_predicate(g["where"]), F.lit(False))
+                if mixed:
+                    hit = hit & (F.col("__file_seq") < g["seq"])
+                proj = proj.filter(~hit)
             parts.append(proj)
         out = parts[0]
         for p in parts[1:]:
@@ -4297,8 +4324,8 @@ class ParquetTableManager:
                     dels["__del_seq"] > out["__file_seq"]
                 )
                 out = out.join(dels, on=cond, how="left_anti")
-        if gdels or gpos:
-            # drop the columns only the delete joins needed
+        if gpos or file_seq:
+            # drop the columns only the deletes needed
             out = out.select(
                 *[f.name for f in schema.fields],
                 *(["_file_name", "_pos"] if with_positions else []),
@@ -5097,16 +5124,12 @@ class ParquetTableManager:
           because they shared a file with a changed row — Iceberg's
           'carry-over' class) are cancelled with an ``exceptAll`` in each
           direction, scoped to the affected files only.
-        - ``delete-mor``: no file moved; the rows matching the
-          newly-attached delete predicates (evaluated against the file's
-          PARENT-visible content, so stacked deletes don't double-count)
-          are deletes.
-        - ``upsert`` / equality or positional ``delete-mor`` /
-          ``update-mor``: the table-level delete descriptors new in the
-          commit, applied to the parent-visible rows of the files they
-          may touch (a semi-join per key-column set and one per
-          deletion-vector set, in one plan), give the deletes; added
-          files give the inserts.
+        - ``upsert`` / ``delete-mor`` / ``update-mor``: the table-level
+          delete descriptors new in the commit, applied to the
+          PARENT-visible rows of the files they may touch (so stacked
+          deletes don't double-count; a filter per predicate, a
+          semi-join per key-column set and one per deletion-vector set,
+          in one plan), give the deletes; added files give the inserts.
 
         Rows are read under each commit's own schema and aligned by name
         (columns added later read as NULL for earlier commits)."""
@@ -5135,24 +5158,6 @@ class ParquetTableManager:
             removed = [e for p, e in parent_files.items() if p not in child_files]
             ins = self._read_files(name, m, added) if added else None
             dels = self._read_files(name, pm, removed) if removed else None
-            # merge-on-read: same path, more delete predicates than before
-            for p, e in child_files.items():
-                pe = parent_files.get(p)
-                if pe is None:
-                    continue
-                old_n = len(pe.get("deletes", []))
-                new_preds = e.get("deletes", [])[old_n:]
-                if new_preds:
-                    conds = [
-                        F.coalesce(
-                            _predicate([tuple(c) for c in w]), F.lit(False)
-                        )
-                        for w in new_preds
-                    ]
-                    hit = self._read_files(name, pm, [pe]).filter(
-                        _reduce(lambda a, b: a | b, conds)
-                    )
-                    dels = hit if dels is None else dels.unionByName(hit)
             hit = self._new_delete_hits(name, pm, m)
             if hit is not None:
                 dels = hit if dels is None else dels.unionByName(hit)
@@ -5181,30 +5186,26 @@ class ParquetTableManager:
         descriptors NEW in commit ``m`` remove, or None. Only the parent
         files those descriptors may touch (:meth:`file_deletes`: the
         files a deletion vector names, the files an equality key set's
-        bounds may match) are read; each row matched by any of them is
-        returned once (rows are told apart by their physical
-        coordinate)."""
-        def new_in_m(lk: str) -> list[dict]:
-            old = {_key_files(g) for g in pm.get(lk, [])}
-            return [g for g in m.get(lk, []) if _key_files(g) not in old]
-
-        new_eq = new_in_m("global_eq_deletes")
-        new_pos = new_in_m("global_pos_deletes")
-        if not new_eq and not new_pos:
+        bounds or a predicate may match) are read; each row matched by
+        any of them is returned once (rows are told apart by their
+        physical coordinate)."""
+        new: dict[str, list[dict]] = {}
+        for k in _DELETE_LISTS:
+            old = {_desc_id(g) for g in pm.get(k, [])}
+            new[k] = [g for g in m.get(k, []) if _desc_id(g) not in old]
+        if not any(new.values()):
             return None
-        deletes = self.file_deletes(
-            name,
-            {**pm, "global_eq_deletes": new_eq, "global_pos_deletes": new_pos},
-        )
-        touched = [
-            e for e in pm["files"]
-            if deletes[e["path"]].eq or deletes[e["path"]].dv
-        ]
+        deletes = self.file_deletes(name, {**pm, **new})
+        touched = [e for e in pm["files"] if deletes[e["path"]].dirty]
         if not touched:
             return None
+        new_eq, new_pos = new["global_eq_deletes"], new["global_pos_deletes"]
         key = ["_file_name", "_pos"]
         base = self._read_files(name, pm, touched, with_positions=True)
-        hits: list[DataFrame] = []
+        hits = [
+            base.filter(F.coalesce(_predicate(g["where"]), F.lit(False)))
+            for g in new["global_pred_deletes"]
+        ]
         if new_pos:
             dv = F.broadcast(self._dv_coords(name, new_pos))
             hits.append(base.join(dv, on=key, how="left_semi"))
@@ -5365,14 +5366,7 @@ class ParquetTableManager:
             live.update(e["path"] for e in mm["files"])
             # an upsert descriptor's source files stay while it is live,
             # even once compaction or a delete took them out of files
-            live.update(
-                p
-                for g in (
-                    mm.get("global_eq_deletes", [])
-                    + mm.get("global_pos_deletes", [])
-                )
-                for p in _key_files(g)
-            )
+            live.update(_delete_files(mm))
         removed_files = removed_snaps = 0
         drop_segs: set[str] = set()
         for v in drop:
@@ -5382,14 +5376,7 @@ class ParquetTableManager:
             # owned by the table, so expiry must never delete them
             dropped_paths = [
                 e["path"] for e in dm["files"] if not e.get("external")
-            ] + [
-                p
-                for g in (
-                    dm.get("global_eq_deletes", [])
-                    + dm.get("global_pos_deletes", [])
-                )
-                for p in _key_files(g)
-            ]
+            ] + _delete_files(dm)
             for p in dropped_paths:
                 if p not in live:
                     fp = os.path.join(self._dir(name), p)

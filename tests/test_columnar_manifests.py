@@ -118,7 +118,7 @@ def _deletes_rewritten(spark, mgr, tmp_path):
     name, where, n = _mor_deleted(spark, mgr, tmp_path)
     mgr.rewrite_deletes(name)
     m = mgr._load_manifest(name)
-    assert not any(e.get("deletes") for e in m["files"])
+    assert "global_pred_deletes" not in m
     return name, where, n
 
 

@@ -27,3 +27,15 @@ def test_queries_callable_signature(spark):
     q = entry_mod.queries()
     df = q["q_project"](spark, "/root/testdata/sf0.001")
     assert df.columns == ["c_custkey", "c_name", "c_mktsegment"]
+
+
+def test_query_catalog_matches_registry(capsys):
+    """QUERIES.md is generated from the registry docs and must not drift
+    from them: after editing a query's doc, regenerate it with
+    ``python tools/gen_query_catalog.py > QUERIES.md``."""
+    import pathlib
+    import runpy
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    runpy.run_path(str(root / "tools" / "gen_query_catalog.py"), run_name="__main__")
+    assert capsys.readouterr().out == (root / "QUERIES.md").read_text()

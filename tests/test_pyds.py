@@ -168,9 +168,9 @@ def test_timestamp_as_of_option_and_sql_surface(mgr, spark):
 
 def test_datasource_applies_mor_deletes(mgr, spark):
     """A table with outstanding merge-on-read deletes (predicate AND
-    equality, incl. a null key) must read identically through
-    .format('snaptable') and manager.read — the connector face must
-    never leak deleted rows."""
+    equality, incl. a null key, and null-test predicates) must read
+    identically through .format('snaptable') and manager.read — the
+    connector face must never leak deleted rows."""
     df = spark.createDataFrame(
         [(i, float(i)) for i in range(50)] + [(None, -1.0)],
         "k long, v double",
@@ -186,10 +186,22 @@ def test_datasource_applies_mor_deletes(mgr, spark):
     )
     # re-append a deleted key: newer file is exempt (sequence semantics)
     mgr.append("d", spark.createDataFrame([(7, 700.0)], "k long, v double"))
+    # null tests: IS NULL removes the null-v row; IS NOT NULL AND v < 2
+    # removes k=0,1 and keeps the null-k row (SQL DELETE's NULL rule)
+    mgr.append(
+        "d",
+        spark.createDataFrame([(100, None), (None, -2.0)], "k long, v double"),
+    )
+    mgr.delete("d", [("v", "isnull", None)], mode="mor")
+    mgr.delete("d", [("k", "notnull", None), ("v", "<", 2.0)], mode="mor")
     via_mgr = _rows(mgr.read("d"))
     via_ds = _rows(_load(spark, mgr, "d"))
     assert via_ds == via_mgr
-    assert len(via_ds) == 50 + 1 + 1 - 10 - 3  # null row kept? no: deleted
+    # 51 rows, -10 (v >= 40), -3 (keys 3, 7, null), +1 (7 re-added),
+    # +2 appended, -1 (v IS NULL), -2 (k IS NOT NULL AND v < 2)
+    assert len(via_ds) == 51 - 10 - 3 + 1 + 2 - 1 - 2
+    ks = {r[0] for r in via_ds}  # str-mapped by _rows
+    assert "None" in ks and not ks & {"100", "0", "1"}
 
 
 def test_datasource_rolls_pending_txn_forward(mgr, spark):

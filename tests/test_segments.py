@@ -1,8 +1,8 @@
 """Segmented-manifest gates (manifest-list indirection, r8 verdict lead
 item): commit metadata must be O(delta), not O(table) — a micro-append
 to an N-segment table reuses every base segment by reference and writes
-exactly ONE new segment; a delete-attach rewrites only the segment(s)
-holding the touched entries; merge policy bounds segment count under
+exactly ONE new segment; a merge-on-read delete writes no segment at
+all; merge policy bounds segment count under
 streaming micro-appends; expire_snapshots reaps unreferenced segments.
 
 The facade contract (``_load_manifest`` still returns a plain dict whose
@@ -93,22 +93,29 @@ def test_metadata_only_commit_reuses_all_segments(mgr, spark):
     assert _seg_files_on_disk(mgr, "t") == disk_before
 
 
-def test_delete_attach_rewrites_only_its_segment(mgr, spark):
-    """An equality MoR delete is a table-level descriptor: it changes no
-    manifest entry, so EVERY segment — the one holding the keys' files
-    included — is reused by identity and the delete commit writes no
-    segment at all (the 'delete touches no more than its segment' gate,
-    at its floor)."""
+@pytest.mark.parametrize("kind", ["equality", "predicate"])
+def test_delete_attach_rewrites_only_its_segment(mgr, spark, kind):
+    """An equality or predicate MoR delete is a table-level descriptor:
+    it changes no manifest entry, so EVERY segment — the one holding the
+    matching files included — is reused by identity and the delete
+    commit writes no segment file at all (the 'delete touches no more
+    than its segment' gate, at its floor)."""
     _mk(spark, mgr, "t")
     lo = spark.range(0, 100).select(F.col("id").alias("k")).coalesce(4)
     hi = spark.range(1000, 1100).select(F.col("id").alias("k")).coalesce(4)
     mgr.append("t", lo)
     mgr.append("t", hi)
     seg_lo, seg_hi = _segments(mgr, "t")
-    keys = spark.createDataFrame([(5,)], "k long")
-    mgr.delete("t", equality=["k"], keys=keys, mode="mor")
+    disk_before = _seg_files_on_disk(mgr, "t")
+    if kind == "equality":
+        keys = spark.createDataFrame([(5,)], "k long")
+        mgr.delete("t", equality=["k"], keys=keys, mode="mor")
+    else:
+        mgr.delete("t", where=[("k", "==", 5)], mode="mor")
+    assert mgr._load_manifest("t")["operation"] == "delete-mor"
     after = _segments(mgr, "t")
     assert after == [seg_lo, seg_hi], (seg_lo, seg_hi, after)
+    assert _seg_files_on_disk(mgr, "t") == disk_before
     assert mgr.read("t").filter("k = 5").count() == 0
     assert mgr.read("t").count() == 199
 

@@ -775,11 +775,13 @@ def test_mor_delete_zero_rewrite_and_read_applies(mgr, spark):
     assert mgr.read("t", snapshot_id=base_snap).count() == 48
 
     # materialize: only delete-carrying files rewritten
-    dirty_before = {e["path"] for e in m2["files"] if e.get("deletes")}
-    clean_before = {e["path"] for e in m2["files"] if not e.get("deletes")}
+    deletes = mgr.file_deletes("t", m2)
+    dirty_before = {e["path"] for e in m2["files"] if deletes[e["path"]].dirty}
+    clean_before = {e["path"] for e in m2["files"]} - dirty_before
+    assert dirty_before and clean_before
     s3 = mgr.rewrite_deletes("t")
     m3 = mgr._load_manifest("t", s3)
-    assert not any(e.get("deletes") for e in m3["files"])
+    assert "global_pred_deletes" not in m3
     paths3 = {e["path"] for e in m3["files"]}
     assert clean_before <= paths3, "clean files must survive"
     assert dirty_before.isdisjoint(paths3), "dirty files must be rewritten"
@@ -2833,6 +2835,95 @@ def test_mor_basename_guard_covers_every_entry_point(mgr, spark, tmp_path):
         mgr.update("h3", {"k": F.col("k") + 10}, [("k", "==", 1)], mode="mor")
 
 
+def test_predicate_delete_spans_colliding_external_basenames(
+    mgr, spark, tmp_path
+):
+    """Predicate deletes bind by seq, not by file name, so add_files may
+    register a basename that collides with an older file of the same
+    partition while one is outstanding. Two same-named external files
+    of one partition, registered before and after a predicate MoR
+    delete, read back correctly through manager.read, snaptable and
+    changelog: each delete removes rows of the files older than it."""
+    import glob
+    import os
+    from collections import Counter
+
+    from iceberg_poc_spark.sources.pyds import register_snaptable
+    from iceberg_poc_spark.tables import identity
+
+    def external(dirname, ks):
+        d = str(tmp_path / dirname)
+        spark.createDataFrame([(k,) for k in ks], "k long").coalesce(
+            1
+        ).write.parquet(d)
+        dst = os.path.join(d, "same.parquet")
+        os.rename(sorted(glob.glob(os.path.join(d, "*.parquet")))[0], dst)
+        return dst
+
+    schema = spark.createDataFrame([], "k long, cat string").schema
+    mgr.create_table("pc", schema, [identity("cat")])
+    v0 = mgr._current_version("pc")
+    x = {"cat": "x"}
+    mgr.add_files("pc", [external("a", [1, 2])], partition_values=x)
+    mgr.delete("pc", where=[("k", "==", 1)], mode="mor")
+    mgr.add_files("pc", [external("b", [1, 3])], partition_values=x)
+    mgr.delete("pc", where=[("k", "==", 3)], mode="mor")
+    m = mgr._load_manifest("pc")
+    assert len({os.path.basename(e["path"]) for e in m["files"]}) == 1
+    assert len(m["files"]) == 2 and len(m["global_pred_deletes"]) == 2
+    want = [(1, "x"), (2, "x")]
+    assert sorted(tuple(r) for r in mgr.read("pc").collect()) == want
+    register_snaptable(spark)
+    snap = (
+        spark.read.format("snaptable")
+        .option("warehouse", mgr.warehouse)
+        .option("table", "pc")
+        .load()
+    )
+    assert sorted((r.k, r.cat) for r in snap.collect()) == want
+    changes = Counter(
+        (r.k, r["_change_type"]) for r in mgr.changelog("pc", v0).collect()
+    )
+    assert changes == Counter(
+        [(1, "insert"), (2, "insert"), (1, "delete"),
+         (1, "insert"), (3, "insert"), (3, "delete")]
+    )
+
+
+def test_predicate_deletes_read_as_one_filtered_scan(mgr, spark):
+    """Three predicate MoR deletes with an append between each: every
+    delete is one table-level descriptor and changes no manifest entry,
+    and the read stays ONE scan with a filter per delete — no Union, no
+    join — while each delete removes rows of the files older than it
+    only (a later append of the same key survives)."""
+    schema = "k long, v string"
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    mgr.create_table("pd", spark.createDataFrame([], schema).schema, [])
+    with pytest.raises(ValueError, match="requires where="):
+        mgr.delete("pd", where=[], mode="mor")  # refused, not "every row"
+    for i in range(3):
+        mgr.append(
+            "pd", spark.createDataFrame([(k, f"v{i}") for k in range(10)], schema)
+        )
+        files = mgr._load_manifest("pd")["files"]
+        mgr.delete("pd", where=[("k", "==", i)], mode="mor")
+        m = mgr._load_manifest("pd")
+        assert m["files"] == files
+    assert [g["where"] for g in m["global_pred_deletes"]] == [
+        [["k", "==", i]] for i in range(3)
+    ]
+    assert not any("deletes" in e for e in m["files"])
+    df = mgr.read("pd")
+    assert "Union" not in plan(df) and "Join" not in plan(df)
+    # delete j reaches the files appended at rounds 0..j
+    assert sorted((r.k, r.v) for r in df.collect()) == sorted(
+        (k, f"v{i}") for i in range(3) for k in range(10) if not i <= k < 3
+    )
+
+
 def test_add_files_refuses_basename_collision_under_table_level_deletes(
     mgr, spark, tmp_path
 ):
@@ -3682,7 +3773,7 @@ def test_concurrent_commit_survives_every_head_advance(
         assert mgr.read("t").filter(F.col("k") == 100).count() == 1
 
 
-@pytest.mark.parametrize("racer", ["upsert", "positions"])
+@pytest.mark.parametrize("racer", ["upsert", "positions", "predicate"])
 @pytest.mark.parametrize(
     "op", ["compact_partitions", "compact", "rewrite_deletes"]
 )
@@ -3705,6 +3796,11 @@ def test_rewrite_conflicts_with_concurrent_delete(
         new = spark.createDataFrame([(1, 1, "new")], RACE_SCHEMA)
         commit = lambda o: o.upsert_equality("t", new, ["k"])  # noqa: E731
         want = [(1, "new")]
+    elif racer == "predicate":
+        commit = lambda o: o.delete(  # noqa: E731
+            "t", where=[("k", "==", 1)], mode="mor"
+        )
+        want = []
     else:
         pos = _positions_of(mgr, spark, 1)
         commit = lambda o: o.delete_positions("t", pos)  # noqa: E731

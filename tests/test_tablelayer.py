@@ -309,16 +309,17 @@ def test_snapshot_expiry_reaps_and_head_survives(spark):
 
 
 def test_mor_deletes_are_metadata_only_and_time_travel(spark):
-    """Both MoR delete commits left every data-file path untouched; the
-    pre-delete snapshot still reads the full table."""
+    """Both MoR delete commits left every manifest entry untouched and
+    recorded one table-level descriptor each; the pre-delete snapshot
+    still reads the full table."""
     mgr, snaps = tablelayer._setup_orders_mor(spark, SF_DIR)
     m_head = mgr._load_manifest("orders_mor", snaps["mor_head"])
     m_base = mgr._load_manifest("orders_mor", snaps["base"])
-    assert {e["path"] for e in m_head["files"]} == {
-        e["path"] for e in m_base["files"]
-    }, "merge-on-read must rewrite nothing"
+    assert m_head["files"] == m_base["files"], "merge-on-read must rewrite nothing"
     assert m_head["operation"] == "delete-mor"
-    assert any(e.get("deletes") for e in m_head["files"])
+    assert len(m_head["global_pred_deletes"]) == 2
+    deletes = mgr.file_deletes("orders_mor", m_head)
+    assert any(deletes[e["path"]].preds for e in m_head["files"])
     n_all = load_table(spark, SF_DIR, "orders").count()
     assert mgr.read("orders_mor", snapshot_id=snaps["base"]).count() == n_all
     assert mgr.read("orders_mor").count() < n_all
@@ -515,8 +516,9 @@ def test_meta_count_mor_split_is_meaningful(spark):
     counts come from manifest arithmetic alone."""
     mgr, _snaps = tablelayer._setup_orders_mc(spark, SF_DIR)
     m = mgr._load_manifest("orders_mc")
-    dirty = [e for e in m["files"] if e.get("deletes")]
-    clean = [e for e in m["files"] if not e.get("deletes")]
+    deletes = mgr.file_deletes("orders_mc", m)
+    dirty = [e for e in m["files"] if deletes[e["path"]].dirty]
+    clean = [e for e in m["files"] if not deletes[e["path"]].dirty]
     assert dirty and clean, "split must exercise BOTH halves"
     assert {e["partition"]["o_orderdate_years"] for e in dirty} == {"1997"}
     assert "1997" not in {
@@ -576,9 +578,6 @@ def test_constraint_rejection_is_atomic_and_orphan_free(spark):
     for v in mgr._ancestors("docs_cons", m["version"]):
         mv = mgr._load_manifest("docs_cons", v)
         referenced |= {e["path"] for e in mv["files"]}
-        referenced |= {
-            d["path"] for e in mv["files"] for d in e.get("deletes", [])
-        }
     droot = mgr._dir("docs_cons")
     on_disk = set()
     for root, _dirs, files in os.walk(os.path.join(droot, "data")):
