@@ -3788,10 +3788,12 @@ class ParquetTableManager:
             return m["version"]
         new_files: list[dict] = []
         if dirty:
-            # the MoR read applying the deletes keys rows by basename;
-            # colliding external names would misattribute coordinates /
-            # duplicate rows through basename joins
-            self._require_unique_basenames(name, m, "rewrite_deletes")
+            # the MoR read applying equality deletes and deletion vectors
+            # keys rows by basename; colliding external names would
+            # misattribute coordinates / duplicate rows through basename
+            # joins. Predicate deletes bind by seq, not by file name.
+            if m.get("global_eq_deletes") or m.get("global_pos_deletes"):
+                self._require_unique_basenames(name, m, "rewrite_deletes")
             df = self._read_files(name, m, dirty)
             new_files = self._write_files(name, df, self._spec(m))
         rewrite = self._rewrite(m, dirty, new_files)

@@ -2835,6 +2835,21 @@ def test_mor_basename_guard_covers_every_entry_point(mgr, spark, tmp_path):
         mgr.update("h3", {"k": F.col("k") + 10}, [("k", "==", 1)], mode="mor")
 
 
+def _same_named_external(spark, tmp_path, dirname, ks):
+    """One parquet file of column ``k`` holding ``ks``, written under
+    ``tmp_path/dirname`` and named ``same.parquet``."""
+    import glob
+    import os
+
+    d = str(tmp_path / dirname)
+    spark.createDataFrame([(k,) for k in ks], "k long").coalesce(
+        1
+    ).write.parquet(d)
+    dst = os.path.join(d, "same.parquet")
+    os.rename(sorted(glob.glob(os.path.join(d, "*.parquet")))[0], dst)
+    return dst
+
+
 def test_predicate_delete_spans_colliding_external_basenames(
     mgr, spark, tmp_path
 ):
@@ -2844,29 +2859,21 @@ def test_predicate_delete_spans_colliding_external_basenames(
     of one partition, registered before and after a predicate MoR
     delete, read back correctly through manager.read, snaptable and
     changelog: each delete removes rows of the files older than it."""
-    import glob
     import os
     from collections import Counter
 
     from iceberg_poc_spark.sources.pyds import register_snaptable
     from iceberg_poc_spark.tables import identity
 
-    def external(dirname, ks):
-        d = str(tmp_path / dirname)
-        spark.createDataFrame([(k,) for k in ks], "k long").coalesce(
-            1
-        ).write.parquet(d)
-        dst = os.path.join(d, "same.parquet")
-        os.rename(sorted(glob.glob(os.path.join(d, "*.parquet")))[0], dst)
-        return dst
-
     schema = spark.createDataFrame([], "k long, cat string").schema
     mgr.create_table("pc", schema, [identity("cat")])
     v0 = mgr._current_version("pc")
     x = {"cat": "x"}
-    mgr.add_files("pc", [external("a", [1, 2])], partition_values=x)
+    a = _same_named_external(spark, tmp_path, "a", [1, 2])
+    b = _same_named_external(spark, tmp_path, "b", [1, 3])
+    mgr.add_files("pc", [a], partition_values=x)
     mgr.delete("pc", where=[("k", "==", 1)], mode="mor")
-    mgr.add_files("pc", [external("b", [1, 3])], partition_values=x)
+    mgr.add_files("pc", [b], partition_values=x)
     mgr.delete("pc", where=[("k", "==", 3)], mode="mor")
     m = mgr._load_manifest("pc")
     assert len({os.path.basename(e["path"]) for e in m["files"]}) == 1
@@ -2888,6 +2895,49 @@ def test_predicate_delete_spans_colliding_external_basenames(
         [(1, "insert"), (2, "insert"), (1, "delete"),
          (1, "insert"), (3, "insert"), (3, "delete")]
     )
+
+
+@pytest.mark.parametrize("eq_delete", [False, True])
+def test_rewrite_deletes_colliding_basenames_needs_only_predicate_deletes(
+    mgr, spark, tmp_path, monkeypatch, eq_delete
+):
+    """rewrite_deletes reads the dirty files with their deletes applied.
+    Predicate deletes bind by seq, so two same-named externals of one
+    partition with only a predicate MoR delete outstanding rewrite to
+    exactly the rows the table read before. An outstanding equality
+    delete scopes by a basename-keyed seq map, so the same table is
+    refused while one is outstanding. add_files already refuses that
+    collision, so the test lets it through to reach the rewrite's own
+    guard."""
+    import os
+
+    from iceberg_poc_spark.tables import identity
+
+    schema = spark.createDataFrame([], "k long, cat string").schema
+    mgr.create_table("rw", schema, [identity("cat")])
+    x = {"cat": "x"}
+    a = _same_named_external(spark, tmp_path, "a", [1, 2, 5])
+    b = _same_named_external(spark, tmp_path, "b", [1, 3])
+    mgr.add_files("rw", [a], partition_values=x)
+    if eq_delete:
+        # registered while the basenames are still unique
+        keys = spark.createDataFrame([(5,)], "k long")
+        mgr.delete("rw", equality=["k"], keys=keys, mode="mor")
+        monkeypatch.setattr(mgr, "_refuse_colliding_adds", lambda *a: None)
+    mgr.add_files("rw", [b], partition_values=x)
+    mgr.delete("rw", where=[("k", "==", 1)], mode="mor")
+    files = mgr._load_manifest("rw")["files"]
+    assert len({os.path.basename(e["path"]) for e in files}) == 1
+    if eq_delete:
+        with pytest.raises(ValueError, match="compact"):
+            mgr.rewrite_deletes("rw")
+        return
+    before = sorted(tuple(r) for r in mgr.read("rw").collect())
+    assert before == [(2, "x"), (3, "x"), (5, "x")]
+    mgr.rewrite_deletes("rw")
+    m = mgr._load_manifest("rw")
+    assert not any(m.get(k) for k in ("global_eq_deletes", "global_pred_deletes"))
+    assert sorted(tuple(r) for r in mgr.read("rw").collect()) == before
 
 
 def test_predicate_deletes_read_as_one_filtered_scan(mgr, spark):

@@ -14,6 +14,10 @@ For each op kind it prints, per op, averaged over the measured passes:
 * ``jit_s``: JIT compile seconds the JVM reports
   (``CompilationMXBean.getTotalCompilationTime``). Compiler threads run
   inside the JVM, so this is part of ``cpu_s``;
+* ``codegen``: classes Janino compiled (Spark's
+  ``CodegenMetrics.METRIC_COMPILATION_TIME`` count). A generated-code
+  cache too small for the workload shows here as compiles on every
+  warm pass, and as the JIT time that re-compiling their classes costs;
 * ``jobs`` and ``tasks``: Spark jobs the op ran, streaming micro-batch
   jobs included (they run in the query's run-id job group), and the
   tasks they ran.
@@ -50,10 +54,14 @@ def _workload(name: str, work: str, seed: int, ncpu: int):
     )
 
 
+COLS = ("cpu_s", "jit_s", "codegen", "jobs", "tasks")
+
+
 def attribute(spark, wl, targets: list) -> dict[str, dict[str, float]]:
-    """Per op kind: summed cpu_s, jit_s, jobs, tasks and the op count."""
+    """Per op kind: the summed COLS and the op count."""
     sc = spark.sparkContext
     jit = sc._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    compiles = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     tracker = sc.statusTracker()
     progress = tracing.StreamProgress()
     spark.streams.addListener(progress)
@@ -63,9 +71,9 @@ def attribute(spark, wl, targets: list) -> dict[str, dict[str, float]]:
             group = f"cpu-attrib-{p}-{i}"
             runs = len(progress.run_ids)
             sc.setJobGroup(group, str(wl.kind(op)))
-            c0, j0 = perfbench.tree_cpu_s(), jit.getTotalCompilationTime()
+            c0, j0, g0 = perfbench.tree_cpu_s(), jit.getTotalCompilationTime(), compiles.getCount()
             wl.run_op(op, target)
-            c1, j1 = perfbench.tree_cpu_s(), jit.getTotalCompilationTime()
+            c1, j1, g1 = perfbench.tree_cpu_s(), jit.getTotalCompilationTime(), compiles.getCount()
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc._jsc.sc().listenerBus().waitUntilEmpty()
             jobs = [
@@ -81,11 +89,12 @@ def attribute(spark, wl, targets: list) -> dict[str, dict[str, float]]:
                     tasks += st.numCompletedTasks if st else 0
             row = out.setdefault(
                 str(wl.kind(op)),
-                {"ops": 0, "cpu_s": 0.0, "jit_s": 0.0, "jobs": 0, "tasks": 0},
+                {"ops": 0, **dict.fromkeys(COLS, 0.0)},
             )
             row["ops"] += 1
             row["cpu_s"] += c1 - c0
             row["jit_s"] += (j1 - j0) / 1e3
+            row["codegen"] += g1 - g0
             row["jobs"] += len(jobs)
             row["tasks"] += tasks
     return out
@@ -123,21 +132,19 @@ def main() -> int:
     table = {
         kind: {
             "ops": int(r["ops"]),
-            **{k: r[k] / r["ops"] for k in ("cpu_s", "jit_s", "jobs", "tasks")},
+            **{k: r[k] / r["ops"] for k in COLS},
         }
         for kind, r in rows.items()
     }
-    print(f"{'op':<12}{'ops':>5}{'cpu_s':>9}{'jit_s':>9}{'jit%':>7}{'jobs':>7}{'tasks':>7}")
-    for kind, r in table.items():
+    print(f"{'op':<12}{'ops':>5}{'cpu_s':>9}{'jit_s':>9}{'jit%':>7}{'codegen':>9}{'jobs':>7}{'tasks':>7}")
+    n = sum(r["ops"] for r in table.values())
+    total = {k: sum(r[k] * r["ops"] for r in table.values()) / n for k in COLS}
+    for kind, r in [*table.items(), ("all", {"ops": n, **total})]:
         share = 100 * r["jit_s"] / r["cpu_s"] if r["cpu_s"] else 0.0
         print(
             f"{kind:<12}{r['ops']:>5}{r['cpu_s']:>9.3f}{r['jit_s']:>9.3f}"
-            f"{share:>6.0f}%{r['jobs']:>7.2f}{r['tasks']:>7.1f}"
+            f"{share:>6.0f}%{r['codegen']:>9.2f}{r['jobs']:>7.2f}{r['tasks']:>7.1f}"
         )
-    n = sum(r["ops"] for r in table.values())
-    cpu = sum(r["cpu_s"] * r["ops"] for r in table.values())
-    jit_s = sum(r["jit_s"] * r["ops"] for r in table.values())
-    print(f"{'all':<12}{n:>5}{cpu / n:>9.3f}{jit_s / n:>9.3f}{100 * jit_s / cpu:>6.0f}%")
     print(json.dumps({"workload": args.workload, "seed": args.seed, "passes": args.passes, "wall_s": wall, "per_op": table}))
     return 0
 
