@@ -349,18 +349,6 @@ def _propagate_labels(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     # min-propagation decreases the label multiset monotonically, so the
     # label SUM is a fixpoint witness: one single-row action per round
     # instead of a join + count.
-    #
-    # AQE inside the loop: each Exchange becomes its own scheduled
-    # stage-job, so a round costs 4-5 job launches instead of 1. AQE's
-    # value is runtime re-planning of big shuffles — when the WHOLE graph
-    # fits one task (n_parts == 1) there is nothing to coalesce or split,
-    # so it is pure per-round scheduling overhead; a big graph (n_parts >
-    # 1) keeps AQE on for its skew/coalesce machinery. Scale-adaptive by
-    # the same n_parts that sizes the shuffle, not a local-mode constant.
-    aqe_off = n_parts == 1
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    if aqe_off:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         labels = _propagate_rounds(edges, labels, n_parts)
     except BaseException:
@@ -370,8 +358,6 @@ def _propagate_labels(spark: SparkSession, pairs: DataFrame) -> DataFrame:
         labels._jdf.queryExecution().analyzed().rdd().unpersist(False)
         raise
     finally:
-        if aqe_off:
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
         edges.unpersist()
     return labels.select("doc_id", F.col("label").alias("cluster_root"))
 
@@ -380,8 +366,14 @@ def _propagate_rounds(
     edges: DataFrame, labels: DataFrame, n_parts: int
 ) -> DataFrame:
     """The fixpoint loop of :func:`_propagate_labels` (split out so the
-    AQE toggle and the edge cache around it are released on any exit
-    path)."""
+    edge cache around it is released on any exit path).
+
+    A graph that fits one task (``n_parts == 1``) runs the loop with no
+    exchange: ``coalesce(1)`` feeds the round's groupBy and the fixpoint
+    sum their single partition. Under AQE each exchange is its own
+    stage-job, so a round would pay 4-5 job launches for nothing to
+    coalesce or split; a big graph keeps its hash exchanges and AQE."""
+    single = n_parts == 1
     prev_sum = None
     for _ in range(20):  # bound >> diameter of any near-dup component
         # One aggregation per round instead of join+agg+join: new label =
@@ -398,7 +390,9 @@ def _propagate_rounds(
             .unionByName(
                 labels.select(F.col("doc_id").alias("a"), F.col("label"))
             )
-            .repartition(n_parts, "a")
+            .transform(
+                lambda d: d.coalesce(1) if single else d.repartition(n_parts, "a")
+            )
             .groupBy("a")
             .agg(F.min("label").alias("label"))
             .select(F.col("a").alias("doc_id"), "label")
@@ -409,7 +403,11 @@ def _propagate_rounds(
             # is identical either way.
             .localCheckpoint(eager=False)
         )
-        cur_sum = labels.agg(F.sum("label")).first()[0]
+        cur_sum = (
+            (labels.coalesce(1) if single else labels)
+            .agg(F.sum("label"))
+            .first()[0]
+        )
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum

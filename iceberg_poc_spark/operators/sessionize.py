@@ -18,9 +18,8 @@ from pyspark.sql import functions as F
 
 from iceberg_poc_spark.functions.sqlround import dround
 from iceberg_poc_spark.registry import register
-from iceberg_poc_spark.session import scoped_conf
 from iceberg_poc_spark.sources import load_table, table_path
-from iceberg_poc_spark.streaming.pipelines import stream_state_partitions
+from iceberg_poc_spark.streaming.pipelines import state_session
 
 _FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
 _FMT_DUCK = "%Y-%m-%d %H:%M:%S"
@@ -352,20 +351,16 @@ def q_stream_live_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         tumbling_stream,
     )
 
-    stream = tumbling_stream(
-        load_events_stream(spark, table_path(sf_dir, "events"))
-    )
+    src = table_path(sf_dir, "events")
     # state parallelism DERIVED from drained stream volume (one state
     # store per shuffle partition per micro-batch; measured here:
     # 32-partition state commit ~10.4 s cumulative vs 0.14 s at the
     # volume-derived width for the same batch) — see
     # streaming.pipelines.stream_state_partitions
-    parts = stream_state_partitions(spark, table_path(sf_dir, "events"))
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": str(parts)}
-    ):
-        run_to_memory(stream, "live_tumbling", output_mode="complete")
-    return spark.table("live_tumbling")
+    sib = state_session(spark, src)
+    stream = tumbling_stream(load_events_stream(sib, src))
+    run_to_memory(stream, "live_tumbling", output_mode="complete")
+    return sib.table("live_tumbling")
 
 
 def _setup_events_live(spark: SparkSession, sf_dir: str):
@@ -485,15 +480,13 @@ def q_stream_live_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i, f in enumerate(files):
         for copy in ("a", "b"):
             os.symlink(f, os.path.join(d, f"{copy}_{i:04d}.parquet"))
-    stream = dedup_stream(load_events_stream(spark, d))
     # sized from the drained dir: it holds every file twice
-    parts = stream_state_partitions(spark, d)
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": str(parts)}
-    ):
-        run_to_memory(stream, "live_dedup", output_mode="append")
+    sib = state_session(spark, d)
+    run_to_memory(
+        dedup_stream(load_events_stream(sib, d)), "live_dedup", output_mode="append"
+    )
     return (
-        spark.table("live_dedup")
+        sib.table("live_dedup")
         .groupBy("event_type")
         .agg(
             F.count("*").alias("n_events"),
@@ -548,15 +541,11 @@ def q_stream_live_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         session_stream,
     )
 
-    stream = session_stream(
-        load_events_stream(spark, table_path(sf_dir, "events"))
-    )
-    parts = stream_state_partitions(spark, table_path(sf_dir, "events"))
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": str(parts)}
-    ):
-        run_to_memory(stream, "live_session", output_mode="complete")
-    return spark.table("live_session")
+    src = table_path(sf_dir, "events")
+    sib = state_session(spark, src)
+    stream = session_stream(load_events_stream(sib, src))
+    run_to_memory(stream, "live_session", output_mode="complete")
+    return sib.table("live_session")
 
 
 @register(
@@ -597,16 +586,12 @@ def q_stream_live_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         stateful_user_counts,
     )
 
-    stream = stateful_user_counts(
-        load_events_stream(spark, table_path(sf_dir, "events"))
-    )
+    src = table_path(sf_dir, "events")
     # same state-parallelism sizing rationale as q_stream_live_join
-    parts = stream_state_partitions(spark, table_path(sf_dir, "events"))
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": str(parts)}
-    ):
-        run_to_memory(stream, "live_stateful", output_mode="update")
-    t = spark.table("live_stateful")
+    sib = state_session(spark, src)
+    stream = stateful_user_counts(load_events_stream(sib, src))
+    run_to_memory(stream, "live_stateful", output_mode="update")
+    t = sib.table("live_stateful")
     return t.groupBy("user_id").agg(F.max("n_events").alias("n_events"))
 
 
@@ -645,9 +630,7 @@ def q_stream_live_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_to_memory,
     )
 
-    stream = attribution_stream(
-        load_events_stream(spark, table_path(sf_dir, "events"))
-    )
+    src = table_path(sf_dir, "events")
     # A stateful streaming op materializes ONE state store per shuffle
     # partition per join side per micro-batch — at this stream's volume,
     # 32 partitions means 64 store commits that each cost more than the
@@ -655,14 +638,13 @@ def q_stream_live_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream volume (streaming.pipelines.stream_state_partitions): at
     # 100 TB/day the same formula yields the session's full shuffle
     # parallelism — the knob tracks stream volume by construction, not
-    # by a hand-tuned constant. (The scoped restore is safe: the drain
-    # is synchronous and the memory sink's rows are materialized.)
-    parts = stream_state_partitions(spark, table_path(sf_dir, "events"))
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": str(parts)}
-    ):
-        run_to_memory(stream, "live_attrib", output_mode="append")
-    return spark.table("live_attrib")
+    # by a hand-tuned constant. The width is set on a sibling session
+    # (state_session), which builds the stream and holds the memory
+    # sink's table; the caller's conf is never written.
+    sib = state_session(spark, src)
+    stream = attribution_stream(load_events_stream(sib, src))
+    run_to_memory(stream, "live_attrib", output_mode="append")
+    return sib.table("live_attrib")
 
 
 @register(
@@ -705,14 +687,10 @@ def q_stream_live_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_to_memory,
     )
 
-    stream = attribution_stream_outer(
-        load_events_stream(spark, table_path(sf_dir, "events"))
-    )
-    parts = stream_state_partitions(spark, table_path(sf_dir, "events"))
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": str(parts)}
-    ):
-        run_to_memory(stream, "live_attrib_outer", output_mode="append")
+    src = table_path(sf_dir, "events")
+    sib = state_session(spark, src)
+    stream = attribution_stream_outer(load_events_stream(sib, src))
+    run_to_memory(stream, "live_attrib_outer", output_mode="append")
     cutoff = (
         load_table(spark, sf_dir, "events")
         .agg(
@@ -722,7 +700,7 @@ def q_stream_live_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .first()["c"]
     )
-    return spark.table("live_attrib_outer").filter(F.col("buy_time") <= cutoff)
+    return sib.table("live_attrib_outer").filter(F.col("buy_time") <= cutoff)
 
 
 @register(
@@ -755,8 +733,10 @@ def q_stream_live_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_to_memory,
     )
 
-    stream = load_events_stream(spark, table_path(sf_dir, "events"))
-    dim = load_table(spark, sf_dir, "customer").select(
+    src = table_path(sf_dir, "events")
+    sib = state_session(spark, src)
+    stream = load_events_stream(sib, src)
+    dim = load_table(sib, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
     enriched = stream.join(
@@ -766,12 +746,8 @@ def q_stream_live_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         F.round(F.sum("value"), 2).alias("sum_value"),
     )
-    parts = stream_state_partitions(spark, table_path(sf_dir, "events"))
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": str(parts)}
-    ):
-        run_to_memory(agg, "live_enrich", output_mode="complete")
-    return spark.table("live_enrich")
+    run_to_memory(agg, "live_enrich", output_mode="complete")
+    return sib.table("live_enrich")
 
 
 @register(
@@ -904,16 +880,12 @@ def q_stream_live_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         sliding_stream,
     )
 
-    stream = sliding_stream(
-        load_events_stream(spark, table_path(sf_dir, "events"))
-    )
+    src = table_path(sf_dir, "events")
     # same state-parallelism sizing rationale as q_stream_live_join
-    parts = stream_state_partitions(spark, table_path(sf_dir, "events"))
-    with scoped_conf(
-        spark, {"spark.sql.shuffle.partitions": str(parts)}
-    ):
-        run_to_memory(stream, "live_sliding", output_mode="complete")
-    return spark.table("live_sliding").withColumn("n", F.col("n").cast("bigint"))
+    sib = state_session(spark, src)
+    stream = sliding_stream(load_events_stream(sib, src))
+    run_to_memory(stream, "live_sliding", output_mode="complete")
+    return sib.table("live_sliding").withColumn("n", F.col("n").cast("bigint"))
 
 
 def _setup_events_sink(spark: SparkSession, sf_dir: str):

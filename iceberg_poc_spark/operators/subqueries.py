@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_poc_spark.registry import register
-from iceberg_poc_spark.session import scoped_conf
+from iceberg_poc_spark.session import sibling_session
 from iceberg_poc_spark.sources import load_table
 
 
@@ -160,8 +160,17 @@ def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The scripting division of labor is unchanged — control flow stays
     # driver-side in SQL, every iteration still runs a distributed
     # query — the loop just probes the pre-folded table.
+    # AQE off for the script: each iteration probes the one-partition
+    # cached fold — there is nothing for runtime re-planning to coalesce
+    # or split, and under AQE every iteration's exchange becomes its own
+    # scheduled stage-job (measured at sf0.01: 37 -> 34 jobs, ~6% of the
+    # wall). The distributed fold below is O(1) output rows at any
+    # scale, so this is not a local-mode constant. The caller's session
+    # keeps its conf: the fold, its temp view and the script live in a
+    # sibling session with AQE off.
+    sib = sibling_session(spark, {"spark.sql.adaptive.enabled": "false"})
     fold = (
-        load_table(spark, sf_dir, "orders")
+        load_table(sib, sf_dir, "orders")
         .select(
             F.round(F.col("o_totalprice") * 100)
             .cast("bigint")
@@ -179,48 +188,36 @@ def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cache()
     )
     fold.createOrReplaceTempView(view)
-    # AQE off for the script: each iteration probes the one-partition
-    # cached fold — there is nothing for runtime re-planning to coalesce
-    # or split, and under AQE every iteration's exchange becomes its own
-    # scheduled stage-job (measured 51 -> 35 jobs, ~25% wall). The
-    # distributed fold above is O(1) output rows at any scale, so this is
-    # not a local-mode constant. The script executes EAGERLY inside
-    # spark.sql (the WHILE loop runs before it returns), so the scoped
-    # restore — and the unpersist below — cover all the distributed work.
+    # The script executes EAGERLY inside sql() (the WHILE loop runs
+    # before it returns), so the unpersist below covers all the
+    # distributed work.
     try:
-        with scoped_conf(
-            spark,
-            {
-                "spark.sql.scripting.enabled": "true",
-                "spark.sql.adaptive.enabled": "false",
-            },
-        ):
-            return spark.sql(f"""
-            BEGIN
-              DECLARE total BIGINT;
-              DECLARE captured BIGINT DEFAULT 0;
-              DECLARE k INT DEFAULT 0;
-              SET total = (SELECT CAST(SUM(cents) AS BIGINT) FROM {view});
-              WHILE captured * 2 < total DO
-                -- one multi-variable SET per iteration: every scripting
-                -- statement pays fixed parse/analyze/execute machinery
-                -- (~0.24 s/iter measured for the SET-scalar-subquery form
-                -- vs ~0.09 s/iter for a direct FROM multi-SET), so folding
-                -- the k bump and the captured probe into ONE statement
-                -- halves the driver-side statement count and drops the
-                -- scalar-subquery wrapping — same trajectory, same values.
-                SET (k, captured) = (
-                  SELECT k + {SCRIPT_STEP_K},
-                         CAST(COALESCE(SUM(CASE
-                              WHEN b < (k + {SCRIPT_STEP_K}) DIV {SCRIPT_STEP_K}
-                              THEN cents END), 0) AS BIGINT)
-                  FROM {view});
-              END WHILE;
-              SELECT k AS threshold_k,
-                     captured AS captured_cents,
-                     total AS total_cents;
-            END
-            """)
+        return sib.sql(f"""
+        BEGIN
+          DECLARE total BIGINT;
+          DECLARE captured BIGINT DEFAULT 0;
+          DECLARE k INT DEFAULT 0;
+          SET total = (SELECT CAST(SUM(cents) AS BIGINT) FROM {view});
+          WHILE captured * 2 < total DO
+            -- one multi-variable SET per iteration: every scripting
+            -- statement pays fixed parse/analyze/execute machinery
+            -- (~0.24 s/iter measured for the SET-scalar-subquery form
+            -- vs ~0.09 s/iter for a direct FROM multi-SET), so folding
+            -- the k bump and the captured probe into ONE statement
+            -- halves the driver-side statement count and drops the
+            -- scalar-subquery wrapping — same trajectory, same values.
+            SET (k, captured) = (
+              SELECT k + {SCRIPT_STEP_K},
+                     CAST(COALESCE(SUM(CASE
+                          WHEN b < (k + {SCRIPT_STEP_K}) DIV {SCRIPT_STEP_K}
+                          THEN cents END), 0) AS BIGINT)
+              FROM {view});
+          END WHILE;
+          SELECT k AS threshold_k,
+                 captured AS captured_cents,
+                 total AS total_cents;
+        END
+        """)
     finally:
         # Scope the fold cache to THIS run (VERDICT r12 item 4): without
         # the unpersist, Spark's CacheManager matches the identical fold
@@ -228,7 +225,7 @@ def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
         # one distributed orders pass the query declares. The script above
         # has already executed (its result rows are script variables), so
         # dropping the view/cache cannot unpin live work.
-        spark.catalog.dropTempView(view)
+        sib.catalog.dropTempView(view)
         fold.unpersist()
 
 

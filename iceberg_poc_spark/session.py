@@ -26,11 +26,17 @@ alive, and it is small: after four warm TPC-H passes Metaspace held
 been loaded overall. The conf is static: it is read once, when the
 JVM-wide cache is built, so ``tune_existing`` cannot apply it to a
 session someone else created.
+
+Only this module writes session conf: ``get_spark`` and ``tune_existing``
+at set-up, ``sibling_session`` on the sessions it creates. A query never
+writes its caller's conf: other queries may be running on that session.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -53,6 +59,9 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # --- python<->jvm data path ---
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # without it Spark refuses a Python data source reader that
+    # implements pushFilters (the snaptable connector's manifest pruning)
+    "spark.sql.python.filterPushdown.enabled": "true",
     # --- physical layout (reference parity, BASELINE.md) ---
     "spark.sql.parquet.compression.codec": "zstd",
     "spark.sql.files.maxPartitionBytes": str(TARGET_FILE_SIZE),
@@ -114,33 +123,44 @@ def _core_sized_shuffles(spark: SparkSession) -> None:
     )
 
 
-from contextlib import contextmanager
+# caller (weak) -> {sorted overrides: [sibling, caller conf last mirrored]}
+_SIBLINGS: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+    weakref.WeakKeyDictionary()
+)
+_SIBLINGS_LOCK = threading.Lock()
 
 
-@contextmanager
-def scoped_conf(spark: SparkSession, conf: dict[str, str]):
-    """Set session confs for one block, restoring the prior values on
-    any exit path.
+def sibling_session(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
+    """A session of ``spark``'s context with ``spark``'s runtime conf and
+    ``conf`` on top, for a block that needs its own conf (Spark reads a
+    stream's state width only from session conf, at ``start()``) while
+    other queries may run on the caller. Build the block's DataFrames
+    from it and read its temp views from it.
 
-    NOTE (ADVICE r12): SparkSession conf is session-GLOBAL, so this is
-    sound only while one query at a time runs on the session. That does
-    not hold everywhere: perfbench's set-up check runs registry queries
-    concurrently on one session, and those queries see the override
-    (ROADMAP item 5 replaces this helper with plan-local means). The
-    restore also only covers work that EXECUTES inside the block —
-    callers must consume (or eagerly materialize) anything that depends
-    on the override before the block exits."""
-    prev = {k: spark.conf.get(k, None) for k in conf}
-    for k, v in conf.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    One sibling per (caller, ``conf``), weakly keyed by the caller like
+    the plan caches: each session that starts a stream leaves a listener
+    on the context's ``streams`` queue for good. A call re-mirrors the
+    caller's modifiable conf when it changed since the last mirror (one
+    JVM-side map comparison); concurrent calls write the same values."""
+    key = tuple(sorted(conf.items()))
+    now = spark._jsparkSession.conf().getAll()
+    with _SIBLINGS_LOCK:
+        per_caller = _SIBLINGS.setdefault(spark, {})
+        if key not in per_caller:
+            per_caller[key] = [spark.newSession(), None]
+        entry = per_caller[key]
+    sib, mirrored = entry
+    if mirrored is None or not mirrored.equals(now):
+        want = {**spark.conf.getAll, **conf}
+        have = sib.conf.getAll
+        for k in have.keys() - want.keys():
+            if sib.conf.isModifiable(k):
+                sib.conf.unset(k)
+        for k, v in want.items():
+            if have.get(k) != v and sib.conf.isModifiable(k):
+                sib.conf.set(k, v)
+        entry[1] = now
+    return sib
 
 
 def tune_existing(spark: SparkSession) -> SparkSession:
@@ -151,6 +171,7 @@ def tune_existing(spark: SparkSession) -> SparkSession:
         "spark.sql.adaptive.enabled",
         "spark.sql.parquet.inferTimestampNTZ.enabled",
         "spark.sql.legacy.parquet.nanosAsLong",
+        "spark.sql.python.filterPushdown.enabled",
     ):
         try:
             spark.conf.set(k, DEFAULT_CONF[k])

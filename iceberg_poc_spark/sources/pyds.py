@@ -1035,7 +1035,4 @@ class SnapTableDataSource(DataSource):
 
 
 def register_snaptable(spark) -> None:
-    # runtime SQL conf: without it Spark refuses a reader that implements
-    # pushFilters (the manifest pruning would silently not happen)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(SnapTableDataSource)

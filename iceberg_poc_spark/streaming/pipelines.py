@@ -32,6 +32,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from iceberg_poc_spark.session import sibling_session
 from iceberg_poc_spark.tables.manager import ParquetTableManager
 
 
@@ -95,6 +96,15 @@ def stream_state_partitions(spark: SparkSession, path: str) -> int:
         total = 0
     cap = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     return max(1, min(cap, math.ceil(total / _STATE_BYTES_PER_PARTITION)))
+
+
+def state_session(spark: SparkSession, path: str) -> SparkSession:
+    """The session to build and drain a stateful stream rooted at
+    ``path`` in: ``spark``'s :func:`sibling_session` at the
+    :func:`stream_state_partitions` width. Read the memory sink's table
+    from it too."""
+    parts = stream_state_partitions(spark, path)
+    return sibling_session(spark, {"spark.sql.shuffle.partitions": str(parts)})
 
 
 def _events_schema(ts_type) -> StructType:

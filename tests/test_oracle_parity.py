@@ -103,12 +103,21 @@ def normalize(rows, cols):
 
 @pytest.mark.parametrize("name", WITH_ORACLE)
 def test_query_matches_oracle(spark, name):
+    """Each query matches its oracle and leaves the session's conf as it
+    found it (the next query on the session must not inherit any)."""
+    conf = spark.conf.getAll
+    assert_matches_oracle(name, QUERIES[name].fn(spark, SF_DIR))
+    assert spark.conf.getAll == conf
+
+
+def assert_matches_oracle(name, sdf, sf_dir: str = SF_DIR) -> None:
+    """Collect ``sdf`` and compare it with the DuckDB oracle of registry
+    query ``name`` over ``sf_dir``: columns, type categories, rows."""
     q = QUERIES[name]
-    sdf = q.fn(spark, SF_DIR)
     srows = [tuple(r) for r in sdf.collect()]
     scols = sdf.columns
 
-    con = duck_con(SF_DIR)
+    con = duck_con(sf_dir)
     # fetch via Arrow, not fetchall(): fetchall() flattens HUGEINT to
     # plain int, but the driver hashes Arrow-level values where HUGEINT
     # is decimal128(38,0) — Arrow is the only path that sees the driver's
