@@ -27,6 +27,7 @@ from iceberg_poc_spark.functions.sqlround import dround
 from iceberg_poc_spark.functions.vectors import sign_bucket, sign_bucket_sql
 from iceberg_poc_spark.operators.text import shingles_col, shingles_sql, with_words
 from iceberg_poc_spark.registry import register
+from iceberg_poc_spark.scratch import once, scratch_dir
 from iceberg_poc_spark.sources import load_table
 
 # ---------------------------------------------------------------- exact dedup
@@ -1234,7 +1235,6 @@ _registry.REGISTRY["q_dedup_cluster_apply"] = _registry.Query(
 
 INC_RECRAWL_OFFSET = 1_000_000_000
 INC_BATCHDUP_OFFSET = 2_000_000_000
-_INC_IDX_READY: set[str] = set()
 
 
 def _inc_batch(d: DataFrame) -> DataFrame:
@@ -1260,7 +1260,6 @@ def _inc_batch(d: DataFrame) -> DataFrame:
     )
 
 
-_NI_READY: set[str] = set()
 NI_SUFFIX = " recrawl mirror"
 NI_THRESHOLD = MINHASH_THRESHOLD
 
@@ -1325,19 +1324,15 @@ def _ni_batch(d: DataFrame) -> DataFrame:
     "16-word signatures, never documents.",
 )
 def q_dedup_near_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from iceberg_poc_spark.sources.bucketed import write_bucketed
 
     d = load_table(spark, sf_dir, "documents")
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    wh = os.path.join(tempfile.gettempdir(), f"niwh_{os.getpid()}_{key}")
-    db = f"ninc_{key}"
-    if wh not in _NI_READY:
+    wh = scratch_dir("niwh", sf_dir)
+    db = os.path.basename(wh)
+
+    def build() -> None:
         corpus = d.filter(F.col("doc_id") % 10 != 0).select("doc_id", "text")
         sigs = minhash_signatures(corpus)
         write_bucketed(_band_rows(sigs), "band_idx", "bk", 16, db, wh)
@@ -1355,8 +1350,8 @@ def q_dedup_near_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             db,
             wh,
         )
-        _NI_READY.add(wh)
-        atexit.register(shutil.rmtree, wh, ignore_errors=True)
+
+    once(wh, build)
     batch = _ni_batch(d)
     # per-run localCheckpoint: the batch signatures feed BOTH the band
     # probe and the candidate verification (same pattern — and same
@@ -1476,8 +1471,6 @@ _registry.REGISTRY["q_dedup_near_incremental"] = _registry.Query(
 
 # -------------------------------- incremental connected components (daily)
 
-_CI_READY: set[str] = set()
-
 
 def _ci_db(spark: SparkSession, sf_dir: str) -> str:
     """One-time corpus-side artifacts for incremental cluster
@@ -1486,19 +1479,17 @@ def _ci_db(spark: SparkSession, sf_dir: str) -> str:
     the PERSISTED cluster assignment (assign_idx: corpus doc -> component
     root from a corpus-only label propagation), all bucketed+sorted so
     daily probes sort-merge-join with zero index-side Exchange."""
-    import atexit
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
+    wh = scratch_dir("ciwh", sf_dir)
+    db = os.path.basename(wh)
+    once(wh, lambda: _ci_build(spark, sf_dir, db, wh))
+    return db
+
+
+def _ci_build(spark: SparkSession, sf_dir: str, db: str, wh: str) -> None:
     from iceberg_poc_spark.sources.bucketed import write_bucketed
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    wh = os.path.join(tempfile.gettempdir(), f"ciwh_{os.getpid()}_{key}")
-    db = f"cinc_{key}"
-    if wh in _CI_READY:
-        return db
     d = load_table(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") % 10 != 0).select("doc_id", "text")
     sigs = minhash_signatures(corpus).cache()
@@ -1542,9 +1533,6 @@ def _ci_db(spark: SparkSession, sf_dir: str) -> str:
         wh,
     )
     sigs.unpersist()
-    _CI_READY.add(wh)
-    atexit.register(shutil.rmtree, wh, ignore_errors=True)
-    return db
 
 
 def _ci_quotient_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1774,28 +1762,24 @@ _registry.REGISTRY["q_dedup_clusters_incremental"] = _registry.Query(
     "network moves fingerprints, never documents.",
 )
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from iceberg_poc_spark.sources.bucketed import write_bucketed
 
     d = load_table(spark, sf_dir, "documents")
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    wh = os.path.join(tempfile.gettempdir(), f"dincwh_{os.getpid()}_{key}")
-    db = f"dinc_{key}"
+    wh = scratch_dir("dincwh", sf_dir)
+    db = os.path.basename(wh)
     idx = f"{db}.corpus_digests"
-    if wh not in _INC_IDX_READY:
+
+    def build() -> None:
         corpus_h = (
             d.filter(F.col("doc_id") % 10 != 0)
             .select(F.md5(F.col("text").cast("binary")).alias("h"))
             .distinct()
         )
         write_bucketed(corpus_h, "corpus_digests", "h", 16, db, wh)
-        _INC_IDX_READY.add(wh)
-        atexit.register(shutil.rmtree, wh, ignore_errors=True)
+
+    once(wh, build)
     batch = _inc_batch(d)
     joined = batch.join(
         spark.table(idx).withColumn("in_corpus", F.lit(True)).hint("merge"),

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_poc_spark.registry import register
+from iceberg_poc_spark.scratch import once, scratch_dir
 from iceberg_poc_spark.sources import load_table, scan_parquet
 
 
@@ -299,11 +300,6 @@ def q_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# bucketed warehouses created by q_join_bucketed this process (one per
-# sf_dir; tables are written once and reused — "paid at write time")
-_BUCKETED_READY: set[str] = set()
-
-
 @register(
     "q_join_bucketed",
     oracle="""
@@ -328,27 +324,23 @@ _BUCKETED_READY: set[str] = set()
     "transform + storage-partitioned joins.",
 )
 def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from iceberg_poc_spark.sources.bucketed import write_bucketed
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    wh = os.path.join(tempfile.gettempdir(), f"bktwh_{os.getpid()}_{key}")
-    db = f"bkt_{key}"
+    wh = scratch_dir("bktwh", sf_dir)
+    db = os.path.basename(wh)
     t_li, t_o = f"{db}.li_bkt", f"{db}.o_bkt"
-    if wh not in _BUCKETED_READY:
+
+    def build() -> None:
         li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
         o = load_table(spark, sf_dir, "orders").select(
             F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
         )
         write_bucketed(li, "li_bkt", "l_orderkey", 16, db, wh)
         write_bucketed(o, "o_bkt", "l_orderkey", 16, db, wh)
-        _BUCKETED_READY.add(wh)
-        atexit.register(shutil.rmtree, wh, ignore_errors=True)
+
+    once(wh, build)
     # the hint rides a join INPUT (strategy hints bind to input relations);
     # with matching bucket specs EnsureRequirements adds no Exchange
     joined = spark.table(t_li).join(spark.table(t_o).hint("merge"), "l_orderkey")
@@ -407,9 +399,6 @@ def q_join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DPP_READY: set[str] = set()
-
-
 @register(
     "q_join_dpp",
     oracle="""
@@ -440,20 +429,15 @@ _DPP_READY: set[str] = set()
     "would defeat the rule).",
 )
 def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"dpp_{os.getpid()}_{key}")
-    if root not in _DPP_READY:
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        load_table(spark, sf_dir, "customer").select(
-            "c_custkey", "c_acctbal", "c_nationkey"
-        ).write.mode("overwrite").partitionBy("c_nationkey").parquet(root)
-        _DPP_READY.add(root)
+    root = scratch_dir("dpp", sf_dir)
+    once(
+        root,
+        lambda: load_table(spark, sf_dir, "customer")
+        .select("c_custkey", "c_acctbal", "c_nationkey")
+        .write.mode("overwrite")
+        .partitionBy("c_nationkey")
+        .parquet(root),
+    )
     # memoized scan (sources.scan_parquet): re-listing 25 partition dirs +
     # re-inferring the schema cost ~0.4 s of driver time per run
     cust = scan_parquet(spark, root)

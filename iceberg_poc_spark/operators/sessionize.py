@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from iceberg_poc_spark.functions.sqlround import dround
+from iceberg_poc_spark.operators.tablelayer import table_setup
 from iceberg_poc_spark.registry import register
 from iceberg_poc_spark.sources import load_table, table_path
 from iceberg_poc_spark.streaming.pipelines import state_session
@@ -363,16 +364,15 @@ def q_stream_live_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sib.table("live_tumbling")
 
 
-def _setup_events_live(spark: SparkSession, sf_dir: str):
+@table_setup
+def _setup_events_live(spark: SparkSession, sf_dir: str, mgr):
     """events_live: the production streaming ingest loop, once per process
-    per sf_dir (same paid-at-ingest convention as operators/tablelayer.py):
-    readStream over the events parquet -> foreachBatch, each micro-batch
-    ONE atomic snapshot append into the event_type-partitioned table
-    (exactly-once per epoch via the streaming checkpoint) -> sorted
+    per sf_dir: readStream over the events parquet -> foreachBatch, each
+    micro-batch ONE atomic snapshot append into the event_type-partitioned
+    table (exactly-once per epoch via the streaming checkpoint) -> sorted
     compaction folds the micro-batch fragments."""
     import os
 
-    from iceberg_poc_spark.operators.tablelayer import _READY, _mgr_for
     from iceberg_poc_spark.sources import table_path
     from iceberg_poc_spark.streaming.pipelines import (
         load_events_stream,
@@ -380,18 +380,11 @@ def _setup_events_live(spark: SparkSession, sf_dir: str):
     )
     from iceberg_poc_spark.tables import identity
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "events_live")
-    if key in _READY:
-        return mgr
     stream = load_events_stream(spark, table_path(sf_dir, "events"))
     mgr.create_table("events_live", stream.schema, [identity("event_type")])
-    run_to_table(
-        stream, mgr, "events_live", os.path.join(wh, "_ckpt_events_live")
-    )
+    ckpt = os.path.join(mgr.warehouse, "_ckpt_events_live")
+    run_to_table(stream, mgr, "events_live", ckpt)
     mgr.compact("events_live", sort_by=["ts"])
-    _READY[key] = {}
-    return mgr
 
 
 @register(
@@ -422,7 +415,7 @@ def _setup_events_live(spark: SparkSession, sf_dir: str):
     "tests/test_streaming.py.",
 )
 def q_stream_live_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    mgr = _setup_events_live(spark, sf_dir)
+    mgr, _ = _setup_events_live(spark, sf_dir)
     df = mgr.read("events_live")
     return df.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
@@ -888,7 +881,8 @@ def q_stream_live_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sib.table("live_sliding").withColumn("n", F.col("n").cast("bigint"))
 
 
-def _setup_events_sink(spark: SparkSession, sf_dir: str):
+@table_setup
+def _setup_events_sink(spark: SparkSession, sf_dir: str, mgr):
     """events_sink: the NATIVE streaming table sink, once per process per
     sf_dir: readStream over events parquet -> writeStream.format(
     'snaptable') -> one atomic snapshot per micro-batch, each commit
@@ -896,29 +890,24 @@ def _setup_events_sink(spark: SparkSession, sf_dir: str):
     marker a replayed epoch is skipped by)."""
     import os
 
-    from iceberg_poc_spark.operators.tablelayer import _READY, _mgr_for
     from iceberg_poc_spark.sources import table_path
     from iceberg_poc_spark.sources.pyds import register_snaptable
     from iceberg_poc_spark.streaming.pipelines import load_events_stream
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "events_sink")
-    if key in _READY:
-        return mgr
     register_snaptable(spark)
     stream = load_events_stream(spark, table_path(sf_dir, "events"))
     mgr.create_table("events_sink", stream.schema, [])
     q = (
         stream.writeStream.format("snaptable")
-        .option("warehouse", wh)
+        .option("warehouse", mgr.warehouse)
         .option("table", "events_sink")
-        .option("checkpointLocation", os.path.join(wh, "_ckpt_events_sink"))
+        .option(
+            "checkpointLocation", os.path.join(mgr.warehouse, "_ckpt_events_sink")
+        )
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    _READY[key] = {}
-    return mgr
 
 
 @register(
@@ -948,7 +937,7 @@ def _setup_events_sink(spark: SparkSession, sf_dir: str):
     "machinery.",
 )
 def q_stream_connector_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    mgr = _setup_events_sink(spark, sf_dir)
+    mgr, _ = _setup_events_sink(spark, sf_dir)
     df = mgr.read("events_sink")
     return df.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
@@ -957,7 +946,8 @@ def q_stream_connector_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _setup_table_pipeline(spark: SparkSession, sf_dir: str):
+@table_setup
+def _setup_table_pipeline(spark: SparkSession, sf_dir: str, mgr):
     """events_bronze -> events_silver: the INCREMENTAL table-to-table
     streaming pipeline (medallion bronze->silver), once per process per
     sf_dir. Bronze lands as three append snapshots; drain #1 streams the
@@ -969,13 +959,8 @@ def _setup_table_pipeline(spark: SparkSession, sf_dir: str):
     restart."""
     import os
 
-    from iceberg_poc_spark.operators.tablelayer import _READY, _mgr_for
     from iceberg_poc_spark.sources.pyds import register_snaptable
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "events_silver")
-    if key in _READY:
-        return mgr, _READY[key]
     register_snaptable(spark)
     events = load_table(spark, sf_dir, "events")
     mgr.create_table("events_bronze", events.schema, [])
@@ -990,19 +975,19 @@ def _setup_table_pipeline(spark: SparkSession, sf_dir: str):
         events.withColumn("day", F.to_date("ts")).where("value > 50").schema
     )
     mgr.create_table("events_silver", silver_schema, [])
-    ckpt = os.path.join(wh, "_ckpt_events_silver")
+    ckpt = os.path.join(mgr.warehouse, "_ckpt_events_silver")
 
     def drain() -> None:
         q = (
             spark.readStream.format("snaptable")
-            .option("warehouse", wh)
+            .option("warehouse", mgr.warehouse)
             .option("table", "events_bronze")
             .option("from_snapshot", v0)
             .load()
             .where("value > 50")
             .withColumn("day", F.to_date("ts"))
             .writeStream.format("snaptable")
-            .option("warehouse", wh)
+            .option("warehouse", mgr.warehouse)
             .option("table", "events_silver")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
@@ -1024,8 +1009,7 @@ def _setup_table_pipeline(spark: SparkSession, sf_dir: str):
         "events_bronze", events.where(F.pmod("event_id", F.lit(4)) == 3)
     )
     drain()
-    _READY[key] = mid
-    return mgr, mid
+    return mid
 
 
 @register(
@@ -1070,7 +1054,8 @@ def q_stream_table_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _setup_events_cdc_upsert(spark: SparkSession, sf_dir: str):
+@table_setup
+def _setup_events_cdc_upsert(spark: SparkSession, sf_dir: str, mgr):
     """events_cdc_up: the minute-level streaming CDC loop, once per
     process per sf_dir — the events corpus arrives as THREE chronological
     slices (one parquet file each, increasing modification times, so the
@@ -1082,19 +1067,14 @@ def _setup_events_cdc_upsert(spark: SparkSession, sf_dir: str):
     across batch boundaries by the MoR key deletes, never a rewrite."""
     import os
 
-    from iceberg_poc_spark.operators.tablelayer import _READY, _mgr_for
     from iceberg_poc_spark.streaming.pipelines import (
         load_events_stream,
         run_to_table_upsert,
     )
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "events_cdc_up")
-    if key in _READY:
-        return mgr
     ev = load_table(spark, sf_dir, "events")
     n = ev.count()
-    src = os.path.join(wh, "_src_cdc_up")
+    src = os.path.join(mgr.warehouse, "_src_cdc_up")
     for lo, hi in ((0, n // 3), (n // 3, 2 * n // 3), (2 * n // 3, None)):
         # sequential single-file writes -> strictly increasing mtimes ->
         # deterministic micro-batch order (the file source sorts by
@@ -1112,10 +1092,8 @@ def _setup_events_cdc_upsert(spark: SparkSession, sf_dir: str):
         "events_cdc_up",
         keys=["user_id"],
         order_cols=["event_id"],
-        checkpoint=os.path.join(wh, "_ckpt_cdc_up"),
+        checkpoint=os.path.join(mgr.warehouse, "_ckpt_cdc_up"),
     )
-    _READY[key] = {}
-    return mgr
 
 
 @register(
@@ -1151,7 +1129,7 @@ def _setup_events_cdc_upsert(spark: SparkSession, sf_dir: str):
     "re-upserting the same keys) — the 100 TB CDC shape.",
 )
 def q_stream_upsert_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    mgr = _setup_events_cdc_upsert(spark, sf_dir)
+    mgr, _ = _setup_events_cdc_upsert(spark, sf_dir)
     df = mgr.read("events_cdc_up")
     return df.groupBy("event_type").agg(
         F.count("*").alias("n_users"),
@@ -1163,7 +1141,8 @@ def q_stream_upsert_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------- streaming ANN ingest
 
 
-def _setup_emb_ann_stream(spark: SparkSession, sf_dir: str):
+@table_setup
+def _setup_emb_ann_stream(spark: SparkSession, sf_dir: str, mgr):
     """emb_ann_stream: the embedding corpus arrives as THREE vec_id-sliced
     single-file micro-batches (mtime-ordered); anchors are FROZEN at
     index bootstrap (strided over the static corpus — the
@@ -1180,18 +1159,13 @@ def _setup_emb_ann_stream(spark: SparkSession, sf_dir: str):
         _assign_anchor_cells,
         _strided_anchors,
     )
-    from iceberg_poc_spark.operators.tablelayer import _READY, _mgr_for
     from iceberg_poc_spark.streaming.pipelines import run_to_table
     from iceberg_poc_spark.tables import identity
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "emb_ann_stream")
-    if key in _READY:
-        return mgr, _READY[key]["anchors"]
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n = emb.count()
     anchors = _strided_anchors(emb, n // ANN_MP_CELLS)
-    src = os.path.join(wh, "_src_ann_stream")
+    src = os.path.join(mgr.warehouse, "_src_ann_stream")
     for lo, hi in ((0, n // 3), (n // 3, 2 * n // 3), (2 * n // 3, None)):
         cond = F.col("vec_id") >= lo
         if hi is not None:
@@ -1208,11 +1182,10 @@ def _setup_emb_ann_stream(spark: SparkSession, sf_dir: str):
         stream,
         mgr,
         "emb_ann_stream",
-        checkpoint=os.path.join(wh, "_ckpt_ann_stream"),
+        checkpoint=os.path.join(mgr.warehouse, "_ckpt_ann_stream"),
         transform=lambda b: _assign_anchor_cells(spark, b, anchors),
     )
-    _READY[key] = {"anchors": anchors}
-    return mgr, anchors
+    return anchors
 
 
 @register(
@@ -1304,7 +1277,8 @@ def q_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------- streaming write-audit-publish
 
-def _setup_events_wap_stream(spark: SparkSession, sf_dir: str):
+@table_setup
+def _setup_events_wap_stream(spark: SparkSession, sf_dir: str, mgr):
     """events_wap_stream: the corpus drains as three single-file micro-batches
     written in mtime order [slice0, slice2, slice1] — so the THIRD batch
     carries event_ids BELOW the published maximum and must fail the
@@ -1314,19 +1288,14 @@ def _setup_events_wap_stream(spark: SparkSession, sf_dir: str):
     audit branch resets, so main holds exactly slices 0 and 2."""
     import os
 
-    from iceberg_poc_spark.operators.tablelayer import _READY, _mgr_for
     from iceberg_poc_spark.streaming.pipelines import (
         load_events_stream,
         run_to_table_wap,
     )
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "events_wap_stream")
-    if key in _READY:
-        return mgr
     ev = load_table(spark, sf_dir, "events")
     n = ev.count()
-    src = os.path.join(wh, "_src_wap")
+    src = os.path.join(mgr.warehouse, "_src_wap")
     slices = (
         (0, n // 3),
         (2 * (n // 3), None),  # arrives SECOND: publishes a high max
@@ -1350,11 +1319,9 @@ def _setup_events_wap_stream(spark: SparkSession, sf_dir: str):
         stream,
         mgr,
         "events_wap_stream",
-        checkpoint=os.path.join(wh, "_ckpt_wap"),
+        checkpoint=os.path.join(mgr.warehouse, "_ckpt_wap"),
         validate=monotonic_gate,
     )
-    _READY[key] = {}
-    return mgr
 
 
 @register(
@@ -1391,7 +1358,7 @@ def _setup_events_wap_stream(spark: SparkSession, sf_dir: str):
     "pointer CAS to publish.",
 )
 def q_stream_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
-    mgr = _setup_events_wap_stream(spark, sf_dir)
+    mgr, _ = _setup_events_wap_stream(spark, sf_dir)
     df = mgr.read("events_wap_stream")
     return df.groupBy("event_type").agg(
         F.count("*").alias("n_rows"),

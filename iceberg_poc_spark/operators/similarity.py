@@ -26,6 +26,7 @@ from iceberg_poc_spark.functions.vectors import (
     sign_bucket_sql,
 )
 from iceberg_poc_spark.registry import register
+from iceberg_poc_spark.scratch import once, scratch_dir
 from iceberg_poc_spark.sources import load_table
 
 TOP_K = 10
@@ -33,6 +34,24 @@ QUERY_VEC_ID = 0
 
 IVF_BITS = 4
 IVF_TOP_K = 5
+
+
+def _index(spark: SparkSession, prefix: str, sf_dir: str, build):
+    """``(mgr, state)`` over the scratch warehouse ``prefix`` for ``sf_dir``:
+    ``state = build(mgr)`` writes the index, once per process. The index
+    owns its warehouse, so an attempt starts by emptying it: a retry after
+    a failed build does not meet the tables the failed one committed."""
+    import shutil
+
+    from iceberg_poc_spark.tables import ParquetTableManager
+
+    mgr = ParquetTableManager(spark, scratch_dir(prefix, sf_dir))
+
+    def attempt():
+        shutil.rmtree(mgr.warehouse, ignore_errors=True)
+        return build(mgr)
+
+    return mgr, once(mgr.warehouse, attempt)
 
 
 @register(
@@ -129,9 +148,6 @@ def q_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ANN_WAREHOUSES: set[str] = set()
-
-
 def _ann_pruned_scan(spark: SparkSession, sf_dir: str):
     """Write embeddings through the snapshot table layer partitioned by
     sign-LSH cell (once per process per sf_dir), then PLAN a probe that
@@ -140,28 +156,18 @@ def _ann_pruned_scan(spark: SparkSession, sf_dir: str):
     ``newScan().filter().planTasks()`` shape
     (aig/TimeBasedPartitioningExamples.java:180-195) applied to vector
     search. Returns (df, files_planned, files_total, probe_cells)."""
-    import atexit
-    import hashlib
-    import os
-    import shutil
-    import tempfile
+    from iceberg_poc_spark.tables import identity
 
-    from iceberg_poc_spark.tables import ParquetTableManager, identity
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    wh = os.path.join(tempfile.gettempdir(), f"annwh_{os.getpid()}_{key}")
-    mgr = ParquetTableManager(spark, wh)
-    if wh not in _ANN_WAREHOUSES:
+    def build(mgr) -> None:
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id",
             "embedding",
             sign_bucket(F.col("embedding"), IVF_BITS).alias("cell"),
         )
-        shutil.rmtree(wh, ignore_errors=True)
         mgr.create_table("emb_cells", emb.schema, [identity("cell")])
         mgr.append("emb_cells", emb)
-        _ANN_WAREHOUSES.add(wh)
-        atexit.register(shutil.rmtree, wh, ignore_errors=True)
+
+    mgr, _ = _index(spark, "annwh", sf_dir, build)
     # the query vector is the probe's input (single bounded row)
     qrow = (
         load_table(spark, sf_dir, "embeddings")
@@ -230,8 +236,6 @@ def q_sim_ann_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ANN_MP_CELLS = 48  # anchor-Voronoi cells (IVF coarse quantizer)
 ANN_MP_PROBE = 24  # probed cells per query (the recall/scan knob)
-
-_ANN_MP_WAREHOUSES: set[str] = set()
 
 
 def _seq_cos(a, b) -> float:
@@ -318,27 +322,18 @@ def _assign_anchor_cells(
 def _ann_multiprobe_scan(spark: SparkSession, sf_dir: str):
     """Anchor-IVF index build (once per process per sf_dir) + budgeted
     multi-probe plan. Returns (df, planned, total, qemb)."""
-    import atexit
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from iceberg_poc_spark.tables import ParquetTableManager, identity
+    from iceberg_poc_spark.tables import identity
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n = emb.count()
     anchors = _strided_anchors(emb, n // ANN_MP_CELLS)
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    wh = os.path.join(tempfile.gettempdir(), f"annmp_{os.getpid()}_{key}")
-    mgr = ParquetTableManager(spark, wh)
-    if wh not in _ANN_MP_WAREHOUSES:
+
+    def build(mgr) -> None:
         cells = _assign_anchor_cells(spark, emb, anchors)
-        shutil.rmtree(wh, ignore_errors=True)
         mgr.create_table("emb_ivf", cells.schema, [identity("cell")])
         mgr.append("emb_ivf", cells)
-        _ANN_MP_WAREHOUSES.add(wh)
-        atexit.register(shutil.rmtree, wh, ignore_errors=True)
+
+    mgr, _ = _index(spark, "annmp", sf_dir, build)
     qemb = next(a for aid, a in anchors if aid == 0)  # vec_id 0 IS anchor 0
     ranked = _probe_order(anchors, qemb)
     probe = [aid for aid, _ in ranked[:ANN_MP_PROBE]]
@@ -557,8 +552,6 @@ def q_sim_ann_mass_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 # files — base AND appended — at the manifest.
 ANN_INC_BATCHES = 3
 
-_ANN_INC_STATE: dict[str, object] = {}
-
 
 def _ann_incremental_scan(spark: SparkSession, sf_dir: str):
     """Build the frozen-anchor IVF index on the BASE corpus, append
@@ -566,22 +559,13 @@ def _ann_incremental_scan(spark: SparkSession, sf_dir: str):
     recompute, no rebuild), then plan a budgeted multi-probe over the
     grown index. Returns (df, planned, total, qemb, mgr,
     base_file_paths)."""
-    import atexit
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from iceberg_poc_spark.tables import ParquetTableManager, identity
+    from iceberg_poc_spark.tables import identity
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    wh = os.path.join(tempfile.gettempdir(), f"anninc_{os.getpid()}_{key}")
-    mgr = ParquetTableManager(spark, wh)
-    if wh not in _ANN_INC_STATE:
+
+    def build(mgr) -> tuple:
         n = emb.count()
         anchors = _strided_anchors(emb, 5 * ((n // 5) // ANN_MP_CELLS))
-        shutil.rmtree(wh, ignore_errors=True)
         base = emb.filter(F.col("vec_id") % 5 != 4)
         cells = _assign_anchor_cells(spark, base, anchors)
         mgr.create_table("emb_ivf_inc", cells.schema, [identity("cell")])
@@ -596,9 +580,9 @@ def _ann_incremental_scan(spark: SparkSession, sf_dir: str):
             mgr.append(
                 "emb_ivf_inc", _assign_anchor_cells(spark, batch, anchors)
             )
-        _ANN_INC_STATE[wh] = (anchors, base_paths)
-        atexit.register(shutil.rmtree, wh, ignore_errors=True)
-    anchors, base_paths = _ANN_INC_STATE[wh]
+        return anchors, base_paths
+
+    mgr, (anchors, base_paths) = _index(spark, "anninc", sf_dir, build)
     qemb = next(a for aid, a in anchors if aid == 0)  # vec_id 0 IS anchor 0
     probe = [aid for aid, _ in _probe_order(anchors, qemb)[:ANN_MP_PROBE]]
     df, planned, total = mgr.scan(
@@ -753,31 +737,19 @@ def q_sim_ann_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ANN_DEL_STATE: dict[str, object] = {}
-
-
 def _ann_delete_scan(spark: SparkSession, sf_dir: str):
     """Build the frozen-anchor IVF index over the full corpus, then
     REMOVE the opted-out vectors (vec_id % 7 == 3) with a merge-on-read
     positional delete + compact_deletes pass — no index file rewritten —
     and plan the budgeted multi-probe over the redacted index. Returns
     (df, planned, total, qemb, mgr, pre_paths)."""
-    import atexit
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from iceberg_poc_spark.tables import ParquetTableManager, identity
+    from iceberg_poc_spark.tables import identity
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    wh = os.path.join(tempfile.gettempdir(), f"anndel_{os.getpid()}_{key}")
-    mgr = ParquetTableManager(spark, wh)
-    if wh not in _ANN_DEL_STATE:
+
+    def build(mgr) -> tuple:
         n = emb.count()
         anchors = _strided_anchors(emb, 5 * ((n // 5) // ANN_MP_CELLS))
-        shutil.rmtree(wh, ignore_errors=True)
         cells = _assign_anchor_cells(spark, emb, anchors)
         mgr.create_table("emb_ivf_del", cells.schema, [identity("cell")])
         mgr.append("emb_ivf_del", cells)
@@ -795,9 +767,9 @@ def _ann_delete_scan(spark: SparkSession, sf_dir: str):
         )
         mgr.delete_positions("emb_ivf_del", coords)
         mgr.compact_deletes("emb_ivf_del")
-        _ANN_DEL_STATE[wh] = (anchors, pre_paths)
-        atexit.register(shutil.rmtree, wh, ignore_errors=True)
-    anchors, pre_paths = _ANN_DEL_STATE[wh]
+        return anchors, pre_paths
+
+    mgr, (anchors, pre_paths) = _index(spark, "anndel", sf_dir, build)
     qemb = next(a for aid, a in anchors if aid == 0)
     probe = [aid for aid, _ in _probe_order(anchors, qemb)[:ANN_MP_PROBE]]
     df, planned, total = mgr.scan(
@@ -881,8 +853,6 @@ def q_sim_ann_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_RE_HOT = 2  # cells split per re-anchor pass (the top-occupancy ones)
-
-_ANN_RE_STATE: dict[str, object] = {}
 
 
 def reanchor_index(
@@ -982,22 +952,13 @@ def _ann_reanchor_scan(spark: SparkSession, sf_dir: str):
     the smaller cell id), then the budgeted multi-probe over the
     rebalanced index. Returns (df, planned, total, qemb, mgr,
     untouched_pre_paths)."""
-    import atexit
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from iceberg_poc_spark.tables import ParquetTableManager, identity
+    from iceberg_poc_spark.tables import identity
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    wh = os.path.join(tempfile.gettempdir(), f"annre_{os.getpid()}_{key}")
-    mgr = ParquetTableManager(spark, wh)
-    if wh not in _ANN_RE_STATE:
+
+    def build(mgr) -> tuple:
         n = emb.count()
         anchors = _strided_anchors(emb, n // ANN_MP_CELLS)
-        shutil.rmtree(wh, ignore_errors=True)
         cells = _assign_anchor_cells(spark, emb, anchors)
         mgr.create_table("emb_ivf_re", cells.schema, [identity("cell")])
         mgr.append("emb_ivf_re", cells)
@@ -1024,9 +985,9 @@ def _ann_reanchor_scan(spark: SparkSession, sf_dir: str):
         # with a resident's vector — the query must stay vec 0
         qemb0 = next(a for aid, a in anchors if aid == 0)
         anchors2 = reanchor_index(spark, mgr, "emb_ivf_re", anchors, hot)
-        _ANN_RE_STATE[wh] = (anchors2, pre_untouched, qemb0)
-        atexit.register(shutil.rmtree, wh, ignore_errors=True)
-    anchors2, pre_untouched, qemb = _ANN_RE_STATE[wh]
+        return anchors2, pre_untouched, qemb0
+
+    mgr, (anchors2, pre_untouched, qemb) = _index(spark, "annre", sf_dir, build)
     probe = [aid for aid, _ in _probe_order(anchors2, qemb)[:ANN_MP_PROBE]]
     df, planned, total = mgr.scan("emb_ivf_re", where=[("cell", "in", probe)])
     return df, planned, total, qemb, mgr, pre_untouched
@@ -1531,11 +1492,6 @@ PQ_M = 8  # subspaces over the 64-dim embedding (8 dims each)
 PQ_K = 32  # codebook entries per subspace (strided corpus sample)
 PQ_TOP_K = 10
 
-# warehouse path -> (cents, ds, qemb, n): the driver-side index
-# metadata is cached alongside the build guard (mirroring _PQ_INC_META)
-# so warm queries never rescan the float corpus for codebooks
-_PQ_WAREHOUSES: dict[str, tuple] = {}
-
 
 def _seq_l2(a: list[float], b: list[float]) -> float:
     """Driver-side sequential-fold euclidean distance — bit-identical to
@@ -1629,30 +1585,21 @@ def _pq_build(spark: SparkSession, sf_dir: str):
     (codebooks via :func:`_pq_codebooks`, one-pass encoding via
     :func:`_pq_codes_wide`; the codes land in a managed table once per
     process per sf_dir — queries scan ONLY that table until the exact
-    rerank). Returns (mgr, cents, n, qemb, ds)."""
-    import atexit
-    import hashlib
-    import os
-    import shutil
-    import tempfile
+    rerank). The driver-side codebooks are kept with the index, so warm
+    queries never rescan the float corpus for them. Returns (mgr, cents,
+    n, qemb, ds)."""
 
-    from iceberg_poc_spark.tables import ParquetTableManager
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    wh = os.path.join(tempfile.gettempdir(), f"annpq_{os.getpid()}_{key}")
-    mgr = ParquetTableManager(spark, wh)
-    if wh not in _PQ_WAREHOUSES:
+    def build(mgr) -> tuple:
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
         )
         cents, ds, qemb, n = _pq_codebooks(emb)
         wide = _pq_codes_wide(spark, emb, cents, ds)
-        shutil.rmtree(wh, ignore_errors=True)
         mgr.create_table("emb_pq", wide.schema, [])
         mgr.append("emb_pq", wide)
-        _PQ_WAREHOUSES[wh] = (cents, ds, qemb, n)
-        atexit.register(shutil.rmtree, wh, ignore_errors=True)
-    cents, ds, qemb, n = _PQ_WAREHOUSES[wh]
+        return cents, ds, qemb, n
+
+    mgr, (cents, ds, qemb, n) = _index(spark, "annpq", sf_dir, build)
     return mgr, cents, n, qemb, ds
 
 
@@ -1816,9 +1763,6 @@ def q_sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _exact_rerank(emb, cand, qemb, PQ_TOP_K)
 
 
-_PQ_INC_META: dict[str, tuple] = {}
-
-
 def _pq_inc_scan(spark: SparkSession, sf_dir: str):
     """Incremental PQ index: codebooks FROZEN at bootstrap (strided over
     the BASE slice vec_id%5!=4 — strided ids landing in the batch slice
@@ -1830,18 +1774,8 @@ def _pq_inc_scan(spark: SparkSession, sf_dir: str):
     frozen codebooks, so the incrementally-built index is value-
     identical to a from-scratch build — which is exactly what lets the
     oracle reproduce it relationally. Returns (cand_df, n, qemb)."""
-    import atexit
-    import hashlib
-    import os
-    import shutil
-    import tempfile
 
-    from iceberg_poc_spark.tables import ParquetTableManager
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    wh = os.path.join(tempfile.gettempdir(), f"annpqinc_{os.getpid()}_{key}")
-    mgr = ParquetTableManager(spark, wh)
-    if wh not in _PQ_INC_META:
+    def build(mgr) -> tuple:
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
         )
@@ -1853,14 +1787,13 @@ def _pq_inc_scan(spark: SparkSession, sf_dir: str):
         cents, ds, qemb, _n_base = _pq_codebooks(base)
         n = emb.count()
         base_codes = _pq_codes_wide(spark, base, cents, ds)
-        shutil.rmtree(wh, ignore_errors=True)
         mgr.create_table("emb_pq_inc", base_codes.schema, [])
         mgr.append("emb_pq_inc", base_codes)
         batch = emb.filter(F.col("vec_id") % 5 == 4)
         mgr.append("emb_pq_inc", _pq_codes_wide(spark, batch, cents, ds))
-        _PQ_INC_META[wh] = (cents, ds, qemb, n)
-        atexit.register(shutil.rmtree, wh, ignore_errors=True)
-    cents, ds, qemb, n = _PQ_INC_META[wh]
+        return cents, ds, qemb, n
+
+    mgr, (cents, ds, qemb, n) = _index(spark, "annpqinc", sf_dir, build)
     codes, _planned, _total = mgr.scan("emb_pq_inc")
     adc = _pq_adc_col(cents, ds, qemb)
     cand = (
@@ -1969,30 +1902,17 @@ def q_sim_ann_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 IVFPQ_CAND_DIV = 8  # ADC keeps the best n//8 of the probed cells' rows
 
-# warehouse path -> (cents, ds, qemb, n, anchors): warm probes reuse
-# the cached codebooks AND coarse anchors instead of rescanning the
-# corpus (same contract as _PQ_WAREHOUSES / _PQ_INC_META)
-_IVFPQ_WAREHOUSES: dict[str, tuple] = {}
-
 
 def _ivfpq_scan(spark: SparkSession, sf_dir: str):
     """Build-or-load the combined IVF-PQ index and run the two-level
     probe: coarse anchor-Voronoi routing prunes unprobed CELLS at the
     manifest (their code files are never opened), PQ-ADC ranks the
     probed cells' packed codes, the best n//8 go to exact rerank.
-    Returns (cand_df, n, qemb, planned, total)."""
-    import atexit
-    import hashlib
-    import os
-    import shutil
-    import tempfile
+    Warm probes reuse the kept codebooks AND coarse anchors instead of
+    rescanning the corpus. Returns (cand_df, n, qemb, planned, total)."""
+    from iceberg_poc_spark.tables import identity
 
-    from iceberg_poc_spark.tables import ParquetTableManager, identity
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    wh = os.path.join(tempfile.gettempdir(), f"annivfpq_{os.getpid()}_{key}")
-    mgr = ParquetTableManager(spark, wh)
-    if wh not in _IVFPQ_WAREHOUSES:
+    def build(mgr) -> tuple:
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
         )
@@ -2002,12 +1922,11 @@ def _ivfpq_scan(spark: SparkSession, sf_dir: str):
             "vec_id", "cell"
         )
         idx = _pq_codes_wide(spark, emb, cents, ds).join(cells, "vec_id")
-        shutil.rmtree(wh, ignore_errors=True)
         mgr.create_table("emb_ivfpq", idx.schema, [identity("cell")])
         mgr.append("emb_ivfpq", idx)
-        _IVFPQ_WAREHOUSES[wh] = (cents, ds, qemb, n, anchors)
-        atexit.register(shutil.rmtree, wh, ignore_errors=True)
-    cents, ds, qemb, n, anchors = _IVFPQ_WAREHOUSES[wh]
+        return cents, ds, qemb, n, anchors
+
+    mgr, (cents, ds, qemb, n, anchors) = _index(spark, "annivfpq", sf_dir, build)
     ranked = _probe_order(anchors, qemb)
     probe = [aid for aid, _ in ranked[:ANN_MP_PROBE]]
     codes, planned, total = mgr.scan(

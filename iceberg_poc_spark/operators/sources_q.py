@@ -3,9 +3,8 @@ text (the complete non-parquet source surface of `sources/formats.py`,
 previously only pytest-verified).
 
 Each query writes a table slice out through the format's sink ONCE per
-process per sf_dir (same paid-at-write-time convention as
-operators/tablelayer.py), reads it back through the schema-explicit
-reader, and aggregates; the DuckDB oracle computes the same aggregate
+process per sf_dir (:mod:`iceberg_poc_spark.scratch`), reads it back
+through the schema-explicit reader, and aggregates; the DuckDB oracle computes the same aggregate
 from the ORIGINAL parquet — so any fidelity loss in the round-trip
 (type coercion, timestamp formatting, quoting, compression) breaks the
 value hash. This is the failure class text formats actually have at
@@ -15,16 +14,13 @@ timestamps, truncated doubles.
 
 from __future__ import annotations
 
-import atexit
-import hashlib
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_poc_spark.registry import register
+from iceberg_poc_spark.scratch import once, scratch_dir
 from iceberg_poc_spark.sources import load_table, scan_parquet
 from iceberg_poc_spark.sources.formats import (
     read_csv,
@@ -37,31 +33,9 @@ from iceberg_poc_spark.sources.formats import (
     write_text,
 )
 
-_FMT_READY: set[str] = set()
-
 
 def _fmt_dir(sf_dir: str, name: str) -> str:
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"fmtq_{os.getpid()}_{key}")
-    return os.path.join(root, name)
-
-
-def _ensure(path: str, write) -> None:
-    """Perform the one-time write for ``path`` if it hasn't succeeded yet.
-
-    ``path`` is marked ready only AFTER ``write()`` returns: if the write
-    throws (disk pressure, interrupted job), the next invocation retries
-    instead of reading a missing or partial directory. The cleanup root is
-    registered up front so even a failed partial write is reaped at exit.
-    """
-    if path in _FMT_READY:
-        return
-    root = os.path.dirname(path)
-    if root not in _FMT_READY:
-        _FMT_READY.add(root)
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-    write()
-    _FMT_READY.add(path)
+    return os.path.join(scratch_dir("fmtq", sf_dir), name)
 
 
 @register(
@@ -84,7 +58,7 @@ def _ensure(path: str, write) -> None:
 def q_source_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _fmt_dir(sf_dir, "customer_csv")
     cust = load_table(spark, sf_dir, "customer")
-    _ensure(path, lambda: write_csv(cust, path))
+    once(path, lambda: write_csv(cust, path))
     back = read_csv(spark, path, schema=cust.schema)
     return back.groupBy("c_mktsegment").agg(
         F.count("*").alias("n_cust"),
@@ -114,7 +88,7 @@ def q_source_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_source_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _fmt_dir(sf_dir, "events_json")
     ev = load_table(spark, sf_dir, "events")
-    _ensure(path, lambda: write_json(ev, path))
+    once(path, lambda: write_json(ev, path))
     back = read_json(spark, path, schema=ev.schema)
     return back.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
@@ -145,7 +119,7 @@ def q_source_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp_ntz"))
         & (F.col("l_shipdate") < F.lit("1997-07-01 00:00:00").cast("timestamp_ntz"))
     )
-    _ensure(path, lambda: write_orc(li, path))
+    once(path, lambda: write_orc(li, path))
     back = read_orc(spark, path)
     return back.agg(
         F.count("*").alias("n_lines"),
@@ -172,7 +146,7 @@ def q_source_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_source_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _fmt_dir(sf_dir, "documents_txt")
     docs = load_table(spark, sf_dir, "documents")
-    _ensure(path, lambda: write_text(docs.select("text"), path))
+    once(path, lambda: write_text(docs.select("text"), path))
     back = read_text(spark, path)
     return back.agg(
         F.count("*").alias("n_lines"),
@@ -207,7 +181,7 @@ def q_source_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _fmt_dir(sf_dir, "part_xml")
     part = load_table(spark, sf_dir, "part")
-    _ensure(path, lambda: write_xml(part, path))
+    once(path, lambda: write_xml(part, path))
     back = read_xml(spark, path, schema=part.schema)
     return back.groupBy("p_brand").agg(
         F.count("*").alias("n_parts"),
@@ -245,7 +219,7 @@ def q_source_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_meta_file_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _fmt_dir(sf_dir, "orders_hive")
     orders = load_table(spark, sf_dir, "orders")
-    _ensure(
+    once(
         path,
         lambda: orders.repartition(F.col("o_orderpriority"))
         .write.partitionBy("o_orderpriority")

@@ -13,25 +13,21 @@ layer (committed snapshots, tags, CoW merge), reads back through snapshot
 resolution, and is value-checked against a DuckDB oracle that computes the
 expected table state directly from the raw parquet.
 
-Cost model (same convention as q_join_bucketed / q_scan_iceberg): the
-ingest happens ONCE per process per sf_dir — the write is the one-time
-cost the table pays at ingest; every query invocation after that is a pure
-metadata-resolved read. Warehouses live under a deterministic per-process
-temp path and are removed at interpreter exit.
+Each table's set-up is a :func:`table_setup`: built once per process per
+sf_dir in one shared warehouse (the cost model is
+:mod:`iceberg_poc_spark.scratch`'s).
 """
 
 from __future__ import annotations
 
-import atexit
-import hashlib
+import functools
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iceberg_poc_spark.registry import register
+from iceberg_poc_spark.scratch import once, scratch_dir
 from iceberg_poc_spark.sources import load_table
 
 CUTOFF = "1998-01-01 00:00:00"
@@ -43,40 +39,34 @@ EVOLVE_NATION_SPLIT = 12
 PE_DATE_LO = "1997-01-01 00:00:00"
 PE_PRIORITY = "1-URGENT"
 
-# (warehouse, table) -> snapshot bookmarks; presence of the key means that
-# table's setup commits are done. PER-TABLE laziness, not one big setup:
-# each registered query pays only its OWN table's one-time ingest, so
-# benchmark attribution stays honest and a single query never fronts the
-# whole warehouse.
-_READY: dict[tuple[str, str], dict[str, int]] = {}
+
+def table_setup(build):
+    """Make ``build(spark, sf_dir, mgr) -> bookmarks`` the set-up of its
+    tables in the shared table-layer warehouse (``ttwh``): the decorated
+    ``setup(spark, sf_dir)`` returns ``(mgr, bookmarks)``, and ``build``
+    runs once per process per sf_dir. PER-TABLE laziness, not one big
+    setup: each registered query pays only its OWN tables' one-time
+    ingest, so benchmark attribution stays honest and a single query never
+    fronts the whole warehouse."""
+
+    @functools.wraps(build)
+    def setup(spark: SparkSession, sf_dir: str):
+        from iceberg_poc_spark.tables import ParquetTableManager
+
+        mgr = ParquetTableManager(spark, scratch_dir("ttwh", sf_dir))
+        key = (mgr.warehouse, build.__module__, build.__name__)
+        return mgr, once(key, lambda: build(spark, sf_dir, mgr))
+
+    return setup
 
 
-def _warehouse(sf_dir: str) -> str:
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return os.path.join(tempfile.gettempdir(), f"ttwh_{os.getpid()}_{key}")
-
-
-def _mgr_for(spark: SparkSession, sf_dir: str):
-    from iceberg_poc_spark.tables import ParquetTableManager
-
-    wh = _warehouse(sf_dir)
-    if not any(k[0] == wh for k in _READY):
-        shutil.rmtree(wh, ignore_errors=True)
-        atexit.register(shutil.rmtree, wh, ignore_errors=True)
-        os.makedirs(wh, exist_ok=True)
-    return ParquetTableManager(spark, wh), wh
-
-
-def _setup_orders_tt(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_orders_tt(spark: SparkSession, sf_dir: str, mgr):
     """orders_tt: batch1 (< cutoff) tagged, batch2 (>= cutoff), then a
     dynamic partition overwrite of one year — three commits whose pinned
     states the tag/incremental queries must still resolve."""
     from iceberg_poc_spark.tables import years
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "orders_tt")
-    if key in _READY:
-        return mgr, _READY[key]
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice", "o_orderdate"
     )
@@ -92,18 +82,14 @@ def _setup_orders_tt(spark: SparkSession, sf_dir: str) -> tuple:
         "o_orderdate",
     )
     mgr.overwrite_partitions("orders_tt", repriced)
-    _READY[key] = {"snap1": snap1, "snap2": snap2}
-    return mgr, _READY[key]
+    return {"snap1": snap1, "snap2": snap2}
 
 
-def _setup_customer_m(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_customer_m(spark: SparkSession, sf_dir: str, mgr):
     """customer_m: base snapshot, then ONE CoW merge (updates + inserts)."""
     from iceberg_poc_spark.tables import identity
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "customer_m")
-    if key in _READY:
-        return mgr, _READY[key]
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
@@ -122,17 +108,12 @@ def _setup_customer_m(spark: SparkSession, sf_dir: str) -> tuple:
         )
     )
     mgr.merge("customer_m", source, on=["c_custkey"])
-    _READY[key] = {}
-    return mgr, _READY[key]
 
 
-def _setup_cust_ev(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_cust_ev(spark: SparkSession, sf_dir: str, mgr):
     """cust_ev: schema evolution (add column, then rename) across two file
     generations."""
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "cust_ev")
-    if key in _READY:
-        return mgr, _READY[key]
     cust_full = load_table(spark, sf_dir, "customer")
     base = cust_full.filter(F.col("c_nationkey") < EVOLVE_NATION_SPLIT).select(
         "c_custkey", "c_name", "c_acctbal"
@@ -150,11 +131,10 @@ def _setup_cust_ev(spark: SparkSession, sf_dir: str) -> tuple:
         ),
     )
     mgr.rename_column("cust_ev", "c_name", "c_fullname")
-    _READY[key] = {}
-    return mgr, _READY[key]
 
 
-def _setup_orders_pe(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_orders_pe(spark: SparkSession, sf_dir: str, mgr):
     """orders_pe: partition-SPEC evolution across file generations.
     Generation 1 (orders < CUTOFF) is written under spec A =
     [years(o_orderdate)]; the spec then evolves (ADD PARTITION FIELD
@@ -163,10 +143,6 @@ def _setup_orders_pe(spark: SparkSession, sf_dir: str) -> tuple:
     """
     from iceberg_poc_spark.tables import identity, years
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "orders_pe")
-    if key in _READY:
-        return mgr, _READY[key]
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice", "o_orderdate"
     )
@@ -175,21 +151,16 @@ def _setup_orders_pe(spark: SparkSession, sf_dir: str) -> tuple:
     mgr.append("orders_pe", orders.filter(F.col("o_orderdate") < cutoff))
     mgr.add_partition_field("orders_pe", identity("o_orderpriority"))
     mgr.append("orders_pe", orders.filter(F.col("o_orderdate") >= cutoff))
-    _READY[key] = {}
-    return mgr, _READY[key]
 
 
-def _setup_cust_cdc(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_cust_cdc(spark: SparkSession, sf_dir: str, mgr):
     """cust_cdc: one MERGE applying a CDC batch — updates (BUILDING
     balances +50), inserts (new CDC_NEW segment), and DELETES (negative-
     balance MACHINERY customers) — in a single atomic commit, routed by
     an ``op`` flag column that is not part of the table schema."""
     from iceberg_poc_spark.tables import identity
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "cust_cdc")
-    if key in _READY:
-        return mgr, _READY[key]
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
@@ -220,20 +191,15 @@ def _setup_cust_cdc(spark: SparkSession, sf_dir: str) -> tuple:
         )
     )
     mgr.merge("cust_cdc", cdc, on=["c_custkey"], delete_when=F.col("op") == "D")
-    _READY[key] = {}
-    return mgr, _READY[key]
 
 
-def _setup_orders_dml(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_orders_dml(spark: SparkSession, sf_dir: str, mgr):
     """orders_dml: row-level copy-on-write DELETE then UPDATE on a
     years-partitioned table — each op rewrites only the files whose
     partition values can hold matching rows."""
     from iceberg_poc_spark.tables import years
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "orders_dml")
-    if key in _READY:
-        return mgr, _READY[key]
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice", "o_orderdate"
     )
@@ -255,21 +221,16 @@ def _setup_orders_dml(spark: SparkSession, sf_dir: str) -> tuple:
             ("o_orderdate", "<", "2001-01-01 00:00:00"),
         ],
     )
-    _READY[key] = {}
-    return mgr, _READY[key]
 
 
-def _setup_orders_mor(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_orders_mor(spark: SparkSession, sf_dir: str, mgr):
     """orders_mor: merge-on-read deletes — two stacked predicate deletes
     committed as pure metadata (ZERO data files rewritten; asserted in
     tests/test_tablelayer.py), applied by every read until
     rewrite_deletes() folds them."""
     from iceberg_poc_spark.tables import years
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "orders_mor")
-    if key in _READY:
-        return mgr, _READY[key]
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice", "o_orderdate"
     )
@@ -289,20 +250,16 @@ def _setup_orders_mor(spark: SparkSession, sf_dir: str) -> tuple:
         where=[("o_orderpriority", "==", "5-LOW"), ("o_totalprice", ">=", 400000.0)],
         mode="mor",
     )
-    _READY[key] = {"base": base, "mor_head": mor_head}
-    return mgr, _READY[key]
+    return {"base": base, "mor_head": mor_head}
 
 
-def _setup_ev_exp(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_ev_exp(spark: SparkSession, sf_dir: str, mgr):
     """ev_exp: fragment appends + compaction leave dead files behind;
     expire_snapshots(keep_last=1) reaps expired manifests AND the data
     files no surviving snapshot references."""
     from iceberg_poc_spark.tables import identity
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "ev_exp")
-    if key in _READY:
-        return mgr, _READY[key]
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id", "value"
     )
@@ -311,21 +268,17 @@ def _setup_ev_exp(spark: SparkSession, sf_dir: str) -> tuple:
         mgr.append("ev_exp", ev.filter(F.col("event_id") % 3 == k))
     mgr.compact("ev_exp")
     gc = mgr.expire_snapshots("ev_exp", keep_last=1)
-    _READY[key] = {"gc": gc}
-    return mgr, _READY[key]
+    return {"gc": gc}
 
 
-def _setup_li_w(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_li_w(spark: SparkSession, sf_dir: str, mgr):
     """li_w: type widening across file generations — batch 1 written with
     NARROW types (l_orderkey int, l_quantity float), the columns then
     widened (int->long, float->double: the value-preserving promotions
     Iceberg permits, metadata-only), batch 2 written wide. Quantities are
     integral 1..50 so the float generation is value-exact by construction
     — the oracle needs no narrowing simulation."""
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "li_w")
-    if key in _READY:
-        return mgr, _READY[key]
     li = (
         load_table(spark, sf_dir, "lineitem")
         .filter(
@@ -344,18 +297,13 @@ def _setup_li_w(spark: SparkSession, sf_dir: str) -> tuple:
     mgr.widen_column("li_w", "l_orderkey", "long")
     mgr.widen_column("li_w", "l_quantity", "double")
     mgr.append("li_w", li.filter(F.col("l_orderkey") % 2 == 1))
-    _READY[key] = {}
-    return mgr, _READY[key]
 
 
-def _setup_events_wap(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_events_wap(spark: SparkSession, sf_dir: str, mgr):
     """events_wap: write-audit-publish branch flow."""
     from iceberg_poc_spark.tables import identity
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "events_wap")
-    if key in _READY:
-        return mgr, _READY[key]
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
@@ -380,16 +328,12 @@ def _setup_events_wap(spark: SparkSession, sf_dir: str) -> tuple:
             f"events, expected {n_err} — not publishing"
         )
     mgr.fast_forward("events_wap", "audit")
-    _READY[key] = {"wap_base": wap_base}
-    return mgr, _READY[key]
+    return {"wap_base": wap_base}
 
 
-def _setup_li_cmp(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_li_cmp(spark: SparkSession, sf_dir: str, mgr):
     """li_cmp: three fragmented appends, then sorted compaction."""
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "li_cmp")
-    if key in _READY:
-        return mgr, _READY[key]
     li = (
         load_table(spark, sf_dir, "lineitem")
         .filter(
@@ -403,8 +347,7 @@ def _setup_li_cmp(spark: SparkSession, sf_dir: str) -> tuple:
         mgr.append("li_cmp", li.filter(F.col("l_orderkey") % 3 == k))
     pre_files = len(mgr._load_manifest("li_cmp")["files"])
     mgr.compact("li_cmp", sort_by=["l_orderkey"])
-    _READY[key] = {"cmp_pre_files": pre_files}
-    return mgr, _READY[key]
+    return {"cmp_pre_files": pre_files}
 
 
 @register(
@@ -481,15 +424,14 @@ def q_time_travel_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     mgr, snaps = _setup_orders_tt(spark, sf_dir)
     register_snaptable(spark)
-    wh = _warehouse(sf_dir)
     spark.sql(
         f"CREATE OR REPLACE TEMPORARY VIEW ott_asof USING snaptable "
-        f"OPTIONS (warehouse '{wh}', `table` 'orders_tt', "
+        f"OPTIONS (warehouse '{mgr.warehouse}', `table` 'orders_tt', "
         f"snapshot '{snaps['snap1']}')"
     )
     spark.sql(
         f"CREATE OR REPLACE TEMPORARY VIEW ott_head USING snaptable "
-        f"OPTIONS (warehouse '{wh}', `table` 'orders_tt')"
+        f"OPTIONS (warehouse '{mgr.warehouse}', `table` 'orders_tt')"
     )
     return spark.sql(
         """
@@ -842,7 +784,8 @@ def q_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _setup_orders_eqd(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_orders_eqd(spark: SparkSession, sf_dir: str, mgr):
     """orders_eqd: EQUALITY deletes (≙ Iceberg v2 equality-delete files)
     — two stacked key-set deletes committed as metadata + a tiny delete
     file (ZERO data files rewritten; asserted in
@@ -852,10 +795,6 @@ def _setup_orders_eqd(spark: SparkSession, sf_dir: str) -> tuple:
     at its commit)."""
     from iceberg_poc_spark.tables import years
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "orders_eqd")
-    if key in _READY:
-        return mgr, _READY[key]
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice", "o_orderdate"
     )
@@ -880,8 +819,7 @@ def _setup_orders_eqd(spark: SparkSession, sf_dir: str) -> tuple:
         & (F.col("o_orderkey") % 2 == 0)
     ).withColumn("o_totalprice", F.round(F.col("o_totalprice") + F.lit(0.25), 2))
     head = mgr.append("orders_eqd", readd)
-    _READY[key] = {"base": base, "eq_head": eq_head, "head": head}
-    return mgr, _READY[key]
+    return {"base": base, "eq_head": eq_head, "head": head}
 
 
 @register(
@@ -940,17 +878,14 @@ def q_delete_mor_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _setup_txn_tables(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_txn_tables(spark: SparkSession, sf_dir: str, mgr):
     """fact_txn + dim_txn: a base load of orders/customer, then a
     BACKFILL delta (new orders under NEW customer keys + the matching
     dim rows) staged and landed through ONE multi-table transaction —
     the fact-and-dims-together-or-not-at-all shape
     (manager.transaction; crash injection in tests/test_table_manager.py
     proves no partial visibility)."""
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "fact_txn")
-    if key in _READY:
-        return mgr, _READY[key]
     from iceberg_poc_spark.tables import years
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -987,8 +922,7 @@ def _setup_txn_tables(spark: SparkSession, sf_dir: str) -> tuple:
     txn.append("fact_txn", delta_orders)
     txn.append("dim_txn", delta_cust)
     heads = txn.commit()
-    _READY[key] = {"heads": heads}
-    return mgr, _READY[key]
+    return {"heads": heads}
 
 
 @register(
@@ -1051,17 +985,14 @@ def q_txn_multi_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _setup_txn_rb(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_txn_rb(spark: SparkSession, sf_dir: str, mgr):
     """fact_rb + dim_rb: base load, a BAD multi-table txn delta
     (1-URGENT/1997 under shifted keys) committed and then UNDONE with
     rollback_transaction — one rollback CAS per member table, published
     as a rollback txn record with the same crash repair as forward
     applies — then a GOOD delta (2-HIGH/1996) committed and kept. Final
     state must be base + good delta only."""
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "fact_rb")
-    if key in _READY:
-        return mgr, _READY[key]
     from iceberg_poc_spark.tables import years
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -1106,8 +1037,7 @@ def _setup_txn_rb(spark: SparkSession, sf_dir: str) -> tuple:
     txn2.append("fact_rb", good_o)
     txn2.append("dim_rb", good_c)
     heads = txn2.commit()
-    _READY[key] = {"heads": heads}
-    return mgr, _READY[key]
+    return {"heads": heads}
 
 
 @register(
@@ -1171,7 +1101,8 @@ UPSERT_B1 = "2024-01-11 00:00:00"
 UPSERT_B2 = "2024-01-21 00:00:00"
 
 
-def _setup_users_upsert(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_users_upsert(spark: SparkSession, sf_dir: str, mgr):
     """users_up: three CDC batches (events split at fixed ts boundaries,
     deduped to the last event per user within each batch) applied in ts
     order through :meth:`upsert_equality` — each application is ONE
@@ -1179,10 +1110,6 @@ def _setup_users_upsert(spark: SparkSession, sf_dir: str) -> tuple:
     existing file rewritten (asserted in tests/test_tablelayer.py)."""
     from pyspark.sql import Window
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "users_up")
-    if key in _READY:
-        return mgr, _READY[key]
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "value", "ts", "event_id"
     )
@@ -1212,8 +1139,7 @@ def _setup_users_upsert(spark: SparkSession, sf_dir: str) -> tuple:
         heads.append(mgr.upsert_equality("users_up", last, ["user_id"]))
         if base is None:
             base = heads[0]
-    _READY[key] = {"heads": heads}
-    return mgr, _READY[key]
+    return {"heads": heads}
 
 
 @register(
@@ -1258,17 +1184,14 @@ def q_upsert_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
 CD_BOUNDS = [f"2024-01-{d:02d} 00:00:00" for d in (6, 11, 16, 21, 26)]
 
 
-def _setup_users_cd(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_users_cd(spark: SparkSession, sf_dir: str, mgr):
     """users_cd: SIX CDC upsert epochs (5-day event slices, each the
     latest row per user in its slice), then ONE compact_deletes pass —
     the per-epoch equality-delete files merge into a single
     table-level delete file, zero data files touched."""
     from pyspark.sql import Window
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "users_cd")
-    if key in _READY:
-        return mgr, _READY[key]
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "value", "ts", "event_id"
     )
@@ -1293,8 +1216,6 @@ def _setup_users_cd(spark: SparkSession, sf_dir: str) -> tuple:
         )
         mgr.upsert_equality("users_cd", last, ["user_id"])
     mgr.compact_deletes("users_cd")
-    _READY[key] = {}
-    return mgr, _READY[key]
 
 
 @register(
@@ -1342,7 +1263,8 @@ def q_compact_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 TXN_EPOCH_SPLIT = "2024-01-16 00:00:00"
 
 
-def _setup_txn_cdc(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_txn_cdc(spark: SparkSession, sf_dir: str, mgr):
     """users_st + user_tot: a CDC EPOCH across two tables — the latest
     user state AND the per-user running totals derived from the same
     event batch — staged as two transaction upserts and landed with ONE
@@ -1350,10 +1272,6 @@ def _setup_txn_cdc(spark: SparkSession, sf_dir: str) -> tuple:
     totals can never see a half-applied epoch."""
     from pyspark.sql import Window
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "users_st")
-    if key in _READY:
-        return mgr, _READY[key]
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "value", "ts", "event_id"
     )
@@ -1405,8 +1323,7 @@ def _setup_txn_cdc(spark: SparkSession, sf_dir: str) -> tuple:
     txn.upsert("users_st", latest(b2), ["user_id"])
     txn.upsert("user_tot", tot2, ["user_id"])
     heads = txn.commit()
-    _READY[key] = {"heads": heads}
-    return mgr, _READY[key]
+    return {"heads": heads}
 
 
 @register(
@@ -1456,17 +1373,14 @@ def q_txn_cdc_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _setup_orders_mc(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_orders_mc(spark: SparkSession, sf_dir: str, mgr):
     """orders_mc: year-partitioned orders with ONE partition-bounded MoR
     delete (1997 cheap orders) — exactly one year's files carry the
     delete, every other year stays metadata-countable. A vacuous split
     (all files dirty) is asserted against in tests/test_tablelayer.py."""
     from iceberg_poc_spark.tables import years
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "orders_mc")
-    if key in _READY:
-        return mgr, _READY[key]
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice", "o_orderdate"
     )
@@ -1481,8 +1395,7 @@ def _setup_orders_mc(spark: SparkSession, sf_dir: str) -> tuple:
         ],
         mode="mor",
     )
-    _READY[key] = {"base": base, "head": head}
-    return mgr, _READY[key]
+    return {"base": base, "head": head}
 
 
 @register(
@@ -1657,7 +1570,8 @@ CHG_OVR_YEAR = 1996  # third commit overwrites this year's partition
 CHG_PRIORITY = "1-URGENT"  # rows repriced in the overwrite / MoR-deleted
 
 
-def _setup_orders_chg(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_orders_chg(spark: SparkSession, sf_dir: str, mgr):
     """orders_chg: base append (1995-1997), append 1998, a partition
     overwrite that reprices ONLY the urgent rows of 1996 (the untouched
     rows of that partition are rewritten carry-overs the changelog must
@@ -1665,10 +1579,6 @@ def _setup_orders_chg(spark: SparkSession, sf_dir: str) -> tuple:
     metadata commit the changelog must still surface as deletes)."""
     from iceberg_poc_spark.tables import years
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "orders_chg")
-    if key in _READY:
-        return mgr, _READY[key]
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice", "o_orderdate"
     )
@@ -1696,8 +1606,7 @@ def _setup_orders_chg(spark: SparkSession, sf_dir: str) -> tuple:
         ],
         mode="mor",
     )
-    _READY[key] = {"base": base}
-    return mgr, _READY[key]
+    return {"base": base}
 
 
 @register(
@@ -1760,7 +1669,8 @@ WAPD_OVR_YEAR = 1995  # audit-branch commit 2: overwrites this partition
 WAPD_PRIORITY = "1-URGENT"  # rows repriced in the branch overwrite
 
 
-def _setup_orders_wapd(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_orders_wapd(spark: SparkSession, sf_dir: str, mgr):
     """orders_wapd: base load on MAIN (years <= 1995), then an audit
     branch carrying the unpublished backfill — an append of 1996 and a
     partition overwrite repricing only the urgent rows of 1995 (the
@@ -1768,10 +1678,6 @@ def _setup_orders_wapd(spark: SparkSession, sf_dir: str) -> tuple:
     Main never moves: the branch is the staged, reviewable state."""
     from iceberg_poc_spark.tables import years
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "orders_wapd")
-    if key in _READY:
-        return mgr, _READY[key]
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice", "o_orderdate"
     )
@@ -1794,8 +1700,7 @@ def _setup_orders_wapd(spark: SparkSession, sf_dir: str) -> tuple:
         ).otherwise(F.col("o_totalprice")),
     )
     mgr.overwrite_partitions("orders_wapd", ovr, ref="audit")
-    _READY[key] = {"base": base}
-    return mgr, _READY[key]
+    return {"base": base}
 
 
 @register(
@@ -1852,7 +1757,8 @@ def q_cdc_branch_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 MV_BATCH_YEARS = (1996, 1998, 2001)  # upper bound (inclusive) per batch
 
 
-def _setup_sales_mv(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_sales_mv(spark: SparkSession, sf_dir: str, mgr):
     """sales_base + sales_mv: the base table lands in three appends; after
     each, ONLY the delta (read_incremental) is aggregated and merged into
     the MV — the standard incremental-view-maintenance loop. Totals are
@@ -1860,10 +1766,6 @@ def _setup_sales_mv(spark: SparkSession, sf_dir: str) -> tuple:
     bit-identical to a full recompute."""
     from iceberg_poc_spark.tables import identity, years
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "sales_mv")
-    if key in _READY:
-        return mgr, _READY[key]
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice", "o_orderdate"
     )
@@ -1904,8 +1806,6 @@ def _setup_sales_mv(spark: SparkSession, sf_dir: str) -> tuple:
             )
         mgr.merge("sales_mv", mv_new, on=["o_orderpriority"])
         last, lo = head, hi
-    _READY[key] = {}
-    return mgr, _READY[key]
 
 
 @register(
@@ -1941,14 +1841,11 @@ Z_UID_LO, Z_UID_HI = 30, 59  # ~20% of the 0..149 user range
 Z_TS_LO, Z_TS_HI = "2024-01-05 00:00:00", "2024-01-10 00:00:00"
 
 
-def _setup_ev_z(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_ev_z(spark: SparkSession, sf_dir: str, mgr):
     """ev_z: events landed unpartitioned, then Z-order-compacted on
     (user_id, ts) into many small files so BOTH dimensions get narrow
     per-file min/max stats."""
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "ev_z")
-    if key in _READY:
-        return mgr, _READY[key]
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -1960,8 +1857,6 @@ def _setup_ev_z(spark: SparkSession, sf_dir: str) -> tuple:
     # pruning to be visible, never a small-file explosion
     mgr.compact("ev_z", target_bytes=max(1, total_bytes // 16),
                 zorder=["user_id", "ts"])
-    _READY[key] = {}
-    return mgr, _READY[key]
 
 
 @register(
@@ -2005,16 +1900,13 @@ CP_PICK_YEAR = 1998  # the one audited batch that ships
 CP_HOLD_YEAR = 1999  # stays on the audit branch
 
 
-def _setup_orders_cp(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_orders_cp(spark: SparkSession, sf_dir: str, mgr):
     """orders_cp: base on main, an audit branch carrying TWO staged
     appends, then cherry-pick of only the first onto main — the selective
     WAP publish (ship one audited batch, hold the other)."""
     from iceberg_poc_spark.tables import years
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "orders_cp")
-    if key in _READY:
-        return mgr, _READY[key]
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice", "o_orderdate"
     )
@@ -2034,8 +1926,7 @@ def _setup_orders_cp(spark: SparkSession, sf_dir: str) -> tuple:
         ref="audit",
     )
     mgr.cherry_pick("orders_cp", picked)
-    _READY[key] = {"picked": picked}
-    return mgr, _READY[key]
+    return {"picked": picked}
 
 
 @register(
@@ -2171,7 +2062,7 @@ def q_scan_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_snaptable(spark)
     df = (
         spark.read.format("snaptable")
-        .option("warehouse", _warehouse(sf_dir))
+        .option("warehouse", mgr.warehouse)
         .option("table", "orders_tt")
         .option("ref", "pre_cutoff")
         .load()
@@ -2188,17 +2079,14 @@ RB_BAD_FACTOR = 100.0  # the corrupted load multiplies prices by this
 EV_CP_SPLIT = "2024-01-25 00:00:00"  # streaming-tail fragmentation starts here
 
 
-def _setup_orders_rb(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_orders_rb(spark: SparkSession, sf_dir: str, mgr):
     """orders_rb: good batch1 -> corrupted batch2 (prices x100) ->
     ``rollback`` to batch1 -> corrected batch3. The head must equal
     batch1+batch3 exactly; the bad snapshot stays in history as an
     unreferenced ancestor (still time-travelable until expiry)."""
     from iceberg_poc_spark.tables import years
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "orders_rb")
-    if key in _READY:
-        return mgr, _READY[key]
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice", "o_orderdate"
     )
@@ -2212,8 +2100,7 @@ def _setup_orders_rb(spark: SparkSession, sf_dir: str) -> tuple:
     )
     mgr.rollback("orders_rb", good)
     mgr.append("orders_rb", tail)
-    _READY[key] = {"good": good, "bad": bad}
-    return mgr, _READY[key]
+    return {"good": good, "bad": bad}
 
 
 @register(
@@ -2246,17 +2133,14 @@ def q_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _setup_ev_cp(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_ev_cp(spark: SparkSession, sf_dir: str, mgr):
     """ev_cp: bulk history (one append => one file per day partition) +
     four micro-appends over the tail days (=> 4 small files in each) —
     the fragmentation profile streaming ingest leaves. Targeted
     compaction rewrites ONLY the fragmented tail partitions."""
     from iceberg_poc_spark.tables import days
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "ev_cp")
-    if key in _READY:
-        return mgr, _READY[key]
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
@@ -2269,8 +2153,7 @@ def _setup_ev_cp(spark: SparkSession, sf_dir: str) -> tuple:
             ev.filter((F.col("ts") >= split) & (F.col("event_id") % 4 == k)),
         )
     res = mgr.compact_partitions("ev_cp", min_files=2)
-    _READY[key] = {"rewritten": res["rewritten"], "added": res["added"]}
-    return mgr, _READY[key]
+    return {"rewritten": res["rewritten"], "added": res["added"]}
 
 
 @register(
@@ -2306,7 +2189,8 @@ BLM_SLICES = 8
 BLM_LOOKUP_IDS = [11, 23, 42]  # present at every sf; three distinct slices
 
 
-def _setup_docs_blm(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_docs_blm(spark: SparkSession, sf_dir: str, mgr):
     """docs_blm: documents bloom-indexed on doc_id, landed as 8 appends
     sliced by doc_id % 8 — every file's doc_id [min, max] spans nearly the
     whole id range, so column STATS cannot prune a point lookup and the
@@ -2318,10 +2202,6 @@ def _setup_docs_blm(spark: SparkSession, sf_dir: str) -> tuple:
         BLOOM_COLS_PROP,
     )
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "docs_blm")
-    if key in _READY:
-        return mgr, _READY[key]
     docs = load_table(spark, sf_dir, "documents")
     mgr.create_table("docs_blm", docs.schema, [])
     mgr.set_properties(
@@ -2329,8 +2209,6 @@ def _setup_docs_blm(spark: SparkSession, sf_dir: str) -> tuple:
     )
     for k in range(BLM_SLICES):
         mgr.append("docs_blm", docs.filter(F.col("doc_id") % BLM_SLICES == k))
-    _READY[key] = {}
-    return mgr, _READY[key]
 
 
 @register(
@@ -2367,7 +2245,8 @@ def q_point_lookup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONS_BAD_MOD = 7  # doc_id % 7 == 3 rows get corrupted in the rejected batch
 
 
-def _setup_docs_cons(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_docs_cons(spark: SparkSession, sf_dir: str, mgr):
     """docs_cons: CHECK-constrained documents table. Clean half lands;
     a corrupted second half (negative n_chars, nulled lang on some rows)
     is REJECTED atomically by the write-time gate — the setup insists the
@@ -2378,10 +2257,6 @@ def _setup_docs_cons(spark: SparkSession, sf_dir: str) -> tuple:
         ConstraintViolation,
     )
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "docs_cons")
-    if key in _READY:
-        return mgr, _READY[key]
     docs = load_table(spark, sf_dir, "documents")
     mgr.create_table("docs_cons", docs.schema, [])
     mgr.set_properties(
@@ -2413,8 +2288,7 @@ def _setup_docs_cons(spark: SparkSession, sf_dir: str) -> tuple:
     if mgr._current_version("docs_cons") != v_before:
         raise RuntimeError("rejected batch moved the table head")
     mgr.append("docs_cons", odd)
-    _READY[key] = {"v_before": v_before}
-    return mgr, _READY[key]
+    return {"v_before": v_before}
 
 
 @register(
@@ -2453,7 +2327,8 @@ def q_write_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
 PD_DUP_MOD = 5  # event_id % 5 == 0 rows get committed twice
 
 
-def _setup_ev_pd(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_ev_pd(spark: SparkSession, sf_dir: str, mgr):
     """ev_pd: events committed once in full, then a partial batch
     RE-COMMITTED (the double-delivery accident), leaving physically
     identical duplicate rows. The repair is a POSITIONAL delete: an audit
@@ -2461,10 +2336,6 @@ def _setup_ev_pd(spark: SparkSession, sf_dir: str) -> tuple:
     first per event_id, and delete_positions retires exactly those rows
     — the one delete class that can separate identical twins (a
     predicate or key set would kill both copies)."""
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "ev_pd")
-    if key in _READY:
-        return mgr, _READY[key]
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
@@ -2484,12 +2355,11 @@ def _setup_ev_pd(spark: SparkSession, sf_dir: str) -> tuple:
     )
     snap_dup = mgr._current_version("ev_pd")
     snap_fixed = mgr.delete_positions("ev_pd", extras)
-    _READY[key] = {
+    return {
         "n_dup": n_dup,
         "snap_dup": snap_dup,
         "snap_fixed": snap_fixed,
     }
-    return mgr, _READY[key]
 
 
 @register(
@@ -2530,17 +2400,14 @@ def q_delete_mor_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
 DEF_NULL_MOD = 7  # post-add rows with o_orderkey % 7 == 0 carry a real NULL
 
 
-def _setup_orders_def(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_orders_def(spark: SparkSession, sf_dir: str, mgr):
     """orders_def: even-keyed orders land, then ADD COLUMN o_channel
     DEFAULT 'LEGACY' (metadata-only), then odd-keyed orders land with
     explicit channels — including genuine NULLs. Pre-add rows must read
     the default; post-add rows must keep their values, NULLs intact
     (presence decided by each file's recorded writer schema, never by
     value coalescing)."""
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "orders_def")
-    if key in _READY:
-        return mgr, _READY[key]
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
@@ -2554,8 +2421,6 @@ def _setup_orders_def(spark: SparkSession, sf_dir: str) -> tuple:
         ),
     )
     mgr.append("orders_def", odd)
-    _READY[key] = {}
-    return mgr, _READY[key]
 
 
 @register(
@@ -2593,15 +2458,12 @@ def q_schema_default(spark: SparkSession, sf_dir: str) -> DataFrame:
 UM_BUMP = 100.0  # purchase rows get value + 100.0 via the MoR update
 
 
-def _setup_ev_um(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_ev_um(spark: SparkSession, sf_dir: str, mgr):
     """ev_um: events landed once, then a merge-on-read UPDATE bumps every
     purchase row's value — positional delete of the old versions + new
     data files with the updated copies, ONE commit, zero existing files
     rewritten."""
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "ev_um")
-    if key in _READY:
-        return mgr, _READY[key]
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
@@ -2613,8 +2475,7 @@ def _setup_ev_um(spark: SparkSession, sf_dir: str) -> tuple:
         [("event_type", "==", "purchase")],
         mode="mor",
     )
-    _READY[key] = {"snap_base": snap_base, "snap_upd": snap_upd}
-    return mgr, _READY[key]
+    return {"snap_base": snap_base, "snap_upd": snap_upd}
 
 
 @register(
@@ -2652,7 +2513,8 @@ def q_update_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _setup_docs_cw(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_docs_cw(spark: SparkSession, sf_dir: str, mgr):
     """docs_cw: the table is POPULATED entirely through the connector's
     write path — two df.write.format('snaptable') appends (each one
     atomic snapshot staged by executor tasks and committed by the
@@ -2660,10 +2522,6 @@ def _setup_docs_cw(spark: SparkSession, sf_dir: str) -> tuple:
     head advance — then read back through the manager."""
     from iceberg_poc_spark.sources.pyds import register_snaptable
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "docs_cw")
-    if key in _READY:
-        return mgr, _READY[key]
     register_snaptable(spark)
     docs = load_table(spark, sf_dir, "documents")
     mgr.create_table("docs_cw", docs.schema, [])
@@ -2671,13 +2529,11 @@ def _setup_docs_cw(spark: SparkSession, sf_dir: str) -> tuple:
         (
             docs.filter(F.col("doc_id") % 2 == half)
             .write.format("snaptable")
-            .option("warehouse", wh)
+            .option("warehouse", mgr.warehouse)
             .option("table", "docs_cw")
             .mode("append")
             .save()
         )
-    _READY[key] = {}
-    return mgr, _READY[key]
 
 
 @register(
@@ -2718,15 +2574,12 @@ def q_connector_write(spark: SparkSession, sf_dir: str) -> DataFrame:
 MS_CUTOFF = "2024-01-16 00:00:00"  # schema-merge batch boundary
 
 
-def _setup_events_ms(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_events_ms(spark: SparkSession, sf_dir: str, mgr):
     """events_ms: batch1 lands under a NARROW schema (no value column,
     user_id as int); batch2 arrives with the wider real shape and
     merge_schema=True auto-evolves the table (value ADDED, user_id
     WIDENED int→bigint) before the append."""
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "events_ms")
-    if key in _READY:
-        return mgr, _READY[key]
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "user_id", "value"
     )
@@ -2741,8 +2594,6 @@ def _setup_events_ms(spark: SparkSession, sf_dir: str) -> tuple:
     mgr.create_table("events_ms", b1.schema, [])
     mgr.append("events_ms", b1)
     mgr.append("events_ms", b2, merge_schema=True)
-    _READY[key] = {}
-    return mgr, _READY[key]
 
 
 @register(
@@ -2792,7 +2643,8 @@ def q_schema_merge_write(spark: SparkSession, sf_dir: str) -> DataFrame:
 CWP_CUTOFF = "2024-01-20 00:00:00"  # days-partition scan bound
 
 
-def _setup_events_cwp(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_events_cwp(spark: SparkSession, sf_dir: str, mgr):
     """events_cwp: hidden-partitioned by days(ts), populated ONLY through
     the connector write path — each append's input wrapped by
     route_partitions (spec transforms computed JVM-side + repartition),
@@ -2804,10 +2656,6 @@ def _setup_events_cwp(spark: SparkSession, sf_dir: str) -> tuple:
     )
     from iceberg_poc_spark.tables import days
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "events_cwp")
-    if key in _READY:
-        return mgr, _READY[key]
     register_snaptable(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -2816,16 +2664,14 @@ def _setup_events_cwp(spark: SparkSession, sf_dir: str) -> tuple:
     for half in (0, 1):
         (
             route_partitions(
-                ev.filter(F.col("event_id") % 2 == half), wh, "events_cwp"
+                ev.filter(F.col("event_id") % 2 == half), mgr.warehouse, "events_cwp"
             )
             .write.format("snaptable")
-            .option("warehouse", wh)
+            .option("warehouse", mgr.warehouse)
             .option("table", "events_cwp")
             .mode("append")
             .save()
         )
-    _READY[key] = {}
-    return mgr, _READY[key]
 
 
 @register(
@@ -2872,7 +2718,8 @@ def q_connector_write_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame
 SW_LO, SW_HI = 400, 700  # n_chars range scan that clustering must prune
 
 
-def _setup_docs_sw(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_docs_sw(spark: SparkSession, sf_dir: str, mgr):
     """docs_sw: declared clustering — write.sort-order=n_chars +
     write.distribution-mode=range — so the very first append lands
     range-disjoint, stats-tight files with NO compaction pass."""
@@ -2881,10 +2728,6 @@ def _setup_docs_sw(spark: SparkSession, sf_dir: str) -> tuple:
         SORT_ORDER_PROP,
     )
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "docs_sw")
-    if key in _READY:
-        return mgr, _READY[key]
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
@@ -2894,8 +2737,6 @@ def _setup_docs_sw(spark: SparkSession, sf_dir: str) -> tuple:
         {SORT_ORDER_PROP: "n_chars", DISTRIBUTION_PROP: "range"},
     )
     mgr.append("docs_sw", docs)
-    _READY[key] = {}
-    return mgr, _READY[key]
 
 
 @register(
@@ -2966,17 +2807,14 @@ def q_meta_count_pos(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame([(total,)], "n_events BIGINT")
 
 
-def _setup_docs_nn(spark: SparkSession, sf_dir: str):
+@table_setup
+def _setup_docs_nn(spark: SparkSession, sf_dir: str, mgr):
     """docs_nn: the incremental-enrichment table — documents land in two
     waves, the first only PARTIALLY enriched (lang_conf NULL where
     doc_id % 7 >= 5), the second fully enriched. Each wave's files carry
     exact per-column null counts in the manifest, so the 'what still
     needs enriching' scan prunes every fully-enriched file without
     opening it."""
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "docs_nn")
-    if key in _READY:
-        return mgr, _READY[key]
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
@@ -2992,8 +2830,6 @@ def _setup_docs_nn(spark: SparkSession, sf_dir: str):
     mgr.create_table("docs_nn", wave1.schema, [])
     mgr.append("docs_nn", wave1)
     mgr.append("docs_nn", wave2)
-    _READY[key] = {}
-    return mgr, _READY[key]
 
 
 @register(
@@ -3106,7 +2942,8 @@ def q_meta_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _setup_docs_txn_ddl(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_docs_txn_ddl(spark: SparkSession, sf_dir: str, mgr):
     """docs_ddl: the evolve-then-backfill shape through ONE multi-table
     transaction (manager.transaction DDL staging): wave 1 (even doc_ids)
     lands under the original (doc_id, lang, n_chars) schema; then a
@@ -3120,10 +2957,6 @@ def _setup_docs_txn_ddl(spark: SparkSession, sf_dir: str) -> tuple:
     wave-2 rows keep explicit values. quality = (n_chars % 500) / 4.0 —
     exact quarters, so cross-engine SUMs cannot drift by summation
     order."""
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "docs_ddl")
-    if key in _READY:
-        return mgr, _READY[key]
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
@@ -3136,8 +2969,6 @@ def _setup_docs_txn_ddl(spark: SparkSession, sf_dir: str) -> tuple:
     txn.add_column("docs_ddl", "quality", "double", default=-1.0)
     txn.append("docs_ddl", wave2)
     txn.commit()
-    _READY[key] = {}
-    return mgr, _READY[key]
 
 
 @register(
@@ -3183,20 +3014,15 @@ def q_txn_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
 ADD_FILES_PRICE_FLOOR = 100000.0
 
 
-def _setup_orders_ext(spark: SparkSession, sf_dir: str):
+@table_setup
+def _setup_orders_ext(spark: SparkSession, sf_dir: str, mgr):
     """orders_ext: a managed table whose data is the RAW testdata
     orders.parquet registered in place via add_files — zero rows read,
     zero bytes copied at setup (one footer open), the migrate shape."""
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "orders_ext")
-    if key in _READY:
-        return mgr
     orders_path = os.path.join(sf_dir, "orders.parquet")
     schema = spark.read.parquet(orders_path).schema
     mgr.create_table("orders_ext", schema, [])
     mgr.add_files("orders_ext", [orders_path])
-    _READY[key] = {}
-    return mgr
 
 
 @register(
@@ -3228,7 +3054,7 @@ def _setup_orders_ext(spark: SparkSession, sf_dir: str):
     f"rewrite.",
 )
 def q_add_files(spark: SparkSession, sf_dir: str) -> DataFrame:
-    mgr = _setup_orders_ext(spark, sf_dir)
+    mgr, _ = _setup_orders_ext(spark, sf_dir)
     df, _planned, _total = mgr.scan(
         "orders_ext", where=[("o_totalprice", ">=", ADD_FILES_PRICE_FLOOR)]
     )
@@ -3238,7 +3064,8 @@ def q_add_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _setup_events_ext_hive(spark: SparkSession, sf_dir: str):
+@table_setup
+def _setup_events_ext_hive(spark: SparkSession, sf_dir: str, mgr):
     """events_ext: a hive col=value dataset (written once under the
     warehouse as the stand-in for an existing data lake) registered
     ZERO-COPY into a partitioned managed table — partition values parse
@@ -3246,14 +3073,10 @@ def _setup_events_ext_hive(spark: SparkSession, sf_dir: str):
     the data files) is restored from the manifest on read."""
     from iceberg_poc_spark.tables import identity
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "events_ext")
-    if key in _READY:
-        return mgr
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    src = os.path.join(wh, "_src_events_hive")
+    src = os.path.join(mgr.warehouse, "_src_events_hive")
     # repartition on the partition key: one parallel task per event_type
     # writes its whole directory (coalesce(1) would serialize the write
     # through a single task — the dominant first-run cost at 10x)
@@ -3262,8 +3085,6 @@ def _setup_events_ext_hive(spark: SparkSession, sf_dir: str):
     ).parquet(src)
     mgr.create_table("events_ext", ev.schema, [identity("event_type")])
     mgr.add_files("events_ext", [src])
-    _READY[key] = {}
-    return mgr
 
 
 @register(
@@ -3294,7 +3115,7 @@ def _setup_events_ext_hive(spark: SparkSession, sf_dir: str):
     "zero rewrite, pruning from day one.",
 )
 def q_add_files_hive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    mgr = _setup_events_ext_hive(spark, sf_dir)
+    mgr, _ = _setup_events_ext_hive(spark, sf_dir)
     df, _planned, _total = mgr.scan(
         "events_ext", where=[("event_type", "==", "click")]
     )
@@ -3305,15 +3126,12 @@ def q_add_files_hive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _setup_docs_meta(spark: SparkSession, sf_dir: str):
+@table_setup
+def _setup_docs_meta(spark: SparkSession, sf_dir: str, mgr):
     """docs_meta: documents partitioned by identity(lang), landed in two
     append waves so the metadata tables span multiple commits' segments."""
     from iceberg_poc_spark.tables import identity
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "docs_meta")
-    if key in _READY:
-        return mgr
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
@@ -3322,8 +3140,6 @@ def _setup_docs_meta(spark: SparkSession, sf_dir: str):
     mgr.create_table("docs_meta", w1.schema, [identity("lang")])
     mgr.append("docs_meta", w1)
     mgr.append("docs_meta", w2)
-    _READY[key] = {}
-    return mgr
 
 
 @register(
@@ -3352,7 +3168,7 @@ def _setup_docs_meta(spark: SparkSession, sf_dir: str):
 def q_meta_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iceberg_poc_spark.sources.pyds import register_snaptable
 
-    mgr = _setup_docs_meta(spark, sf_dir)
+    mgr, _ = _setup_docs_meta(spark, sf_dir)
     register_snaptable(spark)
     files = (
         spark.read.format("snaptable")
@@ -3374,7 +3190,8 @@ def q_meta_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 SYNC_KEY_OFFSET = 300_000_000
 
 
-def _setup_orders_sync(spark: SparkSession, sf_dir: str):
+@table_setup
+def _setup_orders_sync(spark: SparkSession, sf_dir: str, mgr):
     """orders_sync: orders partitioned by identity(o_orderpriority),
     then ONE full-sync MERGE mirrors the 1-URGENT partition onto a
     source that repriced some rows (%3==0, +5.00), dropped others
@@ -3385,10 +3202,6 @@ def _setup_orders_sync(spark: SparkSession, sf_dir: str):
     tests/test_tablelayer.py)."""
     from iceberg_poc_spark.tables import identity
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "orders_sync")
-    if key in _READY:
-        return mgr, _READY[key]
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -3419,8 +3232,7 @@ def _setup_orders_sync(spark: SparkSession, sf_dir: str):
             ("o_orderpriority", "==", PE_PRIORITY)
         ],
     )
-    _READY[key] = {"pre_paths": pre}
-    return mgr, _READY[key]
+    return {"pre_paths": pre}
 
 
 @register(
@@ -3480,15 +3292,17 @@ def _setup_view_versioned(spark: SparkSession, sf_dir: str):
 
     mgr, snaps = _setup_orders_tt(spark, sf_dir)
     register_snaptable(spark)
-    wh = _warehouse(sf_dir)
     spark.sql(
         f"CREATE OR REPLACE TEMPORARY VIEW ov_base USING snaptable "
-        f"OPTIONS (warehouse '{wh}', `table` 'orders_tt', "
+        f"OPTIONS (warehouse '{mgr.warehouse}', `table` 'orders_tt', "
         f"snapshot '{snaps['snap2']}')"
     )
-    key = (wh, "__view_kpi__")
-    if key in _READY:
-        return mgr
+    _setup_ord_kpi(spark, sf_dir)
+    return mgr
+
+
+@table_setup
+def _setup_ord_kpi(spark: SparkSession, sf_dir: str, mgr):
     base = (
         "SELECT o_orderpriority, COUNT(*) AS n, "
         "ROUND(SUM(o_totalprice), 2) AS s FROM ov_base {w}GROUP BY 1"
@@ -3497,8 +3311,6 @@ def _setup_view_versioned(spark: SparkSession, sf_dir: str):
     mgr.replace_view(
         "ord_kpi", base.format(w="WHERE year(o_orderdate) >= 1997 ")
     )
-    _READY[key] = {}
-    return mgr
 
 
 @register(
@@ -3546,7 +3358,8 @@ def q_view_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _setup_orders_snaphist(spark: SparkSession, sf_dir: str):
+@table_setup
+def _setup_orders_snaphist(spark: SparkSession, sf_dir: str, mgr):
     """orders_snaphist: a deterministic 5-commit history — create, three
     keyspace-sliced appends (year-partitioned: one data file per year per
     append, so file counts are layout-deterministic), and one MoR
@@ -3555,10 +3368,6 @@ def _setup_orders_snaphist(spark: SparkSession, sf_dir: str):
     inspection must show)."""
     from iceberg_poc_spark.tables import years
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "orders_snaphist")
-    if key in _READY:
-        return mgr
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
@@ -3575,8 +3384,7 @@ def _setup_orders_snaphist(spark: SparkSession, sf_dir: str):
         where=[("o_totalprice", "<", 5000.0)],
         mode="mor",
     )
-    _READY[key] = {"head": mgr._current_version("orders_snaphist")}
-    return mgr
+    return {"head": mgr._current_version("orders_snaphist")}
 
 
 @register(
@@ -3624,7 +3432,7 @@ def _setup_orders_snaphist(spark: SparkSession, sf_dir: str):
     "relational replay of the same five commits.",
 )
 def q_meta_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
-    mgr = _setup_orders_snaphist(spark, sf_dir)
+    mgr, _ = _setup_orders_snaphist(spark, sf_dir)
     snaps = mgr.snapshots("orders_snaphist")
     # seq from the version number directly: the single-writer setup
     # allocates contiguous versions from 0 (create), so ordinal =
@@ -3639,15 +3447,12 @@ def q_meta_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _setup_cust_micro(spark: SparkSession, sf_dir: str):
+@table_setup
+def _setup_cust_micro(spark: SparkSession, sf_dir: str, mgr):
     """cust_micro: 12 single-file micro-appends (keyspace slices of
     customer, coalesced to one file each) — the streaming-ingest debris
     pattern whose manifest holds one under-full segment per commit,
     exactly what rewrite_segments exists to rebin."""
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "cust_micro")
-    if key in _READY:
-        return mgr
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
@@ -3657,8 +3462,7 @@ def _setup_cust_micro(spark: SparkSession, sf_dir: str):
             "cust_micro",
             cust.filter(F.col("c_custkey") % 12 == r).coalesce(1),
         )
-    _READY[key] = {"head": mgr._current_version("cust_micro")}
-    return mgr
+    return {"head": mgr._current_version("cust_micro")}
 
 
 @register(
@@ -3685,7 +3489,7 @@ def _setup_cust_micro(spark: SparkSession, sf_dir: str):
     "actually collapsed (a no-op rewrite reports 12, not 1).",
 )
 def q_rewrite_manifests(spark: SparkSession, sf_dir: str) -> DataFrame:
-    mgr = _setup_cust_micro(spark, sf_dir)
+    mgr, _ = _setup_cust_micro(spark, sf_dir)
     mgr.rewrite_segments("cust_micro")
     raw = mgr._manifest_raw("cust_micro", mgr._current_version("cust_micro"))
     n_segs = len(raw["segments"])
@@ -3720,21 +3524,20 @@ def q_rewrite_manifests(spark: SparkSession, sf_dir: str) -> DataFrame:
     "advance, a tag that drifted, or a lost ref all hash-diverge.",
 )
 def q_meta_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "refs_demo")
-    if key not in _READY:
-        df = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
-        mgr.create_table("refs_demo", df.schema, [])
-        v1 = mgr.append("refs_demo", df)
-        mgr.create_tag("refs_demo", "pinned", at_snapshot=v1)
-        mgr.create_branch("refs_demo", "audit")
-        mgr.append(
-            "refs_demo",
-            df.withColumn("r_name", F.upper("r_name")),
-            ref="audit",
-        )
-        _READY[key] = {"head": v1}
+    mgr, _ = _setup_refs_demo(spark, sf_dir)
     return mgr.refs("refs_demo").orderBy("ref")
+
+
+@table_setup
+def _setup_refs_demo(spark: SparkSession, sf_dir: str, mgr):
+    df = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
+    mgr.create_table("refs_demo", df.schema, [])
+    v1 = mgr.append("refs_demo", df)
+    mgr.create_tag("refs_demo", "pinned", at_snapshot=v1)
+    mgr.create_branch("refs_demo", "audit")
+    mgr.append(
+        "refs_demo", df.withColumn("r_name", F.upper("r_name")), ref="audit"
+    )
 
 
 def _ndv_gate(spark: SparkSession, sf_dir: str, mgr, table: str) -> DataFrame:
@@ -3776,7 +3579,8 @@ def _ndv_gate(spark: SparkSession, sf_dir: str, mgr, table: str) -> DataFrame:
     )
 
 
-def _setup_docs_ndv(spark: SparkSession, sf_dir: str):
+@table_setup
+def _setup_docs_ndv(spark: SparkSession, sf_dir: str, mgr):
     """docs_ndv: documents ingested in two overlapping-domain waves with
     the ``stats.ndv.columns`` property on, so every data file carries a
     mergeable per-column HLL distinct sketch in its manifest entry
@@ -3784,10 +3588,6 @@ def _setup_docs_ndv(spark: SparkSession, sf_dir: str):
     pass)."""
     from iceberg_poc_spark.tables.manager import NDV_COLS_PROP
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "docs_ndv")
-    if key in _READY:
-        return mgr, _READY[key]
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
@@ -3801,8 +3601,6 @@ def _setup_docs_ndv(spark: SparkSession, sf_dir: str):
     # into the global NDV (overlapping lang/n_chars domains collapse)
     mgr.append("docs_ndv", docs.where(F.pmod("doc_id", F.lit(2)) == 0))
     mgr.append("docs_ndv", docs.where(F.pmod("doc_id", F.lit(2)) == 1))
-    _READY[key] = {}
-    return mgr, _READY[key]
 
 
 @register(
@@ -3871,7 +3669,7 @@ def q_meta_profile_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tests/test_table_manager.py.",
 )
 def q_meta_partition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    mgr = _setup_docs_meta(spark, sf_dir)
+    mgr, _ = _setup_docs_meta(spark, sf_dir)
     ps = mgr.partition_stats("docs_meta")
     return ps.select(
         F.get_json_object("partition", "$.lang").alias("lang"),
@@ -3880,21 +3678,18 @@ def q_meta_partition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _setup_docs_analyze(spark: SparkSession, sf_dir: str):
+@table_setup
+def _setup_docs_analyze(spark: SparkSession, sf_dir: str, mgr):
     """docs_an: documents onboarded ZERO-COPY via add_files (no write
     job touches the rows, so no sketches exist), then analyze_ndv
     backfills per-file NDV sketches with one column-pruned pass and
     builds the table-level blob — the ANALYZE-after-migrate lifecycle."""
     from iceberg_poc_spark.tables.manager import NDV_COLS_PROP
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "docs_an")
-    if key in _READY:
-        return mgr, _READY[key]
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    staged = os.path.join(wh, "_an_staging")
+    staged = os.path.join(mgr.warehouse, "_an_staging")
     docs.repartition(4).write.mode("overwrite").parquet(staged)
     mgr.create_table(
         "docs_an",
@@ -3904,8 +3699,6 @@ def _setup_docs_analyze(spark: SparkSession, sf_dir: str):
     )
     mgr.add_files("docs_an", [staged])
     mgr.analyze_ndv("docs_an")
-    _READY[key] = {}
-    return mgr, _READY[key]
 
 
 @register(
@@ -3958,7 +3751,8 @@ def _ca_hourly(df: DataFrame) -> DataFrame:
     )
 
 
-def _setup_events_ca(spark: SparkSession, sf_dir: str):
+@table_setup
+def _setup_events_ca(spark: SparkSession, sf_dir: str, mgr):
     """events_ca (raw, days(ts)-partitioned) + events_ca_hourly (the
     MATERIALIZED rollup): wave 1 lands everything except held-back
     stragglers and materializes the rollup once; wave 2 (the late
@@ -3968,10 +3762,6 @@ def _setup_events_ca(spark: SparkSession, sf_dir: str):
     in one MoR commit."""
     from iceberg_poc_spark.tables import days
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "events_ca")
-    if key in _READY:
-        return mgr, _READY[key]
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
@@ -4025,8 +3815,7 @@ def _setup_events_ca(spark: SparkSession, sf_dir: str):
     mgr.upsert_equality(
         "events_ca_hourly", recompute, keys=["bucket_ts", "event_type"]
     )
-    _READY[key] = {"planned": planned, "total": total}
-    return mgr, _READY[key]
+    return {"planned": planned, "total": total}
 
 
 @register(

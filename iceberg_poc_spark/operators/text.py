@@ -16,7 +16,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from iceberg_poc_spark.functions.sqlround import dround
+from iceberg_poc_spark.operators.tablelayer import table_setup
 from iceberg_poc_spark.registry import register
+from iceberg_poc_spark.scratch import once, scratch_dir
 from iceberg_poc_spark.sources import load_table
 
 STOPWORDS = ("the", "a")
@@ -393,9 +395,6 @@ def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_VOCAB_IDX_READY: set[str] = set()
-
-
 @register(
     "q_vocab_incremental",
     oracle=f"""
@@ -435,20 +434,16 @@ _VOCAB_IDX_READY: set[str] = set()
     f"nightly job and a nightly full-corpus pass.",
 )
 def q_vocab_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
-    import hashlib
     import os
-    import shutil
-    import tempfile
 
     from iceberg_poc_spark.sources.bucketed import write_bucketed
 
     d = load_table(spark, sf_dir, "documents")
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    wh = os.path.join(tempfile.gettempdir(), f"vincwh_{os.getpid()}_{key}")
-    db = f"vinc_{key}"
+    wh = scratch_dir("vincwh", sf_dir)
+    db = os.path.basename(wh)
     idx = f"{db}.vocab_counts"
-    if wh not in _VOCAB_IDX_READY:
+
+    def build() -> None:
         corpus_counts = (
             d.filter(F.col("doc_id") % 10 != 0)
             .select(F.explode(words_col()).alias("word"))
@@ -456,8 +451,8 @@ def q_vocab_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("cn"))
         )
         write_bucketed(corpus_counts, "vocab_counts", "word", 32, db, wh)
-        _VOCAB_IDX_READY.add(wh)
-        atexit.register(shutil.rmtree, wh, ignore_errors=True)
+
+    once(wh, build)
     batch = (
         d.filter(F.col("doc_id") % 10 == 0)
         .select(F.explode(words_col()).alias("word"))
@@ -771,16 +766,12 @@ IDX_TERMS = ("spark", "window")  # the AND-of-terms probe
 IDX_BUCKETS = 16
 
 
-def _setup_tok_index(spark: SparkSession, sf_dir: str) -> tuple:
+@table_setup
+def _setup_tok_index(spark: SparkSession, sf_dir: str, mgr):
     """tok_index: the (token, doc_id) posting-list table, bucket-hash
     partitioned on token so a term lookup plans only its bucket's files."""
-    from iceberg_poc_spark.operators.tablelayer import _READY, _mgr_for
     from iceberg_poc_spark.tables import bucket
 
-    mgr, wh = _mgr_for(spark, sf_dir)
-    key = (wh, "tok_index")
-    if key in _READY:
-        return mgr, _READY[key]
     postings = (
         load_table(spark, sf_dir, "documents")
         .select(
@@ -794,8 +785,6 @@ def _setup_tok_index(spark: SparkSession, sf_dir: str) -> tuple:
         "tok_index", postings.schema, [bucket("token", IDX_BUCKETS)]
     )
     mgr.append("tok_index", postings)
-    _READY[key] = {}
-    return mgr, _READY[key]
 
 
 @register(
@@ -1228,29 +1217,22 @@ def q_text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (abspath, documents mtime) -> trained [(iteration, pair, count)]:
-# encode reuses the trained merge table without re-running the loop
-# (the ANN build-once-per-process convention); keying on the corpus
-# file's mtime invalidates the cache if the table is regenerated
-# in-place within the process
-_BPE_MERGES: dict[tuple[str, float], list[tuple[int, str, int]]] = {}
-
-
-def _bpe_cache_key(sf_dir: str) -> tuple[str, float]:
+def _bpe_merges(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, int]]:
+    """The trained [(iteration, pair, count)], trained once per process per
+    (abspath, documents mtime): encode reuses the merge table without
+    re-running the loop, and a corpus regenerated in place within the
+    process is a new key."""
     import os
 
-    p = os.path.join(sf_dir, "documents.parquet")
     try:
-        mt = os.path.getmtime(p)
+        mt = os.path.getmtime(os.path.join(sf_dir, "documents.parquet"))
     except OSError:
         mt = 0.0
-    return (os.path.abspath(sf_dir), mt)
+    key = (_bpe_merges, os.path.abspath(sf_dir), mt)
+    return once(key, lambda: _bpe_train(spark, sf_dir))
 
 
-def _bpe_merges(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, int]]:
-    key = _bpe_cache_key(sf_dir)
-    if key in _BPE_MERGES:
-        return _BPE_MERGES[key]
+def _bpe_train(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, int]]:
     d = load_table(spark, sf_dir, "documents").where(
         F.pmod("doc_id", F.lit(BPE_TRAIN_SAMPLE_MOD)) == 0
     )
@@ -1314,7 +1296,6 @@ def _bpe_merges(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, int]]:
             )
     if prev_cached is not None:
         prev_cached.unpersist()
-    _BPE_MERGES[key] = merges
     return merges
 
 

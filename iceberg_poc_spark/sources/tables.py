@@ -11,11 +11,12 @@ from __future__ import annotations
 
 import os
 import weakref
-from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
+
+from iceberg_poc_spark.scratch import LRU
 
 TABLES = (
     "region",
@@ -41,12 +42,12 @@ def table_path(sf_dir: str, name: str) -> str:
 # (Hive metastore, Iceberg) does once and caches, and that the engine's own
 # snapshot layer already caches for its manifests (manager._READ_PLANS).
 # Same convention here for the raw corpus scans: the key is the session (a
-# WEAK ref — a stopped session's JVM state is never pinned; dead-session
-# entries are purged at store time) plus the file identity (mtime_ns, size,
-# inode), so a rewritten corpus is a cache miss. The cached object is the
-# UNEXECUTED scan plan — every action on it still reads the parquet files.
-_SCAN_PLANS: "OrderedDict[tuple, DataFrame]" = OrderedDict()
+# WEAK ref — a stopped session's JVM state is never pinned; see LRU) plus
+# the file identity (mtime_ns, size, inode), so a rewritten corpus is a
+# cache miss. The cached object is the UNEXECUTED scan plan — every action
+# on it still reads the parquet files.
 SCAN_PLAN_CACHE_MAX = 64
+_SCAN_PLANS = LRU(SCAN_PLAN_CACHE_MAX)
 
 
 # directories with more children than this are not memoized at all —
@@ -90,16 +91,6 @@ def _scan_key(spark: SparkSession, path: str) -> tuple | None:
         return None
 
 
-def _scan_store(key: tuple | None, df: DataFrame) -> None:
-    if key is None:
-        return
-    for k in [k for k in _SCAN_PLANS if k[0]() is None]:
-        del _SCAN_PLANS[k]
-    _SCAN_PLANS[key] = df
-    while len(_SCAN_PLANS) > SCAN_PLAN_CACHE_MAX:
-        _SCAN_PLANS.popitem(last=False)
-
-
 def scan_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` with the scan plan memoized per
     (session, file identity) — for operator-owned parquet layouts
@@ -112,14 +103,10 @@ def scan_parquet(spark: SparkSession, path: str) -> DataFrame:
     write two partition levels down (into an existing ``a=1/b=2/``) is
     NOT seen, and the stale plan is served."""
     key = _scan_key(spark, path)
-    if key is not None:
-        hit = _SCAN_PLANS.get(key)
-        if hit is not None:
-            _SCAN_PLANS.move_to_end(key)
-            return hit
-    df = spark.read.parquet(path)
-    _scan_store(key, df)
-    return df
+    hit = _SCAN_PLANS.get(key)
+    if hit is not None:
+        return hit
+    return _SCAN_PLANS.put(key, spark.read.parquet(path))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -145,10 +132,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                     "spark.sql.legacy.parquet.nanosAsLong", "false"
                 ),
             )
-        hit = _SCAN_PLANS.get(key)
-        if hit is not None:
-            _SCAN_PLANS.move_to_end(key)
-            return hit
+    hit = _SCAN_PLANS.get(key)
+    if hit is not None:
+        return hit
     df = spark.read.parquet(path)
     if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
         # events.ts is parquet TIMESTAMP(NANOS): Spark reads it as long
@@ -159,8 +145,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.withColumn(
             "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
         )
-    _scan_store(key, df)
-    return df
+    return _SCAN_PLANS.put(key, df)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

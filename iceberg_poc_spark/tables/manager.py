@@ -65,6 +65,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from iceberg_poc_spark.scratch import LRU
 from iceberg_poc_spark.tables.xxh64 import bucket_of
 
 
@@ -910,13 +911,13 @@ class ParquetTableManager:
     # LRU across warehouses (move-to-end on every manager construct):
     # a hot long-lived warehouse stays cached no matter how many
     # throwaway tmp warehouses a pytest/notebook session opens after it
-    # — FIFO would evict it mid-use and silently re-decode.
-    _SEG_CACHES: "OrderedDict[str, _SegCache]" = OrderedDict()
-
-    # warehouses cached at once — a long pytest/notebook session touches
+    # — FIFO would evict it mid-use and silently re-decode. Bounded at
+    # SEG_CACHE_MAX_WAREHOUSES: a long pytest/notebook session touches
     # hundreds of throwaway warehouses; without a bound the shared cache
-    # would pin every one of them for the process lifetime
+    # would pin every one of them for the process lifetime.
     SEG_CACHE_MAX_WAREHOUSES = 32
+    _SEG_CACHES = LRU(SEG_CACHE_MAX_WAREHOUSES)
+
     # per-warehouse segment-entry bound: one huge warehouse must not
     # grow the process cache without limit. At ~200 B of dict refs per
     # entry this caps driver heap near 100 MB per warehouse; past it the
@@ -928,16 +929,9 @@ class ParquetTableManager:
         self.spark = spark
         self.warehouse = warehouse
         self._in_txn_repair = False
-        key = os.path.abspath(warehouse)
-        self._seg_key = key
-        cache = self._SEG_CACHES.get(key)
-        if cache is None:
-            while len(self._SEG_CACHES) >= self.SEG_CACHE_MAX_WAREHOUSES:
-                self._SEG_CACHES.popitem(last=False)  # LRU eviction
-            cache = self._SEG_CACHES[key] = _SegCache()
-        else:
-            self._SEG_CACHES.move_to_end(key)
-        self._seg_cache = cache
+        self._seg_cache = self._SEG_CACHES.setdefault(
+            os.path.abspath(warehouse), _SegCache
+        )
         os.makedirs(warehouse, exist_ok=True)
 
     def _seg_cache_put(self, key: tuple[str, str], entries: list[dict]) -> None:
@@ -4428,31 +4422,15 @@ class ParquetTableManager:
             )
         except (FileNotFoundError, TypeError):
             key = None
-        if key is not None:
-            hit = self._READ_PLANS.get(key)
-            if hit is not None:
-                self._READ_PLANS.move_to_end(key)
-                return hit
+        hit = self._READ_PLANS.get(key)
+        if hit is not None:
+            return hit
         raw, files, _total = self._plan_read(name, v, [])
-        df = self._read_files(name, raw, files)
-        self._read_plan_store(key, df)
-        return df
+        return self._READ_PLANS.put(key, self._read_files(name, raw, files))
 
     # (session weakref, manifest path, mtime_ns, size, inode) -> DataFrame
-    _READ_PLANS: "OrderedDict[tuple, DataFrame]" = OrderedDict()
     READ_PLAN_CACHE_MAX = 256
-
-    def _read_plan_store(self, key: tuple | None, df: DataFrame) -> None:
-        if key is None:
-            return
-        # drop plans bound to garbage-collected sessions first — they
-        # can never hit again and would otherwise pin JVM-side state
-        # until LRU churn reaches them (bounded scan: cache <= 256)
-        for k in [k for k in self._READ_PLANS if k[0]() is None]:
-            del self._READ_PLANS[k]
-        self._READ_PLANS[key] = df
-        while len(self._READ_PLANS) > self.READ_PLAN_CACHE_MAX:
-            self._READ_PLANS.popitem(last=False)
+    _READ_PLANS = LRU(READ_PLAN_CACHE_MAX)
 
     # ----------------------------------------------------- branches & tags
     def create_branch(

@@ -501,7 +501,7 @@ def test_stream_wap_quarantines_bad_batch(spark):
     from iceberg_poc_spark.sources import load_table
     from tests.conftest import SF_DIR
 
-    mgr = _setup_events_wap_stream(spark, SF_DIR)
+    mgr, _ = _setup_events_wap_stream(spark, SF_DIR)
     n = load_table(spark, SF_DIR, "events").count()
     lo, hi = n // 3, 2 * (n // 3)
     # main holds exactly slices 0 and 2
@@ -635,13 +635,13 @@ def test_stream_ann_ingest_appends_and_replay_skip(spark):
     import os
 
     from iceberg_poc_spark.operators.similarity import _assign_anchor_cells
-    from iceberg_poc_spark.operators.tablelayer import _warehouse
+    from iceberg_poc_spark.scratch import scratch_dir
     from iceberg_poc_spark.streaming.pipelines import (
         _stream_marker_key,
         table_sink_epoch,
     )
 
-    wh = _warehouse(SF_DIR)
+    wh = scratch_dir("ttwh", SF_DIR)
     marker_key = _stream_marker_key(os.path.join(wh, "_ckpt_ann_stream"))
     last_epoch = int(mgr.properties("emb_ann_stream")[marker_key])
     assert last_epoch == 2  # three drained batches: epochs 0..2
