@@ -320,20 +320,22 @@ def _assign_anchor_cells(
 
 
 def _ann_multiprobe_scan(spark: SparkSession, sf_dir: str):
-    """Anchor-IVF index build (once per process per sf_dir) + budgeted
-    multi-probe plan. Returns (df, planned, total, qemb)."""
+    """Anchor-IVF index build (once per process per sf_dir; the anchors
+    are its state, so a warm call runs no job before the scan) +
+    budgeted multi-probe plan. Returns (df, planned, total, qemb,
+    ranked, mgr)."""
     from iceberg_poc_spark.tables import identity
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    n = emb.count()
-    anchors = _strided_anchors(emb, n // ANN_MP_CELLS)
 
-    def build(mgr) -> None:
+    def build(mgr) -> list:
+        anchors = _strided_anchors(emb, emb.count() // ANN_MP_CELLS)
         cells = _assign_anchor_cells(spark, emb, anchors)
         mgr.create_table("emb_ivf", cells.schema, [identity("cell")])
         mgr.append("emb_ivf", cells)
+        return anchors
 
-    mgr, _ = _index(spark, "annmp", sf_dir, build)
+    mgr, anchors = _index(spark, "annmp", sf_dir, build)
     qemb = next(a for aid, a in anchors if aid == 0)  # vec_id 0 IS anchor 0
     ranked = _probe_order(anchors, qemb)
     probe = [aid for aid, _ in ranked[:ANN_MP_PROBE]]

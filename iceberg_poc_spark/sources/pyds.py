@@ -27,7 +27,6 @@ from __future__ import annotations
 
 import os
 from typing import Any, Iterator
-from urllib.parse import unquote
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -71,10 +70,10 @@ _OPS = {
 }
 
 # Spark's ExternalCatalogUtils.escapePathName char set: partition values
-# written through the connector must produce byte-identical hive dir names
-# (and therefore byte-identical manifest partition strings) to the ones
-# manager.append gets from Spark's own partitionBy — pruning and identity
-# restore compare those strings directly.
+# written through the connector name their hive directories exactly as
+# manager.append's Spark partitionBy does. The escaping only names
+# directories: the manifest records the unescaped value (NULL as None),
+# parsed back from the directory by _hive_values.
 _HIVE_ESCAPE = (
     set('"#%\'*/:=?\\{[]^')
     | {chr(c) for c in range(0x20)}
@@ -395,8 +394,10 @@ def _read_file_as_batches(
                     source = tbl[old]
                     break
         if source is None and name in entry["partition"]:
-            raw = unquote(str(entry["partition"][name]))
-            source = pc.cast(pa.array([raw] * n, pa.string()), afield.type)
+            # the manifest records the value itself, NULL as None
+            source = pc.cast(
+                pa.array([entry["partition"][name]] * n, pa.string()), afield.type
+            )
         if source is None:
             # initial-default columns (Iceberg v3): a file whose RECORDED
             # writer schema lacks the column (under every historical
@@ -726,11 +727,16 @@ class SnapTableWriter(DataSourceArrowWriter):
         files: list[str] = []
         for batch in iterator:
             tbl = pa.Table.from_batches([batch])
-            keys = (
-                tbl.select(self._route_cols)
-                .group_by(self._route_cols)
-                .aggregate([])
-                .to_pylist()
+            # Arrow's grouper can return a NULL key as several groups;
+            # deduplicated here, or each copy writes its rows again
+            keys = list(
+                {
+                    tuple(k.values()): k
+                    for k in tbl.select(self._route_cols)
+                    .group_by(self._route_cols)
+                    .aggregate([])
+                    .to_pylist()
+                }.values()
             )
             data = tbl.select(self._file_cols)
             for krow in keys:
@@ -778,25 +784,18 @@ class SnapTableWriter(DataSourceArrowWriter):
         self._publish(staged)
 
     def _publish(self, staged: list[str], epoch: int | None = None) -> None:
-        """Validate, move, and atomically commit the staged files as one
-        snapshot. ``epoch`` (streaming) is recorded in the table
-        properties inside the SAME commit — the idempotence marker a
-        replayed micro-batch is skipped by."""
-        import uuid as _uuid
-
-        import pyarrow.parquet as pq
-
+        """Validate the staged files against the table's CHECK
+        constraints, move each under ``data/`` and describe it through
+        the table layer's one registrar (``_register_files``: partition
+        values unescaped from the staged ``k=v`` dirs, NULL as None;
+        stats; Bloom index), and atomically commit them as one snapshot.
+        ``epoch`` (streaming) is recorded in the table properties inside
+        the SAME commit — the idempotence marker a replayed micro-batch
+        is skipped by."""
         from iceberg_poc_spark.tables.manager import (
-            BLOOM_COLS_PROP,
-            BLOOM_DEFAULT_BITS,
-            BLOOM_DEFAULT_HASHES,
-            BLOOM_HASHES_PROP,
-            BLOOM_BITS_PROP,
             CONSTRAINT_PROP_PREFIX,
             ConstraintViolation,
-            _bloom_build,
-            _collect_column_stats,
-            _collect_null_counts,
+            _register_files,
             _without_deletes,
         )
         # the commit callback runs in a Python worker with no Spark
@@ -834,75 +833,23 @@ class SnapTableWriter(DataSourceArrowWriter):
                     f"ingest into {self._table!r} rejected — check "
                     f"constraint(s) violated: {detail}"
                 )
-        bloom_cols = [
-            c.strip()
-            for c in props.get(BLOOM_COLS_PROP, "").split(",")
-            if c.strip()
-        ]
-        bloom_bits = max(
-            64, int(props.get(BLOOM_BITS_PROP, BLOOM_DEFAULT_BITS)) // 8 * 8
-        )
-        bloom_k = int(props.get(BLOOM_HASHES_PROP, BLOOM_DEFAULT_HASHES))
-        data_root = os.path.join(self._table_dir, "data")
-        os.makedirs(data_root, exist_ok=True)
-        entries: list[dict] = []
-        staging_roots: set[str] = set()
+        at: list[tuple[str, str]] = []
         for src in staged:
-            # partition values from the staged hive subpath (k=v dirs
-            # below the dsw-* staging root) — the same parse
-            # manager._write_files applies to Spark's partitionBy output,
-            # so manifest partition strings agree. Anchored on the dsw-*
-            # marker, NOT self._staging: under streaming the executor-side
-            # writer instance (which staged) and the driver-side one
-            # (which commits) are distinct deserializations with distinct
-            # staging uuids.
+            # the staging root is the dsw-* dir, NOT self._staging: under
+            # streaming the executor-side writer instance (which staged)
+            # and the driver-side one (which commits) are distinct
+            # deserializations with distinct staging uuids
             parts = os.path.normpath(os.path.dirname(src)).split(os.sep)
             i = max(
                 (ix for ix, s in enumerate(parts) if s.startswith("dsw-")),
                 default=len(parts) - 1,
             )
-            staging_roots.add(os.sep + os.path.join(*parts[: i + 1]))
-            segs = parts[i + 1:]
-            pvals: dict[str, Any] = {}
-            for seg in segs:
-                k, _, v = seg.partition("=")
-                pvals[k] = v
-            dst_dir = (
-                os.path.join(data_root, *segs) if segs else data_root
-            )
-            os.makedirs(dst_dir, exist_ok=True)
-            dst = os.path.join(dst_dir, f"{_uuid.uuid4().hex}.parquet")
-            os.replace(src, dst)
-            md = pq.ParquetFile(dst).metadata
-            entry = {
-                "path": os.path.relpath(dst, self._table_dir),
-                "partition": pvals,
-                "records": md.num_rows,
-                "bytes": os.path.getsize(dst),
-                "stats": _collect_column_stats(md),
-                "nulls": _collect_null_counts(md),
-                "cols": list(self._cols),
-            }
-            present = [
-                c for c in bloom_cols if c in md.schema.to_arrow_schema().names
-            ]
-            if present:
-                tbl = pq.read_table(dst, columns=present)
-                entry["bloom"] = {
-                    c: {
-                        "m": bloom_bits,
-                        "k": bloom_k,
-                        "b": _bloom_build(
-                            tbl.column(c).to_pylist(), bloom_bits, bloom_k
-                        ),
-                    }
-                    for c in present
-                }
-            entries.append(entry)
+            at.append((os.sep + os.path.join(*parts[: i + 1]), src))
+        entries = _register_files(self._table_dir, at, list(self._cols), props)
         self._cleanup()
         import shutil
 
-        for root in staging_roots:  # executor-side staging dirs (streaming)
+        for root in {root for root, _src in at}:  # executor-side (streaming)
             shutil.rmtree(root, ignore_errors=True)
 
         def derive(head: dict) -> dict:

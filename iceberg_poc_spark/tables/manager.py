@@ -223,9 +223,13 @@ def _may_match(spec: list["Transform"], entry: dict, where: list) -> bool:
     (order-preserving ones only) and tests the file's manifest partition
     values; additionally tests per-file column min/max stats (so sorted/
     clustered files are skipped even on non-partition columns).
-    Conservative: unknown/unmappable → keep. Boundary partitions are kept
-    for > / < (partition granularity); the row-level residual filter
-    finishes the job."""
+    Manifest partition values are the values themselves (strings, as
+    every writer records them); a value recorded as None is SQL NULL
+    and fails every comparison and membership, while a field the entry
+    does not record (a file written before the spec gained it) keeps
+    the file. Conservative: unknown/unmappable → keep. Boundary
+    partitions are kept for > / < (partition granularity); the
+    row-level residual filter finishes the job."""
     for col, op, lit_v in where:
         if not _stats_may_match(entry, col, op, lit_v):
             return False
@@ -237,40 +241,64 @@ def _may_match(spec: list["Transform"], entry: dict, where: list) -> bool:
         for t in spec:
             if t.source != col or not t.order_preserving:
                 continue
-            pv = entry["partition"].get(t.field_name)
-            if pv is None:
+            if t.field_name not in entry["partition"]:
                 continue
-            if op == "in":
-                # membership maps through ANY deterministic transform:
-                # x IN (v1..vn) => f(x) IN (f(v1)..f(vn))
-                try:
-                    bounds = {str(t.literal_to_partition(v)) for v in lit_v}
-                except (ValueError, AttributeError):
-                    continue
-                if str(pv) not in bounds:
+            pv = entry["partition"][t.field_name]
+            if pv is None:
+                if op in ("==", ">=", "<=", ">", "<", "in"):
                     return False
                 continue
             try:
-                bound = t.literal_to_partition(lit_v)
-            except (ValueError, AttributeError):
-                continue
-            if isinstance(bound, (int, float)) and not isinstance(pv, (int, float)):
-                try:
-                    pv = type(bound)(pv)
-                except (TypeError, ValueError):
+                if op == "in":
+                    # membership maps through ANY deterministic transform:
+                    # x IN (v1..vn) => f(x) IN (f(v1)..f(vn))
+                    pairs = [
+                        _partition_pair(pv, t.literal_to_partition(v))
+                        for v in lit_v
+                    ]
+                    if None not in pairs and not any(a == b for a, b in pairs):
+                        return False
                     continue
-            else:
-                pv, bound = str(pv), str(bound)
-            ok = {
-                "==": pv == bound,
-                ">=": pv >= bound,
-                "<=": pv <= bound,
-                ">": pv >= bound,
-                "<": pv <= bound,
-            }.get(op, True)
+                pair = _partition_pair(pv, t.literal_to_partition(lit_v))
+                if pair is None:
+                    continue
+                a, b = pair
+                ok = {
+                    "==": a == b,
+                    ">=": a >= b,
+                    "<=": a <= b,
+                    ">": a >= b,
+                    "<": a <= b,
+                }.get(op, True)
+            except (ValueError, AttributeError, TypeError):
+                continue  # unmappable literal or incomparable pair: keep
             if not ok:
                 return False
     return True
+
+
+def _partition_pair(pv: str, bound: Any) -> tuple | None:
+    """A manifest partition value and a predicate bound in one comparable
+    domain: booleans in Spark's lowercase spelling, numbers, dates and
+    naive timestamps parsed from the value's string, anything else as
+    strings. None (keep the file) when the value does not parse as the
+    bound's type, or either side is NaN or zone-aware."""
+    import datetime as dt
+
+    try:
+        if isinstance(bound, bool):
+            return str(pv).lower(), str(bound).lower()
+        if isinstance(bound, (int, float)):
+            v = type(bound)(pv)
+            # Spark orders NaN above every number and equal to itself
+            return None if v != v or bound != bound else (v, bound)
+        if isinstance(bound, dt.date):
+            if getattr(bound, "tzinfo", None) is not None:
+                return None
+            return type(bound).fromisoformat(str(pv)), bound
+    except (TypeError, ValueError):
+        return None
+    return str(pv), str(bound)
 
 
 def _collect_column_stats(md) -> dict[str, list]:
@@ -690,9 +718,10 @@ def _desc_id(g: dict):
 
 
 def _hive_values(path: str) -> dict[str, str | None]:
-    """Identity partition values of a managed data file, from its hive
-    path (``data/k=v/...``; unescaped, the default partition as None).
-    The hive layout strips these columns from the file itself."""
+    """Partition values of a data file, from the ``k=v`` directories of
+    its hive path (``data/k=v/...``): unescaped, the default partition
+    as None — the form a manifest records. The hive layout strips these
+    columns from the file itself."""
     from urllib.parse import unquote
 
     out: dict[str, str | None] = {}
@@ -701,6 +730,77 @@ def _hive_values(path: str) -> dict[str, str | None]:
         if eq:
             out[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
     return out
+
+
+def _file_entry(
+    full: str,
+    path: str,
+    partition: dict,
+    cols: list[str],
+    md,
+    bloom: tuple[list[str], int, int] | None = None,
+) -> dict:
+    """The manifest entry of the parquet file at ``full``, recorded as
+    ``path``, from its footer ``md``: row count, size, per-column
+    min/max and null counts, its writer columns ``cols`` (which decide
+    initial-default resolution: an absent column reads its default, a
+    present one its values, NULLs included) and ``partition``. With
+    ``bloom`` = (columns, bits, hashes), one column-pruned read builds
+    a Bloom filter per listed column the file holds."""
+    entry = {
+        "path": path,
+        "partition": partition,
+        "records": md.num_rows,
+        "bytes": os.path.getsize(full),
+        "stats": _collect_column_stats(md),
+        "nulls": _collect_null_counts(md),
+        "cols": cols,
+    }
+    bcols, bits, k = bloom or ([], 0, 0)
+    present = [c for c in bcols if c in md.schema.to_arrow_schema().names]
+    if present:
+        import pyarrow.parquet as pq
+
+        tbl = pq.read_table(full, columns=present)
+        entry["bloom"] = {
+            c: {"m": bits, "k": k, "b": _bloom_build(tbl.column(c).to_pylist(), bits, k)}
+            for c in present
+        }
+    return entry
+
+
+def _register_files(
+    table_dir: str, staged: list[tuple[str, str]], cols: list[str], props: dict
+) -> list[dict]:
+    """Move each staged parquet file ``(root, src)`` under the table's
+    ``data/``, keeping its ``k=v`` directories below ``root``, and
+    return its manifest entry (:func:`_file_entry`, partition values by
+    :func:`_hive_values`) — the one path from a written file to a
+    manifest entry. The Bloom index columns come from the
+    ``index.bloom.*`` table properties ``props``; on a real cluster the
+    writing task would build the filter inline, here the entry's one
+    column-pruned read does."""
+    import pyarrow.parquet as pq
+
+    bloom = (
+        [c.strip() for c in props.get(BLOOM_COLS_PROP, "").split(",") if c.strip()],
+        max(64, int(props.get(BLOOM_BITS_PROP, BLOOM_DEFAULT_BITS)) // 8 * 8),
+        int(props.get(BLOOM_HASHES_PROP, BLOOM_DEFAULT_HASHES)),
+    )
+    entries = []
+    for root, src in staged:
+        rel = os.path.relpath(os.path.dirname(src), root)
+        dst_dir = os.path.normpath(os.path.join(table_dir, "data", rel))
+        os.makedirs(dst_dir, exist_ok=True)
+        dst = os.path.join(dst_dir, f"{uuid.uuid4().hex}.parquet")
+        os.replace(src, dst)
+        path = os.path.relpath(dst, table_dir)
+        entries.append(
+            _file_entry(
+                dst, path, _hive_values(path), cols, pq.ParquetFile(dst).metadata, bloom
+            )
+        )
+    return entries
 
 
 def _by_cols(gdels: list[dict]) -> dict[tuple, list[dict]]:
@@ -1207,8 +1307,10 @@ class ParquetTableManager:
             p = e["partition"]
             cols = set(p) if cols is None else cols & set(p)
         for c in cols or set():
-            vals = [e["partition"][c] for e in entries]
-            if any(v is None for v in vals):
+            # NULL partitions fail every predicate _seg_may_match tests,
+            # so the bound over the other values is still a superset
+            vals = [v for e in entries if (v := e["partition"][c]) is not None]
+            if not vals:
                 continue
             # partition values serialize as strings (hive layout);
             # min/max must live in the domain predicates compare in, so
@@ -1736,9 +1838,11 @@ class ParquetTableManager:
         manifest: dict | None = None,
     ) -> list[dict]:
         """Write df as parquet into an invisible staging dir (hidden
-        partition columns derived, hive layout), then move the files under
-        data/ keeping their partition subpaths. Returns file entries with
-        partition values + stats for the manifest.
+        partition columns derived, hive layout), then move each file under
+        data/ and describe it through :func:`_register_files` (partition
+        values unescaped from the ``k=v`` dirs, NULL as None; stats,
+        Bloom index) and :meth:`_attach_ndv_sketches`. Returns the file
+        entries for the manifest.
 
         ``sort_within`` (expressions over the data columns) sorts rows
         inside each task before writing — compaction passes its sort/
@@ -1803,73 +1907,13 @@ class ParquetTableManager:
             writer = writer.partitionBy(*part_cols)
         writer.parquet(staging)
 
-        # bloom index config (properties of the table's main head; see
-        # module-level BLOOM_* docs). On a real cluster the writing TASK
-        # computes the filter inline while streaming rows out (exactly
-        # what Iceberg's parquet bloom writer does); the stand-in reads
-        # back ONLY the indexed columns of each staged file — a
-        # column-pruned, per-file pass, same asymptotics as the stats
-        # footer walk below.
-        bloom_cols = [
-            c.strip()
-            for c in props.get(BLOOM_COLS_PROP, "").split(",")
-            if c.strip()
+        staged = [
+            (staging, os.path.join(root, fn))
+            for root, _dirs, fns in os.walk(staging)
+            for fn in fns
+            if fn.endswith(".parquet")
         ]
-        bloom_bits = max(
-            64, int(props.get(BLOOM_BITS_PROP, BLOOM_DEFAULT_BITS)) // 8 * 8
-        )
-        bloom_k = int(props.get(BLOOM_HASHES_PROP, BLOOM_DEFAULT_HASHES))
-
-        entries: list[dict] = []
-        data_root = os.path.join(self._dir(name), "data")
-        for root, _dirs, files in os.walk(staging):
-            for fn in files:
-                if not fn.endswith(".parquet"):
-                    continue
-                src = os.path.join(root, fn)
-                rel = os.path.relpath(root, staging)
-                # partition values from the hive path (k=v dirs)
-                pvals: dict[str, Any] = {}
-                if rel != ".":
-                    for seg in rel.split(os.sep):
-                        k, _, v = seg.partition("=")
-                        pvals[k] = v
-                dst_dir = os.path.join(data_root, rel) if rel != "." else data_root
-                os.makedirs(dst_dir, exist_ok=True)
-                dst = os.path.join(dst_dir, f"{uuid.uuid4().hex}.parquet")
-                os.replace(src, dst)
-                import pyarrow.parquet as pq
-
-                md = pq.ParquetFile(dst).metadata
-                entry = {
-                    "path": os.path.relpath(dst, self._dir(name)),
-                    "partition": pvals,
-                    "records": md.num_rows,
-                    "bytes": os.path.getsize(dst),
-                    "stats": _collect_column_stats(md),
-                    "nulls": _collect_null_counts(md),
-                    # writer schema: which table columns this file
-                    # physically holds — what decides initial-default
-                    # resolution (absent column -> default; present
-                    # column -> its values, NULLs included)
-                    "cols": data_cols,
-                }
-                present = [
-                    c for c in bloom_cols if c in md.schema.to_arrow_schema().names
-                ]
-                if present:
-                    tbl = pq.read_table(dst, columns=present)
-                    entry["bloom"] = {
-                        c: {
-                            "m": bloom_bits,
-                            "k": bloom_k,
-                            "b": _bloom_build(
-                                tbl.column(c).to_pylist(), bloom_bits, bloom_k
-                            ),
-                        }
-                        for c in present
-                    }
-                entries.append(entry)
+        entries = _register_files(self._dir(name), staged, data_cols, props)
         self._attach_ndv_sketches(name, entries, data_cols, props)
         import shutil
 
@@ -1887,15 +1931,11 @@ class ParquetTableManager:
     ) -> None:
         """Per-file mergeable NDV sketches for the columns named by the
         ``stats.ndv.columns`` table property (≙ Iceberg Puffin
-        theta/HLL blobs; here Spark's native ``hll_sketch_agg`` —
-        Apache DataSketches HLL_4, fixed internal hash so estimates are
-        deterministic). ONE distributed job over just-written files —
-        O(delta) like the footer stats walk, grouped by
-        ``input_file_name`` so the sketch state stays bounded per task
-        regardless of file size — then the serialized sketches ride the
-        manifest entries base64-encoded (``ndv_sk``). Readers fold
-        global or per-subset NDV from manifests alone via
-        ``hll_union_agg`` — zero data reads (:meth:`ndv_estimates`)."""
+        theta/HLL blobs) over just-written files — O(delta) like the
+        footer stats walk, in one job (:meth:`_file_sketches`) — riding
+        the manifest entries as ``ndv_sk``. Readers fold global or
+        per-subset NDV from manifests alone via ``hll_union_agg`` —
+        zero data reads (:meth:`ndv_estimates`)."""
         ndv_cols = [
             c.strip()
             for c in props.get(NDV_COLS_PROP, "").split(",")
@@ -1903,45 +1943,84 @@ class ParquetTableManager:
         ]
         if not ndv_cols or not entries or self.spark is None:
             return
-        try:
-            lgk = int(props.get(NDV_LGK_PROP, NDV_DEFAULT_LGK))
-        except (TypeError, ValueError):
-            lgk = NDV_DEFAULT_LGK
-        paths = [os.path.join(self._dir(name), e["path"]) for e in entries]
-        sk_rows = (
-            self.spark.read.parquet(*paths)
-            .select(F.input_file_name().alias("_f"), *ndv_cols)
-            .groupBy("_f")
-            .agg(
-                *[
-                    F.hll_sketch_agg(c, F.lit(lgk)).alias(c)
-                    for c in ndv_cols
-                ]
-            )
-            .collect()
-        )
-        from urllib.parse import unquote
-
-        by_base = {os.path.basename(e["path"]): e for e in entries}
-        for r in sk_rows:
-            base = os.path.basename(r["_f"])
-            # input_file_name() is a percent-encoded URI; managed file
-            # names are uuid hex (raw match), but be robust anyway
-            e = by_base.get(base) or by_base.get(unquote(base))
-            if e is None:
-                continue
-            sk = {}
-            for c in ndv_cols:
-                raw = r[c]
-                if raw is not None:  # all-NULL column: no sketch
-                    sk[c] = base64.b64encode(bytes(raw)).decode("ascii")
-            e["ndv_sk"] = sk
+        sk = self._file_sketches(name, entries, ndv_cols, props)
         # always set when profiling ran — {} means "profiled, nothing
         # found" (all-NULL or ZERO-ROW files, which produce no group
         # row), distinguishing it from an unsketched file; a None here
         # would break the table-level blob chain for every later append
         for e in entries:
-            e.setdefault("ndv_sk", {})
+            e["ndv_sk"] = sk.get(e["path"], {})
+
+    def _file_sketches(
+        self,
+        name: str,
+        entries: list[dict],
+        cols: list[str],
+        props: dict,
+        schema: StructType | None = None,
+    ) -> dict[str, dict]:
+        """Entry path -> {column: base64 HLL sketch} of ``cols`` over the
+        files of ``entries``: ONE distributed job (Spark's native
+        ``hll_sketch_agg`` — Apache DataSketches HLL_4, fixed internal
+        hash so estimates are deterministic — at the ``stats.ndv.lgk``
+        precision) grouped by ``input_file_name``, so sketch state stays
+        bounded per task regardless of file size. An all-NULL column
+        has no sketch; a zero-row file yields no group row and no key.
+        ``schema`` reads files that lack some columns (absent columns
+        contribute nothing, like all-NULL ones)."""
+        try:
+            lgk = int(props.get(NDV_LGK_PROP, NDV_DEFAULT_LGK))
+        except (TypeError, ValueError):
+            lgk = NDV_DEFAULT_LGK
+        by_base = {os.path.basename(e["path"]): e["path"] for e in entries}
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        rows = (
+            reader.parquet(*[os.path.join(self._dir(name), e["path"]) for e in entries])
+            .select(F.input_file_name().alias("_f"), *cols)
+            .groupBy("_f")
+            .agg(*[F.hll_sketch_agg(c, F.lit(lgk)).alias(c) for c in cols])
+            .collect()
+        )
+        from urllib.parse import unquote
+
+        out: dict[str, dict] = {}
+        for r in rows:
+            base = os.path.basename(r["_f"])
+            # input_file_name() returns a percent-encoded URI: the raw
+            # basename matches uuid-named managed files, the decoded one
+            # external files with specials in their names
+            path = by_base.get(base) or by_base.get(unquote(base))
+            if path is not None:
+                out[path] = {
+                    c: base64.b64encode(bytes(r[c])).decode("ascii")
+                    for c in cols
+                    if r[c] is not None
+                }
+        return out
+
+    def _ndv_union(self, sketches: list[tuple[str, str]], n: int) -> dict:
+        """The table-level NDV blob ``{"n": n, "cols": {col: sketch}}``
+        of ``sketches`` ((column, base64 sketch) pairs), unioned per
+        column by ``hll_union_agg`` in one tiny job (none when there is
+        nothing to union). ``n`` counts the files the blob covers, so
+        coverage stays honest for columns added to the profile late."""
+        if not sketches:
+            return {"n": n, "cols": {}}
+        merged = (
+            self.spark.createDataFrame(
+                [(c, base64.b64decode(b)) for c, b in sketches], "c string, sk binary"
+            )
+            .groupBy("c")
+            .agg(F.hll_union_agg("sk").alias("sk"))
+            .collect()
+        )
+        return {
+            "n": n,
+            "cols": {
+                r["c"]: base64.b64encode(bytes(r["sk"])).decode("ascii")
+                for r in merged
+            },
+        }
 
     def _ndv_union_blob(
         self, parent_m: dict, new_entries: list[dict]
@@ -1949,13 +2028,11 @@ class ParquetTableManager:
         """O(delta) maintenance of the TABLE-LEVEL NDV sketch blob
         (``ndv_tbl``, ≙ Iceberg's snapshot-scoped Puffin statistics
         file): union the parent's running per-column sketch with the
-        new files' sketches in one tiny job — the serve path then reads
-        O(columns), flat in file count. Returns None (blob chain
-        broken, readers fall back to the always-correct per-file fold)
-        when any new file was written unsketched or the parent carries
-        files but no blob. Per-column ``n`` counts contributing files
-        so coverage stays honest for columns added to the profile
-        late."""
+        new files' sketches — the serve path then reads O(columns),
+        flat in file count. Returns None (blob chain broken, readers
+        fall back to the always-correct per-file fold) when any new
+        file was written unsketched or the parent carries files but no
+        blob."""
         if self.spark is None or not new_entries:
             return None
         if any(e.get("ndv_sk") is None for e in new_entries):
@@ -1963,32 +2040,12 @@ class ParquetTableManager:
         prev = parent_m.get("ndv_tbl")
         if prev is None and parent_m.get("files"):
             return None
-        n_profiled = len(new_entries) + (int(prev["n"]) if prev else 0)
-        rows = [
-            (c, base64.b64decode(b))
-            for e in new_entries
-            for c, b in e["ndv_sk"].items()
-        ]
+        sketches = [kv for e in new_entries for kv in e["ndv_sk"].items()]
         if prev:
-            rows += [
-                (c, base64.b64decode(b))
-                for c, b in prev.get("cols", {}).items()
-            ]
-        if not rows:
-            return {"n": n_profiled, "cols": {}}
-        merged = (
-            self.spark.createDataFrame(rows, "c string, sk binary")
-            .groupBy("c")
-            .agg(F.hll_union_agg("sk").alias("sk"))
-            .collect()
+            sketches += prev.get("cols", {}).items()
+        return self._ndv_union(
+            sketches, len(new_entries) + (int(prev["n"]) if prev else 0)
         )
-        return {
-            "n": n_profiled,
-            "cols": {
-                r["c"]: base64.b64encode(bytes(r["sk"])).decode("ascii")
-                for r in merged
-            },
-        }
 
     def analyze_ndv(self, name: str, columns: list[str] | None = None) -> int:
         """≙ ``ANALYZE TABLE ... COMPUTE STATISTICS`` / Iceberg's Puffin
@@ -1996,7 +2053,8 @@ class ParquetTableManager:
         lacks them (zero-copy ``add_files`` onboarding, files written
         before the property was set) with ONE column-pruned job over
         only the missing files — O(missing), not O(table) — then
-        rebuild the table-level blob from all files' sketches and
+        rebuild the table-level blob from all files' sketches (the
+        O(files) union the O(delta) append maintenance avoids) and
         commit. After this, both the per-file fold and the O(columns)
         serve path cover the whole table, and subsequent appends resume
         O(delta) blob maintenance on the repaired chain. ``columns``
@@ -2013,66 +2071,22 @@ class ParquetTableManager:
                 f"analyze_ndv({name!r}): no columns — pass columns= or "
                 f"set the {NDV_COLS_PROP!r} table property"
             )
-        try:
-            lgk = int(props.get(NDV_LGK_PROP, NDV_DEFAULT_LGK))
-        except (TypeError, ValueError):
-            lgk = NDV_DEFAULT_LGK
         missing = [e for e in m["files"] if e.get("ndv_sk") is None]
         # sketch map keyed by entry PATH, applied to entry COPIES below:
         # manifest entries are shared by reference with the immutable
         # segment cache, and _plan_segments reuses unchanged segments by
         # identity — mutating a cached entry in place would never reach
-        # disk (the backfill would evaporate on cache eviction/restart)
+        # disk (the backfill would evaporate on cache eviction/restart).
+        # Zero-row files keep their pre-seeded {} ("profiled, nothing
+        # found").
         new_sk: dict[str, dict] = {e["path"]: {} for e in missing}
         if missing:
             self._require_unique_basenames(name, m, "analyze_ndv")
-            by_base: dict[str, str] = {}
-            for e in missing:
-                p = (
-                    e["path"]
-                    if os.path.isabs(e["path"])
-                    else os.path.join(self._dir(name), e["path"])
-                )
-                by_base[os.path.basename(p)] = e["path"]
-            paths = [
-                e["path"]
-                if os.path.isabs(e["path"])
-                else os.path.join(self._dir(name), e["path"])
-                for e in missing
-            ]
             # files may physically lack some profiled columns (external
-            # onboarding, pre-evolution writes): sketch only what each
-            # file carries; absent columns contribute nothing, exactly
-            # like all-NULL ones. Zero-row files produce no group row
-            # and keep their pre-seeded {} ("profiled, nothing found").
-            sk_rows = (
-                self.spark.read.schema(self.schema(name, m))
-                .parquet(*paths)
-                .select(F.input_file_name().alias("_f"), *cols)
-                .groupBy("_f")
-                .agg(
-                    *[
-                        F.hll_sketch_agg(c, F.lit(lgk)).alias(c)
-                        for c in cols
-                    ]
-                )
-                .collect()
+            # onboarding, pre-evolution writes): read at the table schema
+            new_sk.update(
+                self._file_sketches(name, missing, cols, props, self.schema(name, m))
             )
-            from urllib.parse import unquote
-
-            for r in sk_rows:
-                base = os.path.basename(r["_f"])
-                # input_file_name() returns a percent-encoded URI: try
-                # the raw basename first (uuid-named managed files),
-                # then the decoded form (external files with specials)
-                path = by_base.get(base) or by_base.get(unquote(base))
-                if path is None:
-                    continue
-                new_sk[path] = {
-                    c: base64.b64encode(bytes(r[c])).decode("ascii")
-                    for c in cols
-                    if r[c] is not None
-                }
 
         def derive(head: dict) -> dict:
             # the sketches describe the files as read at m
@@ -2083,36 +2097,13 @@ class ParquetTableManager:
                 else e
                 for e in head["files"]
             ]
-            return {**head, "files": files, "ndv_tbl": self._ndv_blob_of(files)}
+            blob = self._ndv_union(
+                [kv for e in files for kv in (e.get("ndv_sk") or {}).items()],
+                sum(1 for e in files if e.get("ndv_sk") is not None),
+            )
+            return {**head, "files": files, "ndv_tbl": blob}
 
         return self._advance(name, "main", "analyze-ndv", derive, base=m)
-
-    def _ndv_blob_of(self, files: list[dict]) -> dict:
-        """Union ALL files' sketches into the table-level blob shape
-        ({col: {sk, n}}) with one tiny job — the O(files) rebuild
-        analyze_ndv pays once and the O(delta) append maintenance
-        avoids."""
-        rows = [
-            (c, base64.b64decode(b))
-            for e in files
-            for c, b in (e.get("ndv_sk") or {}).items()
-        ]
-        n_profiled = sum(1 for e in files if e.get("ndv_sk") is not None)
-        if not rows:
-            return {"n": n_profiled, "cols": {}}
-        merged = (
-            self.spark.createDataFrame(rows, "c string, sk binary")
-            .groupBy("c")
-            .agg(F.hll_union_agg("sk").alias("sk"))
-            .collect()
-        )
-        return {
-            "n": n_profiled,
-            "cols": {
-                r["c"]: base64.b64encode(bytes(r["sk"])).decode("ascii")
-                for r in merged
-            },
-        }
 
     def ndv_estimates(self, name: str, version: int | None = None):
         """Fold per-file NDV sketches into global estimates — a
@@ -2364,9 +2355,9 @@ class ParquetTableManager:
         ``add_files`` procedure / ``migrate``): register the files in one
         atomic commit without reading or rewriting a single data row —
         only footers are opened, yielding the same manifest metadata a
-        written file gets (row counts, per-column min/max, null counts),
-        so stats/partition pruning works on registered files from the
-        first scan. This is how 100 TB of raw hive parquet becomes a
+        written file gets (:func:`_file_entry`: row counts, per-column
+        min/max, null counts), so stats/partition pruning works on
+        registered files from the first scan. This is how 100 TB of raw hive parquet becomes a
         managed table in seconds instead of a full rewrite.
 
         The files stay where they are: entries carry ABSOLUTE paths and
@@ -2378,11 +2369,14 @@ class ParquetTableManager:
 
         Partition values for pruning: hive-style ``col=value`` path
         segments matching IDENTITY partition fields are parsed per file
-        — scoped to segments BELOW a passed directory root, or to the
-        trailing contiguous ``col=value`` chain above a directly-passed
-        file (ancestor directories that merely look like ``col=value``
-        never inject values);
-        ``partition_values`` overrides/supplies values for all files.
+        by :func:`_hive_values` (unescaped; ``__HIVE_DEFAULT_PARTITION__``
+        counts as no value) — scoped to segments BELOW a passed
+        directory root, or to the trailing contiguous ``col=value``
+        chain above a directly-passed file (ancestor directories that
+        merely look like ``col=value`` never inject values);
+        ``partition_values`` overrides/supplies values for all files
+        (None records a NULL partition). The manifest holds the values
+        themselves, as every writer records them.
         Identity fields with no value from either source raise (pruning
         would silently degrade); non-identity (derived) transform fields
         must come via ``partition_values`` if at all — absent values
@@ -2414,31 +2408,50 @@ class ParquetTableManager:
         # an ancestor directory that merely happens to be named
         # col=value (e.g. /data/env=prod/...) must never inject a
         # partition value, or manifest pruning silently drops rows.
-        flat: list[tuple[str, list[str]]] = []
+        # (file, the path below the scope its partition values parse from)
+        flat: list[tuple[str, str]] = []
         for p in paths:
             ap = os.path.abspath(p)
             if os.path.isdir(ap):
                 for root, _dirs, fns in sorted(os.walk(ap)):
-                    rel = os.path.relpath(root, ap)
-                    segs = [] if rel == "." else rel.split(os.sep)
-                    flat.extend(
-                        (os.path.join(root, fn), segs)
-                        for fn in sorted(fns)
-                        if fn.endswith(".parquet")
-                    )
+                    for fn in sorted(fns):
+                        if fn.endswith(".parquet"):
+                            f = os.path.join(root, fn)
+                            flat.append((f, os.path.relpath(f, ap)))
             else:
-                chain: list[str] = []
-                for seg in reversed(os.path.dirname(ap).split(os.sep)):
-                    k, eq, _v = seg.partition("=")
-                    if eq and k:
-                        chain.append(seg)
-                    else:
-                        break
-                flat.append((ap, list(reversed(chain))))
+                segs = os.path.dirname(ap).split(os.sep)
+                i = len(segs)
+                while i and "=" in segs[i - 1] and not segs[i - 1].startswith("="):
+                    i -= 1
+                flat.append((ap, os.path.join(*segs[i:], os.path.basename(ap))))
         if not flat:
             raise ValueError(f"add_files: no parquet files under {paths!r}")
+
+        # NORMALIZE to strings — the form managed writes record (values
+        # of hive path segments): a raw int passed via partition_values
+        # would otherwise never compare equal to the managed side's
+        # string, so dynamic partition overwrite / merge partition
+        # selection would silently MISS the external entry and
+        # duplicate its rows (caught by test_segment_model's add_files
+        # -> overwrite sequence). Rendering follows Spark's hive writer:
+        # booleans lowercase, datetimes isoformat with a space; pass
+        # exotic types (floats with scientific rendering) as
+        # pre-rendered STRINGS if exact partition matching against
+        # managed writes matters.
+        def _hive_val(v: Any):
+            import datetime as _dt
+
+            if v is None or isinstance(v, str):
+                return v
+            if isinstance(v, bool):
+                return "true" if v else "false"
+            if isinstance(v, _dt.datetime):
+                return v.isoformat(sep=" ")
+            return str(v)
+
+        fields = {t.field_name for t in spec}
         entries: list[dict] = []
-        for ap, psegs in flat:
+        for ap, rel in flat:
             md = pq.ParquetFile(ap).metadata
             fcols = [
                 c for c in md.schema.to_arrow_schema().names if c in schema_cols
@@ -2447,19 +2460,11 @@ class ParquetTableManager:
                 raise ValueError(
                     f"{ap}: no column overlaps the table schema"
                 )
-            pvals: dict[str, Any] = {}
-            for seg in psegs:
-                k, eq, v = seg.partition("=")
-                if eq and k in ident:
-                    # hive escaping: writers percent-encode specials and
-                    # spell NULL as __HIVE_DEFAULT_PARTITION__; the raw
-                    # token would round-trip corrupted (and the null
-                    # marker would defeat the missing-value error below)
-                    if v == "__HIVE_DEFAULT_PARTITION__":
-                        continue
-                    from urllib.parse import unquote
-
-                    pvals[k] = unquote(v)
+            # the default-partition dir is NO value, so the missing-value
+            # error below still fires for it
+            pvals: dict[str, Any] = {
+                k: v for k, v in _hive_values(rel).items() if k in ident and v is not None
+            }
             if partition_values:
                 pvals.update(partition_values)
             missing = ident - set(pvals)
@@ -2469,45 +2474,9 @@ class ParquetTableManager:
                     f"{sorted(missing)} — pass partition_values or use a "
                     f"hive col=value layout"
                 )
-            # NORMALIZE to strings — the invariant every managed write
-            # establishes (partition values come from hive path
-            # segments): a raw int passed via partition_values would
-            # otherwise never compare equal to the managed side's
-            # string, so dynamic partition overwrite / merge partition
-            # selection would silently MISS the external entry and
-            # duplicate its rows (caught by test_segment_model's
-            # add_files -> overwrite sequence). Rendering follows
-            # Spark's hive writer: booleans lowercase, datetimes
-            # isoformat with a space; pass exotic types (floats with
-            # scientific rendering) as pre-rendered STRINGS if exact
-            # partition matching against managed writes matters.
-            def _hive_val(v: Any):
-                import datetime as _dt
-
-                if v is None or isinstance(v, str):
-                    return v
-                if isinstance(v, bool):
-                    return "true" if v else "false"
-                if isinstance(v, _dt.datetime):
-                    return v.isoformat(sep=" ")
-                return str(v)
-
-            pvals = {
-                k: _hive_val(v)
-                for k, v in pvals.items()
-                if k in {t.field_name for t in spec}
-            }
+            pvals = {k: _hive_val(v) for k, v in pvals.items() if k in fields}
             entries.append(
-                {
-                    "path": ap,
-                    "partition": pvals,
-                    "records": md.num_rows,
-                    "bytes": os.path.getsize(ap),
-                    "stats": _collect_column_stats(md),
-                    "nulls": _collect_null_counts(md),
-                    "cols": fcols,
-                    "external": True,
-                }
+                {**_file_entry(ap, ap, pvals, fcols, md), "external": True}
             )
 
         def derive(head: dict) -> dict:
@@ -3635,8 +3604,11 @@ class ParquetTableManager:
         n_rows = sum(pf.metadata.num_rows for pf in pfs)
         if n_rows == 0:
             return [(cols[0], "in", [])], False
-        nulls = [_collect_null_counts(pf.metadata) for pf in pfs]
-        has_null = any(n.get(c, 1) > 0 for n in nulls for c in cols)
+        facts = [
+            _file_entry(os.path.join(self._dir(name), p), p, {}, cols, pf.metadata)
+            for p, pf in zip(_key_files(g), pfs)
+        ]
+        has_null = any(e["nulls"].get(c, 1) > 0 for e in facts for c in cols)
         t = pfs[0].schema_arrow.field(cols[0]).type
         if (
             len(cols) == 1
@@ -3650,7 +3622,7 @@ class ParquetTableManager:
                 if v is not None
             ]
             return [(cols[0], "in", vals)], has_null
-        stats = [_collect_column_stats(pf.metadata) for pf in pfs]
+        stats = [e["stats"] for e in facts]
         # no bound on timestamps: footer stats are UTC, while time
         # partition transforms use the session zone
         where = [

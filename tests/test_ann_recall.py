@@ -151,6 +151,22 @@ def test_multiprobe_recall_floor(spark):
     assert planned == ANN_MP_PROBE and total == ANN_MP_CELLS
 
 
+def test_warm_multiprobe_runs_only_its_scan_jobs(spark):
+    """The anchor-IVF anchors are index state: a warm
+    q_sim_ann_multiprobe call runs no count or anchor collect before its
+    scan, at most 2 Spark jobs in all (4 when the anchors were
+    recomputed per call)."""
+    from iceberg_poc_spark.operators.similarity import q_sim_ann_multiprobe
+    from tests.test_table_manager import _jobs_of
+
+    cold = q_sim_ann_multiprobe(spark, SF_DIR).collect()
+    warm, jobs = _jobs_of(
+        spark, lambda: q_sim_ann_multiprobe(spark, SF_DIR).collect()
+    )
+    assert warm == cold
+    assert len(jobs) <= 2, jobs
+
+
 def test_multiprobe_recall_survives_10x_skewed_corpus(spark):
     """The multiprobe floor at 10x the corpus under CELL-OCCUPANCY SKEW:
     each replica is the base corpus plus seeded Gaussian noise (sigma

@@ -445,51 +445,83 @@ def test_connector_write_partitioned_parity(mgr, spark):
     xxhash64 bucket hash), the writer group-splits Arrow batches per
     partition tuple. Per-partition file routing, manifest partition
     strings, read-back (incl. identity restore from the hive path), and
-    manifest pruning must all EQUAL manager.append's for the same data."""
+    manifest pruning must all EQUAL manager.append's for the same data —
+    also for an identity string partition holding 'a/b' (escaped in its
+    directory name) and NULL (the default-partition directory)."""
     from iceberg_poc_spark.sources.pyds import route_partitions
     from iceberg_poc_spark.tables import bucket, days
+    from iceberg_poc_spark.tables.manager import _predicate
 
     ev = make_events(spark, 96, tenants=3)
-    spec = [identity("tenant_id"), days("ts"), bucket("service_id", 4)]
-    mgr.create_table("pa", EVENTS_SCHEMA, spec)  # via manager.append
-    mgr.create_table("pb", EVENTS_SCHEMA, spec)  # via the connector
-    mgr.append("pa", ev)
-    (
-        route_partitions(ev, mgr.warehouse, "pb")
-        .write.format("snaptable")
-        .option("warehouse", mgr.warehouse)
-        .option("table", "pb")
-        .mode("append")
-        .save()
+    # the second input routes on service_id: 'a/b', NULL and svc1
+    odd = spark.createDataFrame(
+        [
+            (r.tenant_id, r.ts, ["a/b", None, "svc1"][i % 3], r.value)
+            for i, r in enumerate(ev.collect())
+        ],
+        EVENTS_SCHEMA,
     )
-    ma, mb = mgr._load_manifest("pa"), mgr._load_manifest("pb")
+    cases = [
+        (
+            "p",
+            ev,
+            [identity("tenant_id"), days("ts"), bucket("service_id", 4)],
+            {"ts", "service_id", "value"},
+            # pruning parity on every transform axis: identity, days, bucket
+            (
+                [("tenant_id", "==", 1)],
+                [("ts", ">=", dt.datetime(2024, 1, 3))],
+                [("service_id", "==", "svc1")],
+            ),
+        ),
+        (
+            "q",
+            odd,
+            [identity("service_id"), days("ts"), bucket("tenant_id", 4)],
+            {"tenant_id", "ts", "value"},
+            (
+                [("service_id", "==", "a/b")],
+                [("service_id", "in", ["a/b"])],
+                [("ts", ">=", dt.datetime(2024, 1, 3))],
+                [("tenant_id", "==", 1)],
+            ),
+        ),
+    ]
+    for prefix, data, spec, file_cols, wheres in cases:
+        a, b = prefix + "a", prefix + "b"
+        mgr.create_table(a, EVENTS_SCHEMA, spec)  # via manager.append
+        mgr.create_table(b, EVENTS_SCHEMA, spec)  # via the connector
+        mgr.append(a, data)
+        (
+            route_partitions(data, mgr.warehouse, b)
+            .write.format("snaptable")
+            .option("warehouse", mgr.warehouse)
+            .option("table", b)
+            .mode("append")
+            .save()
+        )
+        ma, mb = mgr._load_manifest(a), mgr._load_manifest(b)
 
-    def routing(m):
-        out = {}
-        for e in m["files"]:
-            k = tuple(sorted(e["partition"].items()))
-            out[k] = out.get(k, 0) + e["records"]
-        return out
+        def routing(m):
+            out = {}
+            for e in m["files"]:
+                k = tuple(sorted(e["partition"].items()))
+                out[k] = out.get(k, 0) + e["records"]
+            return out
 
-    assert routing(mb) == routing(ma)  # identical per-partition routing
-    assert len(mb["files"]) == len(ma["files"])  # one file per partition
-    # physical files dropped the routing columns, like partitionBy does
-    assert all(
-        set(e["stats"]) <= {"ts", "service_id", "value"} for e in mb["files"]
-    )
-    # read-back equality through BOTH faces
-    assert _rows(mgr.read("pb")) == _rows(mgr.read("pa"))
-    assert _rows(_load(spark, mgr, "pb")) == _rows(mgr.read("pa"))
-    # pruning parity on every transform axis: identity, days, bucket
-    for where in (
-        [("tenant_id", "==", 1)],
-        [("ts", ">=", dt.datetime(2024, 1, 3))],
-        [("service_id", "==", "svc1")],
-    ):
-        _, pa_n, ta = mgr.scan("pa", where=where)
-        _, pb_n, tb = mgr.scan("pb", where=where)
-        assert (pb_n, tb) == (pa_n, ta)
-        assert pb_n < tb  # the predicate actually pruned files
+        assert routing(mb) == routing(ma)  # identical per-partition routing
+        assert len(mb["files"]) == len(ma["files"])  # one file per partition
+        # physical files dropped the routing columns, like partitionBy does
+        assert all(set(e["stats"]) <= file_cols for e in mb["files"])
+        # read-back equality through BOTH faces
+        assert _rows(mgr.read(b)) == _rows(mgr.read(a)) == _rows(data)
+        assert _rows(_load(spark, mgr, b)) == _rows(data)
+        for where in wheres:
+            got_a, pa_n, ta = mgr.scan(a, where=where)
+            got_b, pb_n, tb = mgr.scan(b, where=where)
+            assert (pb_n, tb) == (pa_n, ta)
+            assert pb_n < tb  # the predicate actually pruned files
+            assert _rows(got_b) == _rows(got_a) == _rows(data.filter(_predicate(where)))
 
 
 def test_stream_writer_exactly_once_across_restarts(mgr, spark, tmp_path):

@@ -2777,6 +2777,160 @@ def test_add_files_guards_duplicates_escaping_and_mor_basenames(
     assert rows == {(1, "z z"), (2, "a b"), (4, "plain")}
 
 
+
+def _calls_by_function() -> dict[str, set[str]]:
+    """``module:function -> names it calls`` over every function in the
+    package (nested functions count for their own name)."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "iceberg_poc_spark"
+    out: dict[str, set[str]] = {}
+    for path in sorted(pkg.rglob("*.py")):
+        for fn in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                called = out.setdefault(f"{path.stem}:{fn.name}", set())
+                for node in ast.walk(fn):
+                    if isinstance(node, ast.Call):
+                        f = node.func
+                        called.add(getattr(f, "id", None) or getattr(f, "attr", ""))
+    return out
+
+
+def test_one_registrar_turns_files_into_manifest_entries():
+    """The footer stats, null counts and Bloom filters of a manifest
+    entry are computed in one place (``_file_entry``, the registrar's
+    footer part); both writers move and describe staged files through
+    ``_register_files``; and only ``_hive_values`` (directory names) and
+    the NDV helper (``input_file_name`` URIs) unescape anything — no
+    code path unescapes a manifest partition value."""
+    calls = _calls_by_function()
+    for name, allowed in (
+        ("_collect_column_stats", {"manager:_file_entry"}),
+        ("_collect_null_counts", {"manager:_file_entry"}),
+        ("_bloom_build", {"manager:_file_entry"}),
+        ("unquote", {"manager:_hive_values", "manager:_file_sketches"}),
+    ):
+        callers = {f for f, names in calls.items() if name in names}
+        assert callers == allowed, (name, callers)
+    assert "_register_files" in calls["manager:_write_files"]
+    assert "_register_files" in calls["pyds:_publish"]
+
+
+# identity partition values whose hive directory name is not the value
+# itself: percent-escaped characters, a literal '%' (alone and before
+# two hex digits), a non-ASCII letter, a timestamp (its ':' escaped) and
+# NULL (the default-partition directory)
+_ODD_PARTITION_VALUES = {
+    "slash": "a/b",
+    "colon": "p:q",
+    "percent": "100%",
+    "percent_hex": "a%41",
+    "accent": "é",
+    "timestamp": dt.datetime(2024, 1, 3, 5, 6, 7),
+    "null": None,
+}
+
+
+@pytest.mark.parametrize(
+    "v", list(_ODD_PARTITION_VALUES.values()), ids=list(_ODD_PARTITION_VALUES)
+)
+def test_every_writer_stores_the_partition_value_itself(mgr, spark, tmp_path, v):
+    """Every writer records an identity partition value as the value
+    itself (NULL as None): ``append``, the snaptable connector,
+    ``add_files(partition_values=...)`` and ``compact`` of that external
+    file give one partition dict. Scans prune on it exactly
+    (``==``/``in`` rows equal a null-safe filter of ``read()``, one file
+    planned), both read faces restore it, ``merge`` replaces the row of
+    its key, and ``overwrite_partitions`` replaces the external file of
+    that partition."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iceberg_poc_spark.sources.pyds import register_snaptable, route_partitions
+
+    is_ts = isinstance(v, dt.datetime)
+    ktype = TimestampNTZType() if is_ts else StringType()
+    other = dt.datetime(2024, 1, 4) if is_ts else "zz"
+    schema = StructType(
+        [
+            StructField("id", LongType(), False),
+            StructField("k", ktype, True),
+            StructField("s", StringType(), True),
+        ]
+    )
+
+    def lit(w):
+        return F.lit(None if w is None else str(w)).cast(ktype)
+
+    df = spark.createDataFrame([(1, v, "a"), (2, v, "b"), (3, other, "c")], schema)
+    register_snaptable(spark)
+    tables = ("app", "snap", "ext", "cmp")
+    for t in tables:
+        mgr.create_table(t, schema, [identity("k")])
+    mgr.append("app", df)
+    (
+        route_partitions(df, mgr.warehouse, "snap")
+        .write.format("snaptable")
+        .option("warehouse", mgr.warehouse)
+        .option("table", "snap")
+        .mode("append")
+        .save()
+    )
+    # external files hold no partition column, as a hive layout stores them
+    for i, (w, ids) in enumerate(((v, [1, 2]), (other, [3]))):
+        p = str(tmp_path / f"ext{i}.parquet")
+        pq.write_table(pa.table({"id": ids, "s": ["abc"[j - 1] for j in ids]}), p)
+        for t in ("ext", "cmp"):
+            mgr.add_files(t, [p], partition_values={"k": w})
+    mgr.compact("cmp")
+
+    def parts(t):
+        return sorted(
+            (json.dumps(e["partition"]), e["records"])
+            for e in mgr._load_manifest(t)["files"]
+        )
+
+    want_parts = sorted(
+        (json.dumps({"k": None if w is None else str(w)}), n)
+        for w, n in ((v, 2), (other, 1))
+    )
+    for t in tables:
+        assert parts(t) == want_parts, t
+    rows = sorted(df.collect())
+    for t in tables:
+        connector = (
+            spark.read.format("snaptable")
+            .option("warehouse", mgr.warehouse)
+            .option("table", t)
+            .load()
+        )
+        assert sorted(mgr.read(t).collect()) == rows, t
+        assert sorted(connector.collect()) == rows, t
+        for w in (v, other):
+            want = sorted(df.filter(F.col("k").eqNullSafe(lit(w))).collect())
+            forms = (
+                [[("k", "isnull", None)]]
+                if w is None
+                else [[("k", "==", w)], [("k", "in", [w])]]
+            )
+            for where in forms:
+                got, planned, total = mgr.scan(t, where=where)
+                assert sorted(got.collect()) == want, (t, where)
+                assert total == 2
+                if w is not None:
+                    assert planned == 1, (t, where)
+
+    mgr.merge("app", spark.createDataFrame([(1, v, "new")], schema), on=["id"])
+    assert sorted((r.id, r.s) for r in mgr.read("app").collect()) == [
+        (1, "new"), (2, "b"), (3, "c")
+    ]
+    mgr.overwrite_partitions("ext", spark.createDataFrame([(7, v, "ow")], schema))
+    assert sorted(r.id for r in mgr.read("ext").collect()) == [3, 7]
+
+
 def test_mor_basename_guard_covers_every_entry_point(mgr, spark, tmp_path):
     """EVERY basename-keyed MoR path must refuse colliding external
     basenames — not just delete_positions/upsert: update(mode='mor')
